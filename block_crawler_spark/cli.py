@@ -134,7 +134,7 @@ def _bulk_crawl(
     def tick(lo, hi):
         # driver-observable ticker facts per committed chunk (the reference's
         # 60 s stats writer runs during bulk loads too, shared.py:187-305;
-        # executor-side volumes live in the Spark UI — see streaming/stats.py).
+        # executor-side volumes live in Spark's status store — see streaming/stats.py).
         # height_span is the chunk's block-height extent, NOT a processed-row
         # count: bronze may be sparse inside the range, and counting actual
         # rows would cost an extra Spark job per chunk (round-8 advice — the
@@ -145,8 +145,11 @@ def _bulk_crawl(
 
     if chunk_size is None:
         silver = crawl_plan(spark, logs, blocks, blockchain=blockchain, data_version=data_version)
-        # the retry-safe sink sequence lives in ONE place — see its docstring
-        store.apply_silver(silver, data_version, blockchains=[blockchain])
+        try:
+            # the retry-safe sink sequence lives in ONE place — see its docstring
+            store.apply_silver(silver, data_version, blockchains=[blockchain])
+        finally:
+            silver.release()
         store.set_config(blockchain, data_version, top)
         if stats is not None and top is not None:
             # span from where the bronze actually starts — high-block
@@ -173,7 +176,10 @@ def _bulk_crawl(
         silver = crawl_plan(
             spark, chunk_logs, chunk_blocks, blockchain=blockchain, data_version=data_version
         )
-        store.apply_silver(silver, data_version, blockchains=[blockchain])
+        try:
+            store.apply_silver(silver, data_version, blockchains=[blockchain])
+        finally:
+            silver.release()
         store.set_config(blockchain, data_version, hi)  # commit BEFORE the next chunk
         tick(lo, hi)
         done = hi

@@ -11,6 +11,16 @@ difference between a scan-speed decode and an Arrow-serialization bottleneck.
 ABI layout (public Solidity ABI spec): data blob = "0x" + N×64 hex chars.
 Static slots hold values; dynamic slots hold byte offsets into the blob;
 a dynamic value starts with a length word followed by its payload.
+
+Bind-once rule: Spark columns have no let-binding, so an expression used
+twice is pasted into the plan twice, and ``hexint.hex_to_long`` already
+reads its input ~two dozen times.  Nesting those helpers multiplied the
+decode plan into thousands of references to ``data``, paid again in every
+analysis, cache lookup, optimisation and codegen.  So a dynamic value's
+offset and length are never computed inline here: the caller projects each
+head word, offset, length word and length as its own column
+(``operators.decode.bind_dynamic_slots``) and passes the bound columns to
+:func:`decode_uint256_array` / :func:`decode_string`.
 """
 
 from __future__ import annotations
@@ -35,29 +45,31 @@ def word_uint(data: Column, slot: Column | int) -> Column:
     return hex_to_dec(word(data, slot))
 
 
-def _offset_words(data: Column, slot: int) -> Column:
-    """Dynamic-slot head word = byte offset; convert to a word index."""
-    return (hex_to_long(word(data, slot)) / F.lit(32)).cast("long")
+def head_offset(head: Column) -> Column:
+    """A dynamic slot's head word (a byte offset into the blob) → the word
+    index of the value's length word.  ``head`` should be a bound column."""
+    return (hex_to_long(head) / F.lit(32)).cast("long")
 
 
-def decode_uint256_array(data: Column, slot: int) -> Column:
-    """Dynamic ``uint256[]`` at head-slot `slot` → array of 64-hex-char strings.
+def decode_uint256_array(data: Column, start: Column, n: Column) -> Column:
+    """Dynamic ``uint256[]`` → array of 64-hex-char strings.
 
-    Fully JVM-side: offset word → length word → `sequence`+`transform` over the
-    element words.  Keeping elements as canonical hex defers the
+    ``start`` is the bound word index of the array's length word and ``n``
+    the bound element count.  Fully JVM-side: `sequence`+`transform` over
+    the element words.  Keeping elements as canonical hex defers the
     Decimal-overflow policy to the consumer (see functions.hexint).
     """
-    start = _offset_words(data, slot)
-    n = hex_to_long(word(data, start))
     return F.when(n <= 0, F.array().cast("array<string>")).otherwise(
         F.transform(F.sequence(F.lit(1), n.cast("int")), lambda i: word(data, start + i.cast("long")))
     )
 
 
-def decode_string(data: Column, slot: int) -> Column:
-    """Dynamic ABI ``string`` at head-slot `slot` → StringType (UTF-8)."""
-    start = _offset_words(data, slot)
-    nbytes = hex_to_long(word(data, start))
+def decode_string(data: Column, start: Column, nbytes: Column) -> Column:
+    """Dynamic ABI ``string`` → StringType (UTF-8).
+
+    ``start`` is the bound word index of the string's length word and
+    ``nbytes`` its bound byte length.
+    """
     payload = F.substring(
         data,
         (F.lit(3) + F.lit(_WORD_HEX) * (start + 1)).cast("int"),

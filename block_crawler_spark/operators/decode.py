@@ -15,6 +15,9 @@ Reference behavior being re-expressed (``nft/evm/transformers.py``):
 Everything is a single declarative DataFrame expression: filters push to the
 parquet scan, the four event families are carved out of one cached logs scan,
 and the batch case uses ``arrays_zip``+``explode`` rather than a per-row loop.
+Dynamic ABI values (the batch arrays, the URI string) read offsets and
+lengths that :func:`bind_dynamic_slots` projected once per row — see the
+bind-once rule in ``functions.abi``.
 """
 
 from __future__ import annotations
@@ -22,10 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.abi import decode_string, decode_uint256_array, word
+from ..functions.abi import decode_string, decode_uint256_array, head_offset, word
 from ..functions.hexint import (
     UINT256_HEX_WIDTH,
     hex_to_dec,
+    hex_to_long,
     normalize_hex,
     topic_to_address,
 )
@@ -70,6 +74,23 @@ def _base_cols(df: DataFrame) -> DataFrame:
     )
 
 
+def bind_dynamic_slots(df: DataFrame, *slots: int) -> DataFrame:
+    """Project each dynamic ABI slot ``k`` of ``data`` as ``_off{k}`` (word
+    index of its length word) and ``_len{k}`` (its length).
+
+    Each level is its own projection, so every value is computed once per
+    row and later expressions read it by name; ``CollapseProject`` keeps
+    the levels apart because each is read more than once.  The head and
+    length words (``_head{k}``, ``_lenw{k}``) are bound too, because
+    ``hex_to_long`` copies its input into the plan ~two dozen times.
+    """
+    data = F.col("data")
+    df = df.withColumns({f"_head{k}": word(data, k) for k in slots})
+    df = df.withColumns({f"_off{k}": head_offset(F.col(f"_head{k}")) for k in slots})
+    df = df.withColumns({f"_lenw{k}": word(data, F.col(f"_off{k}")) for k in slots})
+    return df.withColumns({f"_len{k}": hex_to_long(F.col(f"_lenw{k}")) for k in slots})
+
+
 def decode_erc721_transfers(logs: DataFrame) -> DataFrame:
     """ERC-721 Transfer logs → one transfer row each (reference T8)."""
     out = (
@@ -107,12 +128,15 @@ def decode_erc1155_batch_transfers(logs: DataFrame) -> DataFrame:
     reconciliation key (which adds token_id for 1155 batch items,
     ``verify.py:810-817``).
     """
+    batches = logs.filter(
+        (F.size("topics") == 4) & (_topic0(logs) == F.lit(ERC1155_TRANSFER_BATCH_TOPIC))
+    )
     out = (
-        logs.filter((F.size("topics") == 4) & (_topic0(logs) == F.lit(ERC1155_TRANSFER_BATCH_TOPIC)))
+        bind_dynamic_slots(batches, 0, 1)
         .withColumn("from_", topic_to_address(_topic(3)))
         .withColumn("to_", topic_to_address(_topic(4)))
-        .withColumn("ids", decode_uint256_array(F.col("data"), 0))
-        .withColumn("values", decode_uint256_array(F.col("data"), 1))
+        .withColumn("ids", decode_uint256_array(F.col("data"), F.col("_off0"), F.col("_len0")))
+        .withColumn("values", decode_uint256_array(F.col("data"), F.col("_off1"), F.col("_len1")))
         .select(
             "*",
             F.posexplode(F.arrays_zip(F.col("ids"), F.col("values"))).alias("batch_index", "pair"),
@@ -201,10 +225,11 @@ def decode_uri_updates(logs: DataFrame) -> DataFrame:
     with the engine-wide clamp-to-null policy.
     """
     logs = _drop_removed(logs)
+    uri_logs = logs.filter((F.size("topics") == 2) & (_topic0(logs) == F.lit(ERC1155_URI_TOPIC)))
     out = (
-        logs.filter((F.size("topics") == 2) & (_topic0(logs) == F.lit(ERC1155_URI_TOPIC)))
+        bind_dynamic_slots(uri_logs, 0)
         .withColumn("token_id_hex", normalize_hex(F.element_at("topics", 2)))
-        .withColumn("uri_raw", decode_string(F.col("data"), 0))
+        .withColumn("uri_raw", decode_string(F.col("data"), F.col("_off0"), F.col("_len0")))
         .withColumn("token_id_dec", hex_to_dec(F.col("token_id_hex")).cast("string"))
         .withColumn(
             "metadata_url",

@@ -46,6 +46,14 @@ class SilverTables:
     token_transfers: DataFrame
     owners: DataFrame  # snapshot fold (A2 ∪ A3) — bulk/load path
     owner_deltas: DataFrame  # ± incremental fold (A5) — tail path
+    transfers: DataFrame  # the cached decoded transfers the folds above read
+
+    def release(self) -> None:
+        """Unpersist the cached transfers.  A batch's sinks call this in a
+        ``finally`` after their last read: otherwise every crawl chunk, tail
+        or stream batch leaves one cached relation behind, growing memory
+        and every later cache lookup without bound."""
+        self.transfers.unpersist()
 
 
 def derive_collections(
@@ -114,7 +122,9 @@ def crawl_plan(
     data_version: int = 1,
 ) -> SilverTables:
     """Full one-pass plan: logs (+blocks) → transfers, tokens, owners
-    (+ collections when receipts/contracts provided)."""
+    (+ collections when receipts/contracts provided).  The decoded
+    transfers are cached for the folds and sinks that share them; the
+    caller frees them with :meth:`SilverTables.release`."""
     block_times = blocks.select(F.col("number").alias("block_number"), F.col("timestamp"))
 
     transfers = (
@@ -144,7 +154,7 @@ def crawl_plan(
 
     if collections is None:
         collections = spark.createDataFrame([], "blockchain string, collection_id string")
-    return SilverTables(collections, tokens, token_transfers, owners, owner_deltas)
+    return SilverTables(collections, tokens, token_transfers, owners, owner_deltas, transfers)
 
 
 def total_supply_check(collections: DataFrame, tokens: DataFrame) -> DataFrame:

@@ -19,6 +19,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+_FLAG_VALUES = {"1": "true", "true": "true", "yes": "true", "0": "false", "false": "false", "no": "false"}
+
+
+def env_flag(name: str, default: bool) -> str:
+    """Boolean env var as Spark's ``true``/``false``.  Accepts 1/0/true/false/
+    yes/no in any case; anything else raises here, naming the variable,
+    rather than at Spark's first read of the conf."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return "true" if default else "false"
+    try:
+        return _FLAG_VALUES[raw.strip().lower()]
+    except KeyError:
+        raise ValueError(f"{name}={raw!r}: expected one of 1/0/true/false/yes/no") from None
+
+
 def get_spark(app_name: str = "block-crawler-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -59,10 +75,7 @@ def get_spark(app_name: str = "block-crawler-spark", *, shuffle_partitions: int 
         # shuffle partitions, from plan stats); r15 (ADVICE r14): the flag
         # is env-overridable so a cluster whose stats under-estimate build
         # sides can restore sort-merge's spill path without a code change.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", env_flag("SPARK_GRAFT_PREFER_SMJ", False))
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_MAX", "64m"),

@@ -7,10 +7,14 @@ write.  Spark splits the work across executors; the engine's answer has two
 halves:
 
 * **Executor-side metrics** (task counts, shuffle/scan volumes, per-stage
-  timings) already stream into the Spark UI / REST API — re-counting them
-  driver-side would be redundant and wrong.  ``rpc.*`` counters cover only
-  driver-side probes (height checks, force-load fetches); executor-side RPC
-  volume is visible as task metrics on the fetch stages.
+  timings) already land in Spark's status store, which keeps them with the
+  UI disabled (``session.py`` disables it): read them with
+  ``sc._jsc.sc().statusStore()``, or run ``perfbench/run.py --trace 1``,
+  which attributes each job and stage to the pipeline call that started
+  it.  Re-counting them driver-side would be redundant and wrong.
+  ``rpc.*`` counters cover only driver-side probes (height checks,
+  force-load fetches); executor-side RPC volume is visible as task metrics
+  on the fetch stages.
 * **Pipeline-level counters** (batches, block ranges, rows per silver
   table) are driver-observable facts this module counts exactly, and are
   the numbers the reference's ticker line reports.

@@ -83,9 +83,11 @@ class TailRunner:
         logs = self.source.logs(start, target)
         blocks = self.source.blocks(start, target)
         silver = crawl_plan(self.store.spark, logs, blocks, blockchain=self.blockchain, data_version=dv)
-
-        # the retry-safe sink sequence lives in ONE place — see its docstring
-        self.store.apply_silver(silver, dv, blockchains=[self.blockchain])
+        try:
+            # the retry-safe sink sequence lives in ONE place — see its docstring
+            self.store.apply_silver(silver, dv, blockchains=[self.blockchain])
+        finally:
+            silver.release()
         self.store.set_config(self.blockchain, dv, target)
         if self.stats is not None:
             # reference ticker fields (core/stats.py counters): committed

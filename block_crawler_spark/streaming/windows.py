@@ -173,8 +173,11 @@ def stream_tail(
             return
         dv, _last = store.get_config(blockchain)
         silver = crawl_plan(store.spark, batch_df, blocks_df, blockchain=blockchain, data_version=dv)
-        # the retry-safe sink sequence lives in ONE place — see its docstring
-        store.apply_silver(silver, dv, blockchains=[blockchain])
+        try:
+            # the retry-safe sink sequence lives in ONE place — see its docstring
+            store.apply_silver(silver, dv, blockchains=[blockchain])
+        finally:
+            silver.release()
         top = batch_df.agg(F.max("block_number")).collect()[0][0]
         _, last = store.get_config(blockchain)
         store.set_config(blockchain, dv, max(top, last) if last is not None else top)

@@ -35,8 +35,6 @@ def main() -> None:
 
     spark = get_spark(f"cfg-probe-{name}")
     spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1":
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
     if os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST") == "1":
         spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     fn = all_queries()[name][0]

@@ -62,9 +62,7 @@ _SLOW_NODE_IDS = {
     "tests/test_corpus_stream.py::test_semantic_vindex_heals_from_docs",
     "tests/test_corpus_stream.py::test_vindex_legacy_layout_adopts_fp_bucket_count",
     "tests/test_corpus_stream.py::test_vindex_probes2_blocks_symmetric_straddler",
-    "tests/test_crawl_verify.py::test_verify_chain_continuity_range_bounded_composes",
     "tests/test_crawl_verify.py::test_verify_clean_roundtrip",
-    "tests/test_crawl_verify.py::test_verify_detects_corruption",
     "tests/test_datasource.py::test_logs_format_reads_fixture_chain",
     "tests/test_datasource.py::test_streaming_max_blocks_per_batch",
     "tests/test_decode_folds.py::test_holding_stats_window_equals_pandas",

@@ -9,6 +9,7 @@ Also asserts order-insensitivity: shuffled input ⇒ identical state (ST4).
 from __future__ import annotations
 
 import random
+import re
 from decimal import Decimal
 
 import pytest
@@ -239,3 +240,14 @@ def test_removed_logs_never_reach_folds(spark, fixture_rows):
         [tuple(r[f.name] for f in LOG_SCHEMA.fields) for r in base + orphaned], LOG_SCHEMA
     )
     assert decode_token_transfers(mixed).count() == n_live  # removed rows pruned
+
+
+def test_decode_plans_bind_abi_offsets_once(spark, fixture_rows):
+    """Guard for the bind-once rule (functions/abi.py): with the ABI offset
+    and length helpers inlined, the optimised transfer decode plan read
+    ``data`` ~2.5k times and the URI plan ~1.2k times.  Plans only, no job."""
+    logs = spark.createDataFrame(fixture_rows, LOG_SCHEMA)
+    for decode, cap in ((decode_token_transfers, 200), (decode_uri_updates, 80)):
+        plan = decode(logs)._jdf.queryExecution().optimizedPlan().toString()
+        refs = len(re.findall(r"\bdata#\d+", plan))
+        assert 0 < refs <= cap, f"{decode.__name__}: {refs} references to data"
