@@ -101,11 +101,6 @@ def long_to_hex(col: Column, width: int = UINT256_HEX_WIDTH, prefix: bool = True
     return F.concat(F.lit("0x"), body) if prefix else body
 
 
-def hex_add(a: Column, b: Column) -> Column:
-    """Add two canonical hex columns via Decimal; NULL on overflow (reference clamps too)."""
-    return hex_to_dec(a) + hex_to_dec(b)
-
-
 def is_zero_address(col: Column) -> Column:
     return normalize_hex(col, ADDRESS_HEX_WIDTH) == F.lit(ZERO_ADDRESS)
 

@@ -1,7 +1,7 @@
 """Text-analysis column functions for large-scale training-data pipelines.
 
 All pure built-in column expressions (JVM-side, codegen-friendly): tokenize,
-token/char statistics, quality scoring, stopword-based language ID, and
+token/char statistics, stopword-based language ID, and
 document fingerprinting.  Each has an exact DuckDB-SQL equivalent (the
 driver's correctness oracle), which is why hashing is md5-based: md5 is the
 one hash both engines share, and on fixed-width lowercase hex strings the
@@ -44,13 +44,6 @@ def regex_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(TOKEN_PATTERN), F.lit(0)))
 
 
-def avg_token_len(text: Column) -> Column:
-    """Mean token length as decimal(18,4) (exact, portable)."""
-    t = tokens(text)
-    total = F.aggregate(t, F.lit(0).cast("decimal(18,0)"), lambda acc, x: acc + F.length(x))
-    return (total.cast("decimal(18,4)") / F.size(t)).cast("decimal(18,4)")
-
-
 def punct_ratio(text: Column) -> Column:
     """Punctuation chars / total chars, decimal(18,6)."""
     punct = F.length(text) - F.length(F.regexp_replace(text, PUNCT_PATTERN, ""))
@@ -65,22 +58,6 @@ def stopword_hits(text: Column, lang: str = "en") -> Column:
 
 def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return (stopword_hits(text, lang).cast("decimal(18,6)") / n_tokens(text)).cast("decimal(18,6)")
-
-
-def quality_score(text: Column) -> Column:
-    """Composite quality heuristic in [0,1]-ish space, decimal(18,6).
-
-    score = 0.4·min(n_tokens/100, 1) + 0.4·stopword_ratio(en) + 0.2·(1 − punct_ratio)
-    — the standard length/stopword/punctuation shape used by web-scale
-    corpus filters, kept simple enough for an exact SQL oracle.
-    """
-    length_term = F.least(n_tokens(text).cast("decimal(18,6)") / 100, F.lit(1).cast("decimal(18,6)"))
-    score = (
-        F.lit(0.4).cast("decimal(18,6)") * length_term
-        + F.lit(0.4).cast("decimal(18,6)") * stopword_ratio(text, "en")
-        + F.lit(0.2).cast("decimal(18,6)") * (F.lit(1).cast("decimal(18,6)") - punct_ratio(text))
-    )
-    return score.cast("decimal(18,6)")
 
 
 def lang_scores(text: Column) -> list[tuple[str, Column]]:

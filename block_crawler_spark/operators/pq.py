@@ -125,39 +125,6 @@ def _adc_col(codes: Column, luts: Column, m: int) -> Column:
     )
 
 
-def _codes_as_array(codes: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """Accept codes in either layout: (id, codes array) passes through;
-    legacy (id, m, code) rows regroup into the array form (one bounded
-    exchange — only the compatibility path pays it)."""
-    if "codes" in codes.columns:
-        return codes
-    return codes.groupBy(id_col).agg(
-        F.transform(F.array_sort(F.collect_list(F.struct("m", "code"))), lambda s: s["code"]).alias(
-            "codes"
-        )
-    )
-
-
-def pq_codes(
-    emb: DataFrame,
-    codebook: DataFrame,
-    m: int,
-    sub_dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Corpus → (vec_id, codes array<long>) in ONE map-side projection
-    against the packed codebook broadcast — the r14 layout of
-    :func:`pq_encode` (same argmin, same tie rule, no exchange)."""
-    return (
-        emb.crossJoin(F.broadcast(_packed_cb(codebook)))
-        .select(
-            F.col(id_col).alias("vec_id"),
-            _codes_col(micro_fixed(F.col(vec_col)), sub_dim).alias("codes"),
-        )
-    )
-
-
 def _subvectors(
     df: DataFrame, id_col: str, vec_col: str, m: int, sub_dim: int, fixed: bool = False
 ) -> DataFrame:

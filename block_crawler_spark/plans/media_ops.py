@@ -584,49 +584,10 @@ IMG_MAX_HAMMING = 6
 IMG_BANDS = 4  # 56 bits → 4 × 14-bit bands
 
 
-def _planted_image_media(docs: DataFrame) -> DataFrame:
-    """documents → raw-image corpus with planted RESOLUTION and brightness
-    twins (real transformed blobs through an Arrow stage, like
-    :func:`_planted_transform_media`): each doc's bytes are a W=16
-    grayscale image; every {IMG_UP_MOD}rd doc also ships its grid-aligned
-    region 2×-upscaled by pixel replication (W=32 — a DIFFERENT
-    resolution of the same picture), every {IMG_BRIGHT_MOD}th the region
-    at +{IMG_BRIGHT_DELTA} brightness.  Twins are cut from the
-    grid-ALIGNED region so the resize-invariance theorem is exact (see
-    ``image_dhash``).  Output: (media_id, width, content)."""
-    from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
-
-    from ..operators.multimodal import IMG_DHASH_GRID
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("width", IntegerType(), False),
-            StructField("content", BinaryType(), False),
-        ]
-    )
-    grid = IMG_DHASH_GRID
-
-    def fan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _check_twin_ids(pdf)
-            ids: list[int] = []
-            widths: list[int] = []
-            blobs: list[bytes] = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                for mid, w, blob in _image_doc_blobs(int(did), txt, grid):
-                    ids.append(mid)
-                    widths.append(w)
-                    blobs.append(blob)
-            yield pd.DataFrame({"media_id": ids, "width": widths, "content": blobs})
-
-    return docs.select("doc_id", "text").mapInPandas(fan, schema)
-
-
 def _image_doc_blobs(did: int, txt, grid: int):
     """One document's planted raw-image rows — (media_id, width, blob) for
-    the source and each minted resolution/brightness twin (the ONE twin
-    definition, shared with the fused stage :func:`_planted_image_sigs`)."""
+    the source and each minted resolution/brightness twin (the twin
+    definition of the fused stage :func:`_planted_image_sigs`)."""
     import numpy as np
 
     raw = (txt or "").encode("utf-8")
@@ -822,39 +783,10 @@ AUDIO_MAX_HAMMING = 6
 AUDIO_BANDS = 4  # 60 bits → 4 × 15-bit bands
 
 
-def _planted_audio_media(docs: DataFrame) -> DataFrame:
-    """documents → pcm16 audio corpus with planted GAIN and POLARITY twins
-    as REAL little-endian int16 blobs through an Arrow stage: each text
-    byte v becomes one sample (v − {AUDIO_SAMPLE_BIAS})·{AUDIO_SAMPLE_SCALE}
-    (max twin magnitude 2·191·{AUDIO_SAMPLE_SCALE} ≤ 32767 for EVERY byte
-    value 0–255, asserted at module load, so the ×{AUDIO_GAIN} gain twin
-    never clips or wraps — wrapping would break the exact gain theorem,
-    which is the point of the planted corpus).  Output:
-    (media_id, content)."""
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    schema = StructType(
-        [StructField("media_id", LongType(), False), StructField("content", BinaryType(), False)]
-    )
-
-    def fan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _check_twin_ids(pdf)
-            ids: list[int] = []
-            blobs: list[bytes] = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                for mid, blob in _audio_doc_blobs(int(did), txt):
-                    ids.append(mid)
-                    blobs.append(blob)
-            yield pd.DataFrame({"media_id": ids, "content": blobs})
-
-    return docs.select("doc_id", "text").mapInPandas(fan, schema)
-
-
 def _audio_doc_blobs(did: int, txt):
     """One document's planted pcm16 rows — (media_id, blob) for the source
-    and each minted gain/polarity twin (the ONE twin definition, shared
-    with the fused stage :func:`_planted_audio_sigs`)."""
+    and each minted gain/polarity twin (the twin definition of the fused
+    stage :func:`_planted_audio_sigs`)."""
     import numpy as np
 
     v = np.frombuffer((txt or "").encode("utf-8"), dtype=np.uint8).astype(np.int64)

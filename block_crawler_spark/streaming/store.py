@@ -6,47 +6,37 @@ On a transactional table format the merge functions map 1:1 onto ``MERGE
 INTO`` (conditions documented per function in ``operators.merge``); the
 parquet fallback rewrites the table — fine for silver-sized entity state.
 
-Every version is written ``partitionBy("blockchain")`` — and the three
-entity tables that grow with chain history (``tokens``,
+Layout: each table has one declared schema (:data:`STORED_SCHEMAS`) and one
+on-disk layout.  Every version is written ``partitionBy("blockchain")``;
+the three tables that grow with chain history (``tokens``,
 ``token_transfers``, ``owners``) carry a second partition level,
-``cbucket = pmod(xxhash64(collection_id), n_buckets)``, so a merge that
-declares its touched collections rewrites ONLY the touched buckets.  A
-merge that declares its touched blockchains (all crawl/tail/CLI paths do —
-they run per-chain, mirroring the reference's per-blockchain write budget,
-``nft/bin/load.py:232-233``) rewrites ONLY those partition trees; with
-bucket info (``apply_silver`` derives it from the batch's touched keys for
-free) the per-merge rewrite shrinks further from O(chain) to O(touched
-collection buckets) — the tail path's micro-batches touch a handful of
-collections, so steady-state merge cost is bounded by batch size, not
-corpus size.  Untouched ``blockchain=X`` trees and untouched
-``cbucket=K`` subtrees are hard-linked file-by-file from the previous
-version into the new one (same inode — zero data movement, byte-identical;
-on an object store this becomes a metadata copy).  A store created before
-the bucketed layout migrates transparently: the first pruned merge over a
-non-bucketed version rewrites that table fully into the new layout, and
-every later merge prunes.
+``cbucket = pmod(xxhash64(collection_id), n_buckets)``.  Reads bind the
+declared schema instead of inferring one from the files, so building a
+read starts no Spark job, and :meth:`SilverStore.overwrite` rejects a frame
+whose columns differ from it.
 
-The READ side is bounded the same way (round 7 — this was the last
-O(history) step in the tail path): :meth:`read` takes optional
-``blockchains=``/``buckets=`` filters applied to the partition columns
-BEFORE normalization drops them, so Spark statically prunes the scan
-(``PartitionFilters`` on ``blockchain`` and ``cbucket``).  The rebuild
-scans (token/owner state recomputed from committed transfers) always prune
-— they semi-join against the batch's touched keys, every transfer of a
-touched key lives in that key's partitions; the existing-side merge reads
-prune via :meth:`_read_for_merge` only when the same layout probe says the
-write will prune too.  Steady-state tail cost is therefore O(touched
-collection buckets) for reads AND writes.
+Pruning: the crawl/tail/CLI paths run per chain, mirroring the reference's
+per-blockchain write budget (``nft/bin/load.py:232-233``), and name the
+partitions a merge touches — its blockchains and, via
+:meth:`SilverStore.touched_buckets`, the collection buckets of the batch's
+touched keys.  The merge reads only those partitions (static
+``PartitionFilters`` on ``blockchain`` and ``cbucket``) and rewrites only
+them.  Untouched ``blockchain=X`` trees and ``cbucket=K`` subtrees are
+hard-linked file-by-file from the previous version into the new one (same
+inode — zero data movement, byte-identical; on an object store this becomes
+a metadata copy).  Tail micro-batches touch a handful of collections, so
+steady-state merge cost is O(touched collection buckets) for reads and
+writes, not O(chain history).
 
-Durability (round-2, ADVICE r1 store.py:67): each rewrite lands in a fresh
-``v-N`` directory under the table path, then a one-line ``_CURRENT`` pointer
-file is flipped via ``os.replace`` (atomic on POSIX).  A crash or executor
-loss at ANY point leaves the previous complete version readable — the
-mini single-writer equivalent of a transactional table format's snapshot
-commit.  Because the new version is written *beside* the files being read,
-the read-modify-write needs no lineage break (no localCheckpoint, no
-executor-memory copy of the table).  Superseded versions are pruned only
-after the pointer flip succeeds.
+Durability: each rewrite lands in a fresh ``v-N`` directory under the table
+path, then a one-line ``_CURRENT`` pointer file is flipped via
+``os.replace`` (atomic on POSIX).  A crash or executor loss at ANY point
+leaves the previous complete version readable — the mini single-writer
+equivalent of a transactional table format's snapshot commit.  Because the
+new version is written *beside* the files being read, the read-modify-write
+needs no lineage break (no localCheckpoint, no executor-memory copy of the
+table).  Superseded versions are pruned only after the pointer flip
+succeeds.
 """
 
 from __future__ import annotations
@@ -59,7 +49,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..operators import merge as M
 from ..schemas import (
@@ -70,10 +60,15 @@ from ..schemas import (
     TOKEN_TRANSFER_SCHEMA,
 )
 
-_SCHEMAS = {
+# The one stored schema per table.  Silver tokens carry the ERC-165 probe
+# result, silver transfers the ERC-1155 batch disambiguator.  New
+# StructTypes, because StructType.add mutates in place.
+STORED_SCHEMAS = {
     "collections": COLLECTION_SCHEMA,
-    "tokens": TOKEN_SCHEMA,
-    "token_transfers": TOKEN_TRANSFER_SCHEMA,
+    "tokens": StructType(TOKEN_SCHEMA.fields + [StructField("specification", StringType(), True)]),
+    "token_transfers": StructType(
+        TOKEN_TRANSFER_SCHEMA.fields + [StructField("batch_index", IntegerType(), True)]
+    ),
     "owners": OWNER_SCHEMA,
     "crawler_config": CRAWLER_CONFIG_SCHEMA,
 }
@@ -90,6 +85,7 @@ KEYS = {
 # and crawler_config stay blockchain-only (small, and bucketing them would
 # just multiply file count)
 _BUCKETED = frozenset({"tokens", "token_transfers", "owners"})
+_CBUCKET = StructField("cbucket", IntegerType(), True)
 
 
 @dataclass
@@ -125,52 +121,8 @@ class SilverStore:
         except OSError:
             return None
 
-    def _prune_capability(self, table: str) -> tuple[bool, bool]:
-        """(blockchain_prunable, bucket_prunable) of the CURRENT version —
-        the single layout probe shared by :meth:`overwrite`'s write pruning
-        and the merge paths' read pruning, so an existing-side read never
-        prunes unless the write that follows prunes identically (a
-        migration full-rewrite fed by a pruned read would drop the
-        unscanned partitions' rows).
-
-        * no current version → (False, False) — nothing to prune;
-        * current version has bare ``*.parquet`` files (pre-partitioned
-          layout) → (False, False) — its rows carry no partition dirs, a
-          pruned rewrite would silently lose them;
-        * bucketed table whose ``blockchain=X`` trees lack ``cbucket=``
-          subtrees (pre-bucketed layout) → (False, False) — mixed directory
-          depths would break partition discovery, so overwrite rewrites
-          fully once;
-        * otherwise (partitioned, and bucketed where applicable, or a
-          committed empty table) → prunable.
-        """
-        cur = self._current_version(table)
-        if cur is None:
-            return False, False
-        cur_path = os.path.join(self._path(table), cur)
-        try:
-            entries = os.listdir(cur_path)
-        except OSError:
-            return False, False
-        part_dirs = [d for d in entries if d.startswith("blockchain=")]
-        if not part_dirs and any(n.endswith(".parquet") for n in entries):
-            return False, False
-        bucketed = table in _BUCKETED
-        if bucketed and part_dirs:
-            cur_is_bucketed = all(
-                any(s.startswith("cbucket=") for s in os.listdir(os.path.join(cur_path, d)))
-                for d in part_dirs
-            )
-            if not cur_is_bucketed:
-                return False, False
-        return True, bucketed
-
     def _empty(self, table: str) -> DataFrame:
-        schema = _SCHEMAS[table]
-        if table == "token_transfers":
-            # silver transfers carry the 1155 batch disambiguator
-            return self.spark.createDataFrame([], schema).withColumn("batch_index", F.lit(0).cast("int"))
-        return self.spark.createDataFrame([], schema)
+        return self.spark.createDataFrame([], STORED_SCHEMAS[table])
 
     def read(
         self,
@@ -178,57 +130,25 @@ class SilverStore:
         blockchains: Sequence[str] | None = None,
         buckets: Sequence[int] | None = None,
     ) -> DataFrame:
-        """Scan the current version.  ``blockchains``/``buckets`` filter on
-        the PARTITION columns before normalization drops them, so Spark
-        statically prunes the scan to the named ``blockchain=X`` /
-        ``cbucket=K`` trees (``PartitionFilters`` in the plan) — the read
-        half of the O(touched) merge story (the write half is
-        :meth:`overwrite`'s hard-link pruning).  Callers that prune must
-        guarantee the filter is semantically safe: either the consumer
-        filters to keys inside those partitions anyway (the rebuilds'
-        semi-joins against touched keys), or the dropped rows would be
-        hard-linked rather than rewritten (:meth:`_read_for_merge`)."""
+        """Scan the current version under its stored schema (an empty frame
+        of that schema when no version exists).  ``blockchains``/``buckets``
+        filter on the partition columns, so Spark statically prunes the scan
+        to the named ``blockchain=X`` / ``cbucket=K`` trees; ``buckets``
+        applies to the bucketed tables only.  A merge passes the same
+        partitions to :meth:`overwrite`, which hard-links every other one,
+        so its pruned existing-side read loses no rows."""
+        stored = STORED_SCHEMAS[table]
         cur = self._current_version(table)
         if cur is None:
             return self._empty(table)
-        try:
-            df = self.spark.read.parquet(os.path.join(self._path(table), cur))
-        except AnalysisException:
-            # a committed empty partitioned write has no data files at all
-            # (partitionBy emits nothing for zero rows) → canonical empty
-            return self._empty(table)
-        if blockchains is not None and "blockchain" in df.columns:
+        bucketed = table in _BUCKETED
+        scan = StructType(stored.fields + [_CBUCKET]) if bucketed else stored
+        df = self.spark.read.schema(scan).parquet(os.path.join(self._path(table), cur))
+        if blockchains is not None:
             df = df.filter(F.col("blockchain").isin([str(b) for b in blockchains]))
-        if buckets is not None and "cbucket" in df.columns:
+        if buckets is not None and bucketed:
             df = df.filter(F.col("cbucket").isin([int(b) for b in buckets]))
-        # normalize: partition discovery appends `blockchain` (and, on the
-        # bucketed tables, `cbucket`) last and type-infers them; restore
-        # declared column order, pin blockchain to string, drop the derived
-        # bucket column (it is recomputed from collection_id on every write)
-        ordered = [f.name for f in _SCHEMAS[table].fields if f.name in df.columns]
-        extras = [c for c in df.columns if c not in ordered and c != "cbucket"]  # e.g. batch_index
-        return df.select(
-            *[F.col(c).cast("string").alias(c) if c == "blockchain" else F.col(c) for c in ordered + extras]
-        )
-
-    def _read_for_merge(
-        self,
-        table: str,
-        blockchains: Sequence[str] | None,
-        buckets: Sequence[int] | None,
-    ) -> DataFrame:
-        """Existing-side read for a merge: pruned to the touched partitions
-        exactly when the overwrite that follows will prune them (untouched
-        partitions hard-link, so their rows never need computing); a full
-        scan otherwise (first write, or a layout-migration full rewrite,
-        where every existing row must flow into the new version)."""
-        prune_ok, bucket_ok = self._prune_capability(table)
-        prune = blockchains is not None and prune_ok
-        return self.read(
-            table,
-            blockchains=blockchains if prune else None,
-            buckets=buckets if (prune and bucket_ok and buckets is not None) else None,
-        )
+        return df.select(*stored.names)
 
     @staticmethod
     def _link_tree(src: str, dst: str) -> None:
@@ -256,20 +176,20 @@ class SilverStore:
         """Snapshot-commit rewrite: write ``v-N+1`` beside the current
         version, flip ``_CURRENT`` atomically, prune superseded versions.
 
-        With ``touched_blockchains`` the rewrite is partition-pruned:
-        only those blockchains' rows are computed and written; every other
+        ``df`` must carry exactly the table's stored columns (a
+        ``ValueError`` names the difference otherwise: a column the stored
+        schema lacks would vanish on the next read); they are written in
+        stored order and type.
+
+        With ``touched_blockchains`` the rewrite is partition-pruned: only
+        those blockchains' rows are written, and every other
         ``blockchain=X`` tree is hard-linked from the current version
         (dynamic-partition-overwrite semantics on the snapshot layout).  On
-        the bucketed tables, ``touched_buckets`` (cbucket values of the
-        batch's touched collections — :meth:`touched_buckets`) prunes one
-        level deeper: within a touched blockchain only the touched
-        ``cbucket=K`` subtrees are rewritten, the rest hard-link.  A touched
-        partition that ends the merge with zero rows has its directory
-        dropped — correct delete semantics.  ``None`` (or a current version
-        predating the partitioned layout) rewrites fully; a current version
-        predating the BUCKETED layout triggers a one-time full rewrite of
-        the touched table into the new layout (mixed directory depths would
-        break partition discovery).
+        the bucketed tables ``touched_buckets`` (see :meth:`touched_buckets`)
+        prunes one level deeper: only the touched ``cbucket=K`` subtrees are
+        rewritten, the rest hard-link.  A touched partition that ends the
+        merge with zero rows has its directory dropped — correct delete
+        semantics.  With neither, the table is rewritten fully.
 
         Retention is one commit deep: ``v-N`` (the version current until
         this flip) survives until the NEXT overwrite, so a concurrent
@@ -280,46 +200,43 @@ class SilverStore:
         invalidates linked files: links share inodes, so data survives
         until its last referencing version is deleted.
         """
+        stored = STORED_SCHEMAS[table]
+        if set(df.columns) != set(stored.names):
+            missing = [c for c in stored.names if c not in df.columns]
+            extra = [c for c in df.columns if c not in stored.names]
+            raise ValueError(
+                f"{table}: frame columns differ from the stored schema "
+                f"(missing {missing}, extra {extra})"
+            )
         base = self._path(table)
         os.makedirs(base, exist_ok=True)
         cur = self._current_version(table)
         nxt = f"v-{(int(cur.split('-')[1]) if cur else 0) + 1}"
-        cur_path = os.path.join(base, cur) if cur else None
-        # a pre-partitioned-layout version has bare part files → must rewrite
-        # fully or its unpartitioned rows would be silently dropped
-        cur_partition_dirs = (
-            [d for d in os.listdir(cur_path) if d.startswith("blockchain=")] if cur_path else []
-        )
-        # ONE layout probe decides both write pruning here and read pruning
-        # in _read_for_merge — they must never diverge (a pruned read feeding
-        # a full rewrite would drop the unscanned partitions' rows)
-        prune_ok, bucket_ok = self._prune_capability(table)
-        prune = touched_blockchains is not None and prune_ok
         bucketed = table in _BUCKETED
-        bucket_prune = prune and bucket_ok and touched_buckets is not None
-        out = df
-        if prune:
-            out = df.filter(F.col("blockchain").isin(list(touched_blockchains)))
-            if bucket_prune:
-                out = out.filter(self._bucket_expr().isin([int(b) for b in touched_buckets]))
+        touched = set(touched_blockchains) if touched_blockchains is not None else None
+        tb = {int(b) for b in touched_buckets} if bucketed and touched_buckets is not None else None
+        out = df.select(*[F.col(f.name).cast(f.dataType) for f in stored.fields])
+        if touched is not None:
+            out = out.filter(F.col("blockchain").isin(sorted(touched)))
+        if tb is not None:
+            out = out.filter(self._bucket_expr().isin(sorted(tb)))
         # The plan may read the current version's files; they stay in place
         # until after the pointer flip, so no lineage break is needed.
-        part_cols = ["blockchain", "cbucket"] if bucketed else ["blockchain"]
         if bucketed:
             out = out.withColumn("cbucket", self._bucket_expr())
+        part_cols = ["blockchain", "cbucket"] if bucketed else ["blockchain"]
         out.write.mode("overwrite").partitionBy(*part_cols).parquet(os.path.join(base, nxt))
-        if prune:
-            touched = set(touched_blockchains)
-            tb = {int(b) for b in touched_buckets} if bucket_prune else None
-            for d in cur_partition_dirs:
-                if unquote(d.split("=", 1)[1]) not in touched:
+        if cur is not None and (touched is not None or tb is not None):
+            cur_path = os.path.join(base, cur)
+            for d in os.listdir(cur_path):
+                if not d.startswith("blockchain="):
+                    continue
+                if touched is not None and unquote(d.split("=", 1)[1]) not in touched:
                     self._link_tree(os.path.join(cur_path, d), os.path.join(base, nxt, d))
                 elif tb is not None:
-                    for s in os.listdir(os.path.join(cur_path, d)):
-                        if s.startswith("cbucket=") and int(unquote(s.split("=", 1)[1])) not in tb:
-                            self._link_tree(
-                                os.path.join(cur_path, d, s), os.path.join(base, nxt, d, s)
-                            )
+                    for b in os.listdir(os.path.join(cur_path, d)):
+                        if b.startswith("cbucket=") and int(unquote(b.split("=", 1)[1])) not in tb:
+                            self._link_tree(os.path.join(cur_path, d, b), os.path.join(base, nxt, d, b))
         tmp = os.path.join(base, "_CURRENT.tmp")
         with open(tmp, "w") as f:
             f.write(nxt)
@@ -333,32 +250,9 @@ class SilverStore:
         self.overwrite(
             "collections",
             M.versioned_upsert(
-                self._read_for_merge("collections", blockchains, None), updates, KEYS["collections"]
+                self.read("collections", blockchains), updates, KEYS["collections"]
             ),
             touched_blockchains=blockchains,
-        )
-
-    def upsert_tokens(
-        self,
-        updates: DataFrame,
-        blockchains: Sequence[str] | None = None,
-        buckets: Sequence[int] | None = None,
-    ) -> None:
-        """Per-field merge (K2+K3+K4+K5) — see ``merge.token_state_merge``.
-
-        NOT retry-safe: the K4 additive quantity double-counts if the same
-        batch is applied twice.  The crawl/tail paths use
-        :meth:`rebuild_tokens` instead; this remains the field-merge API pin
-        for callers that guarantee exactly-once batch delivery.
-        """
-        existing = self._read_for_merge("tokens", blockchains, buckets)
-        if "specification" not in existing.columns:
-            existing = existing.withColumn("specification", F.lit(None).cast("string"))
-        self.overwrite(
-            "tokens",
-            M.token_state_merge(existing, updates),
-            touched_blockchains=blockchains,
-            touched_buckets=buckets,
         )
 
     def rebuild_tokens(
@@ -385,16 +279,10 @@ class SilverStore:
         from ..schemas import SPEC_ERC721
 
         keys = ["blockchain", "collection_id", "token_id_hex"]
-        existing = self._read_for_merge("tokens", blockchains, buckets)
-        if "specification" not in existing.columns:
-            existing = existing.withColumn("specification", F.lit(None).cast("string"))
+        existing = self.read("tokens", blockchains, buckets)
         kept = existing.join(touched_keys, keys, "left_anti")
-
-        # ALWAYS safe to prune this scan (no capability gate): the fold
-        # semi-joins against touched_keys, and every transfer of a touched
-        # key lives in that key's blockchain partition and cbucket (a pure
-        # function of collection_id) — on a pre-bucketed layout read()
-        # simply skips the missing partition filter
+        # every transfer of a touched key lives in that key's blockchain
+        # partition and cbucket (a pure function of collection_id)
         recomputed = token_state_from_silver(
             self.read("token_transfers", blockchains=blockchains, buckets=buckets), touched_keys
         )
@@ -405,7 +293,7 @@ class SilverStore:
         # K3 rule (merge.metadata_url_upsert): only rows that CARRY URI data
         # compete — a NULL ordering key makes max_by skip the row, so a
         # higher-data_version batch with no URI event can never clobber an
-        # existing metadata_url to NULL (round-4 review finding).  "Carries
+        # existing metadata_url to NULL.  "Carries
         # URI data" means EITHER field: the A4 backfill (fetch_token_uris)
         # sets a URL with no version hex, and such a row must still compete
         # (with an empty version) rather than be silently dropped.
@@ -449,8 +337,8 @@ class SilverStore:
         self, silver, data_version: int, blockchains: Sequence[str] | None = None
     ) -> None:
         """The retry-safe sink sequence for one crawl/tail/stream batch —
-        THE single definition of the idempotence contract (it lived in three
-        call sites before the round-4 review):
+        the single definition of the idempotence contract, shared by every
+        crawl, tail and stream path:
 
         1. commit transfers first (keyed idempotent append) — the rebuilds
            below read the COMMITTED table;
@@ -492,34 +380,9 @@ class SilverStore:
         self.overwrite(
             "token_transfers",
             M.idempotent_append(
-                self._read_for_merge("token_transfers", blockchains, buckets),
+                self.read("token_transfers", blockchains, buckets),
                 updates,
                 KEYS["token_transfers"],
-            ),
-            touched_blockchains=blockchains,
-            touched_buckets=buckets,
-        )
-
-    def merge_owner_deltas(
-        self,
-        deltas: DataFrame,
-        blockchains: Sequence[str] | None = None,
-        buckets: Sequence[int] | None = None,
-    ) -> None:
-        """K7/K8: additive balance merge, zero balances dropped.
-
-        NOT retry-safe on its own: re-applying the same batch of deltas
-        double-counts (ADVICE r1).  The crawl/tail paths use
-        :meth:`rebuild_owners` instead; this remains the K7 additive-merge
-        API pin for callers that guarantee exactly-once delta delivery.
-        """
-        self.overwrite(
-            "owners",
-            M.additive_upsert(
-                self._read_for_merge("owners", blockchains, buckets),
-                deltas,
-                KEYS["owners"],
-                drop_zero=True,
             ),
             touched_blockchains=blockchains,
             touched_buckets=buckets,
@@ -536,7 +399,7 @@ class SilverStore:
         owner row of the touched token keys with balances recomputed from the
         idempotent ``token_transfers`` table.  A retried batch rewrites the
         same values instead of re-adding deltas."""
-        existing = self._read_for_merge("owners", blockchains, buckets)
+        existing = self.read("owners", blockchains, buckets)
         kept = existing.join(touched_keys, ["blockchain", "collection_id", "token_id_hex"], "left_anti")
         self.overwrite(
             "owners",
@@ -565,30 +428,19 @@ class SilverStore:
         resumes at the fork point.
         """
         keys = ["blockchain", "collection_id", "token_id_hex"]
-        # kept must retain other blockchains' rows iff the overwrite below
-        # will NOT hard-link them — the shared capability probe decides both
-        transfers = self._read_for_merge("token_transfers", [blockchain], None)
-        mine = F.col("blockchain") == blockchain
-        touched = transfers.filter(mine & (F.col("block_id") > to_block)).select(*keys).distinct()
+        # other blockchains' partitions hard-link in the overwrite below
+        transfers = self.read("token_transfers", [blockchain])
+        touched = transfers.filter(F.col("block_id") > to_block).select(*keys).distinct()
         # collect the touched buckets BEFORE the transfers overwrite: every
         # row the rewind drops or rebuilds belongs to a touched key, so
         # untouched buckets stay linkable
         buckets = self.touched_buckets(touched)
-        kept = transfers.filter(~mine | (F.col("block_id") <= to_block))
+        kept = transfers.filter(F.col("block_id") <= to_block)
         self.overwrite("token_transfers", kept, touched_blockchains=[blockchain], touched_buckets=buckets)
         # `touched` still scans the pre-rewind version's files — the
-        # one-commit retention window exists exactly for handles like this
-        existing_tokens = self.read("tokens")
-        if "specification" not in existing_tokens.columns:
-            # the canonical empty table (fresh store / reset) lacks the
-            # probe-derived column, same guard rebuild_tokens applies
-            existing_tokens = existing_tokens.withColumn(
-                "specification", F.lit(None).cast("string")
-            )
-        no_batch = existing_tokens.select(
-            *keys, "specification", "metadata_url", "metadata_url_version_hex", "data_version"
-        ).limit(0)
-        self.rebuild_tokens(no_batch, touched, blockchains=[blockchain], buckets=buckets)
+        # one-commit retention window exists exactly for handles like this.
+        # No batch rows: metadata merges from the existing tokens alone.
+        self.rebuild_tokens(self._empty("tokens"), touched, blockchains=[blockchain], buckets=buckets)
         from ..operators.folds import owner_balances_from_silver
 
         dv, last = self.get_config(blockchain)
@@ -607,13 +459,7 @@ class SilverStore:
     # -- control table (K12) -----------------------------------------------
     def get_config(self, blockchain: str) -> tuple[int, int | None]:
         """(data_version, last_block_id) — data_version starts at 1."""
-        # partition-level prune (blockchains=) + the row filter for the
-        # pre-partitioned-layout case where blockchain is a data column
-        rows = (
-            self.read("crawler_config", blockchains=[blockchain])
-            .filter(F.col("blockchain") == blockchain)
-            .collect()
-        )
+        rows = self.read("crawler_config", blockchains=[blockchain]).collect()
         if not rows:
             return 1, None
         return rows[0]["data_version"], rows[0]["last_block_id"]
@@ -622,12 +468,8 @@ class SilverStore:
         updates = self.spark.createDataFrame(
             [(blockchain, data_version, last_block_id)], CRAWLER_CONFIG_SCHEMA
         )
-        existing = self.read("crawler_config").filter(F.col("blockchain") != blockchain)
-        self.overwrite(
-            "crawler_config",
-            existing.unionByName(updates),
-            touched_blockchains=[blockchain],
-        )
+        # the other blockchains' config partitions hard-link unchanged
+        self.overwrite("crawler_config", updates, touched_blockchains=[blockchain])
 
     def increment_data_version(self, blockchain: str) -> int:
         """Atomic-enough for a single-writer driver: the reference's
@@ -639,7 +481,5 @@ class SilverStore:
 
     def reset(self) -> None:
         """K13 — drop all tables."""
-        import shutil
-
         if os.path.exists(self.root):
             shutil.rmtree(self.root)

@@ -8,11 +8,10 @@ Spark-first shape: a ``foreachBatch``-style micro-batch driver — each tick
 computes the batch range ``[last+1, height − trail]``, runs the **same batch
 crawl DAG** (``plans.crawl``) over that slice of bronze, and applies the
 version-guarded merges.  Every sink is idempotent: transfers append with a
-dedup key (K6), tokens merge version-guarded (K2–K5), and owners are
-REBUILT for the batch's touched tokens from the committed transfers table
-(round-2 fix, ADVICE r1 — additive delta re-application on retry would
-double-count).  At-least-once delivery + idempotent sinks = effectively-
-once.  Progress lives in the ``crawler_config`` control table (ST3);
+dedup key (K6), then tokens and owners are REBUILT for the batch's touched
+keys from the committed transfers table (re-applying additive deltas on a
+retry would double-count).  At-least-once delivery + idempotent sinks =
+effectively-once.  Progress lives in the ``crawler_config`` control table (ST3);
 ``seed`` overwrites it (ST6).
 
 A ``ChainSource`` abstracts where bronze comes from: fixtures/parquet

@@ -92,7 +92,7 @@ ADJUDICATED = {
     ("dedup_stream_semantic_admission_sim", _BNLJ): "top-2 (batch) + top-1 (admitted) assignment: both splits × the broadcast derived-K (≤SEM_K_MAX=4096-row) admitted-trained centroid table (dedup_semantic_cells_mp2's class; candidates themselves are cid equi-joins)",
     ("emb_ivf_recall_audit", _BNLJ): "the brute TRUTH side: bounded 8-query sample × corpus — the exact search a recall audit pays on its query sample by construction (plus the IVF side's 64-row centroid broadcast)",
     ("emb_bitsign_knn_join", _BNLJ): "8-row broadcast query-code sample × the 16 B/vector codes scan — stage 1 of the batched two-stage sign search (floats touched only for the ≤|Q|·L rerank rows)",
-    # r14 map-side ADC (be647a8): pq_codes/pq_adc_topk crossJoin the
+    # map-side ADC: the PQ searches crossJoin the
     # 1-ROW packed codebook (M·K codewords folded into one struct-array
     # row) and the ≤|Q|-row LUT frame — both bounded by construction;
     # the only exchange left in the search path is the top-k window

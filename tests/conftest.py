@@ -18,99 +18,3 @@ def spark():
     )
     yield s
     s.stop()
-
-
-# ---------------------------------------------------------------------------
-# r15 (VERDICT r14 task 3): the full suite outgrew the driver's pytest
-# window (327 tests, ~40 min wall), so VERIFY_r14 reported tests_ok:false on
-# a TRUNCATED run, not a failure.  The measured-heavy tests below (>= ~6 s
-# each in the r15 full-suite timing, /tmp-logged and recorded in
-# OPTIMIZATION_r15.md) are auto-marked "slow" and DESELECTED BY DEFAULT via
-# pytest.ini's `-m "not slow"`; nothing is deleted — run them with
-#     python -m pytest tests/ -m slow
-# or the whole suite with -m "".  The default selection stays a real gate:
-# every operator/file keeps its fast assertions.
-_SLOW_NODE_IDS = {
-    "tests/test_audit_ops.py::test_admission_sim_matches_the_real_store",
-    "tests/test_audit_ops.py::test_kmeans_family_queries_leave_no_cached_frames",
-    "tests/test_audit_ops.py::test_minhash_family_queries_leave_no_cached_frames",
-    "tests/test_audit_ops.py::test_pair_pagerank_hub_outranks_leaves",
-    "tests/test_audit_ops.py::test_power_iteration_finds_planted_dominant_axis",
-    "tests/test_audit_ops.py::test_semantic_cells_exact_recall_characterization",
-    "tests/test_bucketing.py::test_bucketed_join_has_no_shuffle",
-    "tests/test_cli_curate.py::test_curate_mixture_sampling_is_a_valid_alternative",
-    "tests/test_cli_curate.py::test_curate_writes_shards_and_consistent_manifest",
-    "tests/test_cli_load.py::test_chunked_crawl_clamps_to_bronze_min",
-    "tests/test_cli_load.py::test_chunked_crawl_equals_single_pass",
-    "tests/test_cli_load.py::test_chunked_load_fresh_epoch_reprocesses",
-    "tests/test_cli_load.py::test_load_equals_crawl_over_same_range",
-    "tests/test_cli_load.py::test_load_height_clips_and_tail_resumes",
-    "tests/test_cli_load.py::test_query_subcommand_sql_over_silver_and_bronze",
-    "tests/test_cli_load.py::test_recrawl_same_range_is_idempotent",
-    "tests/test_cli_load.py::test_rewind_equals_clipped_crawl",
-    "tests/test_cli_load.py::test_sigint_mid_crawl_commits_progress_and_resumes",
-    "tests/test_corpus_stream.py::test_band_index_heals_and_legacy_corpus_adopts_layout",
-    "tests/test_corpus_stream.py::test_index_read_is_side_effect_free_and_heals_lazily",
-    "tests/test_corpus_stream.py::test_index_side_table_consistent_across_compaction",
-    "tests/test_corpus_stream.py::test_large_batch_skips_forced_broadcast_but_stays_correct",
-    "tests/test_corpus_stream.py::test_near_dup_ingest_does_not_accumulate_cached_frames",
-    "tests/test_corpus_stream.py::test_near_dup_mode_blocks_within_and_across_batches",
-    "tests/test_corpus_stream.py::test_rearriving_doc_id_never_readmits",
-    "tests/test_corpus_stream.py::test_semantic_gate_adopts_pinned_codebook_on_reopen",
-    "tests/test_corpus_stream.py::test_semantic_gate_blocks_near_vectors_across_batches",
-    "tests/test_corpus_stream.py::test_semantic_gate_top2_blocks_boundary_straddling_dup",
-    "tests/test_corpus_stream.py::test_semantic_vindex_heals_from_docs",
-    "tests/test_corpus_stream.py::test_vindex_legacy_layout_adopts_fp_bucket_count",
-    "tests/test_corpus_stream.py::test_vindex_probes2_blocks_symmetric_straddler",
-    "tests/test_crawl_verify.py::test_verify_clean_roundtrip",
-    "tests/test_datasource.py::test_logs_format_reads_fixture_chain",
-    "tests/test_datasource.py::test_streaming_max_blocks_per_batch",
-    "tests/test_decode_folds.py::test_holding_stats_window_equals_pandas",
-    "tests/test_decode_folds.py::test_removed_logs_never_reach_folds",
-    "tests/test_pack_properties.py::test_chunks_are_exact_codepoint_windows",
-    "tests/test_pack_properties.py::test_packing_matches_sequential_simulation",
-    "tests/test_pq.py::test_encode_invariants",
-    "tests/test_pq.py::test_encode_partitioning_invariant",
-    "tests/test_pq.py::test_ivfpq_residual_matches_flat_adc_when_single_cell",
-    "tests/test_pq.py::test_trained_residual_codebook_refines_and_leaks_nothing",
-    "tests/test_properties.py::test_chunked_additive_merge_equals_bulk",
-    "tests/test_properties.py::test_dedup_components_match_union_find",
-    "tests/test_properties.py::test_fold_is_order_insensitive",
-    "tests/test_properties.py::test_rank_selection_random_differential",
-    "tests/test_properties.py::test_versioned_upsert_is_permutation_invariant",
-    "tests/test_r11_evidence.py::test_centroid_memo_hit_is_result_identical",
-    "tests/test_r11_evidence.py::test_semantic_trio_shares_one_training",
-    "tests/test_r12_evidence.py::test_bitsign_knn_join_recall_vs_brute",
-    "tests/test_r12_evidence.py::test_family_overlap_matches_per_family_pair_sets",
-    "tests/test_r12_evidence.py::test_family_overlap_planted_niches",
-    "tests/test_r12_evidence.py::test_ivf_recall_audit_matches_script_grid",
-    "tests/test_r12_evidence.py::test_pq_codebook_memo_hit_is_result_identical",
-    "tests/test_r13_evidence.py::test_residual_codebook_layout_mismatch_raises",
-    "tests/test_r13_evidence.py::test_semantic_stage_memo_hit_is_result_identical",
-    "tests/test_r13_evidence.py::test_stream_dedup_native_twin_vs_corpus_gate",
-    "tests/test_r14_evidence.py::test_corpus_phash_gate_blocks_perceptual_twins",
-    "tests/test_r14_evidence.py::test_family_overlap_pair_memo_hit_is_result_identical",
-    "tests/test_r14_evidence.py::test_ivfpq_rerank_exactness_and_pruning_contract",
-    "tests/test_r14_evidence.py::test_minhash_admission_sim_matches_the_real_store_and_exact_superset",
-    "tests/test_r14_evidence.py::test_minhash_closure_memo_hit_is_result_identical",
-    "tests/test_r14_evidence.py::test_modality_pair_memo_hit_is_result_identical",
-    "tests/test_stats.py::test_crawl_cli_stats_line",
-    "tests/test_stats.py::test_tail_cli_stats_line",
-    "tests/test_stats.py::test_tail_runner_counts",
-    "tests/test_store.py::test_apply_silver_bucket_prunes_all_three_tables",
-    "tests/test_store.py::test_apply_silver_results_identical_with_and_without_read_pruning",
-    "tests/test_store.py::test_rebuild_tokens_keeps_metadata_across_epochs",
-    "tests/test_streaming.py::test_stream_interval_join_drops_late_rows",
-    "tests/test_streaming.py::test_stream_interval_join_outer_emits_unmatched_after_watermark",
-    "tests/test_streaming.py::test_stream_stream_interval_join_matches_batch",
-    "tests/test_streaming.py::test_stream_tail_matches_bulk",
-    "tests/test_streaming.py::test_stream_tail_over_custom_datasource",
-    "tests/test_tail.py::test_tail_batch_retry_is_idempotent",
-    "tests/test_tail.py::test_tail_equals_bulk",
-}
-
-
-def pytest_collection_modifyitems(config, items):
-    for item in items:
-        if item.nodeid in _SLOW_NODE_IDS:
-            item.add_marker(pytest.mark.slow)

@@ -7,6 +7,7 @@ cross-query conservation laws and algebraic invariants.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from block_crawler_spark.sources.tables import load_table
@@ -75,6 +76,7 @@ def test_key_skew_ranks_and_shares(spark):
     assert sum(r["share_ppm"] for r in rows) <= 1_000_000
 
 
+@pytest.mark.slow
 def test_admission_sim_matches_the_real_store(spark, tmp_path):
     """dedup_stream_admission_sim claims to be the relational twin of the
     corpus store's exact-dedup admission rule — prove it: feed the ACTUAL
@@ -219,6 +221,7 @@ def test_sq_reconstruction_stays_in_bin(spark):
             assert abs(recon - x) <= span // SQ_BINS + 1, (i, x, recon)
 
 
+@pytest.mark.slow
 def test_semantic_cells_exact_recall_characterization(spark):
     """dedup_semantic_cells = (brute close pairs) ∩ (same trained cell)
     ∩ (same shard) — the SemDeDup pruning trade plus the r9 skew guard,
@@ -311,6 +314,7 @@ def test_minhash_est_error_brackets_the_threshold_pairs(spark):
     assert kept == from_audit
 
 
+@pytest.mark.slow
 def test_power_iteration_finds_planted_dominant_axis(spark):
     from pyspark.sql import functions as F  # noqa: F401
 
@@ -338,6 +342,7 @@ def test_power_iteration_finds_planted_dominant_axis(spark):
     assert POWER_SCALE <= mx < 2 * POWER_SCALE
 
 
+@pytest.mark.slow
 def test_pair_pagerank_hub_outranks_leaves(spark):
     from block_crawler_spark.operators.dedup import pair_pagerank
     from block_crawler_spark.plans.text_ops import pair_pagerank_query
@@ -382,6 +387,7 @@ def test_semantic_keep_closure_invariants(spark):
         assert keep[p["id_a"]]["keep_id"] == keep[p["id_b"]]["keep_id"]
 
 
+@pytest.mark.slow
 def test_minhash_family_queries_leave_no_cached_frames(spark):
     """The minhash registry queries use materialize=False (round-8 review):
     a lazily-returned query can never unpersist, so a cache() inside would
@@ -583,6 +589,7 @@ def test_length_percentiles_match_naive_ranks(spark):
             assert r[f"p{p}_tok"] == lens[(n * p + 99) // 100 - 1], (src, p)
 
 
+@pytest.mark.slow
 def test_kmeans_family_queries_leave_no_cached_frames(spark):
     """kmeans_lloyd_fixed cache()s the fixed-point corpus for the training
     loop — r9 it driver-materializes the ≤k-row centroids and unpersists
@@ -660,8 +667,6 @@ def test_residual_train_sample_validation():
     """train_sample smaller than n_codewords would silently shrink the
     codebook (seeds are _id < n_codewords); the operator now rejects it —
     and 0 is a rejected value, not a truthy-unset (ADVICE r8)."""
-    import pytest
-
     from block_crawler_spark.operators.pq import ivfpq_residual_topk
 
     for bad in (0, 3):

@@ -17,6 +17,7 @@ from block_crawler_spark.schemas import LOG_SCHEMA
 from block_crawler_spark.sources.chainfix import standard_scenario
 
 
+@pytest.mark.slow
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     # default warehouse dir (static conf) — tables are dropped in finally
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force non-broadcast

@@ -5,12 +5,15 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from block_crawler_spark.cli import main
 from block_crawler_spark.plans.pipeline import curation_pipeline_query
 
 SF = "/root/testdata/sf0.001"
 
 
+@pytest.mark.slow
 def test_curate_writes_shards_and_consistent_manifest(spark, tmp_path, capsys):
     out = str(tmp_path / "curated")
     assert main(["curate", "--documents", SF, "--out", out]) == 0
@@ -46,6 +49,7 @@ def test_curate_with_zero_survivors_reports_cleanly(spark, tmp_path, capsys):
     assert summary["docs_kept"] == 0 and summary["bins"] == 0 and summary["tokens_packed"] == 0
 
 
+@pytest.mark.slow
 def test_curate_mixture_sampling_is_a_valid_alternative(spark, tmp_path, capsys):
     from block_crawler_spark.plans.pipeline import curated_doc_ids
 

@@ -37,6 +37,7 @@ def _table_set(store: SilverStore, table: str) -> set[tuple]:
     return {tuple(r) for r in store.read(table).collect()}
 
 
+@pytest.mark.slow
 def test_load_equals_crawl_over_same_range(spark, bronze, tmp_path, capsys):
     logs, blocks, height = bronze
     s_load, s_crawl = str(tmp_path / "sl"), str(tmp_path / "sc")
@@ -52,6 +53,7 @@ def test_load_equals_crawl_over_same_range(spark, bronze, tmp_path, capsys):
     assert st_l.get_config("testnet") == st_c.get_config("testnet")
 
 
+@pytest.mark.slow
 def test_load_height_clips_and_tail_resumes(spark, bronze, tmp_path, capsys):
     """Loading to height-1 must exclude the top block's transfers and leave
     last_block_id = height-1 (the tail's resume point)."""
@@ -81,6 +83,7 @@ def test_force_load_fixture(spark, tmp_path, capsys):
     assert len(rows) == 1 and rows[0]["collection_id"] == collection
 
 
+@pytest.mark.slow
 def test_chunked_crawl_equals_single_pass(spark, bronze, tmp_path, capsys):
     """--chunk-size N must produce the same silver as the one-pass crawl,
     with last_block_id committed at the final chunk boundary."""
@@ -96,6 +99,7 @@ def test_chunked_crawl_equals_single_pass(spark, bronze, tmp_path, capsys):
     assert st_ch.get_config("testnet") == st_1.get_config("testnet")
 
 
+@pytest.mark.slow
 def test_sigint_mid_crawl_commits_progress_and_resumes(spark, bronze, tmp_path, capsys):
     """Graceful stop (reference nft/bin/crawl.py:188-195): an interrupt
     delivered mid-crawl stops at the next chunk boundary with a committed
@@ -144,6 +148,7 @@ def test_sigint_mid_crawl_commits_progress_and_resumes(spark, bronze, tmp_path, 
         assert _table_set(store, table) == _table_set(ref, table), table
 
 
+@pytest.mark.slow
 def test_recrawl_same_range_is_idempotent(spark, bronze, tmp_path, capsys):
     """Re-running crawl over the same bronze must rewrite identical silver —
     the additive token quantity must not double-count (ST5 retry
@@ -160,6 +165,7 @@ def test_recrawl_same_range_is_idempotent(spark, bronze, tmp_path, capsys):
     assert out["clean"] is True, out
 
 
+@pytest.mark.slow
 def test_query_subcommand_sql_over_silver_and_bronze(spark, bronze, tmp_path, capsys):
     """`query` runs ad-hoc Spark SQL over registered bronze + silver views
     — the capability the reference lacks; --save writes parquet without a
@@ -191,6 +197,7 @@ def test_query_subcommand_sql_over_silver_and_bronze(spark, bronze, tmp_path, ca
     assert spark.read.parquet(out).count() > 0
 
 
+@pytest.mark.slow
 def test_rewind_equals_clipped_crawl(spark, bronze, tmp_path, capsys):
     """Reorg repair: crawl the full chain, rewind to N, and the silver must
     equal a crawl that never saw blocks > N — orphaned-branch tokens
@@ -220,6 +227,7 @@ def test_rewind_equals_clipped_crawl(spark, bronze, tmp_path, capsys):
     assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["clean"] is True
 
 
+@pytest.mark.slow
 def test_chunked_load_fresh_epoch_reprocesses(spark, bronze, tmp_path, capsys):
     """--increment-data-version + --chunk-size must reprocess from the
     bronze start under the new epoch (round-5 review: resume-from-config
@@ -242,6 +250,7 @@ def test_chunked_load_fresh_epoch_reprocesses(spark, bronze, tmp_path, capsys):
         "every token row must carry the new epoch after the chunked reload"
 
 
+@pytest.mark.slow
 def test_chunked_crawl_clamps_to_bronze_min(spark, bronze, tmp_path):
     """A fresh store over high-block bronze must not grind empty chunks up
     from block 0 — the chunk loop starts at the bronze range's min block."""

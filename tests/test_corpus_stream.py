@@ -8,6 +8,8 @@ is exactly-once across restarts.
 
 from __future__ import annotations
 
+import pytest
+
 from block_crawler_spark.streaming.corpus import DOC_SCHEMA, CorpusIngestStore
 
 
@@ -78,6 +80,7 @@ def test_compaction_preserves_corpus_and_replay_markers(spark, tmp_path):
 BASE = "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima mike november oscar papa quebec romeo sierra tango"
 
 
+@pytest.mark.slow
 def test_near_dup_mode_blocks_within_and_across_batches(spark, tmp_path):
     store = CorpusIngestStore(spark, str(tmp_path / "corpus"), near_dup=True)
     near1 = BASE.replace("tango", "zulu")  # 3 of 18 shingles differ → J≈0.71
@@ -130,20 +133,19 @@ def test_quality_gate_rejects_before_dedup(spark, tmp_path):
 def test_checkpoint_is_pinned_to_the_corpus(spark, tmp_path):
     """Replay tombstones are only valid for the checkpoint that numbered
     them: a different checkpoint must be refused, not silently no-opped."""
-    import pytest as _pytest
-
     src = str(tmp_path / "src")
     store = CorpusIngestStore(spark, str(tmp_path / "corpus"))
     _docs(spark, [(1, "some text here")]).write.mode("append").parquet(src)
     store.start_stream(src, str(tmp_path / "ck1")).awaitTermination(120)
     assert _corpus_ids(store) == [1]
-    with _pytest.raises(ValueError, match="bound to checkpoint"):
+    with pytest.raises(ValueError, match="bound to checkpoint"):
         store.start_stream(src, str(tmp_path / "ck2"))
     # the original checkpoint still works
     store.start_stream(src, str(tmp_path / "ck1")).awaitTermination(120)
     assert _corpus_ids(store) == [1]
 
 
+@pytest.mark.slow
 def test_rearriving_doc_id_never_readmits(spark, tmp_path):
     """doc_id is the corpus identity: a revised text under an admitted id is
     rejected (and cannot corrupt near-dup verification with duplicate ids)."""
@@ -157,6 +159,7 @@ def test_rearriving_doc_id_never_readmits(spark, tmp_path):
     assert texts[1] == BASE
 
 
+@pytest.mark.slow
 def test_near_dup_ingest_does_not_accumulate_cached_frames(spark, tmp_path):
     """Regression for the per-batch cache leak: a long-running near-dup
     stream must not pin one more shingle/lineage table per micro-batch."""
@@ -186,6 +189,7 @@ def test_index_side_table_heals_after_crash(spark, tmp_path):
     assert os.path.exists(os.path.join(reopened._index_root(), "batch-0", "_SUCCESS"))
 
 
+@pytest.mark.slow
 def test_index_side_table_consistent_across_compaction(spark, tmp_path):
     """After compaction the index mirrors the docs live set dir-for-dir and
     row-for-row (near-dup mode: signatures included)."""
@@ -276,6 +280,7 @@ def test_index_is_bucketed_and_fp_probe_prunes_partitions(spark, tmp_path):
     assert "corpus/docs" not in plan, "committed index dirs must serve the probe, not the corpus"
 
 
+@pytest.mark.slow
 def test_index_read_is_side_effect_free_and_heals_lazily(spark, tmp_path):
     """A read-only consumer gets a complete, correct index without writing
     anything (ADVICE r6 corpus.py:262): with a crashed-away index dir,
@@ -327,6 +332,7 @@ def test_prebucketed_index_layout_migrates_on_ingest(spark, tmp_path):
     assert any(d.startswith("ibucket=") for d in os.listdir(os.path.join(store._index_root(), "batch-0")))
 
 
+@pytest.mark.slow
 def test_large_batch_skips_forced_broadcast_but_stays_correct(spark, tmp_path):
     """A batch above broadcast_max_batch_rows must not carry a forced
     broadcast hint (an availableNow backfill batch can be corpus-scale —
@@ -403,6 +409,7 @@ def test_band_index_is_bucketed_and_near_dup_probe_prunes(spark, tmp_path):
     assert "corpus/docs" not in plan, "committed band-index dirs must serve the probe, not the corpus"
 
 
+@pytest.mark.slow
 def test_band_index_heals_and_legacy_corpus_adopts_layout(spark, tmp_path):
     """A near-dup corpus written before the band index existed (simulated by
     deleting bindex) still blocks near-dups — band_index() projects lazily
@@ -588,6 +595,7 @@ def _train_cents(spark):
     return cents
 
 
+@pytest.mark.slow
 def test_semantic_gate_blocks_near_vectors_across_batches(spark, tmp_path):
     store = CorpusIngestStore(
         spark, str(tmp_path / "corpus"), semantic=True, semantic_centroids=_train_cents(spark)
@@ -630,6 +638,7 @@ def test_semantic_gate_blocks_near_vectors_across_batches(spark, tmp_path):
     assert sorted(r["doc_id"] for r in store.vindex().collect()) == [1, 3, 5]
 
 
+@pytest.mark.slow
 def test_semantic_gate_adopts_pinned_codebook_on_reopen(spark, tmp_path):
     root = str(tmp_path / "corpus")
     store = CorpusIngestStore(spark, root, semantic=True, semantic_centroids=_train_cents(spark))
@@ -650,6 +659,7 @@ def test_semantic_gate_adopts_pinned_codebook_on_reopen(spark, tmp_path):
     assert _corpus_ids(store2) == [1, 3]
 
 
+@pytest.mark.slow
 def test_semantic_vindex_heals_from_docs(spark, tmp_path):
     import shutil as _sh
     import os as _os
@@ -685,6 +695,7 @@ def _two_cell_codebook(spark):
     )
 
 
+@pytest.mark.slow
 def test_semantic_gate_top2_blocks_boundary_straddling_dup(spark, tmp_path):
     """The planted cell-boundary straddler (VERDICT r11 task 4): doc 1 at
     x=0.90 is admitted into cell 0; doc 2 at x=1.05 is a true near-dup
@@ -785,6 +796,7 @@ def test_vindex_bucket_count_derives_from_codebook_and_pins(spark, tmp_path):
     assert sorted(r["doc_id"] for r in store2.vindex(buckets=[1]).collect()) == [2]
 
 
+@pytest.mark.slow
 def test_vindex_legacy_layout_adopts_fp_bucket_count(spark, tmp_path):
     """A pre-r12 store (committed vindex dirs, no _VINDEX_BUCKETS marker)
     must adopt the count its dirs were actually written with — pruning on
@@ -861,6 +873,7 @@ def test_semantic_read_paths_never_write(spark, tmp_path):
     assert sorted(r["cid"] for r in store2._centroids().collect()) == [0, 1]
 
 
+@pytest.mark.slow
 def test_vindex_probes2_blocks_symmetric_straddler(spark, tmp_path):
     """The residual the batch-side top-2 alone can't close (r12 optional):
     with 3 cells C/A/B, admitted x has top-2 {C, B} and batch y has top-2

@@ -90,6 +90,7 @@ def test_tokens_and_owners_consistent(spark, silver):
     assert len(report) == 2
 
 
+@pytest.mark.slow
 def test_verify_clean_roundtrip(spark, chain, silver):
     """Silver built from the logs reconciles cleanly against those logs."""
     fb, logs, *_ = chain

@@ -16,6 +16,7 @@ def _register(spark):
     register(spark)
 
 
+@pytest.mark.slow
 def test_logs_format_reads_fixture_chain(spark):
     fb = standard_scenario()
     lo = min(r["block_number"] for r in fb.rows)
@@ -98,6 +99,7 @@ def test_streaming_format_tail(spark, tmp_path):
     assert max(r["block_number"] for r in got) == hi - 1
 
 
+@pytest.mark.slow
 def test_streaming_max_blocks_per_batch(spark, tmp_path):
     """ADVICE r1 (datasource.py:223): catch-up must not materialize the
     whole backlog in one driver-side micro-batch — with a cap of 3 blocks,

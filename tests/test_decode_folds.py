@@ -213,6 +213,7 @@ def test_erc1155_balances_fold(spark, decoded, fixture_rows):
     assert got == exp
 
 
+@pytest.mark.slow
 def test_holding_stats_window_equals_pandas(spark):
     """The registry `nft_holding_stats` is the JVM window plan; the grouped-
     pandas form stays as the SURVEY §2.10 API pin.  They must agree, and the
@@ -227,6 +228,7 @@ def test_holding_stats_window_equals_pandas(spark):
     assert pdf_w == pdf_p
 
 
+@pytest.mark.slow
 def test_removed_logs_never_reach_folds(spark, fixture_rows):
     """Reorg guard: a log redelivered with removed=true (orphaned block)
     must be dropped by decode; the same log with removed=false decodes."""

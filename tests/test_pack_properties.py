@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -48,6 +49,7 @@ def _write_docs(spark, tmp_path, texts):
     return str(tmp_path)
 
 
+@pytest.mark.slow
 @given(texts=st.lists(_text, min_size=1, max_size=6))
 @SPARK_SETTINGS
 def test_chunks_are_exact_codepoint_windows(spark, tmp_path_factory, texts):
@@ -67,6 +69,7 @@ def test_chunks_are_exact_codepoint_windows(spark, tmp_path_factory, texts):
     assert got == expect
 
 
+@pytest.mark.slow
 @given(texts=st.lists(_text, min_size=1, max_size=10))
 @SPARK_SETTINGS
 def test_packing_matches_sequential_simulation(spark, tmp_path_factory, texts):

@@ -33,6 +33,7 @@ def test_codebook_shape(pq_parts):
     assert all(0 <= r["code"] < K and len(r["cvec"]) == SUB for r in rows)
 
 
+@pytest.mark.slow
 def test_encode_invariants(pq_parts):
     emb, cb, codes = pq_parts
     n = emb.count()
@@ -56,6 +57,7 @@ def test_encode_invariants(pq_parts):
         assert all(code == vid for (vid, _m), code in self_codes.items())
 
 
+@pytest.mark.slow
 def test_encode_partitioning_invariant(spark, pq_parts):
     emb, cb, codes = pq_parts
     again = pq_encode(emb.repartition(7), cb, M, SUB)
@@ -128,6 +130,7 @@ def test_pq_train_codebook_leaves_no_cached_frames(spark):
     assert after <= before, f"cached RDDs grew {before} -> {after}"
 
 
+@pytest.mark.slow
 def test_ivfpq_residual_matches_flat_adc_when_single_cell(spark):
     """With ONE cell, residual IVFADC degenerates to flat ADC over shifted
     vectors: every vector's residual is v - c0, distances between residuals
@@ -191,6 +194,7 @@ def test_ivfpq_residual_matches_flat_adc_when_single_cell(spark):
     assert got == want
 
 
+@pytest.mark.slow
 def test_trained_residual_codebook_refines_and_leaks_nothing(spark):
     """The trained residual path (round 8): train_iters>0 runs the shared
     grouped-Lloyd loop over the residual subvectors of the bounded sample.

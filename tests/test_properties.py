@@ -72,6 +72,7 @@ SPARK_SETTINGS = settings(
 )
 
 
+@pytest.mark.slow
 @given(rows=event_history(), seed=st.integers(min_value=0, max_value=2**16))
 @SPARK_SETTINGS
 def test_fold_is_order_insensitive(spark, rows, seed):
@@ -93,6 +94,7 @@ def test_fold_is_order_insensitive(spark, rows, seed):
     assert state(rows) == state(shuffled)
 
 
+@pytest.mark.slow
 @given(rows=event_history(), cut=st.integers(min_value=0, max_value=12))
 @SPARK_SETTINGS
 def test_chunked_additive_merge_equals_bulk(spark, rows, cut):
@@ -136,6 +138,7 @@ def test_chunked_additive_merge_equals_bulk(spark, rows, cut):
     assert got == exp
 
 
+@pytest.mark.slow
 @given(
     updates=st.lists(
         st.tuples(st.sampled_from(["k1", "k2", "k3"]), st.integers(1, 5), st.integers(0, 100)),
@@ -168,6 +171,7 @@ def test_versioned_upsert_is_permutation_invariant(spark, updates, seed):
     assert apply(seq) == apply(shuffled)
 
 
+@pytest.mark.slow
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     edges=st.lists(
@@ -262,6 +266,7 @@ def test_exact_rank_values_percentiles_match_sorted_multiset(spark):
         assert got[t]["n"] == n
 
 
+@pytest.mark.slow
 @settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
     groups=st.dictionaries(

@@ -6,6 +6,7 @@ construction, asserted here against an independent recomputation)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from block_crawler_spark.sources.tables import load_table
@@ -17,6 +18,7 @@ def _frozen(rows):
     return sorted(tuple(r) for r in rows)
 
 
+@pytest.mark.slow
 def test_centroid_memo_hit_is_result_identical(spark):
     """Cold (trains, populates the memo) vs warm (memo hit: stored
     centroids + single-pass assignment) must produce the same frame for
@@ -36,6 +38,7 @@ def test_centroid_memo_hit_is_result_identical(spark):
         assert cold == warm, f"{fn.__name__}: memo hit diverged from training"
 
 
+@pytest.mark.slow
 def test_semantic_trio_shares_one_training(spark):
     """The semantic trio (cells → keep composes cells; balanced sample)
     all train the identical (sf_dir, _sem_k(N), iters) codebook: after one

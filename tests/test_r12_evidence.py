@@ -3,6 +3,7 @@ balanced sampler, and the shared top-2 assignment helper."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -241,6 +242,7 @@ def test_bitsign_rerank_recall_and_exactness(spark):
         assert len(true10 & short_half) / 10 >= 0.8
 
 
+@pytest.mark.slow
 def test_family_overlap_matches_per_family_pair_sets(spark):
     """The cross-detector agreement matrix must be EXACTLY the overlap of
     the four per-family pair sets the registry already exposes — recomputed
@@ -340,6 +342,7 @@ def test_span_dup_coverage_planted_and_graded(spark, tmp_path):
         assert cov[s]["mean_shared_ppm"] > 0, f"source {s} has span pairs but zero coverage"
 
 
+@pytest.mark.slow
 def test_pq_codebook_memo_hit_is_result_identical(spark):
     """Round 12 extends the session memo to the two trained-PQ families
     (the last per-invocation trainers): cold (grouped Lloyd runs,
@@ -445,6 +448,7 @@ def test_cell_label_purity_identities(spark):
         assert r["purity_ppm"] == top_n * 1_000_000 // sum(ctr.values())
 
 
+@pytest.mark.slow
 def test_ivf_recall_audit_matches_script_grid(spark):
     """The in-engine recall audit must agree with an independent exact
     recompute of both sides (brute cosine truth and IVF candidate top-k)
@@ -484,6 +488,7 @@ def test_ivf_recall_audit_matches_script_grid(spark):
     assert 0.6 <= mean <= 1.0, f"mean recall {mean} out of the measured band"
 
 
+@pytest.mark.slow
 def test_bitsign_knn_join_recall_vs_brute(spark):
     """The batched two-stage sign search vs the brute cosine truth at the
     committed L=100: measured recall@5 is EXACTLY 1.0 at sf0.001 and 0.85
@@ -518,6 +523,7 @@ def test_bitsign_knn_join_recall_vs_brute(spark):
             assert dists == sorted(dists), q
 
 
+@pytest.mark.slow
 def test_family_overlap_planted_niches(spark, tmp_path):
     """Each detector family's claimed NICHE, as a theorem on a planted
     corpus: a near-identical pair (one token changed) is caught by every

@@ -181,6 +181,7 @@ def test_media_phash_registry_finds_exactly_the_planted_twins(spark):
                 assert hamming == 0  # exact level-shift invariance holds
 
 
+@pytest.mark.slow
 def test_stream_dedup_native_twin_vs_corpus_gate(spark, tmp_path):
     """API-parity proof for the corpus gate's exact stage vs the NATIVE
     ``dropDuplicatesWithinWatermark`` operator (VERDICT r12 optional a),
@@ -428,6 +429,7 @@ def test_clustered_fixture_determinism_and_ivf_saturation(spark):
     emb.unpersist()
 
 
+@pytest.mark.slow
 def test_semantic_stage_memo_hit_is_result_identical(spark):
     """The semantic pair/closure session memos (VERDICT r12 task 2) change
     no result: a cold build and a warm memo hit return bit-identical rows
@@ -488,6 +490,7 @@ def test_semantic_stage_memo_hit_is_result_identical(spark):
             del _CENTROID_MEMO[k]
 
 
+@pytest.mark.slow
 def test_residual_codebook_layout_mismatch_raises(spark):
     """A caller-supplied residual codebook with a different (m, sub_dim,
     n_codewords) layout must raise, not silently produce wrong ADC

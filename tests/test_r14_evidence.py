@@ -235,6 +235,7 @@ def test_lm_gate_planted_rejects_id_aliasing(spark, tmp_path):
         lm_gated_quality_planted_query(spark, sf).collect()
 
 
+@pytest.mark.slow
 def test_family_overlap_pair_memo_hit_is_result_identical(spark):
     """The overlap pair-frame session memo (VERDICT r13 task 3 optional):
     a second ``dedup_family_overlap`` invocation replays the memoized
@@ -257,6 +258,7 @@ def test_family_overlap_pair_memo_hit_is_result_identical(spark):
     assert first == second
 
 
+@pytest.mark.slow
 def test_minhash_closure_memo_hit_is_result_identical(spark):
     """The minhash pair/closure session memos (round 14 — the semantic
     family's r13 pattern applied to the closure consumers): a cold build
@@ -294,6 +296,7 @@ def test_minhash_closure_memo_hit_is_result_identical(spark):
     assert any(r[2] for r in cold["cc"]), "sf0.001 must contain near-dup clusters"
 
 
+@pytest.mark.slow
 def test_modality_pair_memo_hit_is_result_identical(spark):
     """The modality pair-frame session memos (round 14 — the overlap-pairs
     pattern applied to the media matrix): a second
@@ -315,6 +318,7 @@ def test_modality_pair_memo_hit_is_result_identical(spark):
     assert first == second
 
 
+@pytest.mark.slow
 def test_corpus_phash_gate_blocks_perceptual_twins(spark, tmp_path):
     """The streaming perceptual gate (VERDICT r13 optional b — the dHash
     twin of the corpus store's minhash gate): (1) a brightness-shifted
@@ -447,6 +451,7 @@ def test_modality_overlap_matches_independent_recompute(spark):
     assert got[("image", "video")][0] > 0
 
 
+@pytest.mark.slow
 def test_ivfpq_rerank_exactness_and_pruning_contract(spark):
     """The IVFADC→rerank composition (round 14) at sf0.001: (1) every
     emitted distance equals the exact brute int64-L2 distance (the rerank
@@ -598,6 +603,7 @@ def test_stream_phash_admission_sim_matches_independent_recompute(spark):
     assert sum(got.values()) == len(batch)
 
 
+@pytest.mark.slow
 def test_minhash_admission_sim_matches_the_real_store_and_exact_superset(spark, tmp_path):
     """dedup_stream_minhash_admission_sim claims to be the relational twin
     of the corpus store's NEAR-DUP gate on the exact sim's re-submission

@@ -39,6 +39,7 @@ def test_ticker_emits_lines():
     assert "batches=1" in out[-1]
 
 
+@pytest.mark.slow
 def test_tail_runner_counts(spark, tmp_path):
     from block_crawler_spark.schemas import LOG_SCHEMA
     from block_crawler_spark.sources.chainfix import standard_scenario
@@ -64,6 +65,7 @@ def test_tail_runner_counts(spark, tmp_path):
     assert snap["owner_rows"] == store.read("owners").count()
 
 
+@pytest.mark.slow
 def test_tail_cli_stats_line(spark, tmp_path, capsys):
     from block_crawler_spark.cli import main
     from block_crawler_spark.schemas import LOG_SCHEMA
@@ -87,6 +89,7 @@ def test_tail_cli_stats_line(spark, tmp_path, capsys):
     assert summary["batches"] == 1
 
 
+@pytest.mark.slow
 def test_crawl_cli_stats_line(spark, tmp_path, capsys):
     """The reference's 60 s stats writer runs during BULK loads too
     (shared.py:187-305) — crawl/load now carry --stats-interval and emit a

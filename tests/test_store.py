@@ -1,18 +1,21 @@
-"""SilverStore snapshot-commit durability (round-2, ADVICE r1 store.py:67).
+"""SilverStore: snapshot-commit durability, partition pruning, and the
+declared per-table schemas.
 
 The store's overwrite must be crash-safe: a failure at any point before the
 atomic ``_CURRENT`` pointer flip leaves the previous complete version
 readable; stale version dirs and torn pointer temp files never corrupt a
-read.
+read.  Reads bind each table's stored schema, so building one starts no
+Spark job, and an overwrite whose columns differ from it is rejected.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from block_crawler_spark.streaming.store import SilverStore
+from block_crawler_spark.streaming.store import STORED_SCHEMAS, SilverStore
 
 
 def _mk(spark, tmp_path):
@@ -132,28 +135,6 @@ def test_partition_pruned_merge_leaves_untouched_blockchain_byte_identical(spark
     assert got.filter(F.col("blockchain") == "chain-b").count() == 1
 
 
-def test_pruned_overwrite_falls_back_on_legacy_unpartitioned_version(spark, tmp_path):
-    """A current version written before the partitioned layout (bare part
-    files) must trigger a FULL rewrite — pruning against it would drop the
-    other chains' rows silently."""
-    store = _mk(spark, tmp_path)
-    df = _transfers(spark, [_transfer_row("chain-a"), _transfer_row("chain-b")])
-    # simulate the pre-round-5 layout: unpartitioned parquet + pointer
-    base = store._path("token_transfers")
-    os.makedirs(base, exist_ok=True)
-    df.write.mode("overwrite").parquet(os.path.join(base, "v-1"))
-    with open(os.path.join(base, "_CURRENT"), "w") as f:
-        f.write("v-1")
-
-    upd = _transfers(spark, [_transfer_row("chain-a", owner="0xowner2")]).withColumn(
-        "attribute_version_hex", F.lit("0x" + "2".rjust(64, "0"))
-    )
-    store.append_transfers(upd, blockchains=["chain-a"])
-    got = store.read("token_transfers")
-    assert got.filter(F.col("blockchain") == "chain-b").count() == 1, "legacy rows must survive"
-    assert got.filter(F.col("blockchain") == "chain-a").count() == 2
-
-
 def _two_collections_in_distinct_buckets(store, spark):
     """Pick two collection ids that land in different cbuckets (pure function
     of the id — deterministic across runs)."""
@@ -205,37 +186,7 @@ def test_bucket_pruned_merge_leaves_untouched_bucket_hard_linked(spark, tmp_path
     assert "cbucket" not in got.columns
 
 
-def test_bucket_layout_migration_full_rewrite_once(spark, tmp_path):
-    """A current version partitioned by blockchain only (pre-bucket layout)
-    forces ONE full rewrite into the bucketed layout — mixed directory
-    depths would break partition discovery — after which merges prune."""
-    store = _mk(spark, tmp_path)
-    (col_x, b_x), (col_y, b_y) = _two_collections_in_distinct_buckets(store, spark)
-    df = _transfers(
-        spark, [_transfer_row("chain-a", collection=col_x), _transfer_row("chain-a", collection=col_y)]
-    )
-    base = store._path("token_transfers")
-    os.makedirs(base, exist_ok=True)
-    df.write.mode("overwrite").partitionBy("blockchain").parquet(os.path.join(base, "v-1"))
-    with open(os.path.join(base, "_CURRENT"), "w") as f:
-        f.write("v-1")
-
-    upd = _transfers(spark, [_transfer_row("chain-a", owner="0xowner2", collection=col_x)]).withColumn(
-        "attribute_version_hex", F.lit("0x" + "2".rjust(64, "0"))
-    )
-    store.append_transfers(upd, blockchains=["chain-a"], buckets=[b_x])
-    got = store.read("token_transfers")
-    assert got.count() == 3, "migration rewrite must keep every legacy row"
-    cur = store._current_version("token_transfers")
-    assert _bucket_inodes(base, cur, "chain-a", b_y), "migrated version must be bucket-partitioned"
-    # second merge: now bucket-pruned — col_y's bucket hard-links
-    before = _bucket_inodes(base, cur, "chain-a", b_y)
-    upd2 = upd.withColumn("attribute_version_hex", F.lit("0x" + "3".rjust(64, "0")))
-    store.append_transfers(upd2, blockchains=["chain-a"], buckets=[b_x])
-    after = _bucket_inodes(base, store._current_version("token_transfers"), "chain-a", b_y)
-    assert after == before
-
-
+@pytest.mark.slow
 def test_apply_silver_bucket_prunes_all_three_tables(spark, tmp_path):
     """The crawl/tail sink sequence derives touched buckets from the batch:
     a batch touching only col_x leaves col_y's bucket hard-linked in
@@ -273,12 +224,37 @@ def test_apply_silver_bucket_prunes_all_three_tables(spark, tmp_path):
 
 def test_empty_partitioned_write_reads_back_empty(spark, tmp_path):
     """partitionBy writes no data files for zero rows; a committed empty
-    version must read back as the canonical empty table, not error."""
+    version — like a fresh store — must read back as an empty frame of the
+    stored schema (silver tokens with ``specification``, silver transfers
+    with ``batch_index``), not error."""
     store = _mk(spark, tmp_path)
+    assert "specification" in STORED_SCHEMAS["tokens"].names
+    assert "batch_index" in STORED_SCHEMAS["token_transfers"].names
+    for t in ("tokens", "token_transfers"):
+        assert store.read(t).columns == STORED_SCHEMAS[t].names
+
     store.append_transfers(_transfers(spark, []))
-    got = store.read("token_transfers")
-    assert got.count() == 0
-    assert "batch_index" in got.columns
+    store.overwrite("tokens", spark.createDataFrame([], STORED_SCHEMAS["tokens"]))
+    for t in ("tokens", "token_transfers"):
+        assert store._current_version(t) == "v-1"
+        got = store.read(t)
+        assert got.count() == 0
+        assert got.columns == STORED_SCHEMAS[t].names
+
+
+def test_overwrite_rejects_frames_that_differ_from_the_stored_schema(spark, tmp_path):
+    """A missing column, or an extra one the declared-schema read would
+    silently drop, fails the write and commits nothing."""
+    store = _mk(spark, tmp_path)
+    cfg = _cfg(spark, "a", 1, 10)
+    with pytest.raises(ValueError, match=r"crawler_config.*missing \['last_block_id'\]"):
+        store.overwrite("crawler_config", cfg.drop("last_block_id"))
+    with pytest.raises(ValueError, match=r"crawler_config.*extra \['note'\]"):
+        store.overwrite("crawler_config", cfg.withColumn("note", F.lit("x")))
+    assert store._current_version("crawler_config") is None
+    store.overwrite("crawler_config", cfg.select("last_block_id", "blockchain", "data_version"))
+    assert store.read("crawler_config").columns == STORED_SCHEMAS["crawler_config"].names
+    assert store.get_config("a") == (1, 10)
 
 
 def test_rebuild_tokens_keeps_metadata_across_epochs(spark, tmp_path):
@@ -337,40 +313,7 @@ def test_read_prunes_partitions_statically(spark, tmp_path):
     assert "cbucket" not in pruned.columns
 
 
-def test_read_for_merge_gates_on_layout(spark, tmp_path):
-    """The existing-side read prunes exactly when the overwrite will prune:
-    on a legacy blockchain-only layout the read is FULL (the migration
-    rewrite must carry every row — a pruned read would drop the unscanned
-    partitions), and after migration the same call prunes."""
-    store = _mk(spark, tmp_path)
-    (col_x, b_x), (col_y, b_y) = _two_collections_in_distinct_buckets(store, spark)
-    df = _transfers(
-        spark,
-        [_transfer_row("chain-a", collection=col_x), _transfer_row("chain-b", collection=col_y)],
-    )
-    base = store._path("token_transfers")
-    os.makedirs(base, exist_ok=True)
-    df.write.mode("overwrite").partitionBy("blockchain").parquet(os.path.join(base, "v-1"))
-    with open(os.path.join(base, "_CURRENT"), "w") as f:
-        f.write("v-1")
-
-    # pre-bucket layout: capability denies pruning, read returns ALL rows
-    assert store._prune_capability("token_transfers") == (False, False)
-    full = store._read_for_merge("token_transfers", ["chain-a"], [b_x])
-    assert full.count() == 2
-
-    # a merge migrates the layout; the same read now prunes to the request
-    upd = _transfers(spark, [_transfer_row("chain-a", owner="0xo2", collection=col_x)]).withColumn(
-        "attribute_version_hex", F.lit("0x" + "2".rjust(64, "0"))
-    )
-    store.append_transfers(upd, blockchains=["chain-a"], buckets=[b_x])
-    assert store.read("token_transfers").count() == 3, "migration kept every legacy row"
-    assert store._prune_capability("token_transfers") == (True, True)
-    pruned = store._read_for_merge("token_transfers", ["chain-a"], [b_x])
-    got = {(r["blockchain"], r["collection_id"]) for r in pruned.collect()}
-    assert got == {("chain-a", col_x)}
-
-
+@pytest.mark.slow
 def test_apply_silver_results_identical_with_and_without_read_pruning(spark, tmp_path):
     """End-to-end: the pruned-read tail path produces byte-for-byte the same
     silver state as the unpruned path (blockchains=None disables all
@@ -404,3 +347,60 @@ def test_apply_silver_results_identical_with_and_without_read_pruning(spark, tmp
         a = sorted(map(str, pruned_store.read(t).collect()))
         b = sorted(map(str, full_store.read(t).collect()))
         assert a == b, f"{t}: pruned-read path diverged from full-read path"
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark job ids started by ``fn`` under job group ``group``.  A
+    one-job sentinel in a second group runs after ``fn``; the status store
+    records jobs in start order, so once the sentinel shows up every job
+    ``fn`` started has too."""
+    import time
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+        sc.setJobGroup(group + "-sentinel", "sentinel")
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(group + "-sentinel") and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(group + "-sentinel"), "sentinel job never reached the status store"
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_building_reads_starts_no_spark_job(spark, tmp_path):
+    """Reads bind the declared schema instead of inferring one from the
+    files, so building ``store.read(t)`` — pruned or not — starts no Spark
+    job, on a fresh store and on one holding all five tables."""
+    from types import SimpleNamespace
+
+    from block_crawler_spark.schemas import COLLECTION_SCHEMA
+
+    store = _mk(spark, tmp_path)
+    tables = list(STORED_SCHEMAS)
+
+    def build_reads():
+        for t in tables:
+            store.read(t)
+            store.read(t, blockchains=["chain-a"], buckets=[0, 1])
+
+    assert _jobs_in_group(spark, "read-fresh", build_reads) == []
+
+    tr = _transfers(spark, [_transfer_row("chain-a")])
+    toks = spark.createDataFrame(
+        [("chain-a", "0xc", "0x" + "07".rjust(64, "0"), "erc721", None, None, 1)],
+        "blockchain string, collection_id string, token_id_hex string, specification string, "
+        "metadata_url string, metadata_url_version_hex string, data_version long",
+    )
+    store.apply_silver(SimpleNamespace(token_transfers=tr, tokens=toks), 1, blockchains=["chain-a"])
+    coll = ("chain-a", "0xc", None, None, "n", "n", "S", None, "ERC-721", 5, 1_600_000_000, 1)
+    store.upsert_collections(spark.createDataFrame([coll], COLLECTION_SCHEMA), blockchains=["chain-a"])
+    store.set_config("chain-a", 1, 5)
+    assert all(store._current_version(t) for t in tables)
+
+    assert _jobs_in_group(spark, "read-populated", build_reads) == []
+    assert store.read("owners").count() == 1

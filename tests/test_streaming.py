@@ -52,6 +52,7 @@ def test_streaming_windows_match_batch(spark, tmp_path):
     assert got == exp and len(got) > 10
 
 
+@pytest.mark.slow
 def test_stream_tail_matches_bulk(spark, tmp_path):
     """foreachBatch streaming tail over chunked bronze == bulk crawl."""
     fb = standard_scenario()
@@ -90,6 +91,7 @@ def test_stream_tail_matches_bulk(spark, tmp_path):
     assert store.read("token_transfers").count() == bulk.token_transfers.count()
 
 
+@pytest.mark.slow
 def test_stream_tail_over_custom_datasource(spark, tmp_path):
     """End-to-end ST1-ST5 over the custom chain DataSource (round-5,
     VERDICT r4 #6): evm_logs_stream → stream_tail foreachBatch → SilverStore,
@@ -189,6 +191,7 @@ def test_session_windows_match_batch(spark, tmp_path):
     assert got == exp and len(got) > 10
 
 
+@pytest.mark.slow
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     """Watermarked stream-stream interval join (availableNow over file
     chunks) == the same fn on batch frames: every purchase joined to the
@@ -243,6 +246,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     assert exp == manual
 
 
+@pytest.mark.slow
 def test_stream_interval_join_drops_late_rows(spark, tmp_path):
     """Watermark semantics DEMONSTRATED, not asserted: after the stream's
     watermark has advanced far past T0 (phase-1 chunk includes a row 10
@@ -327,6 +331,7 @@ def test_stream_interval_join_drops_late_rows(spark, tmp_path):
     ) in keys, "fresh pair must still join after restart"
 
 
+@pytest.mark.slow
 def test_stream_interval_join_outer_emits_unmatched_after_watermark(spark, tmp_path):
     """left_outer stream-stream join: a clickless purchase emits with null
     right columns ONLY once the watermark passes its join window (Spark

@@ -46,6 +46,7 @@ def _tokens_map(df):
     }
 
 
+@pytest.mark.slow
 def test_tail_equals_bulk(spark, chain, tmp_path):
     fb, logs, blocks = chain
     store = SilverStore(spark, str(tmp_path / "silver"))
@@ -106,6 +107,7 @@ def test_tail_batches_release_their_cache(spark, chain, tmp_path):
     assert persistent().size() == before
 
 
+@pytest.mark.slow
 def test_tail_batch_retry_is_idempotent(spark, chain, tmp_path):
     """Replaying the same batch (at-least-once delivery) changes NOTHING —
     ST5's micro-batch retry contract.  Round-2 (ADVICE r1): owners are
