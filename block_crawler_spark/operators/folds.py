@@ -203,7 +203,7 @@ def fold_owner_deltas(transfers: DataFrame) -> DataFrame:
     ).drop("_gh")
 
 
-def owner_balances_from_silver(transfers_silver: DataFrame, touched_keys: DataFrame | None = None) -> DataFrame:
+def owner_balances_from_silver(transfers_silver: DataFrame) -> DataFrame:
     """Recompute owner balances from the IDEMPOTENT silver ``token_transfers``
     table — the retry-safe owners path (ADVICE r1, tail.py:84).
 
@@ -212,9 +212,8 @@ def owner_balances_from_silver(transfers_silver: DataFrame, touched_keys: DataFr
     double-counts additive quantities.  Deriving balances from the deduped
     transfers table instead makes the owners write a pure function of
     committed history — re-running it after any crash rewrites the same
-    values.  ``touched_keys`` (distinct ``blockchain, collection_id,
-    token_id_hex`` of the batch) restricts the recompute to affected tokens
-    via a left-semi join, so per-batch cost scales with the touched tokens'
+    values.  The store passes a partition-pruned read (the touched
+    collection buckets), so per-batch cost scales with those buckets'
     history, not the whole table.
 
     For ERC-721's linear mint→transfer→burn histories the additive ± fold
@@ -226,10 +225,7 @@ def owner_balances_from_silver(transfers_silver: DataFrame, touched_keys: DataFr
     """
     from ..functions.hexint import hex_to_dec
 
-    t = transfers_silver
-    if touched_keys is not None:
-        t = t.join(touched_keys, ["blockchain", "collection_id", "token_id_hex"], "left_semi")
-    t = t.withColumn("quantity", hex_to_dec(F.col("quantity_hex")))
+    t = transfers_silver.withColumn("quantity", hex_to_dec(F.col("quantity_hex")))
     deltas = _signed_delta_rows(t)
     balances = _grouped_by_token(deltas, "blockchain", "collection_id", "token_id_hex", "account").agg(
         _null_if_any_overflow(F.sum("delta"), "delta").alias("quantity")
@@ -239,9 +235,7 @@ def owner_balances_from_silver(transfers_silver: DataFrame, touched_keys: DataFr
     )
 
 
-def token_state_from_silver(
-    transfers_silver: DataFrame, touched_keys: DataFrame | None = None
-) -> DataFrame:
+def token_state_from_silver(transfers_silver: DataFrame) -> DataFrame:
     """Recompute the transfer-derived token-state fields (A1) from the
     IDEMPOTENT silver ``token_transfers`` table — the retry-safe tokens
     path, exactly parallel to :func:`owner_balances_from_silver`.
@@ -261,14 +255,11 @@ def token_state_from_silver(
     """
     from ..functions.hexint import hex_to_dec
 
-    t = transfers_silver
-    if touched_keys is not None:
-        t = t.join(touched_keys, ["blockchain", "collection_id", "token_id_hex"], "left_semi")
     is_mint = F.col("transaction_type") == TX_MINT
     is_burn = F.col("transaction_type") == TX_BURN
     own_event = F.col("transaction_type").isin(TX_MINT, TX_TRANSFER)
     qty = hex_to_dec(F.col("quantity_hex"))
-    t = t.withColumn(
+    t = transfers_silver.withColumn(
         "_signed",
         F.when(is_mint, qty).when(is_burn, -qty).otherwise(F.lit(0).cast("decimal(38,0)")),
     )

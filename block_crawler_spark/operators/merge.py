@@ -94,8 +94,9 @@ def additive_upsert(
 
     NOT idempotent across retries: applying the same delta batch twice at
     the same ``data_version`` adds twice (ADVICE r1).  Crawl/tail therefore
-    rebuild owners from the idempotent transfers table
-    (``folds.owner_balances_from_silver`` + ``SilverStore.rebuild_owners``);
+    rebuild the owners of each touched collection bucket whole from the
+    idempotent transfers table (``folds.owner_balances_from_silver`` +
+    ``SilverStore.rebuild_owners``);
     use this merge only when delta delivery is exactly-once.
     """
     e = existing.select(*keys, qty_col, version_col)

@@ -30,12 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hexint import hex_to_dec
 from ..operators.decode import decode_token_transfers, decode_uri_updates
-from ..operators.folds import (
-    fold_owner_deltas,
-    fold_owners,
-    fold_token_state,
-    transfers_to_silver,
-)
+from ..operators.folds import fold_owners, fold_token_state, transfers_to_silver
 from ..schemas import SPEC_ERC721, SPEC_ERC1155
 
 
@@ -44,9 +39,15 @@ class SilverTables:
     collections: DataFrame
     tokens: DataFrame
     token_transfers: DataFrame
-    owners: DataFrame  # snapshot fold (A2 ∪ A3) — bulk/load path
-    owner_deltas: DataFrame  # ± incremental fold (A5) — tail path
-    transfers: DataFrame  # the cached decoded transfers the folds above read
+    transfers: DataFrame  # the cached decoded transfers the folds read
+    data_version: int
+
+    @property
+    def owners(self) -> DataFrame:
+        """The snapshot owners fold (A2 ∪ A3), built on access: the store
+        rebuilds owners from committed transfers, so only readers of the
+        fold itself pay for planning it."""
+        return fold_owners(self.transfers).withColumn("data_version", F.lit(self.data_version))
 
     def release(self) -> None:
         """Unpersist the cached transfers.  A batch's sinks call this in a
@@ -148,13 +149,11 @@ def crawl_plan(
     transfers = transfers.cache()
 
     tokens = fold_token_state(transfers, uris).withColumn("data_version", F.lit(data_version))
-    owners = fold_owners(transfers).withColumn("data_version", F.lit(data_version))
-    owner_deltas = fold_owner_deltas(transfers)
     token_transfers = transfers_to_silver(transfers, data_version)
 
     if collections is None:
         collections = spark.createDataFrame([], "blockchain string, collection_id string")
-    return SilverTables(collections, tokens, token_transfers, owners, owner_deltas, transfers)
+    return SilverTables(collections, tokens, token_transfers, transfers, data_version)
 
 
 def total_supply_check(collections: DataFrame, tokens: DataFrame) -> DataFrame:

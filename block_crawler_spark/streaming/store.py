@@ -18,8 +18,8 @@ whose columns differ from it.
 Pruning: the crawl/tail/CLI paths run per chain, mirroring the reference's
 per-blockchain write budget (``nft/bin/load.py:232-233``), and name the
 partitions a merge touches — its blockchains and, via
-:meth:`SilverStore.touched_buckets`, the collection buckets of the batch's
-touched keys.  The merge reads only those partitions (static
+:meth:`SilverStore.touched_buckets`, the collection buckets the batch's
+transfers fall in.  The merge reads only those partitions (static
 ``PartitionFilters`` on ``blockchain`` and ``cbucket``) and rewrites only
 them.  Untouched ``blockchain=X`` trees and ``cbucket=K`` subtrees are
 hard-linked file-by-file from the previous version into the new one (same
@@ -27,6 +27,15 @@ inode — zero data movement, byte-identical; on an object store this becomes
 a metadata copy).  Tail micro-batches touch a handful of collections, so
 steady-state merge cost is O(touched collection buckets) for reads and
 writes, not O(chain history).
+
+Rebuild granularity: a touched bucket is the unit of state.  Tokens and
+owners of a touched ``(blockchain, cbucket)`` partition are recomputed
+whole from its committed transfers — no join against the batch's touched
+keys.  I/O is unchanged (the scans already read whole buckets and the
+rewrite already writes them whole); aggregation covers each touched
+bucket's whole history rather than the touched keys' share of it.  Every
+owner row of a rewritten bucket carries the batch's ``data_version``;
+tokens keep the max of their existing and batch ``data_version``.
 
 Durability: each rewrite lands in a fresh ``v-N`` directory under the table
 path, then a one-line ``_CURRENT`` pointer file is flipped via
@@ -104,12 +113,12 @@ class SilverStore:
             F.xxhash64(F.coalesce(F.col("collection_id"), F.lit(""))), F.lit(self.n_buckets)
         ).cast("int")
 
-    def touched_buckets(self, touched_keys: DataFrame) -> list[int]:
-        """Distinct cbucket values of a touched-keys frame — at most
-        ``n_buckets`` ints, collected once per batch and shared by all three
-        entity-table merges."""
+    def touched_buckets(self, transfers: DataFrame) -> list[int]:
+        """Distinct cbucket values of a batch's ``token_transfers`` — at
+        most ``n_buckets`` ints, collected once per batch and shared by all
+        three entity-table rewrites."""
         return sorted(
-            r["b"] for r in touched_keys.select(self._bucket_expr().alias("b")).distinct().collect()
+            r["b"] for r in transfers.select(self._bucket_expr().alias("b")).distinct().collect()
         )
 
     def _current_version(self, table: str) -> str | None:
@@ -121,8 +130,19 @@ class SilverStore:
         except OSError:
             return None
 
-    def _empty(self, table: str) -> DataFrame:
-        return self.spark.createDataFrame([], STORED_SCHEMAS[table])
+    def _frame(self, table: str, row: Sequence | None = None) -> DataFrame:
+        """``row`` (or no row) under the table's stored schema, projected
+        from ``spark.range(1)``.  The empty frame ends in ``limit(0)``, which
+        the optimizer folds to an empty ``LocalRelation``: collecting it
+        starts no Spark job, and a merge into an empty table prunes its
+        joins.  ``createDataFrame`` would plan an opaque Python RDD
+        instead."""
+        fields = STORED_SCHEMAS[table].fields
+        values = row if row is not None else [None] * len(fields)
+        df = self.spark.range(1).select(
+            *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(values, fields)]
+        )
+        return df if row is not None else df.limit(0)
 
     def read(
         self,
@@ -140,7 +160,7 @@ class SilverStore:
         stored = STORED_SCHEMAS[table]
         cur = self._current_version(table)
         if cur is None:
-            return self._empty(table)
+            return self._frame(table)
         bucketed = table in _BUCKETED
         scan = StructType(stored.fields + [_CBUCKET]) if bucketed else stored
         df = self.spark.read.schema(scan).parquet(os.path.join(self._path(table), cur))
@@ -258,36 +278,33 @@ class SilverStore:
     def rebuild_tokens(
         self,
         batch_tokens: DataFrame,
-        touched_keys: DataFrame,
         blockchains: Sequence[str] | None = None,
         buckets: Sequence[int] | None = None,
     ) -> None:
         """Idempotent tokens update (the retry-safe A1 path, parallel to
-        :meth:`rebuild_owners`): replace every token row of the touched keys
-        with state recomputed from the idempotent ``token_transfers`` table.
-        A retried batch — or a bulk crawl re-run over the same bronze —
-        rewrites the same values instead of re-adding additive quantities.
+        :meth:`rebuild_owners`): rebuild every token of the named partitions
+        whole from the committed ``token_transfers`` table.  A retried batch
+        — or a bulk crawl re-run over the same bronze — rewrites the same
+        values instead of re-adding additive quantities.
 
         Transfer-derived fields come from
-        ``folds.token_state_from_silver``; ``specification`` (an ERC-165
-        probe result, constant per token) and the ``metadata_url`` pair (K3
-        LWW on (data_version, metadata_url_version_hex)) are merged from
-        existing ∪ batch rows, since they are not functions of the transfer
-        stream.
+        ``folds.token_state_from_silver`` over each partition's whole
+        history (every transfer of a token lives in its token's blockchain
+        partition and cbucket, a pure function of collection_id), so a
+        token the batch did not touch re-derives its stored values.
+        ``specification`` (an ERC-165 probe result, constant per token) and
+        the ``metadata_url`` pair (K3 LWW on (data_version,
+        metadata_url_version_hex)) are merged from the partitions' existing
+        tokens ∪ ``batch_tokens``, since they are not functions of the
+        transfer stream; ``data_version`` is the max of the two.
         """
         from ..operators.folds import token_state_from_silver
         from ..schemas import SPEC_ERC721
 
         keys = ["blockchain", "collection_id", "token_id_hex"]
-        existing = self.read("tokens", blockchains, buckets)
-        kept = existing.join(touched_keys, keys, "left_anti")
-        # every transfer of a touched key lives in that key's blockchain
-        # partition and cbucket (a pure function of collection_id)
-        recomputed = token_state_from_silver(
-            self.read("token_transfers", blockchains=blockchains, buckets=buckets), touched_keys
-        )
+        recomputed = token_state_from_silver(self.read("token_transfers", blockchains, buckets))
         meta_cols = ["specification", "metadata_url", "metadata_url_version_hex", "data_version"]
-        meta_src = existing.join(touched_keys, keys, "left_semi").select(*keys, *meta_cols).unionByName(
+        meta_src = self.read("tokens", blockchains, buckets).select(*keys, *meta_cols).unionByName(
             batch_tokens.select(*keys, *meta_cols)
         )
         # K3 rule (merge.metadata_url_upsert): only rows that CARRY URI data
@@ -326,12 +343,7 @@ class SilverStore:
             )
             .drop("_meta", "_last_recipient", "_owner_version_hex")
         )
-        self.overwrite(
-            "tokens",
-            kept.unionByName(rebuilt, allowMissingColumns=True),
-            touched_blockchains=blockchains,
-            touched_buckets=buckets,
-        )
+        self.overwrite("tokens", rebuilt, touched_blockchains=blockchains, touched_buckets=buckets)
 
     def apply_silver(
         self, silver, data_version: int, blockchains: Sequence[str] | None = None
@@ -340,36 +352,25 @@ class SilverStore:
         the single definition of the idempotence contract, shared by every
         crawl, tail and stream path:
 
-        1. commit transfers first (keyed idempotent append) — the rebuilds
-           below read the COMMITTED table;
-        2. derive the batch's touched token keys;
-        3. rebuild tokens, then owners, for those keys from committed
-           history — pure functions of the transfers table, so any retry
-           (task, stage, foreachBatch checkpoint recovery, full re-crawl)
-           rewrites identical values.
+        1. collect the collection buckets the batch's transfers fall in;
+        2. commit transfers (keyed idempotent append) — the rebuilds below
+           read the COMMITTED table;
+        3. rebuild tokens, then owners, of those buckets whole from
+           committed history — pure functions of the transfers table, so
+           any retry (task, stage, foreachBatch checkpoint recovery, full
+           re-crawl) rewrites identical values.
 
-        ``silver`` is a ``plans.crawl.SilverTables``-shaped object; config
-        (last_block_id) commits stay with the caller, AFTER this returns.
+        With ``blockchains=None`` nothing is pruned: the three tables are
+        rewritten whole.  ``silver`` is a ``plans.crawl.SilverTables``-shaped
+        object; config (last_block_id) commits stay with the caller, AFTER
+        this returns.
         """
-        from ..operators.folds import owner_balances_from_silver
-
-        touched = silver.token_transfers.select(
-            "blockchain", "collection_id", "token_id_hex"
-        ).distinct()
         # one tiny job (≤ n_buckets rows to the driver) turns every rewrite
-        # below from O(touched chain) into O(touched collection buckets)
-        buckets = self.touched_buckets(touched) if blockchains is not None else None
+        # below from O(chain) into O(touched collection buckets)
+        buckets = self.touched_buckets(silver.token_transfers) if blockchains is not None else None
         self.append_transfers(silver.token_transfers, blockchains=blockchains, buckets=buckets)
-        self.rebuild_tokens(silver.tokens, touched, blockchains=blockchains, buckets=buckets)
-        balances = owner_balances_from_silver(
-            self.read("token_transfers", blockchains=blockchains, buckets=buckets), touched
-        )
-        self.rebuild_owners(
-            balances.withColumn("data_version", F.lit(data_version)),
-            touched,
-            blockchains=blockchains,
-            buckets=buckets,
-        )
+        self.rebuild_tokens(silver.tokens, blockchains=blockchains, buckets=buckets)
+        self.rebuild_owners(data_version, blockchains=blockchains, buckets=buckets)
 
     def append_transfers(
         self,
@@ -390,20 +391,22 @@ class SilverStore:
 
     def rebuild_owners(
         self,
-        balances: DataFrame,
-        touched_keys: DataFrame,
+        data_version: int,
         blockchains: Sequence[str] | None = None,
         buckets: Sequence[int] | None = None,
     ) -> None:
-        """Idempotent owners update (the retry-safe K7 path): replace every
-        owner row of the touched token keys with balances recomputed from the
-        idempotent ``token_transfers`` table.  A retried batch rewrites the
-        same values instead of re-adding deltas."""
-        existing = self.read("owners", blockchains, buckets)
-        kept = existing.join(touched_keys, ["blockchain", "collection_id", "token_id_hex"], "left_anti")
+        """Idempotent owners update (the retry-safe K7 path): rebuild every
+        owner row of the named partitions whole from balances recomputed
+        over their committed ``token_transfers`` history.  The existing
+        owners are not read; every rewritten row carries ``data_version``.
+        A retried batch rewrites the same values instead of re-adding
+        deltas."""
+        from ..operators.folds import owner_balances_from_silver
+
+        balances = owner_balances_from_silver(self.read("token_transfers", blockchains, buckets))
         self.overwrite(
             "owners",
-            kept.unionByName(balances, allowMissingColumns=True),
+            balances.withColumn("data_version", F.lit(data_version)),
             touched_blockchains=blockchains,
             touched_buckets=buckets,
         )
@@ -411,11 +414,11 @@ class SilverStore:
     def rewind(self, blockchain: str, to_block: int) -> None:
         """Reorg REPAIR (beyond the reference, which only *avoids* reorgs
         via the trail-blocks lag, ``nft/bin/tail.py:34-39``): drop every
-        transfer of ``blockchain`` above ``to_block`` and rebuild
-        tokens/owners for the affected keys from the surviving committed
+        transfer of ``blockchain`` above ``to_block`` and rebuild the
+        buckets those transfers fall in from the surviving committed
         history — then a re-crawl/tail from ``to_block + 1`` ingests the
-        canonical branch.  Pure reuse of the idempotent rebuild machinery:
-        a token whose every transfer was orphaned (mint itself rewound)
+        canonical branch.  Pure reuse of the idempotent rebuild calls: a
+        token whose every transfer was orphaned (mint itself rewound)
         disappears; balances re-derive exactly; an untouched blockchain's
         partitions are untouched (pruned rewrite).
 
@@ -427,32 +430,17 @@ class SilverStore:
         ``last_block_id`` is clamped to ``to_block`` so the next tail
         resumes at the fork point.
         """
-        keys = ["blockchain", "collection_id", "token_id_hex"]
         # other blockchains' partitions hard-link in the overwrite below
         transfers = self.read("token_transfers", [blockchain])
-        touched = transfers.filter(F.col("block_id") > to_block).select(*keys).distinct()
-        # collect the touched buckets BEFORE the transfers overwrite: every
-        # row the rewind drops or rebuilds belongs to a touched key, so
-        # untouched buckets stay linkable
-        buckets = self.touched_buckets(touched)
+        # collected BEFORE the transfers overwrite: every row the rewind
+        # drops or rebuilds lies in these buckets, so the rest stay linkable
+        buckets = self.touched_buckets(transfers.filter(F.col("block_id") > to_block))
         kept = transfers.filter(F.col("block_id") <= to_block)
         self.overwrite("token_transfers", kept, touched_blockchains=[blockchain], touched_buckets=buckets)
-        # `touched` still scans the pre-rewind version's files — the
-        # one-commit retention window exists exactly for handles like this.
-        # No batch rows: metadata merges from the existing tokens alone.
-        self.rebuild_tokens(self._empty("tokens"), touched, blockchains=[blockchain], buckets=buckets)
-        from ..operators.folds import owner_balances_from_silver
-
+        # no batch rows: metadata merges from the existing tokens alone
+        self.rebuild_tokens(self._frame("tokens"), blockchains=[blockchain], buckets=buckets)
         dv, last = self.get_config(blockchain)
-        balances = owner_balances_from_silver(
-            self.read("token_transfers", blockchains=[blockchain], buckets=buckets), touched
-        )
-        self.rebuild_owners(
-            balances.withColumn("data_version", F.lit(dv)),
-            touched,
-            blockchains=[blockchain],
-            buckets=buckets,
-        )
+        self.rebuild_owners(dv, blockchains=[blockchain], buckets=buckets)
         if last is not None and last > to_block:
             self.set_config(blockchain, dv, to_block)
 
@@ -465,9 +453,7 @@ class SilverStore:
         return rows[0]["data_version"], rows[0]["last_block_id"]
 
     def set_config(self, blockchain: str, data_version: int, last_block_id: int | None) -> None:
-        updates = self.spark.createDataFrame(
-            [(blockchain, data_version, last_block_id)], CRAWLER_CONFIG_SCHEMA
-        )
+        updates = self._frame("crawler_config", (blockchain, data_version, last_block_id))
         # the other blockchains' config partitions hard-link unchanged
         self.overwrite("crawler_config", updates, touched_blockchains=[blockchain])
 

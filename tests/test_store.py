@@ -265,14 +265,12 @@ def test_rebuild_tokens_keeps_metadata_across_epochs(spark, tmp_path):
     from block_crawler_spark.schemas import TOKEN_TRANSFER_SCHEMA
 
     store = _mk(spark, tmp_path)
-    keys = ["blockchain", "collection_id", "token_id_hex"]
     tr = spark.createDataFrame(
         [("bc", "0xc", "00" * 19 + "05", "0x" + "07".rjust(64, "0"), 1_600_000_000, 5,
           "0xabc", 0, 0, "mint", "0x" + "0" * 40, "0xowner1", "0x" + "1".rjust(64, "0"), 1)],
         TOKEN_TRANSFER_SCHEMA,
     ).withColumn("batch_index", F.lit(0).cast("int"))
     store.append_transfers(tr)
-    touched = tr.select(*keys).distinct()
 
     def tok(dv, url, vhex):
         return spark.createDataFrame(
@@ -281,10 +279,10 @@ def test_rebuild_tokens_keeps_metadata_across_epochs(spark, tmp_path):
             "metadata_url string, metadata_url_version_hex string, data_version long",
         )
 
-    store.rebuild_tokens(tok(1, "ipfs://x", "0" * 39 + "5"), touched)
+    store.rebuild_tokens(tok(1, "ipfs://x", "0" * 39 + "5"))
     assert store.read("tokens").collect()[0]["metadata_url"] == "ipfs://x"
     # epoch 2 batch carries no URI data → metadata must survive
-    store.rebuild_tokens(tok(2, None, None), touched)
+    store.rebuild_tokens(tok(2, None, None))
     row = store.read("tokens").collect()[0]
     assert row["metadata_url"] == "ipfs://x"
     assert row["data_version"] == 2
@@ -404,3 +402,115 @@ def test_building_reads_starts_no_spark_job(spark, tmp_path):
 
     assert _jobs_in_group(spark, "read-populated", build_reads) == []
     assert store.read("owners").count() == 1
+
+
+def test_fresh_store_config_and_reads_start_no_spark_job(spark, tmp_path):
+    """On a fresh store every read optimizes to an empty ``LocalRelation``,
+    so ``get_config`` (which collects one) and building any read start no
+    Spark job."""
+    store = _mk(spark, tmp_path)
+    got = []
+
+    def config_and_reads():
+        got.append(store.get_config("chain-a"))
+        for t in STORED_SCHEMAS:
+            store.read(t, blockchains=["chain-a"], buckets=[0])
+
+    assert _jobs_in_group(spark, "fresh-config", config_and_reads) == []
+    assert got == [(1, None)]
+    for t in STORED_SCHEMAS:
+        df = store.read(t)
+        assert df.columns == STORED_SCHEMAS[t].names
+        assert df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+    store.set_config("chain-a", 2, 5)
+    assert store.get_config("chain-a") == (2, 5)
+
+
+_ALICE, _BOB = "0x" + "a" * 40, "0x" + "b" * 40
+
+
+def _event(token, block, kind, frm, to, collection="0xc"):
+    """One silver transfer of ``token`` (an int id) at ``block``, quantity 1."""
+    zero = "0x" + "0" * 40
+    return ("chain-a", collection, f"{block:036x}{token:04x}", "0x" + f"{token:064x}", 1_600_000_000 + block,
+            block, f"0x{block:x}", 0, token, kind, frm or zero, to or zero, "0x" + "1".rjust(64, "0"), 1)
+
+
+def _batch(spark, events):
+    """A SilverTables-shaped ERC-721 batch: its transfers and one token row
+    per touched token, with no URI data."""
+    from types import SimpleNamespace
+
+    from block_crawler_spark.schemas import SPEC_ERC721
+
+    tr = _transfers(spark, events)
+    toks = tr.select("blockchain", "collection_id", "token_id_hex").distinct().select(
+        "*",
+        F.lit(SPEC_ERC721).alias("specification"),
+        F.lit(None).cast("string").alias("metadata_url"),
+        F.lit(None).cast("string").alias("metadata_url_version_hex"),
+        F.lit(1).cast("long").alias("data_version"),
+    )
+    return SimpleNamespace(token_transfers=tr, tokens=toks)
+
+
+def _rows(store, table, where=None):
+    df = store.read(table)
+    return sorted(map(str, (df if where is None else df.filter(where)).collect()))
+
+
+def test_apply_silver_rebuilds_touched_buckets_whole(spark, tmp_path):
+    """A batch touching one token of a collection rebuilds that
+    collection's whole bucket from the committed transfers: the bucket's
+    untouched token keeps its tokens and owners rows, and both tables equal
+    a fold of the committed transfers."""
+    from block_crawler_spark.operators.folds import owner_balances_from_silver, token_state_from_silver
+
+    store = _mk(spark, tmp_path)
+    store.apply_silver(
+        _batch(spark, [_event(7, 5, "mint", None, _ALICE), _event(8, 6, "mint", None, _ALICE)]), 1, ["chain-a"]
+    )
+    untouched = F.col("token_id_hex") == "0x" + f"{8:064x}"
+    before = {t: _rows(store, t, untouched) for t in ("tokens", "owners")}
+    assert all(before.values())
+    store.apply_silver(_batch(spark, [_event(7, 10, "transfer", _ALICE, _BOB)]), 1, ["chain-a"])
+    assert {t: _rows(store, t, untouched) for t in ("tokens", "owners")} == before
+
+    transfers = store.read("token_transfers")
+    owners = store.read("owners")
+    want = owner_balances_from_silver(transfers).withColumn("data_version", F.lit(1).cast("long"))
+    assert _rows(store, "owners") == sorted(map(str, want.select(*owners.columns).collect()))
+    assert {(r["account"], int(r["token_id_hex"], 16)) for r in owners.collect()} == {(_BOB, 7), (_ALICE, 8)}
+
+    cols = ["token_id_hex", "quantity", "original_owner", "mint_block", "mint_timestamp"]
+    folded = token_state_from_silver(transfers).withColumnRenamed("_last_recipient", "current_owner")
+    tokens = store.read("tokens")
+    assert sorted(map(tuple, tokens.select(*cols, "current_owner").collect())) == sorted(
+        map(tuple, folded.select(*cols, "current_owner").collect())
+    )
+    assert {(int(r["token_id_hex"], 16), r["current_owner"]) for r in tokens.collect()} == {(7, _BOB), (8, _ALICE)}
+
+
+def test_rewind_to_mid_history_equals_fresh_load_of_the_prefix(spark, tmp_path):
+    """``rewind`` to a block inside the history leaves every table equal to
+    a fresh store that loaded only the history up to that block — including
+    a token minted after it (gone) and a collection bucket that only the
+    orphaned blocks wrote (emptied)."""
+    rewound = SilverStore(spark, str(tmp_path / "rewound"))
+    fresh = SilverStore(spark, str(tmp_path / "fresh"))
+    (col_x, _bx), (col_y, _by) = _two_collections_in_distinct_buckets(rewound, spark)
+    prefix = [_event(7, 5, "mint", None, _ALICE, col_x), _event(8, 6, "mint", None, _ALICE, col_x)]
+    orphaned = [
+        _event(7, 10, "transfer", _ALICE, _BOB, col_x),
+        _event(9, 11, "mint", None, _BOB, col_x),
+        _event(1, 12, "mint", None, _BOB, col_y),
+    ]
+    for events, top in ((prefix, 6), (orphaned, 12)):
+        rewound.apply_silver(_batch(spark, events), 1, ["chain-a"])
+        rewound.set_config("chain-a", 1, top)
+    rewound.rewind("chain-a", 6)
+    fresh.apply_silver(_batch(spark, prefix), 1, ["chain-a"])
+    fresh.set_config("chain-a", 1, 6)
+    for t in ("token_transfers", "tokens", "owners", "crawler_config"):
+        assert _rows(rewound, t) == _rows(fresh, t), t
+    assert {int(r["token_id_hex"], 16) for r in rewound.read("tokens").collect()} == {7, 8}
