@@ -37,10 +37,20 @@ from ..schemas import SPEC_ERC721, SPEC_ERC1155
 @dataclass
 class SilverTables:
     collections: DataFrame
-    tokens: DataFrame
     token_transfers: DataFrame
     transfers: DataFrame  # the cached decoded transfers the folds read
+    uri_updates: DataFrame  # the decoded URI events, with ``blockchain``
     data_version: int
+
+    @property
+    def tokens(self) -> DataFrame:
+        """The token-state fold (A1, URI events joined on), built on
+        access: the store rebuilds tokens from committed transfers and
+        :attr:`token_metadata`, so only readers of the fold itself pay for
+        planning it."""
+        return fold_token_state(self.transfers, self.uri_updates).withColumn(
+            "data_version", F.lit(self.data_version)
+        )
 
     @property
     def owners(self) -> DataFrame:
@@ -48,6 +58,28 @@ class SilverTables:
         rebuilds owners from committed transfers, so only readers of the
         fold itself pay for planning it."""
         return fold_owners(self.transfers).withColumn("data_version", F.lit(self.data_version))
+
+    @property
+    def token_metadata(self) -> DataFrame:
+        """The batch's metadata rows for ``SilverStore.rebuild_tokens``: one
+        per transfer, carrying its token's ``specification``, and one per
+        URI event, carrying its URL under the event's version hex.  Unlike
+        :attr:`tokens`, a URI event counts whether or not the batch also
+        transfers its token."""
+        none = F.lit(None).cast("string")
+        dv = F.lit(self.data_version).cast("long").alias("data_version")
+        keys = ["blockchain", "collection_id", "token_id_hex"]
+        specs = self.transfers.select(
+            *keys, "specification", none.alias("metadata_url"), none.alias("metadata_url_version_hex"), dv
+        )
+        uris = self.uri_updates.select(
+            *keys,
+            none.alias("specification"),
+            "metadata_url",
+            F.col("attribute_version_hex").alias("metadata_url_version_hex"),
+            dv,
+        )
+        return specs.unionByName(uris)
 
     def release(self) -> None:
         """Unpersist the cached transfers.  A batch's sinks call this in a
@@ -133,7 +165,7 @@ def crawl_plan(
         .join(F.broadcast(block_times), "block_number", "left")
         .withColumn("blockchain", F.lit(blockchain))
     )
-    uris = decode_uri_updates(logs)
+    uris = decode_uri_updates(logs).withColumn("blockchain", F.lit(blockchain))
 
     collections = None
     if receipts is not None and contracts is not None:
@@ -147,13 +179,11 @@ def crawl_plan(
         uris = uris.join(known, "collection_id", "left_semi")
 
     transfers = transfers.cache()
-
-    tokens = fold_token_state(transfers, uris).withColumn("data_version", F.lit(data_version))
     token_transfers = transfers_to_silver(transfers, data_version)
 
     if collections is None:
         collections = spark.createDataFrame([], "blockchain string, collection_id string")
-    return SilverTables(collections, tokens, token_transfers, transfers, data_version)
+    return SilverTables(collections, token_transfers, transfers, uris, data_version)
 
 
 def total_supply_check(collections: DataFrame, tokens: DataFrame) -> DataFrame:

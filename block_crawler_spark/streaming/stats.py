@@ -18,6 +18,11 @@ halves:
 * **Pipeline-level counters** (batches, block ranges, rows per silver
   table) are driver-observable facts this module counts exactly, and are
   the numbers the reference's ticker line reports.
+* **``codegen_compiles``** — generated classes compiled by the tail's
+  batches (:func:`codegen_compiles`).  It reads the driver JVM's codegen
+  metrics, so it counts only the driver's compiles; in local mode the
+  executors share that JVM, so it includes their compiles too.  A steady
+  tail that reuses its generated code keeps it low.
 
 ``StatsTicker`` prints one machine-parseable line per interval — the analog
 of the reference's 60 s stats writer — plus a final line on stop.
@@ -28,6 +33,12 @@ from __future__ import annotations
 import threading
 import time
 from collections import Counter
+
+
+def codegen_compiles(spark) -> int:
+    """Generated classes compiled so far in the driver JVM (Spark's
+    ``CodegenMetrics`` compilation-time histogram counts one per compile)."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
 
 
 class StatsService:

@@ -19,12 +19,12 @@ Pruning: the crawl/tail/CLI paths run per chain, mirroring the reference's
 per-blockchain write budget (``nft/bin/load.py:232-233``), and name the
 partitions a merge touches — its blockchains and, via
 :meth:`SilverStore.touched_buckets`, the collection buckets the batch's
-transfers fall in.  The merge reads only those partitions (static
-``PartitionFilters`` on ``blockchain`` and ``cbucket``) and rewrites only
-them.  Untouched ``blockchain=X`` trees and ``cbucket=K`` subtrees are
-hard-linked file-by-file from the previous version into the new one (same
-inode — zero data movement, byte-identical; on an object store this becomes
-a metadata copy).  Tail micro-batches touch a handful of collections, so
+transfers and URI events fall in.  The merge reads only those partitions
+(static ``PartitionFilters`` on ``blockchain`` and ``cbucket``) and
+rewrites only them.  Untouched ``blockchain=X`` trees and ``cbucket=K``
+subtrees are hard-linked file-by-file from the previous version into the
+new one (same inode — zero data movement, byte-identical; on an object
+store this becomes a metadata copy).  Tail micro-batches touch a handful of collections, so
 steady-state merge cost is O(touched collection buckets) for reads and
 writes, not O(chain history).
 
@@ -113,13 +113,11 @@ class SilverStore:
             F.xxhash64(F.coalesce(F.col("collection_id"), F.lit(""))), F.lit(self.n_buckets)
         ).cast("int")
 
-    def touched_buckets(self, transfers: DataFrame) -> list[int]:
-        """Distinct cbucket values of a batch's ``token_transfers`` — at
-        most ``n_buckets`` ints, collected once per batch and shared by all
-        three entity-table rewrites."""
-        return sorted(
-            r["b"] for r in transfers.select(self._bucket_expr().alias("b")).distinct().collect()
-        )
+    def touched_buckets(self, rows: DataFrame) -> list[int]:
+        """Distinct cbucket values of ``rows`` (any frame with a
+        ``collection_id``) — at most ``n_buckets`` ints, collected once per
+        batch and shared by all three entity-table rewrites."""
+        return sorted(r["b"] for r in rows.select(self._bucket_expr().alias("b")).distinct().collect())
 
     def _current_version(self, table: str) -> str | None:
         ptr = os.path.join(self._path(table), "_CURRENT")
@@ -211,6 +209,14 @@ class SilverStore:
         merge with zero rows has its directory dropped — correct delete
         semantics.  With neither, the table is rewritten fully.
 
+        ``df`` must hold rows of the touched buckets only, and the write
+        does not filter on them: a filter would inline the bucket ids into
+        the generated code, so every batch would compile its own classes.
+        Instead, after the write and before the pointer flip, the new
+        version's ``cbucket=K`` directories are listed; if any bucket was
+        not named, ``v-N+1`` is deleted and a ``ValueError`` names the
+        stray buckets, leaving ``_CURRENT`` and ``v-N`` as they were.
+
         Retention is one commit deep: ``v-N`` (the version current until
         this flip) survives until the NEXT overwrite, so a concurrent
         reader — or a lazily-evaluated DataFrame handle taken before the
@@ -238,14 +244,14 @@ class SilverStore:
         out = df.select(*[F.col(f.name).cast(f.dataType) for f in stored.fields])
         if touched is not None:
             out = out.filter(F.col("blockchain").isin(sorted(touched)))
-        if tb is not None:
-            out = out.filter(self._bucket_expr().isin(sorted(tb)))
         # The plan may read the current version's files; they stay in place
         # until after the pointer flip, so no lineage break is needed.
         if bucketed:
             out = out.withColumn("cbucket", self._bucket_expr())
         part_cols = ["blockchain", "cbucket"] if bucketed else ["blockchain"]
         out.write.mode("overwrite").partitionBy(*part_cols).parquet(os.path.join(base, nxt))
+        if tb is not None:
+            self._reject_stray_buckets(table, os.path.join(base, nxt), tb)
         if cur is not None and (touched is not None or tb is not None):
             cur_path = os.path.join(base, cur)
             for d in os.listdir(cur_path):
@@ -265,6 +271,22 @@ class SilverStore:
             if d.startswith("v-") and d not in (nxt, cur):
                 shutil.rmtree(os.path.join(base, d), ignore_errors=True)
 
+    @staticmethod
+    def _reject_stray_buckets(table: str, version: str, buckets: set[int]) -> None:
+        """Delete the uncommitted ``version`` and raise if it holds a
+        ``cbucket=K`` directory for a bucket outside ``buckets``."""
+        written = {
+            int(unquote(b.split("=", 1)[1]))
+            for d in os.listdir(version)
+            if d.startswith("blockchain=")
+            for b in os.listdir(os.path.join(version, d))
+            if b.startswith("cbucket=")
+        }
+        stray = sorted(written - buckets)
+        if stray:
+            shutil.rmtree(version, ignore_errors=True)
+            raise ValueError(f"{table}: rows outside the named buckets, in buckets {stray}")
+
     # -- merge operations (K1-K9) ------------------------------------------
     def upsert_collections(self, updates: DataFrame, blockchains: Sequence[str] | None = None) -> None:
         self.overwrite(
@@ -277,7 +299,7 @@ class SilverStore:
 
     def rebuild_tokens(
         self,
-        batch_tokens: DataFrame,
+        batch_meta: DataFrame,
         blockchains: Sequence[str] | None = None,
         buckets: Sequence[int] | None = None,
     ) -> None:
@@ -295,8 +317,11 @@ class SilverStore:
         ``specification`` (an ERC-165 probe result, constant per token) and
         the ``metadata_url`` pair (K3 LWW on (data_version,
         metadata_url_version_hex)) are merged from the partitions' existing
-        tokens ∪ ``batch_tokens``, since they are not functions of the
+        tokens ∪ ``batch_meta``, since they are not functions of the
         transfer stream; ``data_version`` is the max of the two.
+        ``batch_meta`` holds the token key, those metadata columns and
+        ``data_version`` (see ``plans.crawl.SilverTables.token_metadata``);
+        it may hold several rows per token.
         """
         from ..operators.folds import token_state_from_silver
         from ..schemas import SPEC_ERC721
@@ -305,7 +330,7 @@ class SilverStore:
         recomputed = token_state_from_silver(self.read("token_transfers", blockchains, buckets))
         meta_cols = ["specification", "metadata_url", "metadata_url_version_hex", "data_version"]
         meta_src = self.read("tokens", blockchains, buckets).select(*keys, *meta_cols).unionByName(
-            batch_tokens.select(*keys, *meta_cols)
+            batch_meta.select(*keys, *meta_cols)
         )
         # K3 rule (merge.metadata_url_upsert): only rows that CARRY URI data
         # compete — a NULL ordering key makes max_by skip the row, so a
@@ -352,7 +377,8 @@ class SilverStore:
         the single definition of the idempotence contract, shared by every
         crawl, tail and stream path:
 
-        1. collect the collection buckets the batch's transfers fall in;
+        1. collect the collection buckets the batch's transfers and URI
+           events fall in;
         2. commit transfers (keyed idempotent append) — the rebuilds below
            read the COMMITTED table;
         3. rebuild tokens, then owners, of those buckets whole from
@@ -362,14 +388,16 @@ class SilverStore:
 
         With ``blockchains=None`` nothing is pruned: the three tables are
         rewritten whole.  ``silver`` is a ``plans.crawl.SilverTables``-shaped
-        object; config (last_block_id) commits stay with the caller, AFTER
-        this returns.
+        object (``token_transfers`` and ``token_metadata`` are read); config
+        (last_block_id) commits stay with the caller, AFTER this returns.
         """
+        # one row per transfer and per URI event, so its buckets cover both
+        meta = silver.token_metadata
         # one tiny job (≤ n_buckets rows to the driver) turns every rewrite
         # below from O(chain) into O(touched collection buckets)
-        buckets = self.touched_buckets(silver.token_transfers) if blockchains is not None else None
+        buckets = self.touched_buckets(meta) if blockchains is not None else None
         self.append_transfers(silver.token_transfers, blockchains=blockchains, buckets=buckets)
-        self.rebuild_tokens(silver.tokens, blockchains=blockchains, buckets=buckets)
+        self.rebuild_tokens(meta, blockchains=blockchains, buckets=buckets)
         self.rebuild_owners(data_version, blockchains=blockchains, buckets=buckets)
 
     def append_transfers(
@@ -430,12 +458,11 @@ class SilverStore:
         ``last_block_id`` is clamped to ``to_block`` so the next tail
         resumes at the fork point.
         """
-        # other blockchains' partitions hard-link in the overwrite below
-        transfers = self.read("token_transfers", [blockchain])
         # collected BEFORE the transfers overwrite: every row the rewind
         # drops or rebuilds lies in these buckets, so the rest stay linkable
-        buckets = self.touched_buckets(transfers.filter(F.col("block_id") > to_block))
-        kept = transfers.filter(F.col("block_id") <= to_block)
+        orphaned = self.read("token_transfers", [blockchain]).filter(F.col("block_id") > to_block)
+        buckets = self.touched_buckets(orphaned)
+        kept = self.read("token_transfers", [blockchain], buckets).filter(F.col("block_id") <= to_block)
         self.overwrite("token_transfers", kept, touched_blockchains=[blockchain], touched_buckets=buckets)
         # no batch rows: metadata merges from the existing tokens alone
         self.rebuild_tokens(self._frame("tokens"), blockchains=[blockchain], buckets=buckets)

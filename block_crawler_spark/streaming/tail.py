@@ -9,8 +9,8 @@ computes the batch range ``[last+1, height − trail]``, runs the **same batch
 crawl DAG** (``plans.crawl``) over that slice of bronze, and applies the
 version-guarded merges.  Every sink is idempotent: transfers append with a
 dedup key (K6), then tokens and owners are REBUILT for the batch's touched
-keys from the committed transfers table (re-applying additive deltas on a
-retry would double-count).  At-least-once delivery + idempotent sinks =
+collection buckets from the committed transfers table (re-applying additive
+deltas on a retry would double-count).  At-least-once delivery + idempotent sinks =
 effectively-once.  Progress lives in the ``crawler_config`` control table (ST3);
 ``seed`` overwrites it (ST6).
 
@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.crawl import crawl_plan
+from .stats import codegen_compiles
 from .store import SilverStore
 
 
@@ -79,9 +80,11 @@ class TailRunner:
         if target < start:
             return None
 
+        spark = self.store.spark
+        compiled = codegen_compiles(spark) if self.stats is not None else 0
         logs = self.source.logs(start, target)
         blocks = self.source.blocks(start, target)
-        silver = crawl_plan(self.store.spark, logs, blocks, blockchain=self.blockchain, data_version=dv)
+        silver = crawl_plan(spark, logs, blocks, blockchain=self.blockchain, data_version=dv)
         try:
             # the retry-safe sink sequence lives in ONE place — see its docstring
             self.store.apply_silver(silver, dv, blockchains=[self.blockchain])
@@ -93,6 +96,7 @@ class TailRunner:
             # parquet row counts are metadata-cheap reads
             self.stats.increment("batches")
             self.stats.increment("blocks", target - start + 1)
+            self.stats.increment("codegen_compiles", codegen_compiles(spark) - compiled)
             for table, key in (("token_transfers", "transfer_rows"), ("tokens", "token_rows"), ("owners", "owner_rows")):
                 snap = self.store.read(table).count()
                 self.stats.increment(key, snap - self.stats.get_count(key))

@@ -3,6 +3,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
+from block_crawler_spark.session import SESSION_CONF
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -14,6 +16,7 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        .config(map=SESSION_CONF)
         .getOrCreate()
     )
     yield s

@@ -9,7 +9,7 @@ import time
 
 import pytest
 
-from block_crawler_spark.streaming.stats import StatsService, StatsTicker
+from block_crawler_spark.streaming.stats import StatsService, StatsTicker, codegen_compiles
 
 
 def test_counters_and_line():
@@ -63,6 +63,17 @@ def test_tail_runner_counts(spark, tmp_path):
     assert snap["blocks"] > 0
     assert snap["transfer_rows"] == store.read("token_transfers").count()
     assert snap["owner_rows"] == store.read("owners").count()
+    assert "codegen_compiles" in snap
+
+
+def test_codegen_compiles_counts_a_new_class(spark):
+    """The probe moves when Spark compiles a class it has not seen: an
+    integer literal new to this JVM is inlined into the generated code."""
+    from pyspark.sql import functions as F
+
+    before = codegen_compiles(spark)
+    spark.range(3).select((F.col("id") * F.lit(time.time_ns())).alias("x")).collect()
+    assert codegen_compiles(spark) > before
 
 
 @pytest.mark.slow

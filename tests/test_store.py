@@ -186,6 +186,30 @@ def test_bucket_pruned_merge_leaves_untouched_bucket_hard_linked(spark, tmp_path
     assert "cbucket" not in got.columns
 
 
+def test_overwrite_rejects_rows_outside_the_named_buckets(spark, tmp_path):
+    """A bucket-pruned overwrite whose frame holds a row of a bucket it did
+    not name raises, naming that bucket, and commits nothing: ``_CURRENT``
+    and the previous version stay as they were."""
+    store = _mk(spark, tmp_path)
+    (col_x, b_x), (col_y, b_y) = _two_collections_in_distinct_buckets(store, spark)
+    store.append_transfers(
+        _transfers(spark, [_transfer_row("chain-a", collection=col_x), _transfer_row("chain-a", collection=col_y)])
+    )
+    base = store._path("token_transfers")
+    before = sorted(map(str, store.read("token_transfers").collect()))
+    inodes = _bucket_inodes(base, "v-1", "chain-a", b_y)
+
+    both = _transfers(
+        spark, [_transfer_row("chain-a", "0xo2", collection=col_x), _transfer_row("chain-a", "0xo2", collection=col_y)]
+    )
+    with pytest.raises(ValueError, match=rf"token_transfers: rows outside the named buckets.*\[{b_y}\]"):
+        store.overwrite("token_transfers", both, touched_blockchains=["chain-a"], touched_buckets=[b_x])
+    assert store._current_version("token_transfers") == "v-1"
+    assert sorted(d for d in os.listdir(base) if d.startswith("v-")) == ["v-1"]
+    assert _bucket_inodes(base, "v-1", "chain-a", b_y) == inodes
+    assert sorted(map(str, store.read("token_transfers").collect())) == before
+
+
 @pytest.mark.slow
 def test_apply_silver_bucket_prunes_all_three_tables(spark, tmp_path):
     """The crawl/tail sink sequence derives touched buckets from the batch:
@@ -205,7 +229,7 @@ def test_apply_silver_bucket_prunes_all_three_tables(spark, tmp_path):
             "blockchain string, collection_id string, token_id_hex string, specification string, "
             "metadata_url string, metadata_url_version_hex string, data_version long",
         )
-        return SimpleNamespace(token_transfers=tr, tokens=toks)
+        return SimpleNamespace(token_transfers=tr, token_metadata=toks)
 
     store.apply_silver(silver_for(col_x), 1, blockchains=["chain-a"])
     store.apply_silver(silver_for(col_y), 1, blockchains=["chain-a"])
@@ -327,7 +351,7 @@ def test_apply_silver_results_identical_with_and_without_read_pruning(spark, tmp
             "blockchain string, collection_id string, token_id_hex string, specification string, "
             "metadata_url string, metadata_url_version_hex string, data_version long",
         )
-        return SimpleNamespace(token_transfers=tr, tokens=toks)
+        return SimpleNamespace(token_transfers=tr, token_metadata=toks)
 
     pruned_store = SilverStore(spark, str(tmp_path / "pruned"))
     full_store = SilverStore(spark, str(tmp_path / "full"))
@@ -394,7 +418,7 @@ def test_building_reads_starts_no_spark_job(spark, tmp_path):
         "blockchain string, collection_id string, token_id_hex string, specification string, "
         "metadata_url string, metadata_url_version_hex string, data_version long",
     )
-    store.apply_silver(SimpleNamespace(token_transfers=tr, tokens=toks), 1, blockchains=["chain-a"])
+    store.apply_silver(SimpleNamespace(token_transfers=tr, token_metadata=toks), 1, blockchains=["chain-a"])
     coll = ("chain-a", "0xc", None, None, "n", "n", "S", None, "ERC-721", 5, 1_600_000_000, 1)
     store.upsert_collections(spark.createDataFrame([coll], COLLECTION_SCHEMA), blockchains=["chain-a"])
     store.set_config("chain-a", 1, 5)
@@ -451,7 +475,7 @@ def _batch(spark, events):
         F.lit(None).cast("string").alias("metadata_url_version_hex"),
         F.lit(1).cast("long").alias("data_version"),
     )
-    return SimpleNamespace(token_transfers=tr, tokens=toks)
+    return SimpleNamespace(token_transfers=tr, token_metadata=toks)
 
 
 def _rows(store, table, where=None):
