@@ -1,23 +1,16 @@
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import SparkSession
+import os
 
-from block_crawler_spark.session import SESSION_CONF
+import pytest
+
+from block_crawler_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.appName("bcs-tests")
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .config(map=SESSION_CONF)
-        .getOrCreate()
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_DRIVER_MEM", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"))
+        s = get_spark("bcs-tests")
     yield s
     s.stop()

@@ -20,6 +20,7 @@ from block_crawler_spark.sources.chainfix import standard_scenario
 @pytest.mark.slow
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     # default warehouse dir (static conf) — tables are dropped in finally
+    prev_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force non-broadcast
     spark.sql("DROP TABLE IF EXISTS b_transfers")
     spark.sql("DROP TABLE IF EXISTS b_tokens")
@@ -49,4 +50,4 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS b_transfers")
         spark.sql("DROP TABLE IF EXISTS b_tokens")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_threshold)

@@ -1,30 +1,22 @@
-"""Session env parsing: a bad env value fails before Spark starts."""
+"""The engine's session plans shuffled joins as sort-merge joins, which spill."""
 
 from __future__ import annotations
 
-import pytest
-
-from block_crawler_spark.session import env_flag
+from pyspark.sql import functions as F
 
 
-@pytest.mark.parametrize(
-    "raw, want",
-    [("1", "true"), ("true", "true"), ("YES", "true"), (" True ", "true"),
-     ("0", "false"), ("false", "false"), ("No", "false")],
-)
-def test_env_flag_normalises_spellings(monkeypatch, raw, want):
-    monkeypatch.setenv("SPARK_GRAFT_PREFER_SMJ", raw)
-    assert env_flag("SPARK_GRAFT_PREFER_SMJ", False) == want
-
-
-def test_env_flag_default_when_unset(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_PREFER_SMJ", raising=False)
-    assert env_flag("SPARK_GRAFT_PREFER_SMJ", False) == "false"
-    assert env_flag("SPARK_GRAFT_PREFER_SMJ", True) == "true"
-
-
-@pytest.mark.parametrize("raw", ["", "2", "on", "flase"])
-def test_env_flag_rejects_other_values_naming_the_variable(monkeypatch, raw):
-    monkeypatch.setenv("SPARK_GRAFT_PREFER_SMJ", raw)
-    with pytest.raises(ValueError, match="SPARK_GRAFT_PREFER_SMJ"):
-        env_flag("SPARK_GRAFT_PREFER_SMJ", False)
+def test_shuffled_join_is_sort_merge_not_shuffled_hash(spark):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # force a shuffled join
+    try:
+        big = spark.range(5000).select((F.col("id") % 1000).alias("k"), "id")
+        small = spark.range(1000).withColumnRenamed("id", "k")
+        joined = big.join(small, "k")
+        assert len(joined.collect()) == 5000
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    assert "isFinalPlan=true" in plan, plan
+    assert "SortMergeJoin" in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
