@@ -207,54 +207,6 @@ MEMO_FAMILIES = {
 }
 
 
-def _last_round_timings() -> dict[str, float]:
-    """Per-query seconds for the outlier re-run baseline.
-
-    The ``bench_telemetry.json`` sidecar wins when it parses: it is
-    REWRITTEN by every bench run (including the driver's per-round run),
-    so its content is always the most recent completed run's timings — it
-    cannot be staler than any per-query data a BENCH_r*.json holds.  The
-    r9-advice alternative (mtime competition) was tried and rejected in
-    r10 review: r9+ driver records carry NO per-query dict (their captured
-    tail truncates the telemetry line's head), and in a fresh clone every
-    file shares checkout mtime — so mtime order could only ever promote an
-    ANCIENT (≤ r8) record's timings over the sidecar's.  Fallback, for
-    clones without a sidecar: BENCH_r*.json by round number descending.
-    {} when nothing parses."""
-    import glob
-    import re as _re
-
-    def _q_or_none(path: str) -> dict[str, float] | None:
-        with open(path) as f:
-            rec = json.load(f)
-        # driver records wrap our JSON line: check 'parsed', then the
-        # top level, then the last JSON-looking line captured in 'tail'
-        for cand in (rec.get("parsed") if isinstance(rec, dict) else None, rec):
-            if isinstance(cand, dict) and isinstance(cand.get("queries"), dict) and cand["queries"]:
-                return {k: float(v) for k, v in cand["queries"].items()}
-        tail = rec.get("tail", "") if isinstance(rec, dict) else ""
-        i = tail.rfind('{"metric"')
-        if i >= 0:
-            q = json.loads(tail[i:].splitlines()[0]).get("queries")
-            if isinstance(q, dict) and q:
-                return {k: float(v) for k, v in q.items()}
-        return None
-
-    def _round_no(path: str) -> int:
-        m = _re.search(r"BENCH_r(\d+)\.json$", path)
-        return int(m.group(1)) if m else -1
-
-    bench_records = sorted(glob.glob(os.path.join(_REPO, "BENCH_r*.json")), key=_round_no, reverse=True)
-    for path in [os.path.join(_REPO, "bench_telemetry.json")] + bench_records:
-        try:
-            q = _q_or_none(path)
-        except (OSError, ValueError, TypeError):  # TypeError: float(non-scalar)
-            continue
-        if q:
-            return q
-    return {}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
@@ -278,36 +230,21 @@ def main() -> None:
     query_loads: dict[str, list[float]] = {}
     query_samples: dict[str, list[float]] = {}
 
-    def sample(name, fn, extra=0):
-        best = timings.get(name)
-        runs, i = 3 + extra if name not in timings else extra, 0
+    def sample(name, fn):
+        runs, i = 3, 0
         while i < runs:
             load1 = os.getloadavg()[0]
             query_loads.setdefault(name, []).append(round(load1, 1))
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            query_samples.setdefault(name, []).append(round(dt, 3))
-            best = dt if best is None or dt < best else best
-            if i == runs - 1 and extra == 0 and runs == 3 and load1 > ncpu * 0.5:
+            query_samples.setdefault(name, []).append(round(time.time() - t0, 3))
+            if i == runs - 1 and runs == 3 and load1 > ncpu * 0.5:
                 runs = 4  # noisy box: one extra sample
             i += 1
-        timings[name] = round(best, 3)
+        timings[name] = min(query_samples[name])
 
     for name in HEADLINE:
         sample(name, registry[name][0])
-
-    # outlier re-run (round-5, VERDICT r4 #7): co-tenant load alone produces
-    # 1.5x swings between local runs, so any query >1.3x its last recorded
-    # round gets two more samples before its number is published — a real
-    # regression survives, a noise spike clears
-    prev = _last_round_timings()
-    reruns = []
-    for name in HEADLINE:
-        base = prev.get(name)
-        if base and timings[name] > 1.3 * base:
-            reruns.append(name)
-            sample(name, registry[name][0], extra=2)
 
     total = round(sum(timings.values()), 3)
     # cold-vs-warm for the memoized families (VERDICT r13 task 3): warm is
@@ -328,23 +265,15 @@ def main() -> None:
         sum(v["first_member_cold"] - v["first_member_warm"] for v in memo_cold.values()), 3
     )
     # Telemetry goes to the sidecar file; stdout carries only two compact
-    # lines.  History: the driver captures a bounded TAIL of stdout, and a
-    # long final line truncates its own HEAD (BENCH_r05/r08 parsed:null);
-    # r9-r14 printed the full telemetry dict (samples + per-query load
-    # averages, ~10 KB by r14) on the second-to-last line, which grew past
-    # the capture window and left PERF_r14 with per_query:{} and 47 phantom
-    # drops (VERDICT r14 "What's wrong" #3 / task 2).  r15: `samples` and
-    # `load_avg_per_query` live ONLY in bench_telemetry.json; the
-    # second-to-last stdout line is a compact 2-dp {"queries":{name:sec}}
-    # dict (~3 KB at 127 queries, no spaces) so the driver's tail keeps
-    # per-query visibility, and the FINAL line stays a compact
-    # constant-size object that survives any registry size.
+    # lines, because the driver keeps a bounded TAIL of stdout and a long
+    # final line truncates its own head.  The second-to-last line is a 2-dp
+    # {"queries":{name:sec}} dict, so the tail keeps per-query visibility;
+    # the final line is a constant-size object.
     telemetry = {
         "queries": timings,
         "samples": query_samples,
         "memo_cold": memo_cold,
         "load_avg_per_query": query_loads,
-        "rerun_outliers": reruns,
     }
     try:
         with open(os.path.join(_REPO, "bench_telemetry.json"), "w") as f:

@@ -19,10 +19,12 @@ attribute_version_hex, block_number, timestamp?``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import cache
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hexint import ZERO_ADDRESS
+from ..functions.hexint import ZERO_ADDRESS, hex_to_dec
 from ..schemas import SPEC_ERC721, TX_BURN, TX_MINT, TX_TRANSFER
 
 
@@ -48,7 +50,12 @@ def _grouped_by_token(t: DataFrame, *keys: str):
     nft_token_state_from_lineitem: 1.28 -> 1.01 s best-of-3 at sf0.1,
     row-identical on all 590 973 rows.  Callers must NOT select ``_gh``
     into their output."""
-    return t.withColumn("_gh", F.xxhash64(*keys)).groupBy("_gh", *keys)
+    return t.select(F.col("*"), _key_hash(keys)).groupBy("_gh", *keys)
+
+
+@cache
+def _key_hash(keys: tuple[str, ...]) -> Column:
+    return F.xxhash64(*keys).alias("_gh")
 
 
 def fold_token_state(transfers: DataFrame, uri_updates: DataFrame | None = None) -> DataFrame:
@@ -149,6 +156,13 @@ def _signed_delta_rows(t: DataFrame) -> DataFrame:
     additionally dropped defensively.  The reference builds the same ± pairs
     in its incremental consumers (``nft/consumers.py:162-172``).
     """
+    exploded, flat = _delta_cols()
+    return t.select(*exploded).select(*flat)
+
+
+@cache
+def _delta_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """:func:`_signed_delta_rows`' two projections."""
     zero = F.lit(ZERO_ADDRESS)
     is_mint = F.col("transaction_type") == TX_MINT
     is_burn = F.col("transaction_type") == TX_BURN
@@ -159,12 +173,9 @@ def _signed_delta_rows(t: DataFrame) -> DataFrame:
         .when(is_burn, F.array(minus))
         .otherwise(F.array(plus, minus))
     )
-    return t.select(
-        "blockchain",
-        "collection_id",
-        "token_id_hex",
-        F.explode(F.filter(sides, lambda s: s["account"] != zero)).alias("d"),
-    ).select("blockchain", "collection_id", "token_id_hex", "d.account", "d.delta")
+    keys = (F.col("blockchain"), F.col("collection_id"), F.col("token_id_hex"))
+    exploded = (*keys, F.explode(F.filter(sides, lambda s: s["account"] != zero)).alias("d"))
+    return exploded, (*keys, F.col("d.account"), F.col("d.delta"))
 
 
 def fold_erc1155_balances(transfers: DataFrame) -> DataFrame:
@@ -172,12 +183,24 @@ def fold_erc1155_balances(transfers: DataFrame) -> DataFrame:
 
     One shuffle on (collection, token, account) after the ± explode.
     """
-    deltas = _signed_delta_rows(transfers.filter(F.col("specification") != SPEC_ERC721))
-    balances = _grouped_by_token(deltas, "blockchain", "collection_id", "token_id_hex", "account").agg(
-        _null_if_any_overflow(F.sum("delta"), "delta").alias("quantity")
-    )
-    return balances.filter(F.col("quantity").isNull() | (F.col("quantity") != 0)).select(
-        "blockchain", "account", "collection_id", "token_id_hex", "quantity"
+    return _balances(_signed_delta_rows(transfers.filter(F.col("specification") != SPEC_ERC721)))
+
+
+def _balances(deltas: DataFrame) -> DataFrame:
+    """Signed delta rows → owner balances; zero balances dropped."""
+    total, kept, out = _balance_cols()
+    return _grouped_by_token(deltas, "blockchain", "collection_id", "token_id_hex", "account").agg(total).filter(
+        kept
+    ).select(*out)
+
+
+@cache
+def _balance_cols() -> tuple[Column, Column, tuple[Column, ...]]:
+    """(balance aggregate, keep predicate, output columns) of :func:`_balances`."""
+    return (
+        _null_if_any_overflow(F.sum("delta"), "delta").alias("quantity"),
+        F.col("quantity").isNull() | (F.col("quantity") != 0),
+        tuple(F.col(c) for c in ("blockchain", "account", "collection_id", "token_id_hex", "quantity")),
     )
 
 
@@ -223,47 +246,69 @@ def owner_balances_from_silver(transfers_silver: DataFrame) -> DataFrame:
     a tail mid-chain without backfilling transfers under-counts, exactly as
     the delta path did.
     """
-    from ..functions.hexint import hex_to_dec
-
-    t = transfers_silver.withColumn("quantity", hex_to_dec(F.col("quantity_hex")))
-    deltas = _signed_delta_rows(t)
-    balances = _grouped_by_token(deltas, "blockchain", "collection_id", "token_id_hex", "account").agg(
-        _null_if_any_overflow(F.sum("delta"), "delta").alias("quantity")
-    )
-    return balances.filter(F.col("quantity").isNull() | (F.col("quantity") != 0)).select(
-        "blockchain", "account", "collection_id", "token_id_hex", "quantity"
-    )
+    return _balances(_signed_delta_rows(transfers_silver.select(F.col("*"), _silver_quantity())))
 
 
-def token_state_from_silver(transfers_silver: DataFrame) -> DataFrame:
-    """Recompute the transfer-derived token-state fields (A1) from the
-    IDEMPOTENT silver ``token_transfers`` table — the retry-safe tokens
-    path, exactly parallel to :func:`owner_balances_from_silver`.
+@cache
+def _silver_quantity() -> Column:
+    return hex_to_dec(F.col("quantity_hex")).alias("quantity")
+
+
+_TOKEN_KEYS = ("blockchain", "collection_id", "token_id_hex")
+_METADATA = ("specification", "metadata_url", "metadata_url_version_hex", "data_version")
+
+
+def token_state_from_silver(transfers_silver: DataFrame, *metadata: DataFrame) -> DataFrame:
+    """Recompute token state (A1) from the IDEMPOTENT silver
+    ``token_transfers`` table — the retry-safe tokens path, exactly
+    parallel to :func:`owner_balances_from_silver`.
 
     The additive ``quantity`` merge in ``token_state_merge`` double-counts
     when the same block range is applied twice (a crashed-and-retried
     batch, or a bulk crawl re-run over the same bronze).  Recomputing from
     the deduped transfers table makes the tokens write a pure function of
-    committed history.  Only fields derivable from transfers are produced;
-    ``specification``/``metadata_url``/``data_version`` are merged
-    separately (``SilverStore.rebuild_tokens``) because they come from
-    probes and URI events, not the transfer stream.
+    committed history.
+
+    Without ``metadata`` only the transfer-derived fields are produced,
+    with the last recipient and its version as ``_last_recipient`` /
+    ``_owner_version_hex``.  Each ``metadata`` frame holds token keys with
+    the fields that are not functions of the transfer stream —
+    ``specification`` (an ERC-165 probe result, constant per token), the
+    ``metadata_url`` pair and ``data_version`` — several rows per token
+    allowed (stored ``tokens`` rows qualify).  They are folded in the SAME
+    group-by as the transfers (one shuffle, no join), and the output is
+    one stored ``tokens`` row per token that has a committed transfer:
+    ``specification`` and ``data_version`` are the maxima, the
+    ``metadata_url`` pair follows K3 (:func:`_silver_token_rows`), and
+    ``current_owner`` is the last recipient of an ERC-721 token (NULL for
+    ERC-1155).
 
     The silver table's 40-char zero-padded ``attribute_version_hex`` is the
     ordering key directly — lexicographic == numeric by construction
     (``oracles.attribute_version_hex``), so no hex→decimal round trip.
     """
-    from ..functions.hexint import hex_to_dec
+    transfer_aggs, signed = _silver_token_aggs()
+    if not metadata:
+        rows = transfers_silver.select(F.col("*"), signed)
+        return _grouped_by_token(rows, *_TOKEN_KEYS).agg(*transfer_aggs).drop("_gh")
+    transfer_cols, metadata_cols, metadata_aggs, transferred, out = _silver_token_rows()
+    rows = transfers_silver.select(*transfer_cols)
+    for m in metadata:
+        rows = rows.unionByName(m.select(*metadata_cols), allowMissingColumns=True)
+    folded = _grouped_by_token(rows.select(F.col("*"), signed), *_TOKEN_KEYS).agg(*transfer_aggs, *metadata_aggs)
+    return folded.filter(transferred).select(*out)
 
+
+@cache
+def _silver_token_aggs() -> tuple[tuple[Column, ...], Column]:
+    """(transfer-derived aggregates, the signed supply delta they sum)."""
     is_mint = F.col("transaction_type") == TX_MINT
     is_burn = F.col("transaction_type") == TX_BURN
     own_event = F.col("transaction_type").isin(TX_MINT, TX_TRANSFER)
     qty = hex_to_dec(F.col("quantity_hex"))
-    t = transfers_silver.withColumn(
-        "_signed",
-        F.when(is_mint, qty).when(is_burn, -qty).otherwise(F.lit(0).cast("decimal(38,0)")),
-    )
-    return _grouped_by_token(t, "blockchain", "collection_id", "token_id_hex").agg(
+    # a row without a transaction_type (a metadata row) falls to the 0 branch
+    signed = F.when(is_mint, qty).when(is_burn, -qty).otherwise(F.lit(0).cast("decimal(38,0)")).alias("_signed")
+    aggs = (
         _null_if_any_overflow(F.sum("_signed"), "_signed").alias("quantity"),
         F.min_by(F.when(is_mint, F.col("to_")), F.when(is_mint, F.col("attribute_version_hex"))).alias(
             "original_owner"
@@ -274,7 +319,55 @@ def token_state_from_silver(transfers_silver: DataFrame) -> DataFrame:
             "_last_recipient"
         ),
         F.max(F.when(own_event, F.col("attribute_version_hex"))).alias("_owner_version_hex"),
-    ).drop("_gh")
+    )
+    return aggs, signed
+
+
+@cache
+def _silver_token_rows() -> tuple[tuple[Column, ...], tuple[Column, ...], tuple[Column, ...], Column, tuple[Column, ...]]:
+    """The metadata half of :func:`token_state_from_silver`: the transfer
+    and metadata projections it unions, the metadata aggregates, the
+    has-a-transfer predicate and the stored ``tokens`` columns it ends with.
+
+    K3 rule (``merge.metadata_url_upsert``): only rows that CARRY URI data
+    compete — a NULL ordering key makes ``max_by`` skip the row, so a
+    higher-data_version batch with no URI event can never clobber an
+    existing metadata_url to NULL.  "Carries URI data" means EITHER field:
+    the A4 backfill (``fetch_token_uris``) sets a URL with no version hex,
+    and such a row must still compete (with an empty version) rather than
+    be silently dropped.  Transfer rows carry neither field.
+    """
+    transfer_cols = tuple(
+        F.col(c)
+        for c in (*_TOKEN_KEYS, "transaction_type", "to_", "attribute_version_hex", "block_id", "timestamp", "quantity_hex")
+    )
+    metadata_cols = tuple(F.col(c) for c in (*_TOKEN_KEYS, *_METADATA))
+    carries_uri = F.col("metadata_url").isNotNull() | F.col("metadata_url_version_hex").isNotNull()
+    metadata_aggs = (
+        F.max("specification").alias("specification"),
+        F.max_by(
+            F.struct("metadata_url", "metadata_url_version_hex"),
+            F.when(
+                carries_uri,
+                F.struct(F.col("data_version"), F.coalesce(F.col("metadata_url_version_hex"), F.lit(""))),
+            ),
+        ).alias("_meta"),
+        F.max("data_version").alias("data_version"),
+        # metadata rows carry no version hex, every committed transfer does
+        F.count("attribute_version_hex").alias("_transfers"),
+    )
+    erc721 = F.col("specification") == SPEC_ERC721
+    out = (
+        *(F.col(c) for c in (*_TOKEN_KEYS, "mint_block", "mint_timestamp", "original_owner")),
+        F.when(erc721, F.col("_last_recipient")).alias("current_owner"),
+        F.when(erc721, F.col("_owner_version_hex")).alias("current_owner_version_hex"),
+        F.col("quantity"),
+        F.col("_meta.metadata_url").alias("metadata_url"),
+        F.col("_meta.metadata_url_version_hex").alias("metadata_url_version_hex"),
+        F.col("data_version"),
+        F.col("specification"),
+    )
+    return transfer_cols, metadata_cols, metadata_aggs, F.col("_transfers") > 0, out
 
 
 def transfers_to_silver(transfers: DataFrame, data_version: int, blockchain: str | None = None) -> DataFrame:
@@ -287,23 +380,26 @@ def transfers_to_silver(transfers: DataFrame, data_version: int, blockchain: str
     t = transfers
     if blockchain is not None and "blockchain" not in t.columns:
         t = t.withColumn("blockchain", F.lit(blockchain))
-    return (
-        t.dropDuplicates(["blockchain", "collection_id", "attribute_version_hex", "token_id_hex", "batch_index"])
-        .select(
-            "blockchain",
-            "collection_id",
-            "attribute_version_hex",
-            "token_id_hex",
-            "batch_index",
-            *( [F.col("timestamp")] if "timestamp" in t.columns else [F.lit(None).cast("long").alias("timestamp")] ),
-            F.col("block_number").alias("block_id"),
-            "transaction_hash",
-            "transaction_index",
-            "log_index",
-            "transaction_type",
-            "from_",
-            "to_",
-            "quantity_hex",
-            F.lit(data_version).alias("data_version"),
-        )
+    keys, timestamp, no_timestamp, rest = _silver_transfer_cols()
+    return t.dropDuplicates(list(_SILVER_TRANSFER_KEY)).select(
+        *keys,
+        timestamp if "timestamp" in t.columns else no_timestamp,
+        *rest,
+        F.lit(data_version).alias("data_version"),
     )
+
+
+_SILVER_TRANSFER_KEY = ("blockchain", "collection_id", "attribute_version_hex", "token_id_hex", "batch_index")
+
+
+@cache
+def _silver_transfer_cols() -> tuple[tuple[Column, ...], Column, Column, tuple[Column, ...]]:
+    """:func:`transfers_to_silver`'s columns: the key, ``timestamp`` (or a
+    NULL one), and the rest but ``data_version``."""
+    rest = (
+        F.col("block_number").alias("block_id"),
+        *(F.col(c) for c in ("transaction_hash", "transaction_index", "log_index", "transaction_type")),
+        *(F.col(c) for c in ("from_", "to_", "quantity_hex")),
+    )
+    keys = tuple(F.col(c) for c in _SILVER_TRANSFER_KEY)
+    return keys, F.col("timestamp"), F.lit(None).cast("long").alias("timestamp"), rest

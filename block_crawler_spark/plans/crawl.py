@@ -24,12 +24,13 @@ Scale notes (100 TB target):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cache
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hexint import hex_to_dec
-from ..operators.decode import decode_token_transfers, decode_uri_updates
+from ..operators.decode import decodable_logs, decode_token_transfers, decode_uri_updates
 from ..operators.folds import fold_owners, fold_token_state, transfers_to_silver
 from ..schemas import SPEC_ERC721, SPEC_ERC1155
 
@@ -41,6 +42,7 @@ class SilverTables:
     transfers: DataFrame  # the cached decoded transfers the folds read
     uri_updates: DataFrame  # the decoded URI events, with ``blockchain``
     data_version: int
+    logs: DataFrame  # the cached decodable logs both decodes read
 
     @property
     def tokens(self) -> DataFrame:
@@ -66,27 +68,39 @@ class SilverTables:
         URI event, carrying its URL under the event's version hex.  Unlike
         :attr:`tokens`, a URI event counts whether or not the batch also
         transfers its token."""
-        none = F.lit(None).cast("string")
+        specs, uris = _metadata_cols()
         dv = F.lit(self.data_version).cast("long").alias("data_version")
-        keys = ["blockchain", "collection_id", "token_id_hex"]
-        specs = self.transfers.select(
-            *keys, "specification", none.alias("metadata_url"), none.alias("metadata_url_version_hex"), dv
-        )
-        uris = self.uri_updates.select(
-            *keys,
-            none.alias("specification"),
-            "metadata_url",
-            F.col("attribute_version_hex").alias("metadata_url_version_hex"),
-            dv,
-        )
-        return specs.unionByName(uris)
+        return self.transfers.select(*specs, dv).union(self.uri_updates.select(*uris, dv))
 
     def release(self) -> None:
-        """Unpersist the cached transfers.  A batch's sinks call this in a
-        ``finally`` after their last read: otherwise every crawl chunk, tail
-        or stream batch leaves one cached relation behind, growing memory
-        and every later cache lookup without bound."""
+        """Unpersist the cached transfers, then the decodable logs they were
+        decoded from.  A batch's sinks call this in a ``finally`` after
+        their last read: otherwise every crawl chunk, tail or stream batch
+        leaves two cached relations behind, growing memory and every later
+        cache lookup without bound."""
         self.transfers.unpersist()
+        self.logs.unpersist()
+
+
+@cache
+def _metadata_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """:attr:`SilverTables.token_metadata`'s columns but ``data_version``:
+    of a transfer row, then of a URI row."""
+    none = F.lit(None).cast("string")
+    keys = (F.col("blockchain"), F.col("collection_id"), F.col("token_id_hex"))
+    specs = (*keys, F.col("specification"), none.alias("metadata_url"), none.alias("metadata_url_version_hex"))
+    uris = (
+        *keys,
+        none.alias("specification"),
+        F.col("metadata_url"),
+        F.col("attribute_version_hex").alias("metadata_url_version_hex"),
+    )
+    return specs, uris
+
+
+@cache
+def _block_times() -> tuple[Column, Column]:
+    return F.col("number").alias("block_number"), F.col("timestamp")
 
 
 def derive_collections(
@@ -155,17 +169,24 @@ def crawl_plan(
     data_version: int = 1,
 ) -> SilverTables:
     """Full one-pass plan: logs (+blocks) → transfers, tokens, owners
-    (+ collections when receipts/contracts provided).  The decoded
-    transfers are cached for the folds and sinks that share them; the
-    caller frees them with :meth:`SilverTables.release`."""
-    block_times = blocks.select(F.col("number").alias("block_number"), F.col("timestamp"))
+    (+ collections when receipts/contracts provided).
 
+    The logs are read once: the decodable ones (``decode.decodable_logs``)
+    are cached, and both decodes read that cache.  So the caller's
+    predicates on ``logs`` — a batch's block range — run in the one scan
+    stage that fills it and still reach the parquet scan's pushed filters,
+    while the decode stages carry no batch constant and compile once per
+    session.  The decoded transfers are cached too, for the folds and sinks
+    that share them; the caller frees both caches with
+    :meth:`SilverTables.release`."""
+    decodable = decodable_logs(logs).cache()
+    chain = F.lit(blockchain).alias("blockchain")
     transfers = (
-        decode_token_transfers(logs)
-        .join(F.broadcast(block_times), "block_number", "left")
-        .withColumn("blockchain", F.lit(blockchain))
+        decode_token_transfers(decodable)
+        .join(F.broadcast(blocks.select(*_block_times())), "block_number", "left")
+        .select(F.col("*"), chain)
     )
-    uris = decode_uri_updates(logs).withColumn("blockchain", F.lit(blockchain))
+    uris = decode_uri_updates(decodable).select(F.col("*"), chain)
 
     collections = None
     if receipts is not None and contracts is not None:
@@ -183,7 +204,7 @@ def crawl_plan(
 
     if collections is None:
         collections = spark.createDataFrame([], "blockchain string, collection_id string")
-    return SilverTables(collections, token_transfers, transfers, uris, data_version)
+    return SilverTables(collections, token_transfers, transfers, uris, data_version, decodable)
 
 
 def total_supply_check(collections: DataFrame, tokens: DataFrame) -> DataFrame:

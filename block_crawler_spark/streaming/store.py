@@ -54,9 +54,10 @@ import os
 import shutil
 from collections.abc import Sequence
 from dataclasses import dataclass
+from functools import cache
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -97,6 +98,25 @@ _BUCKETED = frozenset({"tokens", "token_transfers", "owners"})
 _CBUCKET = StructField("cbucket", IntegerType(), True)
 
 
+# Fixed expressions are built once per process (see operators.decode's
+# build-once rule): Columns are unresolved and session-independent.
+@cache
+def _bucket(n_buckets: int) -> Column:
+    """The collection-bucket partition value — a pure function of
+    collection_id, so rows re-bucket identically on every rewrite."""
+    return F.pmod(F.xxhash64(F.coalesce(F.col("collection_id"), F.lit(""))), F.lit(n_buckets)).cast("int")
+
+
+@cache
+def _stored_cols(table: str) -> tuple[Column, ...]:
+    return tuple(F.col(name) for name in STORED_SCHEMAS[table].names)
+
+
+@cache
+def _stored_casts(table: str) -> tuple[Column, ...]:
+    return tuple(F.col(f.name).cast(f.dataType).alias(f.name) for f in STORED_SCHEMAS[table].fields)
+
+
 @dataclass
 class SilverStore:
     spark: SparkSession
@@ -106,18 +126,14 @@ class SilverStore:
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _bucket_expr(self):
-        """The collection-bucket partition value — a pure function of
-        collection_id, so rows re-bucket identically on every rewrite."""
-        return F.pmod(
-            F.xxhash64(F.coalesce(F.col("collection_id"), F.lit(""))), F.lit(self.n_buckets)
-        ).cast("int")
+    def _bucket_expr(self) -> Column:
+        return _bucket(self.n_buckets)
 
     def touched_buckets(self, rows: DataFrame) -> list[int]:
         """Distinct cbucket values of ``rows`` (any frame with a
         ``collection_id``) — at most ``n_buckets`` ints, collected once per
         batch and shared by all three entity-table rewrites."""
-        return sorted(r["b"] for r in rows.select(self._bucket_expr().alias("b")).distinct().collect())
+        return sorted(r[0] for r in rows.select(self._bucket_expr()).distinct().collect())
 
     def _current_version(self, table: str) -> str | None:
         ptr = os.path.join(self._path(table), "_CURRENT")
@@ -166,7 +182,7 @@ class SilverStore:
             df = df.filter(F.col("blockchain").isin([str(b) for b in blockchains]))
         if buckets is not None and bucketed:
             df = df.filter(F.col("cbucket").isin([int(b) for b in buckets]))
-        return df.select(*stored.names)
+        return df.select(*_stored_cols(table))
 
     @staticmethod
     def _link_tree(src: str, dst: str) -> None:
@@ -241,13 +257,13 @@ class SilverStore:
         bucketed = table in _BUCKETED
         touched = set(touched_blockchains) if touched_blockchains is not None else None
         tb = {int(b) for b in touched_buckets} if bucketed and touched_buckets is not None else None
-        out = df.select(*[F.col(f.name).cast(f.dataType) for f in stored.fields])
+        out = df.select(*_stored_casts(table))
         if touched is not None:
             out = out.filter(F.col("blockchain").isin(sorted(touched)))
         # The plan may read the current version's files; they stay in place
         # until after the pointer flip, so no lineage break is needed.
         if bucketed:
-            out = out.withColumn("cbucket", self._bucket_expr())
+            out = out.select(F.col("*"), self._bucket_expr().alias("cbucket"))
         part_cols = ["blockchain", "cbucket"] if bucketed else ["blockchain"]
         out.write.mode("overwrite").partitionBy(*part_cols).parquet(os.path.join(base, nxt))
         if tb is not None:
@@ -309,65 +325,25 @@ class SilverStore:
         — or a bulk crawl re-run over the same bronze — rewrites the same
         values instead of re-adding additive quantities.
 
-        Transfer-derived fields come from
-        ``folds.token_state_from_silver`` over each partition's whole
-        history (every transfer of a token lives in its token's blockchain
-        partition and cbucket, a pure function of collection_id), so a
-        token the batch did not touch re-derives its stored values.
-        ``specification`` (an ERC-165 probe result, constant per token) and
-        the ``metadata_url`` pair (K3 LWW on (data_version,
-        metadata_url_version_hex)) are merged from the partitions' existing
-        tokens ∪ ``batch_meta``, since they are not functions of the
-        transfer stream; ``data_version`` is the max of the two.
-        ``batch_meta`` holds the token key, those metadata columns and
-        ``data_version`` (see ``plans.crawl.SilverTables.token_metadata``);
-        it may hold several rows per token.
+        One group-by (``folds.token_state_from_silver``) folds each
+        partition's whole transfer history together with its metadata rows:
+        the partitions' existing tokens ∪ ``batch_meta``.  Every transfer of
+        a token lives in its token's blockchain partition and cbucket, a
+        pure function of collection_id, so a token the batch did not touch
+        re-derives its stored values.  ``specification`` (an ERC-165 probe
+        result, constant per token) and the ``metadata_url`` pair (K3 LWW on
+        (data_version, metadata_url_version_hex)) are not functions of the
+        transfer stream, so they come from the metadata rows;
+        ``data_version`` is their max.  A token without a committed transfer
+        gets no row.  ``batch_meta`` holds the token key, those metadata
+        columns and ``data_version`` (see
+        ``plans.crawl.SilverTables.token_metadata``); it may hold several
+        rows per token.
         """
         from ..operators.folds import token_state_from_silver
-        from ..schemas import SPEC_ERC721
 
-        keys = ["blockchain", "collection_id", "token_id_hex"]
-        recomputed = token_state_from_silver(self.read("token_transfers", blockchains, buckets))
-        meta_cols = ["specification", "metadata_url", "metadata_url_version_hex", "data_version"]
-        meta_src = self.read("tokens", blockchains, buckets).select(*keys, *meta_cols).unionByName(
-            batch_meta.select(*keys, *meta_cols)
-        )
-        # K3 rule (merge.metadata_url_upsert): only rows that CARRY URI data
-        # compete — a NULL ordering key makes max_by skip the row, so a
-        # higher-data_version batch with no URI event can never clobber an
-        # existing metadata_url to NULL.  "Carries
-        # URI data" means EITHER field: the A4 backfill (fetch_token_uris)
-        # sets a URL with no version hex, and such a row must still compete
-        # (with an empty version) rather than be silently dropped.
-        carries_uri = F.col("metadata_url").isNotNull() | F.col("metadata_url_version_hex").isNotNull()
-        meta = meta_src.groupBy(*keys).agg(
-            F.max("specification").alias("specification"),
-            F.max_by(
-                F.struct("metadata_url", "metadata_url_version_hex"),
-                F.when(
-                    carries_uri,
-                    F.struct(
-                        F.col("data_version"),
-                        F.coalesce(F.col("metadata_url_version_hex"), F.lit("")),
-                    ),
-                ),
-            ).alias("_meta"),
-            F.max("data_version").alias("data_version"),
-        )
-        rebuilt = (
-            recomputed.join(meta, keys, "left")
-            .withColumn("metadata_url", F.col("_meta.metadata_url"))
-            .withColumn("metadata_url_version_hex", F.col("_meta.metadata_url_version_hex"))
-            .withColumn(
-                "current_owner",
-                F.when(F.col("specification") == SPEC_ERC721, F.col("_last_recipient")),
-            )
-            .withColumn(
-                "current_owner_version_hex",
-                F.when(F.col("specification") == SPEC_ERC721, F.col("_owner_version_hex")),
-            )
-            .drop("_meta", "_last_recipient", "_owner_version_hex")
-        )
+        transfers = self.read("token_transfers", blockchains, buckets)
+        rebuilt = token_state_from_silver(transfers, self.read("tokens", blockchains, buckets), batch_meta)
         self.overwrite("tokens", rebuilt, touched_blockchains=blockchains, touched_buckets=buckets)
 
     def apply_silver(

@@ -1,17 +1,22 @@
-"""Capture the executed physical plan of every registry query into one
-artifact, plus a red-flag scan (nested-loop / cartesian / grouped-pandas
-nodes and Exchange counts) — the evidence file behind docs/PLAN_AUDIT.md.
+"""Run every registry query and capture its final executed physical plan
+into one artifact, plus a red-flag scan (nested-loop / cartesian /
+grouped-pandas nodes and Exchange counts) — the evidence file behind
+docs/PLAN_AUDIT.md.  Under AQE the plan is read after the query ran, so it
+is the final adaptive plan (``isFinalPlan=true``) with the runtime
+rewrites (join strategy switches, skew splits, coalesced reads) the scan
+must see.
 
-    PYTHONPATH=/root/repo python scripts/capture_plans.py [--sf DIR] [--out FILE]
+    python scripts/capture_plans.py [--sf DIR] [--out FILE]
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 RED_FLAGS = ("BroadcastNestedLoopJoin", "CartesianProduct", "FlatMapGroupsInPandas")
 
@@ -23,7 +28,12 @@ RED_FLAGS = ("BroadcastNestedLoopJoin", "CartesianProduct", "FlatMapGroupsInPand
 #  - GlobalSort: Exchange rangepartitioning — a full global sort.  Bounded
 #    presentation sorts over grouped output are common and fine; anything
 #    sorting corpus-scale cardinality must be adjudicated or rewritten.
-_SP_WINDOW = re.compile(r"Sort \[[^\]]*\], false, 0\s*\n\s*[+:\- ]*Exchange SinglePartition")
+_SP_WINDOW = re.compile(
+    r"Sort \[[^\]]*\], false, 0\s*\n"
+    # a final adaptive plan puts its query stage and shuffle read in between
+    r"(?:\s*[+:\- ]*(?:ShuffleQueryStage \d+|AQEShuffleRead[^\n]*)\s*\n)*"
+    r"\s*[+:\- ]*Exchange SinglePartition"
+)
 _GLOBAL_SORT = re.compile(r"Exchange rangepartitioning")
 
 
@@ -103,6 +113,15 @@ ADJUDICATED = {
 }
 
 
+def final_plan(df) -> str:
+    """Run ``df``, then return its executed plan.  Under AQE that is the
+    final adaptive plan; its ``== Initial Plan ==`` section, the plan as
+    built before any stage ran, is cut off."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("\n+- == Initial Plan ==")[0]
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -118,7 +137,8 @@ def main() -> int:
     lines = [
         "# Captured executed plans (generated by scripts/capture_plans.py)",
         "",
-        f"Scale dir: {args.sf}.  Summary table first; full plans below.",
+        f"Scale dir: {args.sf}.  Each query ran once; under AQE its plan is the final",
+        "adaptive plan.  Summary table first; full plans below.",
         "",
         "| query | Exchanges | red flags |",
         "|---|---|---|",
@@ -127,7 +147,7 @@ def main() -> int:
     flagged = []
     for name, (fn, _sql) in sorted(all_queries().items()):
         try:
-            plan = fn(spark, args.sf)._jdf.queryExecution().executedPlan().toString()
+            plan = final_plan(fn(spark, args.sf))
         except Exception as e:  # pragma: no cover
             lines.append(f"| {name} | ? | BUILD ERROR: {e} |")
             flagged.append(name)

@@ -538,3 +538,54 @@ def test_rewind_to_mid_history_equals_fresh_load_of_the_prefix(spark, tmp_path):
     for t in ("token_transfers", "tokens", "owners", "crawler_config"):
         assert _rows(rewound, t) == _rows(fresh, t), t
     assert {int(r["token_id_hex"], 16) for r in rewound.read("tokens").collect()} == {7, 8}
+
+
+def test_rebuild_tokens_folds_transfers_and_metadata_in_one_aggregation(spark, tmp_path):
+    """``rebuild_tokens`` folds a bucket's committed transfers and its
+    metadata rows in one group-by.  A URI event for a token that was never
+    transferred adds no token row; an overflowed ``quantity_hex`` leaves
+    that token's ``quantity`` NULL and its bucket neighbours exact; an
+    ERC-1155 token's ``current_owner`` stays NULL."""
+    from block_crawler_spark.schemas import SPEC_ERC721, SPEC_ERC1155
+
+    def qty(event, value_hex):
+        return event[:12] + ("0x" + value_hex.rjust(64, "0"),) + event[13:]
+
+    store = _mk(spark, tmp_path)
+    store.append_transfers(
+        _transfers(
+            spark,
+            [
+                _event(7, 5, "mint", None, _ALICE),
+                qty(_event(8, 6, "mint", None, _ALICE), "f" * 64),  # above Decimal(38,0)
+                qty(_event(9, 7, "mint", None, _BOB), "3"),
+                qty(_event(9, 8, "transfer", _BOB, _ALICE), "3"),
+            ],
+        )
+    )
+
+    def tok(token):
+        return "0x" + f"{token:064x}"
+
+    meta = spark.createDataFrame(
+        [
+            ("chain-a", "0xc", tok(7), SPEC_ERC721, None, None, 1),
+            ("chain-a", "0xc", tok(8), SPEC_ERC1155, None, None, 1),
+            ("chain-a", "0xc", tok(9), SPEC_ERC1155, None, None, 1),
+            ("chain-a", "0xc", tok(9), None, "ipfs://9", f"{8:040x}", 1),
+            ("chain-a", "0xc", tok(10), None, "ipfs://10", f"{8:040x}", 1),  # never transferred
+        ],
+        "blockchain string, collection_id string, token_id_hex string, specification string, "
+        "metadata_url string, metadata_url_version_hex string, data_version long",
+    )
+    store.rebuild_tokens(meta, blockchains=["chain-a"], buckets=store.touched_buckets(meta))
+
+    rows = {int(r["token_id_hex"], 16): r for r in store.read("tokens").collect()}
+    assert sorted(rows) == [7, 8, 9]
+    assert rows[8]["quantity"] is None
+    assert (rows[7]["quantity"], rows[9]["quantity"]) == (1, 3)
+    assert rows[7]["current_owner"] == _ALICE
+    assert rows[8]["current_owner"] is None and rows[9]["current_owner"] is None
+    assert rows[9]["current_owner_version_hex"] is None
+    assert (rows[9]["original_owner"], rows[9]["mint_block"]) == (_BOB, 7)
+    assert (rows[9]["metadata_url"], rows[9]["specification"]) == ("ipfs://9", SPEC_ERC1155)

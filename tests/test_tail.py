@@ -163,6 +163,62 @@ def test_replayed_tail_batch_compiles_no_classes(spark, chain, tmp_path):
     assert stats.get_count("codegen_compiles") == counted
 
 
+def _round_trips(spark, fn):
+    """py4j round trips (commands sent to the JVM) while ``fn`` runs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        del client.send_command  # back to the class's method
+    return len(sent), out
+
+
+def test_steady_tail_batch_reuses_code_and_plans_cheaply(spark, chain, tmp_path):
+    """A batch is planned from expressions built once per process and its
+    decode stages read the cached decodable logs, so a steady batch on a
+    new block range compiles few classes, while the range still reaches
+    the bronze scan's pushed filters; planning a batch takes few py4j
+    round trips (~3.8k when every decode expression was rebuilt).  The
+    first batch fills an empty store, whose pruned reads plan differently,
+    so the steady pair is the second and third batch."""
+    fb, logs, blocks = chain
+    logs.write.parquet(str(tmp_path / "logs"))
+    logs = spark.read.parquet(str(tmp_path / "logs"))
+    store = SilverStore(spark, str(tmp_path / "silver"))
+    stats = StatsService()
+    runner = TailRunner(store, TableChainSource(logs, blocks), blockchain="testnet", trail_blocks=0, stats=stats)
+    nums = sorted(r["number"] for r in blocks.select("number").distinct().collect())
+    cuts = (nums[len(nums) // 3], nums[2 * len(nums) // 3], nums[-1])
+    for cut in cuts:
+        runner.source = TableChainSource(logs, blocks.filter(F.col("number") <= cut))
+        counted = stats.get_count("codegen_compiles")
+        assert runner.run_once() is not None
+    assert stats.get_count("codegen_compiles") - counted <= 8
+
+    def plan(lo, hi):
+        return crawl_plan(
+            spark, TableChainSource(logs, blocks).logs(lo, hi), blocks, blockchain="testnet", data_version=1
+        )
+
+    plan(cuts[0] + 1, cuts[1]).release()  # every fixed expression is built by now
+    n, silver = _round_trips(spark, lambda: plan(cuts[1] + 1, cuts[2]))
+    try:
+        assert n <= 1000, n
+        scan = silver.transfers._jdf.queryExecution().executedPlan().toString()
+        pushed = scan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        assert f"GreaterThanOrEqual(block_number,{cuts[1] + 1})" in pushed, pushed
+        assert f"LessThanOrEqual(block_number,{cuts[2]})" in pushed, pushed
+    finally:
+        silver.release()
+
+
 def test_uri_only_batch_keeps_metadata_url_equal_to_bulk(spark, tmp_path):
     """A URI event in a batch that does not transfer its token still sets
     the token's ``metadata_url``, as the bulk crawl does."""
