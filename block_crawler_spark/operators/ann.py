@@ -13,6 +13,8 @@ invariant to last-bit float differences between engines.
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -31,6 +33,49 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def _nan_div(num: Column, den: Column) -> Column:
+    """``num / den``, NaN where ``den`` is 0 (a zero-norm operand): Spark's
+    ANSI division raises on a zero divisor instead."""
+    return F.when(den == 0, F.lit(float("nan"))).otherwise(num / den)
+
+
+@cache
+def _side(id_col: str, vec_col: str, side: str) -> tuple[Column, Column]:
+    """``id_col``/``vec_col`` renamed to one side of a k-NN pair:
+    ``{side}_id``, ``{side}_vec``."""
+    return F.col(id_col).alias(f"{side}_id"), F.col(vec_col).alias(f"{side}_vec")
+
+
+@cache
+def _top_k_cols(k: int) -> tuple[Column, tuple[tuple[Column, ...], ...], Column]:
+    """:func:`_top_k_pairs`' fixed Columns: the self-pair filter, one tuple
+    per projection level, and the rank filter."""
+    q, c = F.col("q_vec"), F.col("c_vec")
+    ids = (F.col("q_id"), F.col("c_id"))
+    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id").asc())
+    levels = (
+        (*ids, dot(q, c).alias("_dot"), (norm(q) * norm(c)).alias("_den")),
+        (*ids, _nan_div(F.col("_dot"), F.col("_den")).alias("score")),
+        (*ids, F.row_number().over(w).alias("rank")),
+    )
+    return F.col("q_id") != F.col("c_id"), levels, F.col("rank") <= k
+
+
+def _top_k_pairs(pairs: DataFrame, k: int) -> DataFrame:
+    """(q_id, c_id, rank) of each query's ``k`` best candidates in
+    ``pairs`` (q_id, q_vec, c_id, c_vec) by cosine, ties to the lowest
+    c_id; a vector is never its own candidate.  The dot product and the
+    norms' product are projected before the score, so the zero test reads
+    them without recomputing them: a zero-norm vector scores NaN, which
+    ranks first, where ANSI division would raise.  The score's bits equal
+    :func:`cosine`'s."""
+    distinct, levels, in_top = _top_k_cols(k)
+    pairs = pairs.filter(distinct)
+    for level in levels:
+        pairs = pairs.select(*level)
+    return pairs.filter(in_top)
 
 
 def micro_fixed(col: Column, scale: int = 1_000_000) -> Column:
@@ -108,19 +153,9 @@ def knn_join_brute(
     Correct but O(|Q|·|C|) — the baseline the LSH variant is measured
     against; keep |Q| small or switch to ``lsh_topk`` at scale.
     """
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    c = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("score", cosine(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank")
-    )
+    q = queries.select(*_side(id_col, vec_col, "q"))
+    c = corpus.select(*_side(id_col, vec_col, "c"))
+    return _top_k_pairs(q.crossJoin(c), k)
 
 
 def lsh_sign_buckets(
@@ -172,36 +207,43 @@ def lsh_topk(
     """Approximate k-NN join via sign-LSH buckets: equi-join on bucket id,
     then per-query top-k.  Trades recall for replacing the cross join with
     a shuffle join — the 100 TB path."""
-    qb = lsh_sign_buckets(queries, num_planes, id_col, vec_col).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), "bucket"
-    )
-    cb = lsh_sign_buckets(corpus, num_planes, id_col, vec_col).select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"), "bucket"
-    )
-    scored = (
-        qb.join(cb, "bucket")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("score", cosine(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank")
-    )
+    qb = lsh_sign_buckets(queries, num_planes, id_col, vec_col).select(*_side(id_col, vec_col, "q"), "bucket")
+    cb = lsh_sign_buckets(corpus, num_planes, id_col, vec_col).select(*_side(id_col, vec_col, "c"), "bucket")
+    return _top_k_pairs(qb.join(cb, "bucket"), k)
 
 
-def _packed_array(df: DataFrame, key_col: str, val_col: str, out: str = "_cs") -> DataFrame:
-    """The BOUNDED ``df`` packed into ONE row holding a (key, val) struct
-    array sorted by key — the broadcastable literal form of a centroid /
-    codeword table.  Joining this 1-row frame with ``crossJoin`` keeps
-    argmin/arg-top-n fully map-side: no per-candidate row explosion, no
-    groupBy/window exchange downstream (r14 optimization — guide §2.4
-    "remove shuffles outright").  Only ever used for tables bounded by
-    construction (≤ K centroids / M·K codewords)."""
-    return df.agg(
-        F.array_sort(F.collect_list(F.struct(F.col(key_col), F.col(val_col)))).alias(out)
+@cache
+def _ivf_assign_cols(
+    id_col: str, vec_col: str, n_assign: int
+) -> tuple[tuple[Column, Column], Column, Column, Column, Column]:
+    """:func:`ivf_assign`'s fixed Columns: the kept id and vector, the
+    centroid packing and its non-empty filter, the vector-norm projection
+    and the top-``n_assign`` pick."""
+    vec = F.col(vec_col)
+    pack = F.collect_list(
+        F.struct(F.col(id_col).alias("centroid_id"), vec.alias("c_vec"), norm(vec).alias("c_norm"))
+    ).alias("_cs")
+    sims = F.transform(
+        F.col("_cs"),
+        lambda c: F.struct(
+            _nan_div(dot(vec, c["c_vec"]), F.col("_vn") * c["c_norm"]).alias("sim"),
+            c["centroid_id"].alias("centroid_id"),
+        ),
     )
+    # Ascending key order is NaN first, then sim descending, then the
+    # lowest centroid id: a total order, compared field by field.
+    keys = F.transform(
+        sims,
+        lambda s: F.struct(
+            (~F.isnan(s["sim"])).alias("k0"), (-s["sim"]).alias("k1"), s["centroid_id"].alias("centroid_id")
+        ),
+    )
+    picked = F.array(F.array_min(keys)) if n_assign == 1 else F.slice(F.sort_array(keys), 1, n_assign)
+    # explode even the single pick: the optimizer pushes no filter on its
+    # output below a Generate, so a filter on centroid_id (the isnotnull a
+    # join infers) cannot copy the scoring into the cross join's condition
+    top = F.explode(picked["centroid_id"]).alias("centroid_id")
+    return (F.col(id_col), vec), pack, F.size("_cs") > 0, norm(vec).alias("_vn"), top
 
 
 def ivf_assign(
@@ -211,50 +253,27 @@ def ivf_assign(
     vec_col: str = "embedding",
     n_assign: int = 1,
 ) -> DataFrame:
-    """IVF coarse quantization: each vector → its ``n_assign`` nearest
-    centroids' ids (1 for corpus indexing; nprobe for query-side multiprobe).
+    """IVF coarse quantization: each vector with the ids of its
+    ``n_assign`` most cosine-similar centroids, one row per (vector,
+    centroid): 1 for corpus indexing, nprobe for query-side multiprobe.
 
-    ``centroids`` is a small (centroid_id, vector) table, packed into a
-    1-row sorted struct array and broadcast; each vector scores every
-    centroid JVM-side inside ONE projection (``transform`` + comparator
-    ``array_sort`` + ``slice``), then explodes only its ``n_assign``
-    survivors.  r14 optimization (guide §2.4): the previous shape shuffled
-    the N×K scored cross frame through a per-vector window
-    (Exchange + Sort); arg-top-n is now entirely map-side — the same
-    ordering (sim desc, centroid_id asc; Spark's NaN-greatest total order
-    on doubles matches the window sort) so results are bit-identical.  At
-    scale the centroid table comes from sampled k-means; here any
-    deterministic seed set works (see ``plans.embed_ops`` which seeds with
-    the first k corpus vectors).
+    The small ``centroids`` table is packed, each centroid with its norm,
+    into one broadcast row, so the assignment is map-side (no shuffle).
+    Each vector's norm is projected once; one ``transform`` then scores
+    every centroid with the operands and operation order of
+    :func:`cosine`, so the sims are bit-identical to it and no near-tie
+    can flip.  A zero norm or a NaN component scores NaN.  The pick sorts
+    the key struct (not isnan(sim), -sim, centroid_id) with Spark's
+    built-in ordering (``array_min`` for one, ``sort_array`` + ``slice``
+    for more): NaN first, then sim descending, then the lowest centroid
+    id, the order ``ORDER BY sim DESC, centroid_id`` gives, since Spark
+    ranks NaN above every double.  No centroids means no rows.  At scale
+    the centroids come from sampled k-means (:func:`kmeans_lloyd_fixed`);
+    ``plans.embed_ops`` seeds with the first k corpus vectors.
     """
-    c = centroids.select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("c_vec"))
-    carr = _packed_array(c, "centroid_id", "c_vec")
-    scored = F.transform(
-        F.col("_cs"),
-        lambda e: F.struct(
-            cosine(F.col(vec_col), e["c_vec"]).alias("sim"), e["centroid_id"].alias("centroid_id")
-        ),
-    )
-    # NaN (zero-norm vector or centroid) ranks FIRST, mirroring the old
-    # window sort (Spark treats NaN as greatest, so sim DESC put it first);
-    # without the explicit branches both a<b and a>b are false for NaN and
-    # the comparator would fall through to centroid_id — an inconsistent
-    # (implementation-defined) ordering (ADVICE r14).
-    by_sim_desc = lambda a, b: (
-        F.when(F.isnan(a["sim"]) & ~F.isnan(b["sim"]), F.lit(-1))
-        .when(~F.isnan(a["sim"]) & F.isnan(b["sim"]), F.lit(1))
-        .when(a["sim"] > b["sim"], F.lit(-1))
-        .when(a["sim"] < b["sim"], F.lit(1))
-        .when(a["centroid_id"] < b["centroid_id"], F.lit(-1))
-        .when(a["centroid_id"] > b["centroid_id"], F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    top = F.slice(F.array_sort(scored, by_sim_desc), 1, n_assign)
-    return (
-        vectors.crossJoin(F.broadcast(carr))
-        .select(F.col(id_col), F.col(vec_col), F.explode(top).alias("_t"))
-        .select(F.col(id_col), F.col(vec_col), F.col("_t.centroid_id").alias("centroid_id"))
-    )
+    keep, pack, nonempty, vnorm, top = _ivf_assign_cols(id_col, vec_col, n_assign)
+    carr = F.broadcast(centroids.agg(pack).filter(nonempty))
+    return vectors.crossJoin(carr).select(*keep, vnorm, "_cs").select(*keep, top)
 
 
 def ivf_topk(
@@ -266,32 +285,21 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF search: score the query's ``nprobe`` nearest centroid cells.
+    """IVF search: each query's top ``k`` corpus neighbours by cosine
+    (ties to the lowest id), scored only in the query's ``nprobe`` most
+    similar centroid cells.
 
-    Corpus vectors index into exactly one cell; each query probes its top-
-    ``nprobe`` cells (VERDICT r1: nprobe=1 recall 0.35–0.46 was too low to
-    advertise — multiprobe recovers boundary neighbors at ``nprobe/n_cells``
-    of brute cost).  Candidate generation stays a bucket equi-join on
-    centroid_id — cells are disjoint for the corpus, so probing several
-    produces no duplicate candidates and needs no dedup.
+    Each corpus vector indexes into exactly one cell, so candidate
+    generation is an equi-join on centroid_id, and probing several cells
+    yields no duplicate candidates.  Multiprobe recovers the neighbours
+    just across a cell boundary at ``nprobe / n_cells`` of the brute-force
+    cost; with one probe recall was 0.35–0.46.
     """
-    qa = ivf_assign(queries, centroids, id_col, vec_col, n_assign=nprobe).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), "centroid_id"
-    )
-    ca = ivf_assign(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"), "centroid_id"
-    )
-    scored = (
-        qa.join(ca, "centroid_id")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("score", cosine(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank")
-    )
+    qa = ivf_assign(queries, centroids, id_col, vec_col, n_assign=nprobe)
+    ca = ivf_assign(corpus, centroids, id_col, vec_col)
+    q = qa.select(*_side(id_col, vec_col, "q"), "centroid_id")
+    c = ca.select(*_side(id_col, vec_col, "c"), "centroid_id")
+    return _top_k_pairs(q.join(c, "centroid_id"), k)
 
 
 def kmeans_lloyd_fixed(
@@ -387,8 +395,8 @@ def _cent_scores(cents: DataFrame):
     shared map-side scoring core of :func:`centroid_assign` /
     :func:`centroid_assign_top2`: every (dist, cid) struct for the current
     row's ``v`` computed inside one projection against the broadcast
-    ≤K-element array."""
-    carr = _packed_array(cents, "cid", "c")
+    ≤K-element array (the bounded centroid table packed into one row)."""
+    carr = cents.agg(F.array_sort(F.collect_list(F.struct("cid", "c"))).alias("_cs"))
     scored = F.transform(
         F.col("_cs"),
         lambda e: F.struct(int_sqdist(F.col("v"), e["c"]).alias("dist"), e["cid"].alias("cid")),

@@ -61,7 +61,7 @@ _FRONT = (
     #    must sit in the driver's 50-sample prefix, ADVICE r6 rule):
     #    PQ hybrid shapes (pq.py: r13 join shapes for encode/flat-ADC/IVFPQ,
     #    r14 map-side kept for the residual pair; callers moved to
-    #    pq_encode), ann.ivf_assign NaN-explicit comparator (all IVF
+    #    pq_encode), ann.ivf_assign's NaN-first cell order (all IVF
     #    consumers), fold group keys hash-prefixed (folds.py), the
     #    family-overlap mask-histogram restructure, and the modality
     #    matrix's dropped per-family distincts --

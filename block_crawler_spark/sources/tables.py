@@ -9,13 +9,22 @@ sizable table is rewritten once into multi-partition parquet under
 scan parallelizes across the cluster.  This is the same compaction any
 100 TB deployment runs on small-file/misrowgrouped bronze; pruning and
 pushdown still apply to the compacted copy.
+
+Every read is schema-bound: the schema Spark infers for a path is memoised
+per process, keyed by the stat of the file that marks its state (the raw
+file itself, or a compacted copy's ``_SUCCESS``), so building a query over
+unchanged tables starts no schema-inference job.  The files are still
+listed on every load, and a rewritten file has a new stat, so a changed
+table is read under its new schema.
 """
 
 from __future__ import annotations
 
 import os
+from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -64,15 +73,35 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+@cache
+def _inferred_schema(spark: SparkSession, path: str, stamp: tuple[int, int, int]) -> StructType:
+    """The schema Spark infers for ``path`` (one Spark job), memoised for
+    the file state ``stamp`` (inode, mtime in ns, size)."""
+    return spark.read.parquet(path).schema
+
+
+def _read(spark: SparkSession, path: str, marker: str) -> DataFrame:
+    """``path`` read under the schema inferred while ``marker`` had its
+    current stat."""
+    try:
+        st = os.stat(marker)
+    except OSError:
+        return spark.read.parquet(path)  # Spark's error names the missing path
+    schema = _inferred_schema(spark, path, (st.st_ino, st.st_mtime_ns, st.st_size))
+    return spark.read.schema(schema).parquet(path)
+
+
 def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # Tolerate TIMESTAMP(NANOS) encodings: the conf makes Spark read a
         # nanos column as bigint instead of refusing the file outright; it is
         # a no-op for micros/millis encodings.  The dtype check below decides
-        # whether any conversion is actually needed.
+        # whether any conversion is actually needed.  Set before every read:
+        # it governs the scan as well as the inference.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return _normalize_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return _normalize_events_ts(_read(spark, path, path))
+    return _read(spark, path, path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -94,7 +123,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _read_raw(spark, sf_dir, name).repartition(_COMPACT_PARTITIONS).write.mode(
             "overwrite"
         ).parquet(cache_dir)
-    return spark.read.parquet(cache_dir)
+    return _read(spark, cache_dir, success)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -53,7 +53,7 @@ from __future__ import annotations
 import os
 import shutil
 from collections.abc import Sequence
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import cache
 from urllib.parse import unquote
 
@@ -122,6 +122,9 @@ class SilverStore:
     spark: SparkSession
     root: str
     n_buckets: int = 16
+    # blockchain -> (crawler_config pointer stamp, config) of this store's
+    # last set_config; see get_config
+    _configs: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -448,8 +451,23 @@ class SilverStore:
             self.set_config(blockchain, dv, to_block)
 
     # -- control table (K12) -----------------------------------------------
+    def _config_stamp(self) -> tuple[str | None, int] | None:
+        """The ``crawler_config`` version ``_CURRENT`` names and the
+        pointer's mtime.  Every commit replaces the pointer file, so a
+        commit by any store on this root changes the stamp."""
+        try:
+            mtime = os.stat(os.path.join(self._path("crawler_config"), "_CURRENT")).st_mtime_ns
+        except OSError:
+            return None
+        return self._current_version("crawler_config"), mtime
+
     def get_config(self, blockchain: str) -> tuple[int, int | None]:
-        """(data_version, last_block_id) — data_version starts at 1."""
+        """(data_version, last_block_id) — data_version starts at 1.  The
+        row this store committed last is returned without a Spark job while
+        ``_CURRENT`` still names the version that commit made."""
+        known = self._configs.get(blockchain)
+        if known is not None and known[0] == self._config_stamp():
+            return known[1]
         rows = self.read("crawler_config", blockchains=[blockchain]).collect()
         if not rows:
             return 1, None
@@ -459,6 +477,8 @@ class SilverStore:
         updates = self._frame("crawler_config", (blockchain, data_version, last_block_id))
         # the other blockchains' config partitions hard-link unchanged
         self.overwrite("crawler_config", updates, touched_blockchains=[blockchain])
+        last = int(last_block_id) if last_block_id is not None else None
+        self._configs[blockchain] = (self._config_stamp(), (int(data_version), last))
 
     def increment_data_version(self, blockchain: str) -> int:
         """Atomic-enough for a single-writer driver: the reference's

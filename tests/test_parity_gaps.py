@@ -3,6 +3,8 @@ T13 force-load, J1 collection reconciliation, S9 block-time cache, IVF."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,6 +176,79 @@ def test_ivf_recall_vs_brute(spark):
         by_q.setdefault(r["q_id"], []).append(r["rank"])
     for ranks in by_q.values():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
+
+
+def _cells(assigned) -> dict[int, set[int]]:
+    out: dict[int, set[int]] = {}
+    for r in assigned.collect():
+        out.setdefault(r["vec_id"], set()).add(r["centroid_id"])
+    return out
+
+
+@pytest.mark.parametrize("n_assign", [1, 3])
+def test_ivf_assign_ranks_nan_sims_first(spark, n_assign):
+    """A zero-norm vector or centroid, or a NaN component, scores NaN
+    instead of raising under ANSI division, and NaN ranks first: a NaN
+    vector's cells are its lowest centroid ids, and a zero centroid comes
+    before every real match.  No centroids means no rows."""
+    vec = "vec_id long, embedding array<double>"
+    centroids = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [1.0, 1.0, 0.0])], vec
+    )
+    vectors = spark.createDataFrame(
+        [(10, [0.0, 0.0, 0.0]), (11, [1.0, 0.1, 0.0]), (12, [float("nan"), 1.0, 0.0])], vec
+    )
+    # by (NaN first, sim desc, id): vector 11 orders centroids 1 (NaN), 0, 3, 2
+    order = {10: [0, 1, 2, 3], 11: [1, 0, 3, 2], 12: [0, 1, 2, 3]}
+    got = _cells(ivf_assign(vectors, centroids, n_assign=n_assign))
+    assert got == {v: set(ids[:n_assign]) for v, ids in order.items()}
+    assert ivf_assign(vectors, centroids.limit(0), n_assign=n_assign).count() == 0
+
+
+def test_ivf_assign_breaks_equal_cosines_to_the_lowest_centroid_id(spark):
+    """Centroids at exactly equal cosine to a vector are taken lowest id
+    first, so the cells match ``row_number() OVER (PARTITION BY vec_id
+    ORDER BY sim DESC, centroid_id)`` over the same cosines."""
+    from pyspark.sql import Window
+
+    from block_crawler_spark.operators.ann import cosine
+
+    vec = "vec_id long, embedding array<double>"
+    # to [0, 1, 1], centroids 2, 5 and 7 score 1/sqrt(2) bit for bit; to
+    # [1, 0, 0], centroids 2, 5, 6 and 7 score 0
+    centroids = spark.createDataFrame(
+        [(5, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0]), (7, [0.0, 2.0, 0.0]), (8, [1.0, 0.0, 0.0]), (6, [0.0, -1.0, 0.0])],
+        vec,
+    )
+    vectors = spark.createDataFrame([(20, [0.0, 1.0, 1.0]), (21, [1.0, 0.0, 0.0])], vec)
+    c = centroids.select(F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_vec"))
+    sims = vectors.crossJoin(c).select("vec_id", "centroid_id", cosine(F.col("embedding"), F.col("c_vec")).alias("sim"))
+    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
+    ranked = sims.withColumn("rn", F.row_number().over(w))
+    tied = ranked.filter(F.col("vec_id") == 20).filter(F.col("centroid_id").isin(2, 5, 7))
+    assert tied.select("sim").distinct().count() == 1
+    assert _cells(ivf_assign(vectors, centroids)) == {20: {2}, 21: {8}}
+    reference = _cells(ranked.filter(F.col("rn") <= 3))
+    assert reference == {20: {2, 5, 7}, 21: {8, 2, 5}}
+    assert _cells(ivf_assign(vectors, centroids, n_assign=3)) == reference
+
+
+def test_ivf_query_rebuild_makes_few_py4j_round_trips(spark, tmp_path):
+    """``ivf_topk`` and ``ivf_assign`` take their fixed Columns from cached
+    builders and the table load binds a memoised schema, so rebuilding the
+    ``emb_ivf_topk`` query makes ~0.2k py4j round trips (~1.1k when every
+    build rebuilt its expressions and inferred the schema)."""
+    from test_tail import _round_trips
+
+    from block_crawler_spark.operators.ann import clustered_embeddings
+    from block_crawler_spark.plans.embed_ops import ivf_topk_query
+
+    sf_dir = str(tmp_path)
+    clustered_embeddings(spark, n=200, dim=8).write.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    ivf_topk_query(spark, sf_dir)  # builds the cached Columns and the schema memo
+    n, df = _round_trips(spark, lambda: ivf_topk_query(spark, sf_dir))
+    assert n <= 400
+    assert df.columns == ["q_id", "c_id", "rank"]
 
 
 def test_fetch_token_uris_null_mint_block_falls_back_to_latest(spark):

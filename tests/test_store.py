@@ -450,6 +450,24 @@ def test_fresh_store_config_and_reads_start_no_spark_job(spark, tmp_path):
     assert store.get_config("chain-a") == (2, 5)
 
 
+def test_get_config_after_set_config_starts_no_job_and_sees_other_writers(spark, tmp_path):
+    """``get_config`` returns the row this store committed last without a
+    Spark job while ``_CURRENT`` names that commit's version; once another
+    store on the same root commits, it reads the new row."""
+    store = _mk(spark, tmp_path)
+    store.set_config("chain-a", 3, 40)
+    got = []
+    assert _jobs_in_group(spark, "config-memo", lambda: got.append(store.get_config("chain-a"))) == []
+    assert got == [(3, 40)]
+
+    other = _mk(spark, tmp_path)
+    other.set_config("chain-a", 4, 60)
+    assert store.get_config("chain-a") == (4, 60)
+    other.set_config("chain-b", 1, None)  # hard-links chain-a's partition
+    assert other.get_config("chain-a") == (4, 60)
+    assert store.get_config("chain-b") == (1, None)
+
+
 _ALICE, _BOB = "0x" + "a" * 40, "0x" + "b" * 40
 
 
