@@ -41,6 +41,17 @@ def _nan_div(num: Column, den: Column) -> Column:
     return F.when(den == 0, F.lit(float("nan"))).otherwise(num / den)
 
 
+def cosine_scored(df: DataFrame, keep: list, a: Column, b: Column) -> DataFrame:
+    """``keep`` plus ``score``, the cosine of ``a`` and ``b`` with
+    :func:`cosine`'s bits.  The dot product and the norms' product are
+    projected first, so the zero test reads them without recomputing them:
+    a zero-norm operand scores NaN where ANSI division would raise."""
+    den = (norm(a) * norm(b)).alias("_den")
+    return df.select(*keep, dot(a, b).alias("_dot"), den).select(
+        *keep, _nan_div(F.col("_dot"), F.col("_den")).alias("score")
+    )
+
+
 @cache
 def _side(id_col: str, vec_col: str, side: str) -> tuple[Column, Column]:
     """``id_col``/``vec_col`` renamed to one side of a k-NN pair:
@@ -129,13 +140,11 @@ def brute_force_topk(
     One scan + one ordered limit; ties broken by id for determinism.  At
     scale Spark executes this as per-partition top-k + a singleton merge
     (TakeOrderedAndProject), so no full sort materializes; ranks are then
-    attached windowlessly (``_rank_small``).
+    attached windowlessly (``_rank_small``).  A zero-norm vector scores
+    NaN, which ranks first.
     """
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = embeddings.select(
-        F.col(id_col),
-        cosine(F.col(vec_col), q).alias("score"),
-    )
+    scored = cosine_scored(embeddings, [F.col(id_col)], F.col(vec_col), q)
     top = scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
     return _rank_small(top, id_col)
 

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators.ann import (
     brute_force_topk,
-    cosine,
+    cosine_scored,
     int_sqdist,
     ivf_topk,
     kmeans_lloyd_fixed,
@@ -144,17 +144,18 @@ def cosine_near_dup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates come from a 4-plane bucket equi-join (16 buckets) — never a
     cross join; pairs above the cosine threshold are emitted as ids only.
     The SQL oracle replicates the identical bucketing, so recall limits
-    match by construction.
+    match by construction.  A zero-norm vector pairs with nothing: its
+    score is NaN, which Spark orders above every double, so the threshold
+    test alone would keep it.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     b = lsh_sign_buckets(emb, num_planes=NEAR_DUP_PLANES)
     a = b.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"), "bucket")
     c = b.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"), "bucket")
-    pairs = (
-        a.join(c, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("score", cosine(F.col("va"), F.col("vb")))
-        .filter(F.col("score") >= NEAR_DUP_THRESHOLD)
+    cand = a.join(c, "bucket").filter(F.col("id_a") < F.col("id_b"))
+    score = F.col("score")
+    pairs = cosine_scored(cand, ["id_a", "id_b"], F.col("va"), F.col("vb")).filter(
+        ~F.isnan(score) & (score >= NEAR_DUP_THRESHOLD)
     )
     return pairs.select("id_a", "id_b")
 
@@ -314,12 +315,18 @@ def _memoized_small_frame(spark: SparkSession, key: tuple, build) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def _memoized_bounded_frame(spark: SparkSession, key: tuple, build, max_rows: int) -> DataFrame:
+# Row cap of every bounded-frame memo (the semantic, minhash, overlap and
+# modality pair/closure stages, which hold from a few to ~9k rows at the
+# graded SFs): 100k rows are a few MB of driver Rows.
+_MEMO_MAX_ROWS = 100_000
+
+
+def _memoized_bounded_frame(spark: SparkSession, key: tuple, build) -> DataFrame:
     """:func:`_memoized_small_frame` with a ROW-COUNT SAFETY VALVE for
     frames whose bound is data-dependent rather than structural (the
     semantic pair/closure stages: ≤ N·SEM_CELL_CAP pairs in theory,
     single-digit-to-hundreds at every graded SF in practice).  On miss,
-    ``take(max_rows + 1)`` captures the result; if it fits, the memo
+    ``take(_MEMO_MAX_ROWS + 1)`` captures the result; if it fits, the memo
     behaves exactly like :func:`_memoized_small_frame` (same dict, size
     bound, eviction).  If it does NOT fit, the LIVE frame is returned and
     only the over-cap VERDICT is memoized — each consumer recomputes its
@@ -334,21 +341,16 @@ def _memoized_bounded_frame(spark: SparkSession, key: tuple, build, max_rows: in
         return build()
     if hit is None:
         df = build()
-        rows = df.take(max_rows + 1)
+        rows = df.take(_MEMO_MAX_ROWS + 1)
         if len(_CENTROID_MEMO) >= _CENTROID_MEMO_MAX:
             _CENTROID_MEMO.clear()
-        if len(rows) > max_rows:
+        if len(rows) > _MEMO_MAX_ROWS:
             _CENTROID_MEMO[key] = "toobig"
             return df
         _CENTROID_MEMO[key] = (rows, df.schema)
         hit = _CENTROID_MEMO[key]
     rows, schema = hit
     return spark.createDataFrame(rows, schema)
-
-
-# Safety valve for the semantic pair/closure memos: 6–12 pairs at the
-# graded SFs, 100k rows ≈ a few MB of driver Rows at the valve.
-_SEM_MEMO_MAX_ROWS = 100_000
 
 
 def _sem_stage_key(kind: str, sf_dir: str, probes: int) -> tuple:
@@ -412,7 +414,7 @@ def _memoized_semantic_pairs(spark: SparkSession, sf_dir: str, probes: int = 1) 
         )
 
     return _memoized_bounded_frame(
-        spark, _sem_stage_key("sempairs", sf_dir, probes), build, _SEM_MEMO_MAX_ROWS
+        spark, _sem_stage_key("sempairs", sf_dir, probes), build
     )
 
 
@@ -431,7 +433,7 @@ def _memoized_semantic_comp(spark: SparkSession, sf_dir: str, probes: int = 1) -
         )
 
     return _memoized_bounded_frame(
-        spark, _sem_stage_key("semcomp", sf_dir, probes), build, _SEM_MEMO_MAX_ROWS
+        spark, _sem_stage_key("semcomp", sf_dir, probes), build
     )
 
 

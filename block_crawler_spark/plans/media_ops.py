@@ -1246,11 +1246,6 @@ QUERIES["media_video_dhash_pairs"] = (media_video_dhash_query, _media_video_dhas
 
 _MODALITY_FAMILIES = ("exact", "phash", "image", "audio", "video")
 
-# Valve for the modality pair-frame memos — same bound and rationale as
-# text_ops._OVERLAP_MEMO_MAX_ROWS (each media family pairs 100–300 rows at
-# sf0.1; past the valve the live plan is returned, verdict cached).
-_MODALITY_MEMO_MAX_ROWS = 100_000
-
 
 def _memoized_modality_pairs(spark: SparkSession, sf_dir: str, fam: str, build, knobs: tuple) -> DataFrame:
     """Session memo for ONE media family's (id_a, id_b) pair set (round 14
@@ -1265,7 +1260,7 @@ def _memoized_modality_pairs(spark: SparkSession, sf_dir: str, fam: str, build, 
     from .embed_ops import _emb_fingerprint, _memoized_bounded_frame
 
     key = ("modpairs", fam, sf_dir, _emb_fingerprint(sf_dir, table="documents")) + knobs
-    return _memoized_bounded_frame(spark, key, build, _MODALITY_MEMO_MAX_ROWS)
+    return _memoized_bounded_frame(spark, key, build)
 
 
 def media_modality_overlap_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -225,12 +225,6 @@ def minhash_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Valve for the minhash pair/closure memos — same bound and rationale as the
-# semantic stages' _SEM_MEMO_MAX_ROWS (256 pairs at sf0.1; past the valve
-# the live plan is returned and the over-cap verdict is cached).
-_MINHASH_MEMO_MAX_ROWS = 100_000
-
-
 def _memoized_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized THRESHOLDED MinHash pair stage (round 14, the
     semantic family's r13 pattern applied to the minhash closure family):
@@ -256,9 +250,7 @@ def _memoized_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         BAND_SIZE,
         JACCARD_PPM_THRESHOLD,
     )
-    return _memoized_bounded_frame(
-        spark, key, lambda: minhash_pairs_query(spark, sf_dir), _MINHASH_MEMO_MAX_ROWS
-    )
+    return _memoized_bounded_frame(spark, key, lambda: minhash_pairs_query(spark, sf_dir))
 
 
 def _memoized_minhash_comp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,7 +276,6 @@ def _memoized_minhash_comp(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: dedup_components(
             _memoized_minhash_pairs(spark, sf_dir).select("id_a", "id_b")
         ),
-        _MINHASH_MEMO_MAX_ROWS,
     )
 
 
@@ -3717,14 +3708,11 @@ CHARNGRAM_OVERLAP_PPM = 900_000
 # family).
 _OVERLAP_FAMILIES = ("charngram", "containment", "minhash", "simhash", "winnow")
 
-# Valve for the overlap pair-frame memos — same bound and rationale as the
-# semantic stages' _SEM_MEMO_MAX_ROWS.  Measured at sf0.1: charngram 255 /
-# containment 256 / minhash 256 / winnow 8 736 pairs memoize; simhash
-# (1 079 805 — the distributional-similarity fire-hose the r12 matrix
-# documented) exceeds the valve and correctly stays a LIVE re-executed
-# plan (the over-cap verdict is cached, so later invocations skip the
-# probe).
-_OVERLAP_MEMO_MAX_ROWS = 100_000
+# The overlap pair frames ride embed_ops._MEMO_MAX_ROWS.  Measured at
+# sf0.1: charngram 255 / containment 256 / minhash 256 / winnow 8 736
+# pairs memoize; simhash (1 079 805 pairs) exceeds the cap and stays a
+# live re-executed plan (the over-cap verdict is cached, so later
+# invocations skip the probe).
 
 
 def _overlap_pair_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -3776,12 +3764,7 @@ def _overlap_pair_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFram
         ),
     }
     return {
-        fam: _memoized_bounded_frame(
-            spark,
-            ("ovlpairs", fam, sf_dir, fp) + knobs,
-            build,
-            _OVERLAP_MEMO_MAX_ROWS,
-        )
+        fam: _memoized_bounded_frame(spark, ("ovlpairs", fam, sf_dir, fp) + knobs, build)
         for fam, (build, knobs) in builds.items()
     }
 

@@ -102,14 +102,6 @@ ADJUDICATED = {
     ("dedup_stream_semantic_admission_sim", _BNLJ): "top-2 (batch) + top-1 (admitted) assignment: both splits × the broadcast derived-K (≤SEM_K_MAX=4096-row) admitted-trained centroid table (dedup_semantic_cells_mp2's class; candidates themselves are cid equi-joins)",
     ("emb_ivf_recall_audit", _BNLJ): "the brute TRUTH side: bounded 8-query sample × corpus — the exact search a recall audit pays on its query sample by construction (plus the IVF side's 64-row centroid broadcast)",
     ("emb_bitsign_knn_join", _BNLJ): "8-row broadcast query-code sample × the 16 B/vector codes scan — stage 1 of the batched two-stage sign search (floats touched only for the ≤|Q|·L rerank rows)",
-    # map-side ADC: the PQ searches crossJoin the
-    # 1-ROW packed codebook (M·K codewords folded into one struct-array
-    # row) and the ≤|Q|-row LUT frame — both bounded by construction;
-    # the only exchange left in the search path is the top-k window
-    ("emb_pq_topk", _BNLJ): "1-row packed-codebook broadcast (map-side encode/ADC) + ≤|Q|-row LUT broadcast — the emb_ivfpq_topk class without the centroid stage",
-    ("emb_pq_trained_topk", _BNLJ): "1-row packed trained-codebook broadcast + ≤|Q|-row LUT broadcast (emb_pq_topk's class; codebook driver-materialized ≤M·K rows)",
-    ("emb_pq_balanced_topk", _BNLJ): "1-row packed codebook broadcast over the permuted corpus + ≤|Q|-row LUT broadcast (emb_pq_topk's class; permutation is a projection)",
-    ("emb_pq_rerank_topk", _BNLJ): "stage-1 ADC shortlist: 1-row packed trained-codebook + ≤|Q|-row LUT broadcasts; stage-2 rerank joins are ≤|Q|·L-row equi-joins (emb_pq_topk's class)",
 }
 
 

@@ -233,6 +233,29 @@ def test_ivf_assign_breaks_equal_cosines_to_the_lowest_centroid_id(spark):
     assert _cells(ivf_assign(vectors, centroids, n_assign=3)) == reference
 
 
+def test_zero_norm_vector_tops_cosine_topk_and_pairs_with_nothing(spark, tmp_path):
+    """A zero-norm vector scores NaN instead of raising under ANSI
+    division: the brute-force top-k ranks it first (Spark orders NaN above
+    every double), and the near-dup query, whose threshold test NaN would
+    pass, emits no pair for it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from block_crawler_spark.operators.ann import brute_force_topk
+    from block_crawler_spark.plans.embed_ops import cosine_near_dup_query
+
+    vecs = [[0.0, 0.0], [0.0, 0.0], [1.0, 2.0], [1.0, 2.0], [2.0, 1.0]]
+    table = pa.table(
+        {"vec_id": pa.array(range(len(vecs)), pa.int64()), "embedding": pa.array(vecs, pa.list_(pa.float32()))}
+    )
+    pq.write_table(table, str(tmp_path / "embeddings.parquet"))
+    emb = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<float>")
+    ranks = {r["vec_id"]: r["rank"] for r in brute_force_topk(emb, [1.0, 2.0], k=3).collect()}
+    assert ranks == {0: 1, 1: 2, 2: 3}
+    pairs = {(r["id_a"], r["id_b"]) for r in cosine_near_dup_query(spark, str(tmp_path)).collect()}
+    assert (2, 3) in pairs and not any({0, 1} & set(p) for p in pairs)
+
+
 def test_ivf_query_rebuild_makes_few_py4j_round_trips(spark, tmp_path):
     """``ivf_topk`` and ``ivf_assign`` take their fixed Columns from cached
     builders and the table load binds a memoised schema, so rebuilding the

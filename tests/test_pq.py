@@ -230,3 +230,14 @@ def test_trained_residual_codebook_refines_and_leaks_nothing(spark):
     t_pairs = {(r["q_id"], r["c_id"], r["adc_dist"]) for r in trained}
     s_pairs = {(r["q_id"], r["c_id"], r["adc_dist"]) for r in seeded}
     assert t_pairs != s_pairs, "trained codebook must change distances/candidates"
+
+
+def test_adc_raises_when_a_code_has_no_lut_entry(pq_parts):
+    """Codes encoded with the full codebook, searched with one subspace-0
+    codeword gone: the (m, code) join would drop that term and rank the
+    pair on a partial sum, so the search raises instead."""
+    emb, cb, codes = pq_parts
+    queries = emb.filter(F.col("vec_id") < 8)
+    short_cb = cb.filter(~((F.col("m") == 0) & (F.col("code") == 0)))
+    with pytest.raises(Exception, match="subspace terms"):
+        pq_adc_topk(queries, codes, short_cb, M, SUB, k=5).collect()

@@ -469,14 +469,14 @@ def test_semantic_stage_memo_hit_is_result_identical(spark):
     assert cold == warm
     assert cold["cells_mp2"], "the mp2 pair stage must find pairs at sf0.001"
 
-    # the safety valve: past max_rows no ROWS are memoized — the LIVE
+    # the safety valve: past the row cap no ROWS are memoized — the LIVE
     # frame comes back with the same values — and the over-cap VERDICT is
     # cached so later calls skip the take probe (r13 review: the first
     # valve paid the probe's extra stage execution on every call)
     for k in [k for k in _CENTROID_MEMO if k[0] in ("sempairs", "semcomp")]:
         del _CENTROID_MEMO[k]
-    orig = embed_ops._SEM_MEMO_MAX_ROWS
-    embed_ops._SEM_MEMO_MAX_ROWS = 1
+    orig = embed_ops._MEMO_MAX_ROWS
+    embed_ops._MEMO_MAX_ROWS = 1
     try:
         live = snap(semantic_cells_mp_query(spark, SF0))
         assert live == cold["cells_mp2"]
@@ -485,7 +485,7 @@ def test_semantic_stage_memo_hit_is_result_identical(spark):
         live2 = snap(semantic_cells_mp_query(spark, SF0))
         assert live2 == cold["cells_mp2"]
     finally:
-        embed_ops._SEM_MEMO_MAX_ROWS = orig
+        embed_ops._MEMO_MAX_ROWS = orig
         for k in [k for k in _CENTROID_MEMO if k[0] in ("sempairs", "semcomp")]:
             del _CENTROID_MEMO[k]
 
