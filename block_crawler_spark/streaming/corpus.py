@@ -8,67 +8,61 @@ restarts.  ``dropDuplicatesWithinWatermark`` cannot express this (its state
 is watermark-bounded by design; corpus membership never expires), so the
 operator is a ``foreachBatch`` merge against a durable fingerprint set, the
 same pattern the chain tail uses for silver merges (``streaming/tail.py``).
-Demonstrated, not asserted (round 13,
-test_stream_dedup_native_twin_vs_corpus_gate): keyed by the SAME
-``fingerprint()`` column, the native operator and this gate admit the same
-set while duplicates arrive inside the watermark horizon, and diverge
-exactly where documented — a fingerprint re-arriving after its key state
-was evicted is re-admitted natively, still blocked here.
+Keyed by the same ``fingerprint()`` column, the native operator and this
+gate admit the same set while duplicates arrive inside the watermark
+horizon, and diverge exactly where documented: a fingerprint re-arriving
+after its key state was evicted is re-admitted natively and still blocked
+here (``test_stream_dedup_native_twin_vs_corpus_gate``).
 
-Storage layout (append-only, replay-idempotent):
+Storage layout (append-only, replay-idempotent), committed through
+``streaming.commit``, the protocol the silver store shares:
 
     root/docs/batch-<id>/...parquet   one directory per committed micro-batch
+    root/docs/compact-<n>/            a snapshot folding earlier directories
+    root/docs/_LIVE                   pointer: the directories a read includes
 
-Each corpus row carries its text fingerprint; the "seen" set is maintained
-as a derived SIDE TABLE (``root/index``) holding only ``(doc_id, fp[, sig])``
-— one narrow directory per live docs directory, healed from the docs (the
-single source of truth) whenever a crash leaves it behind.  Idempotence:
 ``foreachBatch`` hands Spark's monotonic ``batch_id`` to the sink; a
 replayed batch (restart between sink write and checkpoint commit) finds its
-``batch-<id>`` directory already committed and skips — the classic
-idempotent-foreachBatch contract (exactly-once corpus content).
+``batch-<id>`` directory committed and skips — the idempotent foreachBatch
+contract (exactly-once corpus content).  The read set and the replay set are
+tracked apart: ``_LIVE`` names what a read includes, while each
+``batch-<id>/_SUCCESS`` survives compaction as a tombstone, so a replayed
+batch id stays a no-op forever.  Compaction writes its snapshot fully
+before it flips ``_LIVE`` and prunes data only after the flip, so every
+moment reads a consistent corpus.
+
+The seen set lives in derived SIDE TABLES, one narrow directory per live
+docs directory, healed from the docs (the single source of truth) whenever
+a crash leaves them behind: ``root/index`` holds ``(doc_id, fp[, sig])``,
+near-dup stores keep the admitted docs' LSH band rows in ``root/bindex``,
+perceptual stores their dHash band rows in ``root/phindex`` (the 8-byte
+signature rides each row, so Hamming verification needs no corpus fetch),
+and semantic stores their trained-cell memberships and vectors in
+``root/vindex``.
 
 Scale shape at 100 TB: the per-batch work is (tiny batch) × (huge seen set),
 and BOTH halves of that product are kept off the shuffle path:
 
-* the seen side is the index table — the wide corpus (text bytes, media) is
+* the seen side is a side table — the wide corpus (text bytes, media) is
   never opened on the ingest path except to shingle-verify the handful of
   near-dup candidates;
 * every batch-vs-seen join is collision-shaped: the (broadcast) batch keys
-  probe the index scan (semi-join → tiny hit set), then the batch anti-joins
-  the hit set.  A left-anti with the huge set on the right would shuffle it
-  every micro-batch — broadcasting the batch side instead means the index is
-  only ever SCANNED, an O(corpus/width) streaming read with no exchange.
+  probe the side-table scan (semi-join → tiny hit set), then the batch
+  anti-joins the hit set.  A left-anti with the huge set on the right would
+  shuffle it every micro-batch — broadcasting the batch side instead means
+  the side table is only ever SCANNED, an O(corpus/width) streaming read
+  with no exchange.
 
-Three levers bound the residual scan as the corpus grows:
-:meth:`CorpusIngestStore.compact` folds the accumulated batch directories
-(docs and index alike) into one snapshot (out-of-band, never on the ingest
-path); each index dir is PARTITIONED by ``ibucket = pmod(xxhash64(fp),
-index_buckets)`` (round 7 — the silver store's cbucket idiom), so the
-exact-dedup fp probe statically prunes its scan to the batch's fp buckets
-instead of the whole seen set; and (round 8) near-dup stores keep a SECOND
-side table (``root/bindex``) holding each admitted doc's exploded LSH band
-rows partitioned by ``bbucket = pmod(xxhash64(band_index, band_value),
-index_buckets)``, so the near-dup band probe also prunes to the batch's
-band buckets instead of re-deriving bands from every admitted signature —
-previously the last per-batch unbounded scan on the ingest path.  The one
-remaining full-index consumer (the doc_id identity probe) reads a single
-pruned column — at 1 B admitted docs ~8 GB, a per-micro-batch read a
-1000-executor cluster absorbs.  Round 14 adds a fourth gate on the same
-pattern: ``media_phash=True`` stores keep a ``root/phindex`` side table
-(the admitted docs' dHash band rows, ``pbucket``-partitioned, the 8-byte
-signature riding each row so Hamming verification needs no corpus fetch)
-and block perceptual near-dups the byte-exact fp can never catch.  On an
-object store the same layout maps onto transactional tables partitioned
-by ``ibucket``/``bbucket``/``pbucket`` — nothing else changes.
-
-Read set vs replay set are tracked separately: ``docs/_LIVE`` (atomic
-pointer file, same idiom as the silver store's ``_CURRENT``) lists the
-directories a corpus read includes, while each ``batch-<id>/_SUCCESS``
-marker — which survives compaction as a tombstone — keeps a replayed batch
-id a no-op forever.  Compaction is crash-safe: the snapshot directory is
-fully written before the pointer flips, and data files are pruned only
-after the flip, so every moment in time reads a consistent corpus.
+Each side table is partitioned so a probe prunes its scan statically to the
+batch's buckets: ``ibucket = pmod(xxhash64(fp), INDEX_BUCKETS)``; ``bbucket``
+and ``pbucket = pmod(xxhash64(band_index, band_value), INDEX_BUCKETS)``;
+``vbucket = pmod(cid, min(|codebook|, 1024))``.  The one remaining full-index
+consumer (the doc_id identity probe) reads a single pruned column — at 1 B
+admitted docs ~8 GB, a per-micro-batch read a 1000-executor cluster
+absorbs.  :meth:`CorpusIngestStore.compact` folds the accumulated batch
+directories (docs and side tables alike) into one snapshot, out of band.  On
+an object store the same layout maps onto transactional tables partitioned
+by the bucket columns — nothing else changes.
 """
 
 from __future__ import annotations
@@ -90,14 +84,41 @@ from ..operators.dedup import (
     minhash_lsh_candidates,
     minhash_signatures,
 )
+from . import commit
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+# partition count of the fp index (ibucket) and the band tables (bbucket,
+# pbucket): a probe reads ~(batch buckets / INDEX_BUCKETS) of its table
+INDEX_BUCKETS = 16
+# batches at or under this row count broadcast their probe keys into the
+# collision joins (the side table is scanned, never exchanged); a larger
+# batch — an availableNow backfill can be corpus-scale — is not
+# force-broadcast (driver OOM), and AQE picks the join strategy
+BROADCAST_MAX_BATCH_ROWS = 1_000_000
+
+
+def _parse_live(text: str) -> tuple[list[str], set[str]]:
+    """``_LIVE``'s ``include:<dir>`` and ``exclude:<batch dir>`` lines."""
+    include: list[str] = []
+    exclude: set[str] = set()
+    for line in text.splitlines():
+        kind, _, d = line.partition(":")
+        if kind == "include":
+            include.append(d)
+        elif kind == "exclude":
+            exclude.add(d)
+        else:
+            raise ValueError(f"_LIVE line is neither include: nor exclude: {line!r}")
+    return include, exclude
 
 
 @dataclass
 class CorpusIngestStore:
-    """``near_dup=True`` additionally blocks MinHash near-duplicates of
-    every admitted document (exact-Jaccard-verified, threshold
+    """A deduplicated corpus under ``root``, fed one micro-batch at a time.
+
+    ``near_dup=True`` additionally blocks MinHash near-duplicates of every
+    admitted document (exact-Jaccard-verified, threshold
     ``jaccard_threshold``), storing each admitted doc's minhash signature so
     the admitted side of the LSH band join never re-shingles — the corpus
     scan feeding it reads only (doc_id, sig).  A store's mode is fixed at
@@ -108,23 +129,20 @@ class CorpusIngestStore:
     near_dup: bool = False
     jaccard_threshold: float = 0.5
     quality_min_ppm: int | None = None
-    # SEMANTIC admission gate (round 11 — the streaming twin of the batch
-    # dedup_semantic_* family): when True, batches must carry an
-    # ``embedding array<float>`` column, and a document whose embedding
-    # sits within ``semantic_sqdist_max`` (integer micro² L2 — the SAME
-    # threshold constant as the batch family) of ANY admitted document in
-    # its trained cell is blocked.  The trained cells are the broadcast
-    # state: a ≤SEM_K_MAX-row centroid table (train it offline with
-    # ``operators.ann.kmeans_lloyd_fixed`` — e.g. the batch corpus's
-    # ``_sem_k``-capped codebook) passed as ``semantic_centroids`` and
-    # PINNED to ``root/_centroids`` on the first WRITE path (the
-    # _INDEX_BUCKETS idiom: later opens adopt the pinned codebook,
-    # reads are side-effect-free, because admission
-    # decisions are only consistent across restarts if every batch
-    # assigns against the same cells).  Like the batch family, recall is
-    # bounded by the single-assignment trade: a near-dup pair straddling
-    # a cell boundary is not blocked (docs/SCALING.md §"Semantic
-    # pair-RECALL" measures that trade on the batch side).
+    # SEMANTIC admission gate, the streaming twin of the batch
+    # dedup_semantic_* family: batches must carry an ``embedding
+    # array<float>`` column, and a document whose embedding sits within
+    # ``semantic_sqdist_max`` (integer micro² L2 — the SAME threshold
+    # constant as the batch family) of ANY admitted document in a trained
+    # cell it probes is blocked.  The cells come from a ≤SEM_K_MAX-row
+    # codebook (train it offline with ``operators.ann.kmeans_lloyd_fixed``)
+    # passed as ``semantic_centroids``; the first write pins it to
+    # ``root/_centroids`` and later opens use the pinned one, because
+    # admission is only consistent across restarts if every batch assigns
+    # against the same cells.  Like the batch family, recall is bounded by
+    # the assignment trade: a near-dup pair whose probed cells never meet is
+    # not blocked (docs/SCALING.md §"Semantic pair-RECALL" measures that
+    # trade on the batch side).
     semantic: bool = False
     semantic_sqdist_max: int | None = None
     semantic_centroids: DataFrame | None = None
@@ -137,72 +155,38 @@ class CorpusIngestStore:
     # never enters the seen set, so a later compliant duplicate can still
     # be admitted).
     gopher_rules: bool = False
-    # PERCEPTUAL media admission gate (round 14 — VERDICT r13 optional b:
-    # the streaming twin of the batch dHash families): when True, every
-    # document's content bytes are fingerprinted by the SAME Arrow-stage
-    # ``content_dhash`` the batch ``media_phash_near_dup_pairs`` family
-    # uses, and a doc whose 60-bit signature lands within
-    # ``phash_max_hamming`` of ANY admitted doc is blocked — the
-    # re-encode/level-shift near-dup class a byte-exact fp can never catch.
-    # Candidates come from the batch family's banding (4 × 15-bit band
-    # equi-join) against a durable band side table (``root/phindex``, the
-    # bindex idiom) whose rows CARRY the full 8-byte signature, so
-    # verification is one ``bit_count(xor)`` on the collision row — unlike
-    # the minhash gate, no corpus text fetch.  Degenerate all-zero
+    # PERCEPTUAL media admission gate, the streaming twin of the batch
+    # dHash families: every document's content bytes are fingerprinted by
+    # the SAME Arrow-stage ``content_dhash`` the batch
+    # ``media_phash_near_dup_pairs`` family uses, and a doc whose 60-bit
+    # signature lands within ``phash_max_hamming`` of ANY admitted doc is
+    # blocked — the re-encode/level-shift near-dup class a byte-exact fp can
+    # never catch.  Candidates come from the batch family's banding (4 ×
+    # 15-bit band equi-join) against the ``root/phindex`` band table, whose
+    # rows CARRY the full 8-byte signature, so verification is one
+    # ``bit_count(xor)`` on the collision row.  Degenerate all-zero
     # signatures (flat content) are admitted but never emit band rows and
     # never block — the batch family's no-evidence policy.  This store
-    # ingests text corpora, so the fingerprint runs over the UTF-8 bytes;
-    # a media table would point the same stage at its content column.
+    # ingests text corpora, so the fingerprint runs over the UTF-8 bytes; a
+    # media table would point the same stage at its content column.
     media_phash: bool = False
     phash_max_hamming: int = 6
-    # fp-bucket count for the index side table's partition layout (the
-    # ``cbucket`` idiom from the silver store): each index dir is written
-    # ``partitionBy(ibucket = pmod(xxhash64(fp), N))`` so the exact-dedup
-    # probe reads only the batch's fp buckets (static partition pruning)
-    # instead of the whole seen set.  This field is only the INITIAL value:
-    # the first write pins it to ``root/_INDEX_BUCKETS`` and every later
-    # open adopts the pinned value (round-7 review: reopening with a
-    # different N would prune on bucket ids that don't match the on-disk
-    # partitioning and silently re-admit seen fingerprints).
-    index_buckets: int = 16
-    # vbucket count for the SEMANTIC vector side table — its own knob
-    # (round 12, VERDICT r11 task 3): vindex partitions by cell id, so the
-    # natural bucket count scales with the CODEBOOK (K cells → up to
-    # min(K, 1024) buckets — ≤1024 dirs is fine on any store), not with
-    # the fp-index's count.  Inheriting the fp count (the r11 layout) made
-    # pruning saturate: a cell-diverse batch touched every one of the 16
-    # buckets, so the per-batch vindex read degenerated to an O(admitted)
-    # scan once cell diversity saturated them.  None (default) derives
-    # min(max(1, |codebook|), 1024) at pin time; like ``index_buckets``
-    # the first write pins the value (``root/_VINDEX_BUCKETS``) and later
-    # opens adopt it — a pre-r12 store (no marker, committed vindex dirs)
-    # adopts the fp-index count it was written with.
-    vindex_buckets: int | None = None
-    # admitted-side membership count for the SEMANTIC vector table
-    # (round 12, VERDICT r11 optional a): 1 (default) stores each admitted
-    # doc under its top-1 cell only; 2 stores BOTH nearest cells (2×
-    # vindex size, 2× probe scan) for SYMMETRIC boundary coverage — with
-    # batch-side top-2 alone, a pair still slips through when the two
-    # docs' probe sets share no cell (batch top-2 {A,B} vs admitted top-1
-    # C with admitted top-2 {C,A} — pinned by pytest); storing admitted
-    # top-2 closes it (the sets then intersect iff ANY of the four
-    # memberships meet).  Pinned to ``root/_VINDEX_PROBES`` on the first
-    # write (adopt-on-open, like the bucket counts: a heal must re-project
-    # the exact layout the ingest path wrote); pre-marker stores adopt 1.
+    # admitted-side cell memberships per doc in the SEMANTIC vector table:
+    # 1 stores each admitted doc under its top-1 cell; 2 stores both nearest
+    # cells (2× vindex size, 2× probe scan) for SYMMETRIC boundary coverage
+    # — with the batch-side top-2 probe alone, a pair still slips through
+    # when the batch doc's top-2 {A,B} misses the admitted doc's top-1 C
+    # although its top-2 is {C,A}.  The first write pins the value to
+    # ``root/_VINDEX_PROBES`` and later opens use the pinned one: a heal must
+    # re-project the layout ingest wrote.
     vindex_probes: int = 1
-    # batches at or under this row count broadcast their probe keys into the
-    # collision joins (the index is scanned, never exchanged); a larger
-    # batch — an availableNow backfill can be corpus-scale — must NOT be
-    # force-broadcast (driver OOM), so it falls back to letting AQE pick the
-    # join strategy (ADVICE r6 corpus.py:332)
-    broadcast_max_batch_rows: int = 1_000_000
     # optional StatsService (streaming/stats.py): per-batch admission
     # counters for the 60 s ticker — corpus.batches / corpus.docs_in
     # (within-batch unique candidates) / corpus.admitted / corpus.blocked /
     # corpus.replays.  The admitted count costs one extra small job per
     # batch (a count of the committed narrow dir), so it only runs when a
-    # ticker is attached (round 8 — the reference's stats writer reports
-    # the tail's row volumes the same way, shared.py:187-305)
+    # ticker is attached (the reference's stats writer reports the tail's
+    # row volumes the same way, shared.py:187-305)
     stats: object | None = None
 
     def _docs_root(self) -> str:
@@ -211,129 +195,74 @@ class CorpusIngestStore:
     def _committed_batches(self) -> list[str]:
         base = self._docs_root()
         try:
-            return sorted(
-                d for d in os.listdir(base)
-                if d.startswith("batch-") and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-            )
-        except OSError:
+            names = os.listdir(base)
+        except FileNotFoundError:
             return []
+        return sorted(d for d in names if d.startswith("batch-") and commit.committed(os.path.join(base, d)))
 
     def _live_path(self) -> str:
         return os.path.join(self._docs_root(), "_LIVE")
 
+    def _live(self) -> tuple[list[str], set[str]]:
+        """The directories a corpus read includes, and the batch directories
+        ``_LIVE`` excludes.  Reads include the snapshot ``_LIVE`` names plus
+        every committed batch it does not exclude.  The pointer's
+        exclusions — not the later, best-effort data pruning — take folded
+        batches out of reads, so a crash at any point between snapshot
+        write, pointer flip and pruning still reads each document exactly
+        once.  Ingest never touches the pointer: batches committed after a
+        compaction are read from the moment they commit."""
+        include, exclude = commit.read_pointer(self._live_path(), _parse_live) or ([], set())
+        return include + [b for b in self._committed_batches() if b not in exclude], exclude
+
     def _live_dirs(self) -> list[str]:
-        """Directories a corpus read includes: compaction snapshots named in
-        ``_LIVE`` plus every committed batch the pointer does not exclude.
-        The pointer's ``exclude:`` lines — not the (later, best-effort) data
-        pruning — are what removes folded batches from reads, so a crash at
-        any point between snapshot write, pointer flip, and pruning still
-        reads each document exactly once.  Ingest never touches the pointer:
-        batches committed after a compaction are picked up automatically."""
-        committed = self._committed_batches()
-        include: list[str] = []
-        exclude: set[str] = set()
-        try:
-            with open(self._live_path()) as f:
-                for line in f:
-                    line = line.strip()
-                    if line.startswith("include:"):
-                        include.append(line.split(":", 1)[1])
-                    elif line.startswith("exclude:"):
-                        exclude.add(line.split(":", 1)[1])
-        except FileNotFoundError:
-            # no compaction has ever run — every committed batch is live.
-            # Any OTHER error (EACCES, EIO, fd exhaustion) must propagate:
-            # falling back here would read tombstoned batches as if the
-            # compacted data didn't exist and let duplicates back in.
-            return committed
-        return include + [b for b in committed if b not in exclude]
+        return self._live()[0]
 
     def compact(self) -> int:
         """Fold every currently-live directory into one snapshot.  Returns
         the number of directories folded (0 = nothing to do).  Out-of-band
         maintenance: safe to run between (not during) ingest batches.
         Replay markers are preserved — a folded ``batch-<id>`` keeps its
-        ``_SUCCESS`` tombstone so re-delivery of that id stays a no-op."""
-        live = self._live_dirs()
-        base = self._docs_root()
-        if len(live) < 2:
-            # nothing to fold, but a prior compaction may have crashed after
-            # the _LIVE flip and before pruning: reclaim data files of
-            # pointer-excluded batch dirs (keeping their _SUCCESS replay
-            # tombstones) and compact-* dirs the pointer doesn't include —
-            # without this a store that stays at one live dir leaks that
-            # space indefinitely (correctness is unaffected either way)
-            self._prune_unreferenced(live)
-            self._sync_index()  # also prunes index dirs a crashed fold left behind
-            return 0
-        n = 0
-        try:
-            n = max(
-                (int(d.rsplit("-", 1)[1]) for d in os.listdir(base) if d.startswith("compact-")),
-                default=0,
-            )
-        except OSError:
-            pass
-        snap = f"compact-{n + 1}"
-        # snapshot EXACTLY the captured live list — a batch committed between
-        # the listing above and this write must not be folded without also
-        # being excluded, or it would be read twice forever
-        self.spark.read.parquet(*[os.path.join(base, d) for d in live]).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, snap))
-        folded = list(live)
-        # exclusions accumulate across compactions: every batch dir ever
-        # folded stays excluded (its tombstone never re-enters reads)
-        prior_excluded: set[str] = set()
-        try:
-            with open(self._live_path()) as f:
-                prior_excluded = {
-                    line.strip().split(":", 1)[1] for line in f if line.strip().startswith("exclude:")
-                }
-        except FileNotFoundError:
-            pass  # first compaction — nothing excluded yet.  Other IO errors
-            # must propagate: silently dropping the accumulated exclude set
-            # would let previously tombstoned batches re-enter reads.
-        excluded = sorted(prior_excluded | {d for d in folded if d.startswith("batch-")})
-        tmp = self._live_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"include:{snap}\n")
-            for d in excluded:
-                f.write(f"exclude:{d}\n")
-        os.replace(tmp, self._live_path())  # atomic commit point
-        # space reclamation only — correctness rests on the pointer above.
-        # Folded batches tombstone to bare _SUCCESS (replay markers); every
-        # compact-* dir other than the new snapshot is either the superseded
-        # live snapshot (now pointer-excluded) or an orphan from a crash
-        # between a snapshot write and its pointer flip — both unreferenced.
+        ``_SUCCESS`` tombstone so re-delivery of that id stays a no-op, and
+        stays excluded from reads in every later ``_LIVE``."""
+        live, excluded = self._live()
+        folded = live if len(live) > 1 else []
+        if folded:
+            base = self._docs_root()
+            snap = commit.next_dir(base, "compact")
+            # snapshot EXACTLY the captured live list — a batch committed
+            # between the listing above and this write must not be folded
+            # without also being excluded, or it would be read twice forever
+            self.spark.read.parquet(*[os.path.join(base, d) for d in folded]).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(base, snap))
+            excluded |= {d for d in folded if d.startswith("batch-")}
+            lines = [f"include:{snap}\n"] + [f"exclude:{d}\n" for d in sorted(excluded)]
+            commit.write_pointer(self._live_path(), "".join(lines))  # the commit point
+        # Space reclamation only — correctness rests on the pointer.  It also
+        # runs with nothing to fold, since a compaction that crashed after
+        # its flip and before pruning would otherwise leak that space while
+        # the store stays at one live dir.  The side tables then follow the
+        # live set (the same source-of-truth rule).
         self._prune_unreferenced(self._live_dirs())
-        # fold the index to match: the snapshot's projection is written and
-        # the folded batches' index dirs pruned — same source-of-truth rule
         self._sync_index()
         return len(folded)
 
     def _prune_unreferenced(self, live: list[str]) -> None:
         """Reclaim space for directories reads no longer reference: data
         files of non-live batch dirs tombstone to bare ``_SUCCESS`` (the
-        replay marker must outlive the data), non-live compact dirs are
-        removed whole.  Pure reclamation — the ``_LIVE`` pointer alone
-        defines the read set, so this is safe to re-run after any crash."""
+        replay marker must outlive the data); non-live snapshots — the
+        superseded one, or one a crash left before its pointer flip — are
+        removed whole.  The ``_LIVE`` pointer alone defines the read set,
+        so this is safe to re-run after any crash."""
         base = self._docs_root()
-        keep = set(live)
-        try:
-            entries = os.listdir(base)
-        except OSError:
-            return
-        for d in entries:
-            if d in keep:
-                continue
-            p = os.path.join(base, d)
-            if d.startswith("batch-") and os.path.exists(os.path.join(p, "_SUCCESS")):
+        for d in self._committed_batches():
+            if d not in live:
+                p = os.path.join(base, d)
                 for name in os.listdir(p):
                     if name != "_SUCCESS":
                         os.remove(os.path.join(p, name))
-            elif d.startswith("compact-"):
-                shutil.rmtree(p, ignore_errors=True)
+        commit.prune(base, "compact", live)
 
     def _stored_schema(self) -> str:
         return (
@@ -350,7 +279,7 @@ class CorpusIngestStore:
             return self.spark.createDataFrame([], self._stored_schema())
         return self.spark.read.parquet(*[os.path.join(self._docs_root(), d) for d in dirs])
 
-    # -- the seen-set side table --------------------------------------------
+    # -- the seen-set side tables -------------------------------------------
     def _index_root(self) -> str:
         return os.path.join(self.root, "index")
 
@@ -364,11 +293,8 @@ class CorpusIngestStore:
         """Root of the semantic vector side table: one dir per live docs
         dir, rows ``(doc_id, cid, v)`` — the trained-cell membership(s)
         and micro-fixed vector of every admitted doc (one row per doc, or
-        two under ``vindex_probes=2``) — partitioned by ``vbucket =
-        pmod(cid, _effective_vindex_buckets())`` (r12: the vindex's OWN
-        pinned count, min(K, 1024) by default — one dir per cell), so the
-        per-batch semantic probe scans only the cells the batch actually
-        touches."""
+        two under ``vindex_probes=2``) — partitioned by ``vbucket``, so the
+        per-batch semantic probe scans only the cells the batch touches."""
         return os.path.join(self.root, "vindex")
 
     def _index_schema(self) -> str:
@@ -392,22 +318,13 @@ class CorpusIngestStore:
         by ``pbucket`` — the band analog of ``bindex`` for the dHash gate."""
         return os.path.join(self.root, "phindex")
 
-    def _pbucket_expr(self):
-        """The phash band table's partition value — same pinned bucket count
-        and (band_index, band_value) key shape as ``bbucket``."""
-        return F.pmod(
-            F.xxhash64(F.col("band_index"), F.col("band_value")),
-            F.lit(self._effective_index_buckets()),
-        ).cast("int")
-
     @staticmethod
     def _phash_bands(sigs: DataFrame) -> DataFrame:
         """(doc_id, dhash) → one row per (doc, band): the batch media
         family's 4 × 15-bit banding (``media_ops.PHASH_BANDS`` over
         ``multimodal.DHASH_BITS``), with all-zero signatures excluded —
         they carry no locality evidence and would be the one hot band
-        bucket (the r13 exclusion, applied at the index boundary so
-        degenerate docs neither block nor get blocked)."""
+        bucket, so degenerate docs neither block nor get blocked."""
         from ..operators.multimodal import DHASH_BITS
         from ..plans.media_ops import PHASH_BANDS
 
@@ -435,7 +352,7 @@ class CorpusIngestStore:
         """The perceptual band side table: one row per (admitted doc, dHash
         band), signature riding along.  ``buckets`` prunes committed dirs
         to those ``pbucket=K`` partitions — the per-batch probe reads
-        O(batch band buckets / index_buckets) of the admitted band set.
+        O(batch band buckets / INDEX_BUCKETS) of the admitted band set.
         Side-effect-free like :meth:`index`: uncovered or unreadable dirs
         project lazily from docs (the stored ``dhash`` column is the
         source of truth; no Arrow re-decode on the heal path)."""
@@ -443,7 +360,7 @@ class CorpusIngestStore:
         def project(docs: DataFrame, bucket_list) -> DataFrame:
             out = self._phash_bands(docs.select("doc_id", "dhash"))
             if bucket_list is not None:
-                out = out.filter(self._pbucket_expr().isin(bucket_list))
+                out = out.filter(self._bbucket_expr().isin(bucket_list))
             return out.select(*self._PHINDEX_COLS)
 
         return self._read_side_table(
@@ -457,154 +374,49 @@ class CorpusIngestStore:
     _VINDEX_COLS = ["doc_id", "cid", "v"]
     _VINDEX_SCHEMA = "doc_id long, cid long, v array<bigint>"
 
-    def _effective_index_buckets(self) -> int:
-        """The bucket count the on-disk layout was written with: the pinned
-        ``_INDEX_BUCKETS`` value when present (adopt-on-open — the disk is
-        the truth), else this instance's ``index_buckets``."""
-        cached = getattr(self, "_eff_index_buckets", None)
-        if cached is not None:
-            return cached
-        try:
-            with open(os.path.join(self.root, "_INDEX_BUCKETS")) as f:
-                n = int(f.read().strip())
-        except (OSError, ValueError):
-            n = self.index_buckets
-        self._eff_index_buckets = n
-        return n
-
-    def _pin_index_buckets(self) -> None:
-        """Persist the layout's bucket count on the first write path (reads
-        never write); temp-then-rename so concurrent pinners are safe."""
-        marker = os.path.join(self.root, "_INDEX_BUCKETS")
-        if os.path.exists(marker):
-            return
-        os.makedirs(self.root, exist_ok=True)
-        tmp = f"{marker}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(str(self._effective_index_buckets()))
-        os.replace(tmp, marker)
-
-    def _vindex_is_legacy(self) -> bool:
-        """True iff the store holds committed vindex dirs written BEFORE
-        the r12 markers existed — the ONE definition of pre-marker
-        detection, shared by the bucket-count and membership-count
-        adopters so the two can never disagree about legacy status
-        (r12 review: two drifting copies could mix fp-count buckets with
-        constructor probes)."""
-        try:
-            return any(
-                self._index_committed(d, root=self._vindex_root())
-                for d in os.listdir(self._vindex_root())
-            )
-        except OSError:
-            return False
-
-    def _effective_vindex_buckets(self) -> int:
-        """The vector side table's bucket count: the pinned
-        ``_VINDEX_BUCKETS`` value when present (adopt-on-open); for a
-        PRE-MARKER store with committed vindex dirs, the fp-index count
-        those dirs were written with (reopening with a different count
-        would prune on vbucket values that don't match the on-disk
-        partitioning and silently re-admit semantic dups — the same
-        hazard ``_INDEX_BUCKETS`` guards); else the constructor's
-        ``vindex_buckets``, else min(|codebook|, 1024)."""
-        cached = getattr(self, "_eff_vindex_buckets", None)
-        if cached is not None:
-            return cached
-        try:
-            with open(os.path.join(self.root, "_VINDEX_BUCKETS")) as f:
-                n = int(f.read().strip())
-        except (OSError, ValueError):
-            if self._vindex_is_legacy():
-                n = self._effective_index_buckets()
-            elif self.vindex_buckets is not None:
-                n = int(self.vindex_buckets)
-            else:
-                n = min(max(1, self._codebook_size()), 1024)
-        if n < 1:
-            # pmod(cid, 0) yields NULL vbuckets → rows land under the Hive
-            # default partition and every pruned probe misses them, silently
-            # re-admitting semantic dups (r12 review) — fail loud instead
-            raise ValueError(f"vindex_buckets must be >= 1, got {n}")
-        self._eff_vindex_buckets = n
-        return n
-
-    def _codebook_size(self) -> int:
-        """Row count of the (driver-cached, bounded) codebook."""
+    def _vindex_buckets(self) -> int:
+        """The vector table's bucket count, min(|codebook|, 1024): one dir
+        per cell up to a count any store handles.  It derives from the
+        codebook the store pins, so every open partitions and prunes on the
+        count the layout was written with."""
         self._centroids()  # populate the driver cache
-        return len(self._cents_rows[0])
+        return min(max(1, len(self._cents_rows[0])), 1024)
 
-    def _pin_vindex_buckets(self) -> None:
-        """Persist the vector table's bucket count on the first write path
-        (reads never write); temp-then-rename like ``_pin_index_buckets``."""
-        marker = os.path.join(self.root, "_VINDEX_BUCKETS")
-        if os.path.exists(marker):
-            return
-        os.makedirs(self.root, exist_ok=True)
-        tmp = f"{marker}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(str(self._effective_vindex_buckets()))
-        os.replace(tmp, marker)
-
-    def _effective_vindex_probes(self) -> int:
-        """Admitted-side memberships the on-disk vindex was written with:
-        the pinned ``_VINDEX_PROBES`` when present (adopt-on-open — a heal
-        must re-project exactly the layout ingest wrote); for a PRE-MARKER
-        store with committed vindex dirs, 1 regardless of the constructor
-        ask (the marker and the 2-probe option shipped together, so every
-        pre-marker layout is single-membership by construction — honoring
-        ``vindex_probes=2`` there would heal crashed dirs into a layout
-        the ingest path never wrote; r12 review); else this instance's
+    def _vindex_probes(self) -> int:
+        """Admitted-side memberships the vindex is written with: the pinned
+        ``_VINDEX_PROBES`` once a write has pinned it, else this instance's
         ``vindex_probes``."""
-        cached = getattr(self, "_eff_vindex_probes", None)
-        if cached is not None:
-            return cached
-        try:
-            with open(os.path.join(self.root, "_VINDEX_PROBES")) as f:
-                n = int(f.read().strip())
-        except (OSError, ValueError):
-            n = 1 if self._vindex_is_legacy() else int(self.vindex_probes)
+        n = commit.read_pointer(os.path.join(self.root, "_VINDEX_PROBES"), int)
+        n = self.vindex_probes if n is None else n
         if n not in (1, 2):
             raise ValueError(f"vindex_probes must be 1 or 2, got {n}")
-        self._eff_vindex_probes = n
         return n
 
-    def _pin_vindex_probes(self) -> None:
-        """Persist the admitted-side membership count on the first write
-        path; temp-then-rename like the bucket markers."""
-        marker = os.path.join(self.root, "_VINDEX_PROBES")
-        if os.path.exists(marker):
-            return
-        os.makedirs(self.root, exist_ok=True)
-        tmp = f"{marker}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(str(self._effective_vindex_probes()))
-        os.replace(tmp, marker)
+    def _pin_semantic(self) -> None:
+        """Pin what the vector table's layout depends on — the codebook and
+        the membership count — before a write path projects against them."""
+        self._pin_centroids()
+        commit.pin(os.path.join(self.root, "_VINDEX_PROBES"), str(self._vindex_probes()))
 
     def _ibucket_expr(self):
-        """The index's fp-bucket partition value — a pure function of fp and
-        the PINNED bucket count, so rows re-bucket identically on every
-        heal/compaction and across re-opens."""
-        return F.pmod(F.xxhash64(F.col("fp")), F.lit(self._effective_index_buckets())).cast("int")
+        """The index's fp-bucket partition value — a pure function of fp,
+        so rows re-bucket identically on every heal and compaction."""
+        return F.pmod(F.xxhash64(F.col("fp")), F.lit(INDEX_BUCKETS)).cast("int")
 
     def _bbucket_expr(self):
-        """The band table's partition value — a pure function of the band key
-        (index AND value: the LSH collision join matches on both) and the
-        same pinned bucket count as ``ibucket``."""
-        return F.pmod(
-            F.xxhash64(F.col("band_index"), F.col("band_value")),
-            F.lit(self._effective_index_buckets()),
-        ).cast("int")
+        """The band tables' partition value (``bbucket``, and ``pbucket``
+        in the phash table) — a pure function of the band key, index AND
+        value, on which the collision joins match."""
+        return F.pmod(F.xxhash64(F.col("band_index"), F.col("band_value")), F.lit(INDEX_BUCKETS)).cast("int")
 
     def _vbucket_expr(self):
         """The vector table's partition value — a pure function of the
-        trained cell id and the pinned VINDEX bucket count (round 12: its
-        own count, scaled to the codebook — see ``vindex_buckets``).  cid
-        itself is bounded (the caller trains a capped codebook), so plain
-        modulo spreads the cells evenly without hashing; at the derived
-        count (≥ K) it is the identity partitioning — one dir per cell,
-        so the per-batch probe's footprint is EXACTLY the batch's cells."""
-        return F.pmod(F.col("cid"), F.lit(self._effective_vindex_buckets())).cast("int")
+        trained cell id and :meth:`_vindex_buckets`.  cid itself is bounded
+        (the caller trains a capped codebook), so plain modulo spreads the
+        cells evenly without hashing; up to 1024 cells it is the identity
+        partitioning — one dir per cell, so the per-batch probe's footprint
+        is EXACTLY the batch's cells."""
+        return F.pmod(F.col("cid"), F.lit(self._vindex_buckets())).cast("int")
 
     def _sqdist_max(self) -> int:
         if self.semantic_sqdist_max is not None:
@@ -614,45 +426,40 @@ class CorpusIngestStore:
         return SEM_SQDIST_MAX
 
     def _pin_centroids(self) -> None:
-        """Durably pin the constructor-supplied codebook to
-        ``root/_centroids`` — WRITE paths only (ingest/compact, like
-        ``_pin_index_buckets``): reads are side-effect-free (ADVICE r11 —
-        the old path pinned from ``vindex()``'s lazy projection too, so a
-        read-only consumer mutated the store root and a crash mid-write on
-        a read path could leave a tmp dir).  Temp-then-swap, idempotent."""
+        """Durably pin the codebook to ``root/_centroids`` — on the WRITE
+        paths only (ingest, compact), so reads never modify the store.
+        Written to a temp dir and swapped in; a no-op once pinned."""
         dst = os.path.join(self.root, "_centroids")
-        if os.path.exists(os.path.join(dst, "_SUCCESS")):
+        if commit.committed(dst):
             return
         if self.semantic_centroids is None:
             raise ValueError(
                 "semantic store has no pinned codebook: pass semantic_centroids "
                 "(train with operators.ann.kmeans_lloyd_fixed) on first use"
             )
-        os.makedirs(self.root, exist_ok=True)
         tmp = f"{dst}.tmp-{os.getpid()}"
         # pin the SAME evaluation this session admits against: _centroids()
         # driver-caches the codebook rows (possibly already, from an earlier
         # read path) and its recreation is what gets written — re-executing
         # self.semantic_centroids here could pin a DIFFERENT evaluation if
         # the caller's lineage is not re-execution-deterministic, making
-        # every restart adopt cells this session never used (r12 review)
+        # every restart adopt cells this session never used
         self._centroids().write.mode("overwrite").parquet(tmp)
-        self._replace_dir(tmp, dst)
+        commit.swap_dir(tmp, dst)
 
     def _centroids(self) -> DataFrame:
         """The trained-cell codebook (cid, c), driver-cached and READ-ONLY:
         the committed ``root/_centroids`` when present (the disk is the
         truth — admission decisions are only consistent across restarts if
         every batch assigns against the same cells), else the codebook the
-        store was constructed with, used TRANSIENTLY without writing
-        (durable pinning happens on the write paths via
-        :meth:`_pin_centroids`; ADVICE r11).  Bounded by the caller's k cap
-        (the SEM_K_MAX contract of the batch family), so the
+        store was constructed with, used without writing it (the write
+        paths pin it via :meth:`_pin_centroids`).  Bounded by the caller's
+        k cap (the SEM_K_MAX contract of the batch family), so the
         collect/broadcast is constant-sized."""
         cached = getattr(self, "_cents_rows", None)
         if cached is None:
             dst = os.path.join(self.root, "_centroids")
-            if os.path.exists(os.path.join(dst, "_SUCCESS")):
+            if commit.committed(dst):
                 df = self.spark.read.parquet(dst).select("cid", "c")
             elif self.semantic_centroids is not None:
                 df = self.semantic_centroids.select("cid", "c")
@@ -674,28 +481,11 @@ class CorpusIngestStore:
         from ..operators.ann import centroid_assign, centroid_assign_top2, micro_fixed
 
         vecs = docs.select(F.col("doc_id").alias("vid"), micro_fixed(F.col("embedding")).alias("v"))
-        assign = (
-            centroid_assign_top2 if self._effective_vindex_probes() == 2 else centroid_assign
-        )
+        assign = centroid_assign_top2 if self._vindex_probes() == 2 else centroid_assign
         asg = assign(vecs, self._centroids()).join(vecs, "vid")
         return asg.select(F.col("vid").alias("doc_id"), "cid", "v").withColumn(
             "vbucket", self._vbucket_expr()
         )
-
-    def _index_committed(self, d: str, root: str | None = None) -> bool:
-        """True iff ``d``'s side-table dir under ``root`` (default: the fp
-        index) is committed IN THE BUCKETED LAYOUT: ``_SUCCESS`` present and
-        no bare top-level parquet files (a pre-bucketed dir has those; it
-        re-projects once and prunes after).  An empty committed dir (every
-        batch row deduped away) qualifies — ``partitionBy`` writes no data
-        files for zero rows."""
-        dst = os.path.join(root if root is not None else self._index_root(), d)
-        if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-            return False
-        try:
-            return not any(n.endswith(".parquet") for n in os.listdir(dst))
-        except OSError:
-            return False
 
     @staticmethod
     def _dir_has_data(dst: str) -> bool | None:
@@ -704,9 +494,9 @@ class CorpusIngestStore:
         of zero rows: the listing succeeded and showed no data), ``None``
         iff the listing itself failed (mid-swap, permissions, transient
         I/O).  The three must not be conflated: treating an unreadable dir
-        as empty would silently drop its fingerprints from the seen set
-        (round-8 advice) — the caller falls back to the docs projection on
-        ``None`` exactly as it does when the parquet open fails."""
+        as empty would silently drop its fingerprints from the seen set —
+        the caller falls back to the docs projection on ``None`` exactly as
+        it does when the parquet open fails."""
         try:
             with os.scandir(dst) as it:
                 for e in it:
@@ -716,43 +506,21 @@ class CorpusIngestStore:
             return None
         return False
 
-    def _replace_dir(self, tmp: str, dst: str) -> None:
-        """Swap ``tmp`` into place at ``dst`` without ever exposing a
-        half-deleted dir: the old dir is renamed ASIDE (atomic), the new one
-        renamed IN (atomic), then the aside copy is reclaimed.  A reader
-        racing the swap sees either the complete old dir, the complete new
-        dir, or no dir at all (→ lazy projection from docs, the source of
-        truth) — never a dir whose ``_SUCCESS`` survives while its data
-        files are mid-``rmtree`` (round-8 advice: rmtree-then-rename could
-        silently drop fingerprints from the seen set)."""
-        aside = f"{dst}.old-{os.getpid()}"
-        shutil.rmtree(aside, ignore_errors=True)
-        if os.path.exists(dst):
-            os.rename(dst, aside)
-        try:
-            os.rename(tmp, dst)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # concurrent healer won
-            if not os.path.exists(dst) and os.path.exists(aside):
-                os.rename(aside, dst)  # restore — never leave the dir absent
-                return
-        shutil.rmtree(aside, ignore_errors=True)
-
     def _heal_side_table(self, live: list[str], root: str, project, bucket_col: str) -> None:
-        """Heal ONE side table (fp index or band index) against the live docs
-        set: (re)project uncovered dirs from docs, prune dirs whose docs dir
-        is no longer live.  ``project(docs_df)`` returns the rows to store;
+        """Heal ONE side table against the live docs set: (re)project
+        uncovered dirs from docs, prune dirs whose docs dir is no longer
+        live.  ``project(docs_df)`` returns the rows to store;
         ``bucket_col`` is the partition column."""
         for d in live:
-            if self._index_committed(d, root=root):
-                continue
             dst = os.path.join(root, d)
+            if commit.committed(dst):
+                continue
             tmp = f"{dst}.tmp-{os.getpid()}"
             shutil.rmtree(tmp, ignore_errors=True)
             project(self.spark.read.parquet(os.path.join(self._docs_root(), d))).write.mode(
                 "overwrite"
             ).partitionBy(bucket_col).parquet(tmp)
-            self._replace_dir(tmp, dst)
+            commit.swap_dir(tmp, dst)
         keep = set(live)
         try:
             entries = os.listdir(root)
@@ -764,21 +532,15 @@ class CorpusIngestStore:
 
     def _sync_index(self) -> None:
         """Make the durable side tables mirror the docs live set, dir for
-        dir.  Docs are the source of truth and both indexes are pure
-        projections of them, so this is self-healing against a crash at ANY
-        point: a live docs dir with no committed (bucketed-layout) index dir
-        gets (re)projected; an index dir whose docs dir is no longer live
-        (folded batch, superseded snapshot) is pruned.  Near-dup stores heal
-        the band table too — an existing corpus written before the band
-        index existed adopts the layout on its next ingest/compact.
+        dir.  Docs are the source of truth and every side table is a pure
+        projection of them, so this is self-healing against a crash at ANY
+        point: a live docs dir with no committed side-table dir gets
+        (re)projected; a side-table dir whose docs dir is no longer live
+        (folded batch, superseded snapshot) is pruned.
 
-        Runs only on the WRITE paths (ingest/compact — reads are
-        side-effect-free, ADVICE r6 corpus.py:262); each projection lands in
-        a temp dir then swaps in via :meth:`_replace_dir`.  Idempotent and
-        cheap when in sync (existence checks only)."""
-        from ..operators.dedup import band_buckets as _bands
-
-        self._pin_index_buckets()
+        Runs only on the WRITE paths (ingest, compact), so reads are
+        side-effect-free; each projection lands in a temp dir, then swaps
+        in.  Idempotent, and cheap when in sync (existence checks only)."""
         live = self._live_dirs()
         cols = self._index_cols()
         self._heal_side_table(
@@ -791,7 +553,7 @@ class CorpusIngestStore:
             self._heal_side_table(
                 live,
                 self._bindex_root(),
-                lambda docs: _bands(docs.select("doc_id", "sig")).withColumn(
+                lambda docs: band_buckets(docs.select("doc_id", "sig")).withColumn(
                     "bbucket", self._bbucket_expr()
                 ),
                 "bbucket",
@@ -801,31 +563,26 @@ class CorpusIngestStore:
                 live,
                 self._phindex_root(),
                 lambda docs: self._phash_bands(docs.select("doc_id", "dhash")).withColumn(
-                    "pbucket", self._pbucket_expr()
+                    "pbucket", self._bbucket_expr()
                 ),
                 "pbucket",
             )
         if self.semantic:
-            # write path: durably pin the codebook and the vindex bucket
-            # count before (re)projecting against them (reads never write —
-            # ADVICE r11; legacy layouts adopt their fp-index count first)
-            self._pin_centroids()
-            self._pin_vindex_buckets()
-            self._pin_vindex_probes()
+            self._pin_semantic()
             self._heal_side_table(live, self._vindex_root(), self._vindex_project, "vbucket")
 
     def index(self, buckets: Sequence[int] | None = None) -> DataFrame:
         """The narrow seen-set table: (doc_id, fp[, sig]) for every admitted
-        document.  Side-effect-free: committed (bucketed) index dirs are
-        scanned; a dir the durable heal hasn't covered yet (crash window, or
-        a pre-bucketed layout) is projected LAZILY from its docs dir — the
-        read stays correct without writing anything (durable healing happens
-        on the ingest/compact paths via ``_sync_index``).
+        document.  Side-effect-free: committed index dirs are scanned; a
+        dir the durable heal hasn't covered yet (crash window) is projected
+        LAZILY from its docs dir — the read stays correct without writing
+        anything (durable healing happens on the ingest/compact paths via
+        ``_sync_index``).
 
         ``buckets`` prunes committed dirs to those ``ibucket=K`` partitions
         (static ``PartitionFilters``) and applies the same predicate as a
         data filter to any lazily-projected dir — the exact-dedup fp probe
-        reads O(batch buckets / index_buckets) of the seen set."""
+        reads O(batch buckets / INDEX_BUCKETS) of the seen set."""
 
         def project(docs: DataFrame, bucket_list) -> DataFrame:
             if bucket_list is not None:
@@ -845,15 +602,13 @@ class CorpusIngestStore:
         """The near-dup band side table: one row per (admitted doc, LSH
         band) — ``(doc_id, band_index, band_value)``.  ``buckets`` prunes
         committed dirs to those ``bbucket=K`` partitions, so the per-batch
-        band probe reads O(batch band buckets / index_buckets) of the
+        band probe reads O(batch band buckets / INDEX_BUCKETS) of the
         admitted band set instead of re-deriving bands from every admitted
-        signature (round 8 — previously the last unbounded per-batch scan).
-        Side-effect-free like :meth:`index`: uncovered or unreadable dirs
-        project lazily from docs (the source of truth)."""
-        from ..operators.dedup import band_buckets as _bands
+        signature.  Side-effect-free like :meth:`index`: uncovered or
+        unreadable dirs project lazily from docs (the source of truth)."""
 
         def project(docs: DataFrame, bucket_list) -> DataFrame:
-            out = _bands(docs.select("doc_id", "sig"))
+            out = band_buckets(docs.select("doc_id", "sig"))
             if bucket_list is not None:
                 out = out.filter(self._bbucket_expr().isin(bucket_list))
             return out.select(*self._BINDEX_COLS)
@@ -900,14 +655,12 @@ class CorpusIngestStore:
         buckets: Sequence[int] | None,
         project,
     ) -> DataFrame:
-        """Shared read path of both side tables.  Per live dir: a committed
+        """Shared read path of the side tables.  Per live dir: a committed
         dir WITH data files scans (bucket partition filters applied); a
         committed dir with no data files is genuinely empty (partitionBy of
         zero rows) and contributes nothing; a dir that is uncovered,
         mid-swap, or FAILS to read falls back to ``project``-ing the docs
-        dir — a read failure must never silently shrink the seen set
-        (round-8 advice: the old path treated any AnalysisException as
-        'committed empty')."""
+        dir — a read failure must never silently shrink the seen set."""
         dirs = self._live_dirs()
         if not dirs:
             return self.spark.createDataFrame([], schema)
@@ -915,8 +668,8 @@ class CorpusIngestStore:
         parts: list[DataFrame] = []
         for d in dirs:
             df = None
-            if self._index_committed(d, root=root):
-                dst = os.path.join(root, d)
+            dst = os.path.join(root, d)
+            if commit.committed(dst):
                 has_data = self._dir_has_data(dst)
                 if has_data is False:
                     continue  # VERIFIED committed-empty: zero rows stored
@@ -956,16 +709,11 @@ class CorpusIngestStore:
         an immutable ``batch-<id>`` directory.  Re-invocation with an
         already-committed id is a no-op (replay after crash)."""
         out = os.path.join(self._docs_root(), f"batch-{batch_id}")
-        self._pin_index_buckets()
         if self.semantic:
-            # ingest is a write path: pin the codebook (and the vbucket
-            # count derived from it) up front, so a crash anywhere past
-            # this point leaves a store that heals without needing the
-            # constructor-supplied centroids again
-            self._pin_centroids()
-            self._pin_vindex_buckets()
-            self._pin_vindex_probes()
-        if os.path.exists(os.path.join(out, "_SUCCESS")):
+            # pinned up front, so a crash anywhere past this point leaves a
+            # store that heals without the constructor-supplied centroids
+            self._pin_semantic()
+        if commit.committed(out):
             if self.stats is not None:
                 self.stats.increment("corpus.replays")
             return
@@ -1001,14 +749,13 @@ class CorpusIngestStore:
         to_unpersist: list[DataFrame] = [fresh]
         try:
             # ONE driver job yields both the batch count (the broadcast gate)
-            # and the fp-bucket footprint (the index scan pruning list) —
-            # previously two collects over the same cached batch (VERDICT r9
-            # task 6).  The band-bucket probe in _near_dup_filter stays a
-            # separate job by necessity: band rows only exist after the
-            # signature stage, which runs on the post-exact-dedup survivors.
+            # and the fp-bucket footprint (the index scan pruning list).  The
+            # band-bucket probe in _near_dup_filter stays a separate job by
+            # necessity: band rows only exist after the signature stage,
+            # which runs on the post-exact-dedup survivors.
             bucket_rows = fresh.groupBy(self._ibucket_expr().alias("b")).count().collect()
             n_rows = sum(r["count"] for r in bucket_rows)
-            small = n_rows <= self.broadcast_max_batch_rows
+            small = n_rows <= BROADCAST_MAX_BATCH_ROWS
             fp_buckets = sorted(r["b"] for r in bucket_rows)
             fresh = self._exact_dedup_filter(fresh, small_batch=small, fp_buckets=fp_buckets)
             cols = [f.split()[0] for f in DOC_SCHEMA.split(",")] + ["fp"]
@@ -1055,7 +802,7 @@ class CorpusIngestStore:
         """Broadcast the batch-derived side only when the batch is known
         small; a corpus-scale backfill batch keeps the default strategy
         (AQE still broadcasts at runtime if its stats allow) instead of a
-        forced driver-OOM broadcast (ADVICE r6)."""
+        forced driver-OOM broadcast."""
         return F.broadcast(df) if small_batch else df
 
     def _exact_dedup_filter(
@@ -1072,7 +819,7 @@ class CorpusIngestStore:
         micro-batch; this way the index is only scanned, never exchanged.
         The fp probe additionally prunes the scan to the batch's fp buckets
         (``fp_buckets`` — partition filters on the bucketed index layout),
-        so it reads O(batch buckets / index_buckets) of the seen set; the
+        so it reads O(batch buckets / INDEX_BUCKETS) of the seen set; the
         doc_id probe keys don't correlate with fp buckets and scan the full
         (single-column-pruned) index — the documented residual.  doc_id is
         the corpus identity: a re-arriving id (even with revised text) never
@@ -1095,10 +842,10 @@ class CorpusIngestStore:
         equi-joins — the admitted side read from the BAND index table's
         stored (doc_id, band_index, band_value) rows with the scan pruned to
         the batch's band buckets (no re-shingling, no wide-corpus scan, no
-        full-signature re-banding — round 8), the batch side broadcast
-        (small batches) so the admitted side never shuffles; every candidate
-        is verified on true shingle sets before it blocks anything.  Only
-        the verified candidates' text is fetched from the corpus (semi-join
+        full-signature re-banding), the batch side broadcast (small
+        batches) so the admitted side never shuffles; every candidate is
+        verified on true shingle sets before it blocks anything.  Only the
+        verified candidates' text is fetched from the corpus (semi-join
         with the candidate ids).  The batch's band rows are consumed twice
         (the bucket-probe collect, then the collision join) and ``cross`` —
         the band collision pairs — is consumed twice (candidate ids for the
@@ -1193,7 +940,7 @@ class CorpusIngestStore:
         # of the admitted band table (the bbucket idiom)
         pbuckets = sorted(
             r["p"]
-            for r in surv_bands.select(self._pbucket_expr().alias("p")).distinct().collect()
+            for r in surv_bands.select(self._bbucket_expr().alias("p")).distinct().collect()
         )
         probe = self._hint(
             surv_bands.select("doc_id", "band_index", "band_value", F.col("dhash").alias("hb")),
@@ -1212,17 +959,16 @@ class CorpusIngestStore:
     def _semantic_filter(self, fresh: DataFrame, small_batch: bool = True) -> DataFrame:
         """Drop semantic near-duplicates, first within the batch
         (keep-lowest-id), then against every admitted document.  The BATCH
-        side probes its TWO nearest cells (round 12 — the mp2-consistent
-        upgrade, VERDICT r11 task 4: under the r11 single-probe gate a
-        near-dup whose top-1 cell differed from its admitted twin's was
-        ADMITTED — exactly the cell-boundary loss the batch family
-        measured dominating and mitigated with mp2); the ADMITTED side
-        stores one membership per doc BY DEFAULT (a candidate pair is
-        generated when the batch doc's EITHER probe lands in an admitted
-        membership cell, so catching most boundary-straddlers needs no
-        admitted-side storage change, at ~2× probe cost) — the opt-in
-        ``vindex_probes=2`` layout stores both admitted memberships for
-        symmetric coverage of the probe-sets-share-no-cell residual.
+        side probes its TWO nearest cells: with a single probe, a near-dup
+        whose top-1 cell differed from its admitted twin's was admitted —
+        the cell-boundary loss the batch family measured dominating and
+        mitigated with mp2.  The ADMITTED side stores one membership per
+        doc by default (a candidate pair is generated when EITHER of the
+        batch doc's probes lands in an admitted membership cell, so
+        catching most boundary-straddlers needs no admitted-side storage
+        change, at ~2× probe cost); ``vindex_probes=2`` stores both
+        admitted memberships for symmetric coverage of the
+        probe-sets-share-no-cell residual.
 
         Shape mirrors the band probe: top-2 assignment against the ≤k-row
         broadcast codebook (two passes, no exploded shuffle —
@@ -1281,18 +1027,8 @@ class CorpusIngestStore:
         reset) checkpoint restarts batch ids at 0, and its early batches
         would silently no-op against the old markers.  Pin the checkpoint on
         first stream start; refuse a different one thereafter."""
-        marker = os.path.join(self.root, "_STREAM_CHECKPOINT")
         norm = os.path.abspath(checkpoint_dir)
-        try:
-            with open(marker) as f:
-                pinned = f.read().strip()
-        except FileNotFoundError:
-            os.makedirs(self.root, exist_ok=True)
-            tmp = marker + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(norm)
-            os.replace(tmp, marker)
-            return
+        pinned = commit.pin(os.path.join(self.root, "_STREAM_CHECKPOINT"), norm)
         if pinned != norm:
             raise ValueError(
                 f"corpus at {self.root} is bound to checkpoint {pinned}; streaming it "

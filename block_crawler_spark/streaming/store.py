@@ -10,7 +10,7 @@ Layout: each table has one declared schema (:data:`STORED_SCHEMAS`) and one
 on-disk layout.  Every version is written ``partitionBy("blockchain")``;
 the three tables that grow with chain history (``tokens``,
 ``token_transfers``, ``owners``) carry a second partition level,
-``cbucket = pmod(xxhash64(collection_id), n_buckets)``.  Reads bind the
+``cbucket = pmod(xxhash64(collection_id), N_BUCKETS)``.  Reads bind the
 declared schema instead of inferring one from the files, so building a
 read starts no Spark job, and :meth:`SilverStore.overwrite` rejects a frame
 whose columns differ from it.
@@ -38,14 +38,14 @@ owner row of a rewritten bucket carries the batch's ``data_version``;
 tokens keep the max of their existing and batch ``data_version``.
 
 Durability: each rewrite lands in a fresh ``v-N`` directory under the table
-path, then a one-line ``_CURRENT`` pointer file is flipped via
-``os.replace`` (atomic on POSIX).  A crash or executor loss at ANY point
-leaves the previous complete version readable — the mini single-writer
-equivalent of a transactional table format's snapshot commit.  Because the
-new version is written *beside* the files being read, the read-modify-write
-needs no lineage break (no localCheckpoint, no executor-memory copy of the
-table).  Superseded versions are pruned only after the pointer flip
-succeeds.
+path, then the one-line ``_CURRENT`` pointer is flipped to it
+(``streaming.commit``, the protocol the corpus store shares).  A crash or
+executor loss at any point leaves the previous complete version readable —
+the single-writer equivalent of a transactional table format's snapshot
+commit.  Because the new version is written *beside* the files being read,
+the read-modify-write needs no lineage break (no localCheckpoint, no
+executor-memory copy of the table).  Superseded versions are pruned only
+after the pointer flip succeeds.
 """
 
 from __future__ import annotations
@@ -69,6 +69,7 @@ from ..schemas import (
     TOKEN_SCHEMA,
     TOKEN_TRANSFER_SCHEMA,
 )
+from . import commit
 
 # The one stored schema per table.  Silver tokens carry the ERC-165 probe
 # result, silver transfers the ERC-1155 batch disambiguator.  New
@@ -96,15 +97,24 @@ KEYS = {
 # just multiply file count)
 _BUCKETED = frozenset({"tokens", "token_transfers", "owners"})
 _CBUCKET = StructField("cbucket", IntegerType(), True)
+# collection buckets per blockchain: the unit a merge reads and rewrites
+N_BUCKETS = 16
 
 
 # Fixed expressions are built once per process (see operators.decode's
 # build-once rule): Columns are unresolved and session-independent.
 @cache
-def _bucket(n_buckets: int) -> Column:
+def _bucket() -> Column:
     """The collection-bucket partition value — a pure function of
     collection_id, so rows re-bucket identically on every rewrite."""
-    return F.pmod(F.xxhash64(F.coalesce(F.col("collection_id"), F.lit(""))), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(F.coalesce(F.col("collection_id"), F.lit(""))), F.lit(N_BUCKETS)).cast("int")
+
+
+def _version(text: str) -> str:
+    """A ``_CURRENT`` pointer's content: the ``v-N`` directory it names."""
+    if not (text.startswith("v-") and text[2:].isdigit()):
+        raise ValueError(f"_CURRENT names no version: {text!r}")
+    return text
 
 
 @cache
@@ -121,7 +131,6 @@ def _stored_casts(table: str) -> tuple[Column, ...]:
 class SilverStore:
     spark: SparkSession
     root: str
-    n_buckets: int = 16
     # blockchain -> (crawler_config pointer stamp, config) of this store's
     # last set_config; see get_config
     _configs: dict = field(default_factory=dict, init=False, repr=False, compare=False)
@@ -129,23 +138,18 @@ class SilverStore:
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _bucket_expr(self) -> Column:
-        return _bucket(self.n_buckets)
-
     def touched_buckets(self, rows: DataFrame) -> list[int]:
         """Distinct cbucket values of ``rows`` (any frame with a
-        ``collection_id``) — at most ``n_buckets`` ints, collected once per
+        ``collection_id``) — at most ``N_BUCKETS`` ints, collected once per
         batch and shared by all three entity-table rewrites."""
-        return sorted(r[0] for r in rows.select(self._bucket_expr()).distinct().collect())
+        return sorted(r[0] for r in rows.select(_bucket()).distinct().collect())
 
     def _current_version(self, table: str) -> str | None:
-        ptr = os.path.join(self._path(table), "_CURRENT")
-        try:
-            with open(ptr) as f:
-                v = f.read().strip()
-            return v or None
-        except OSError:
-            return None
+        """The version ``_CURRENT`` names; ``None`` only while the table
+        has no pointer.  An unreadable pointer raises: taken for "no
+        version", it would make the next overwrite commit a table holding
+        only its own rows and prune the real one."""
+        return commit.read_pointer(os.path.join(self._path(table), "_CURRENT"), _version)
 
     def _frame(self, table: str, row: Sequence | None = None) -> DataFrame:
         """``row`` (or no row) under the table's stored schema, projected
@@ -212,6 +216,9 @@ class SilverStore:
     ) -> None:
         """Snapshot-commit rewrite: write ``v-N+1`` beside the current
         version, flip ``_CURRENT`` atomically, prune superseded versions.
+        ``N`` is the highest version directory on disk, so a version a
+        crashed overwrite left behind is never written into, and is pruned
+        with the superseded ones.
 
         ``df`` must carry exactly the table's stored columns (a
         ``ValueError`` names the difference otherwise: a column the stored
@@ -256,7 +263,7 @@ class SilverStore:
         base = self._path(table)
         os.makedirs(base, exist_ok=True)
         cur = self._current_version(table)
-        nxt = f"v-{(int(cur.split('-')[1]) if cur else 0) + 1}"
+        nxt = commit.next_dir(base, "v")
         bucketed = table in _BUCKETED
         touched = set(touched_blockchains) if touched_blockchains is not None else None
         tb = {int(b) for b in touched_buckets} if bucketed and touched_buckets is not None else None
@@ -266,7 +273,7 @@ class SilverStore:
         # The plan may read the current version's files; they stay in place
         # until after the pointer flip, so no lineage break is needed.
         if bucketed:
-            out = out.select(F.col("*"), self._bucket_expr().alias("cbucket"))
+            out = out.select(F.col("*"), _bucket().alias("cbucket"))
         part_cols = ["blockchain", "cbucket"] if bucketed else ["blockchain"]
         out.write.mode("overwrite").partitionBy(*part_cols).parquet(os.path.join(base, nxt))
         if tb is not None:
@@ -282,13 +289,8 @@ class SilverStore:
                     for b in os.listdir(os.path.join(cur_path, d)):
                         if b.startswith("cbucket=") and int(unquote(b.split("=", 1)[1])) not in tb:
                             self._link_tree(os.path.join(cur_path, d, b), os.path.join(base, nxt, d, b))
-        tmp = os.path.join(base, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(nxt)
-        os.replace(tmp, os.path.join(base, "_CURRENT"))  # atomic commit point
-        for d in os.listdir(base):
-            if d.startswith("v-") and d not in (nxt, cur):
-                shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+        commit.write_pointer(os.path.join(base, "_CURRENT"), nxt)  # the commit point
+        commit.prune(base, "v", (nxt, cur))
 
     @staticmethod
     def _reject_stray_buckets(table: str, version: str, buckets: set[int]) -> None:
@@ -372,7 +374,7 @@ class SilverStore:
         """
         # one row per transfer and per URI event, so its buckets cover both
         meta = silver.token_metadata
-        # one tiny job (≤ n_buckets rows to the driver) turns every rewrite
+        # one tiny job (≤ N_BUCKETS rows to the driver) turns every rewrite
         # below from O(chain) into O(touched collection buckets)
         buckets = self.touched_buckets(meta) if blockchains is not None else None
         self.append_transfers(silver.token_transfers, blockchains=blockchains, buckets=buckets)
@@ -457,7 +459,7 @@ class SilverStore:
         commit by any store on this root changes the stamp."""
         try:
             mtime = os.stat(os.path.join(self._path("crawler_config"), "_CURRENT")).st_mtime_ns
-        except OSError:
+        except FileNotFoundError:
             return None
         return self._current_version("crawler_config"), mtime
 

@@ -212,11 +212,10 @@ def _slip_rates(spark, cents, work) -> dict:
         from block_crawler_spark.operators.ann import centroid_assign_top2, micro_fixed
 
         vecs = batch.select(F.col("doc_id").alias("vid"), micro_fixed(F.col("embedding")).alias("v"))
-        nb = store._effective_vindex_buckets()
         touched = sorted(
             r["b"]
             for r in centroid_assign_top2(vecs, store._centroids())
-            .select(F.pmod(F.col("cid"), F.lit(nb)).alias("b"))
+            .select(store._vbucket_expr().alias("b"))
             .distinct()
             .collect()
         )
@@ -288,12 +287,8 @@ def main() -> int:
                     F.col("doc_id").alias("vid"), micro_fixed(F.col("embedding")).alias("v")
                 )
                 asg = centroid_assign_top2(vecs, store._centroids())
-                nb = store._effective_vindex_buckets()
                 touched = sorted(
-                    r["b"]
-                    for r in asg.select(
-                        F.pmod(F.col("cid"), F.lit(nb)).alias("b")
-                    ).distinct().collect()
+                    r["b"] for r in asg.select(store._vbucket_expr().alias("b")).distinct().collect()
                 )
                 return len(touched), int(store.vindex(buckets=touched).count())
 
@@ -323,7 +318,7 @@ def main() -> int:
                 "probe_admitted": int(total - admitted_seed),
                 "probe_blocked": BATCH_ROWS - int(total - admitted_seed),
                 "vindex_rows": vindex_rows,
-                "vindex_buckets": int(store._effective_vindex_buckets()),
+                "vindex_buckets": store._vindex_buckets(),
                 # the honest scan bounds: admitted rows living in the batch's
                 # touched vbuckets (what the pruned vindex read covers) —
                 # diverse batches still saturate (documented residual),

@@ -14,3 +14,25 @@ def spark():
         s = get_spark("bcs-tests")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def fail_pointer_flip(monkeypatch):
+    """Call the returned function to arm it: the next
+    ``commit.write_pointer`` then raises before it replaces anything, as a
+    commit killed between its data write and its pointer flip would."""
+    import errno
+
+    from block_crawler_spark.streaming import commit
+
+    flip = commit.write_pointer
+    armed: list[bool] = []
+
+    def write_pointer(path: str, text: str) -> None:
+        if armed:
+            armed.clear()
+            raise OSError(errno.EIO, f"killed before flipping {os.path.basename(path)}")
+        flip(path, text)
+
+    monkeypatch.setattr(commit, "write_pointer", write_pointer)
+    return lambda: armed.append(True)

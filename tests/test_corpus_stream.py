@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import pytest
 
-from block_crawler_spark.streaming.corpus import DOC_SCHEMA, CorpusIngestStore
+from block_crawler_spark.streaming import commit
+from block_crawler_spark.streaming import corpus as corpus_mod
+from block_crawler_spark.streaming.corpus import DOC_SCHEMA, INDEX_BUCKETS, CorpusIngestStore
 
 
 def _docs(spark, rows):
@@ -75,6 +77,34 @@ def test_compaction_preserves_corpus_and_replay_markers(spark, tmp_path):
     assert store.compact() == 2
     assert _corpus_ids(store) == [1, 2, 3, 5]
     assert store.compact() == 0  # single live dir: nothing to do
+
+
+def test_compaction_killed_before_its_pointer_flip_reads_each_doc_once(spark, tmp_path, fail_pointer_flip):
+    """A compaction that dies between its snapshot write and the ``_LIVE``
+    flip leaves every document readable exactly once and every replay
+    marker in force; the next compaction commits and reclaims the orphaned
+    snapshot."""
+    import os
+
+    store = CorpusIngestStore(spark, str(tmp_path / "corpus"))
+    store.ingest_batch(_docs(spark, [(1, "one two"), (2, "three four")]), 0)
+    store.ingest_batch(_docs(spark, [(3, "five six")]), 1)
+    docs = store._docs_root()
+
+    fail_pointer_flip()
+    with pytest.raises(OSError, match="killed before flipping _LIVE"):
+        store.compact()
+    assert commit.committed(os.path.join(docs, "compact-1")), "the snapshot write finished"
+    assert _corpus_ids(store) == [1, 2, 3]
+    store.ingest_batch(_docs(spark, [(9, "would resurrect")]), 0)
+    assert _corpus_ids(store) == [1, 2, 3], "re-ingesting a batch id is still a no-op"
+
+    assert store.compact() == 2
+    assert sorted(d for d in os.listdir(docs) if d.startswith("compact-")) == ["compact-2"]
+    assert _corpus_ids(store) == [1, 2, 3]
+    store.ingest_batch(_docs(spark, [(9, "would resurrect")]), 1)
+    store.ingest_batch(_docs(spark, [(4, "FIVE  six")]), 2)
+    assert _corpus_ids(store) == [1, 2, 3]
 
 
 BASE = "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima mike november oscar papa quebec romeo sierra tango"
@@ -301,7 +331,7 @@ def test_index_read_is_side_effect_free_and_heals_lazily(spark, tmp_path):
         "read path must not write the index"
     )
     # bucket-pruned read over the mixed (committed + lazy) set is correct too
-    all_buckets = list(range(reader.index_buckets))
+    all_buckets = list(range(INDEX_BUCKETS))
     assert reader.index(buckets=all_buckets).count() == 2
     # the next ingest heals durably — and still blocks the unindexed dup
     reader.ingest_batch(_docs(spark, [(3, "DELTA  epsilon zeta"), (4, "new text here")]), 2)
@@ -309,37 +339,13 @@ def test_index_read_is_side_effect_free_and_heals_lazily(spark, tmp_path):
     assert os.path.exists(os.path.join(reader._index_root(), "batch-1", "_SUCCESS"))
 
 
-def test_prebucketed_index_layout_migrates_on_ingest(spark, tmp_path):
-    """An index dir written by the pre-round-7 (unbucketed) layout is treated
-    as uncovered: reads project it lazily from docs, and the next ingest
-    rewrites it into the bucketed layout."""
-    import os
-    import shutil
-
-    store = CorpusIngestStore(spark, str(tmp_path / "corpus"))
-    store.ingest_batch(_docs(spark, [(1, "alpha beta gamma")]), 0)
-    # rewrite batch-0's index dir in the legacy flat layout
-    legacy = os.path.join(str(tmp_path), "legacy-proj")
-    store.index().write.mode("overwrite").parquet(legacy)
-    shutil.rmtree(os.path.join(store._index_root(), "batch-0"))
-    shutil.copytree(legacy, os.path.join(store._index_root(), "batch-0"))
-    assert not store._index_committed("batch-0")
-
-    # dedup still works off the lazy docs projection; ingest migrates layout
-    store.ingest_batch(_docs(spark, [(2, "ALPHA beta gamma"), (3, "other words")]), 1)
-    assert _corpus_ids(store) == [1, 3]
-    assert store._index_committed("batch-0")
-    assert any(d.startswith("ibucket=") for d in os.listdir(os.path.join(store._index_root(), "batch-0")))
-
-
 @pytest.mark.slow
-def test_large_batch_skips_forced_broadcast_but_stays_correct(spark, tmp_path):
-    """A batch above broadcast_max_batch_rows must not carry a forced
-    broadcast hint (an availableNow backfill batch can be corpus-scale —
-    ADVICE r6 corpus.py:332); dedup results are identical either way."""
-    store = CorpusIngestStore(
-        spark, str(tmp_path / "corpus"), near_dup=True, broadcast_max_batch_rows=0
-    )
+def test_large_batch_skips_forced_broadcast_but_stays_correct(spark, tmp_path, monkeypatch):
+    """A batch above BROADCAST_MAX_BATCH_ROWS must not carry a forced
+    broadcast hint (an availableNow backfill batch can be corpus-scale);
+    dedup results are identical either way."""
+    monkeypatch.setattr(corpus_mod, "BROADCAST_MAX_BATCH_ROWS", 0)
+    store = CorpusIngestStore(spark, str(tmp_path / "corpus"), near_dup=True)
     store.ingest_batch(_docs(spark, [(1, BASE), (2, "one two three four five six seven")]), 0)
     # exact dup, near dup, and a new doc — all via the unhinted join path
     store.ingest_batch(
@@ -354,24 +360,6 @@ def test_large_batch_skips_forced_broadcast_but_stays_correct(spark, tmp_path):
         1,
     )
     assert _corpus_ids(store) == [1, 2, 5]
-
-
-def test_index_bucket_count_is_pinned_to_the_layout(spark, tmp_path):
-    """Reopening a corpus with a different index_buckets must adopt the
-    on-disk layout's pinned value — otherwise the fp-probe would prune on
-    bucket ids that don't match the written partitioning and silently
-    re-admit seen fingerprints (round-7 review finding)."""
-    import os
-
-    store = CorpusIngestStore(spark, str(tmp_path / "corpus"), index_buckets=32)
-    store.ingest_batch(_docs(spark, [(1, "alpha beta gamma"), (2, "delta epsilon zeta")]), 0)
-    assert os.path.exists(os.path.join(store.root, "_INDEX_BUCKETS"))
-
-    reopened = CorpusIngestStore(spark, str(tmp_path / "corpus"))  # default 16
-    assert reopened._effective_index_buckets() == 32
-    # dedup still correct through the pruned probe on the adopted layout
-    reopened.ingest_batch(_docs(spark, [(3, "ALPHA beta  gamma"), (4, "new words here")]), 1)
-    assert _corpus_ids(reopened) == [1, 2, 4]
 
 
 def test_band_index_is_bucketed_and_near_dup_probe_prunes(spark, tmp_path):
@@ -394,7 +382,7 @@ def test_band_index_is_bucketed_and_near_dup_probe_prunes(spark, tmp_path):
     sigs = minhash_signatures(_docs(spark, [(9, BASE.replace("tango", "zulu"))]).select("doc_id", "text"), materialize=False)
     batch_bands = band_buckets(sigs.select("doc_id", "sig"))
     bb = sorted(r["b"] for r in batch_bands.select(store._bbucket_expr().alias("b")).distinct().collect())
-    assert 0 < len(bb) <= store._effective_index_buckets()
+    assert 0 < len(bb) <= INDEX_BUCKETS
     spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
     try:
         plan = (
@@ -429,8 +417,8 @@ def test_band_index_heals_and_legacy_corpus_adopts_layout(spark, tmp_path):
         _docs(spark, [(3, BASE.replace("tango", "zulu")), (4, "totally different words here now")]), 1
     )
     assert _corpus_ids(reader) == [1, 2, 4]
-    assert reader._index_committed("batch-0", root=reader._bindex_root())
-    assert reader._index_committed("batch-1", root=reader._bindex_root())
+    assert commit.committed(os.path.join(reader._bindex_root(), "batch-0"))
+    assert commit.committed(os.path.join(reader._bindex_root(), "batch-1"))
     # compaction folds the band table with everything else and stays correct
     assert reader.compact() == 2
     reader.ingest_batch(_docs(spark, [(5, BASE.replace("alpha", "yankee"))]), 2)
@@ -756,10 +744,10 @@ def test_semantic_gate_top2_blocks_boundary_straddling_dup(spark, tmp_path):
 
 
 def test_vindex_bucket_count_derives_from_codebook_and_pins(spark, tmp_path):
-    """Round 12: the vector side table's bucket count is its OWN pinned
-    knob, derived from the codebook size (min(K, 1024)) — not inherited
-    from the fp-index's count — so the per-batch probe's partition
-    pruning tracks cells exactly (one dir per cell at derived counts)."""
+    """The vector side table's bucket count derives from the pinned
+    codebook, min(K, 1024), so the per-batch probe's partition pruning
+    tracks cells exactly (one dir per cell), and a reopen without a
+    codebook derives the same count from the pinned one."""
     import os
 
     root = str(tmp_path / "corpus")
@@ -777,10 +765,8 @@ def test_vindex_bucket_count_derives_from_codebook_and_pins(spark, tmp_path):
         ),
         0,
     )
-    with open(os.path.join(root, "_VINDEX_BUCKETS")) as f:
-        assert int(f.read().strip()) == 2  # |codebook| = 2 → one bucket per cell
-    assert store._effective_vindex_buckets() == 2
-    assert store._effective_index_buckets() == 16  # fp index keeps its own knob
+    assert store._vindex_buckets() == 2  # |codebook| = 2 → one bucket per cell
+    assert not os.path.exists(os.path.join(root, "_VINDEX_BUCKETS"))
     # on-disk layout: vbucket=cid partition dirs
     vdirs = set()
     vroot = os.path.join(root, "vindex")
@@ -789,70 +775,17 @@ def test_vindex_bucket_count_derives_from_codebook_and_pins(spark, tmp_path):
             if "=" in sub:
                 vdirs.add(sub)
     assert vdirs == {"vbucket=0", "vbucket=1"}
-    # reopen adopts the pinned value even with a different constructor ask
-    store2 = CorpusIngestStore(spark, root, semantic=True, vindex_buckets=512)
-    assert store2._effective_vindex_buckets() == 2
+    # a reopen with no codebook derives the count from the pinned one
+    store2 = CorpusIngestStore(spark, root, semantic=True)
+    assert store2._vindex_buckets() == 2
     # pruned read returns exactly the requested cell's rows
     assert sorted(r["doc_id"] for r in store2.vindex(buckets=[1]).collect()) == [2]
 
 
-@pytest.mark.slow
-def test_vindex_legacy_layout_adopts_fp_bucket_count(spark, tmp_path):
-    """A pre-r12 store (committed vindex dirs, no _VINDEX_BUCKETS marker)
-    must adopt the count its dirs were actually written with — pruning on
-    re-derived bucket values that don't match the on-disk partitioning
-    would silently re-admit semantic dups."""
-    import os
-
-    root = str(tmp_path / "corpus")
-    # emulate the legacy layout: force the vindex to be written with the
-    # fp-index count (16), then drop the marker as if written pre-r12
-    store = CorpusIngestStore(
-        spark,
-        root,
-        semantic=True,
-        semantic_centroids=_two_cell_codebook(spark),
-        semantic_sqdist_max=100_000_000_000,
-        vindex_buckets=16,
-    )
-    store.ingest_batch(_sem_docs(spark, [(1, "alpha", [0.1, 0.0, 0.0, 0.0])]), 0)
-    os.remove(os.path.join(root, "_VINDEX_BUCKETS"))
-    os.remove(os.path.join(root, "_VINDEX_PROBES"))
-    reopened = CorpusIngestStore(spark, root, semantic=True)
-    assert reopened._effective_vindex_buckets() == 16
-    # and admission against the legacy layout still blocks
-    reopened.ingest_batch(_sem_docs(spark, [(2, "beta", [0.1001, 0.0, 0.0, 0.0])]), 1)
-    assert _corpus_ids(reopened) == [1]
-    # the probes knob gets the SAME legacy protection (r12 review): a
-    # pre-marker layout is single-membership by construction, so a reopen
-    # asking for probes=2 must resolve to 1 — honoring it would heal
-    # crashed dirs into a layout the ingest path never wrote
-    import shutil as _sh
-
-    root2 = str(tmp_path / "corpus2")
-    s = CorpusIngestStore(
-        spark, root2, semantic=True,
-        semantic_centroids=_two_cell_codebook(spark),
-        semantic_sqdist_max=100_000_000_000,
-    )
-    s.ingest_batch(_sem_docs(spark, [(1, "alpha", [0.1, 0.0, 0.0, 0.0])]), 0)
-    os.remove(os.path.join(root2, "_VINDEX_PROBES"))
-    pre_marker = CorpusIngestStore(
-        spark, root2, semantic=True, vindex_probes=2, semantic_sqdist_max=100_000_000_000
-    )
-    assert pre_marker._effective_vindex_probes() == 1
-    # heal reproduces the single-membership layout the dirs were written with
-    before = sorted(tuple(r) for r in pre_marker.vindex().collect())
-    _sh.rmtree(os.path.join(root2, "vindex"))
-    pre_marker.ingest_batch(_sem_docs(spark, [(3, "gamma", [0.0, 0.0, 3.0, 0.0])]), 1)
-    after = sorted(tuple(r) for r in pre_marker.vindex().collect())
-    assert [t for t in after if t[0] != 3] == before
-
-
 def test_semantic_read_paths_never_write(spark, tmp_path):
-    """ADVICE r11: reads are side-effect-free — a store constructed with a
-    codebook whose only activity is READS (vindex scan, corpus scan) must
-    not create root/_centroids or any marker; the first WRITE path pins
+    """Reads are side-effect-free — a store constructed with a codebook
+    whose only activity is READS (vindex scan, corpus scan) must not
+    create root/_centroids or any marker; the first WRITE path pins
     everything."""
     import os
 
@@ -864,10 +797,10 @@ def test_semantic_read_paths_never_write(spark, tmp_path):
     store.corpus().collect()
     store._centroids()
     assert not os.path.exists(os.path.join(root, "_centroids"))
-    assert not os.path.exists(os.path.join(root, "_VINDEX_BUCKETS"))
+    assert not os.path.exists(os.path.join(root, "_VINDEX_PROBES"))
     store.ingest_batch(_sem_docs(spark, [(1, "alpha", [0.1, 0.0, 0.0, 0.0])]), 0)
     assert os.path.exists(os.path.join(root, "_centroids", "_SUCCESS"))
-    assert os.path.exists(os.path.join(root, "_VINDEX_BUCKETS"))
+    assert os.path.exists(os.path.join(root, "_VINDEX_PROBES"))
     # a reopened store with NO constructor codebook reads the pinned one
     store2 = CorpusIngestStore(spark, root, semantic=True)
     assert sorted(r["cid"] for r in store2._centroids().collect()) == [0, 1]
@@ -909,7 +842,7 @@ def test_vindex_probes2_blocks_symmetric_straddler(spark, tmp_path):
     with open(_os.path.join(root2, "_VINDEX_PROBES")) as f:
         assert f.read().strip() == "2"
     s3 = CorpusIngestStore(spark, root2, semantic=True, semantic_sqdist_max=100_000_000_000)
-    assert s3._effective_vindex_probes() == 2
+    assert s3._vindex_probes() == 2
     before = sorted(tuple(r) for r in s3.vindex().collect())
     _sh.rmtree(_os.path.join(root2, "vindex"))
     s3.ingest_batch(_sem_docs(spark, [(9, "fresh niner", [0.0, 0.0, 3.0, 0.0])]), 2)

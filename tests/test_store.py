@@ -15,7 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from block_crawler_spark.streaming.store import STORED_SCHEMAS, SilverStore
+from block_crawler_spark.streaming.store import STORED_SCHEMAS, SilverStore, _bucket
 
 
 def _mk(spark, tmp_path):
@@ -72,6 +72,59 @@ def test_read_survives_torn_write(spark, tmp_path):
     # and the NEXT successful overwrite commits cleanly past the debris
     store.overwrite("crawler_config", _cfg(spark, "a", 1, 30))
     assert store.get_config("a") == (1, 30)
+
+
+def test_overwrite_killed_before_its_pointer_flip_keeps_the_previous_version(spark, tmp_path, fail_pointer_flip):
+    """An overwrite that dies between its data write and the ``_CURRENT``
+    flip leaves the previous version current and reading back identically;
+    the next overwrite commits past the orphaned version and prunes it."""
+    store = _mk(spark, tmp_path)
+    store.set_config("a", 1, 10)
+    store.set_config("b", 1, 20)
+    base = store._path("crawler_config")
+    before = _rows(store, "crawler_config")
+
+    fail_pointer_flip()
+    with pytest.raises(OSError, match="killed before flipping _CURRENT"):
+        store.set_config("a", 1, 30)
+    assert store._current_version("crawler_config") == "v-2"
+    assert os.path.exists(os.path.join(base, "v-3", "_SUCCESS")), "the data write finished"
+    assert _rows(store, "crawler_config") == before
+    assert store.get_config("a") == (1, 10)
+
+    store.set_config("a", 1, 40)
+    assert store._current_version("crawler_config") == "v-4"
+    assert sorted(d for d in os.listdir(base) if d.startswith("v-")) == ["v-2", "v-4"]
+    assert (store.get_config("a"), store.get_config("b")) == ((1, 40), (1, 20))
+
+
+def test_unreadable_current_pointer_fails_the_overwrite_and_loses_nothing(spark, tmp_path, monkeypatch):
+    """A read error on ``_CURRENT`` other than its absence fails the
+    overwrite.  Taken for "no version", it would commit a table holding only
+    the overwrite's own rows and prune the one the pointer named."""
+    import builtins
+    import errno
+
+    store = _mk(spark, tmp_path)
+    store.set_config("ethereum", 1, 10)
+    store.set_config("polygon", 1, 20)
+    before = _rows(store, "crawler_config")
+
+    real_open, failed = builtins.open, []
+
+    def open_failing_once(file, *args, **kwargs):
+        if not failed and os.path.basename(str(file)) == "_CURRENT":
+            failed.append(file)
+            raise OSError(errno.EIO, "Input/output error", str(file))
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", open_failing_once)
+    with pytest.raises(OSError) as err:
+        store.set_config("ethereum", 2, 30)
+    monkeypatch.undo()
+    assert err.value.errno == errno.EIO
+    assert _rows(store, "crawler_config") == before
+    assert store.get_config("polygon") == (1, 20)
 
 
 def test_read_modify_write_same_table(spark, tmp_path):
@@ -140,7 +193,7 @@ def _two_collections_in_distinct_buckets(store, spark):
     of the id — deterministic across runs)."""
     cands = [f"0xc{i:02d}" for i in range(40)]
     df = spark.createDataFrame([(c,) for c in cands], "collection_id string")
-    rows = df.select("collection_id", store._bucket_expr().alias("b")).collect()
+    rows = df.select("collection_id", _bucket().alias("b")).collect()
     first = rows[0]
     other = next(r for r in rows[1:] if r["b"] != first["b"])
     return (first["collection_id"], first["b"]), (other["collection_id"], other["b"])
