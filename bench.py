@@ -16,6 +16,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from block_crawler_spark.plans import memo
 from block_crawler_spark.plans.registry import all_queries
 from block_crawler_spark.session import get_spark
 
@@ -157,55 +158,6 @@ HEADLINE = [
     "dedup_stream_semantic_admission_sim",
 ]
 
-# Session-memoized families (VERDICT r13 "What's wrong" #1 / task 3): for
-# these, best-of-3 measures the WARM (memo-hit) steady state — honest for
-# consumers whose memo feeds real downstream plans, but the record owes the
-# COLD cost a fresh session pays.  Each family lists its HEADLINE members in
-# bench order; the FIRST member's FIRST sample is the cold number (it
-# executes the training/pair/closure build; every later sample and member
-# replays the memo).  Cold attribution follows bench order by design: e.g.
-# the mp2 pair stage's first sample already benefits from the centroid memo
-# the p1 family trained — exactly what a fresh session replaying this bench
-# would pay.
-MEMO_FAMILIES = {
-    "semantic_p1": [
-        "dedup_semantic_cells",
-        "dedup_semantic_keep",
-        "emb_balanced_sample",
-        "dedup_semantic_threshold_sweep",
-    ],
-    "semantic_mp2": [
-        "dedup_semantic_cells_mp2",
-        "dedup_semantic_keep_mp2",
-        "emb_balanced_sample_mp2",
-    ],
-    "pq_codebook": ["emb_pq_trained_topk", "emb_pq_rerank_topk", "emb_ivfpq_rerank_topk"],
-    "residual_codebook": ["emb_ivfpq_residual_trained"],
-    "kmeans_outliers": ["emb_centroid_outliers"],
-    # r14: the four under-valve overlap pair-frame memos (simhash exceeds
-    # the valve and stays live, so warm still pays its DAG)
-    "overlap_pairs": ["dedup_family_overlap"],
-    # r14: the admission sim trains its own admitted-split codebook
-    "semantic_admsim": ["dedup_stream_semantic_admission_sim"],
-    # r14: the minhash pair stage + transitive closure ride session memos
-    # shared by the closure/pagerank consumers (dedup_minhash_lsh_pairs
-    # itself stays live — it returns the pair frame verbatim); members in
-    # HEADLINE order so [0]'s first sample is the cold build
-    "minhash_closure": [
-        "doc_curation_pipeline",  # first memo consumer in HEADLINE order
-        "dedup_cluster_size_hist",
-        "dedup_pair_pagerank",
-        "dedup_rate_by_source",
-        "pipeline_contamination",
-    ],
-    # r14: the five modality pair frames ride session memos (standalone
-    # media pair queries stay live)
-    "modality_pairs": ["media_modality_overlap"],
-    # r14: the OPQ-lite permutation's ≤dim-row moments frame rides a memo
-    # (emb_dim_variance itself stays live)
-    "dim_moments": ["emb_pq_balanced_topk"],
-}
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -229,15 +181,21 @@ def main() -> None:
     timings: dict[str, float] = {}
     query_loads: dict[str, list[float]] = {}
     query_samples: dict[str, list[float]] = {}
+    # (query, sample seconds) of every sample that built build-time memo
+    # entries: a fresh session pays these builds on top of the warm sum
+    memo_builds: list[tuple[str, float]] = []
 
     def sample(name, fn):
         runs, i = 3, 0
         while i < runs:
             load1 = os.getloadavg()[0]
             query_loads.setdefault(name, []).append(round(load1, 1))
+            before = memo.entries().keys()
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             query_samples.setdefault(name, []).append(round(time.time() - t0, 3))
+            if memo.entries().keys() - before:
+                memo_builds.append((name, query_samples[name][-1]))
             if i == runs - 1 and runs == 3 and load1 > ncpu * 0.5:
                 runs = 4  # noisy box: one extra sample
             i += 1
@@ -247,23 +205,12 @@ def main() -> None:
         sample(name, registry[name][0])
 
     total = round(sum(timings.values()), 3)
-    # cold-vs-warm for the memoized families (VERDICT r13 task 3): warm is
-    # what `total` already sums (best-of-N, memo-hit); cold is the family's
-    # first member's FIRST sample — the one that executed the build.  The
-    # extra is what a fresh session pays on top of the warm sum.
-    memo_cold: dict[str, dict[str, float]] = {}
-    for fam, members in MEMO_FAMILIES.items():
-        first = next((m for m in members if query_samples.get(m)), None)
-        if first is None:
-            continue
-        memo_cold[fam] = {
-            "first_member_cold": query_samples[first][0],
-            "first_member_warm": timings[first],
-            "warm_family_sum": round(sum(timings[m] for m in members if m in timings), 3),
-        }
-    cold_extra = round(
-        sum(v["first_member_cold"] - v["first_member_warm"] for v in memo_cold.values()), 3
-    )
+    # cold-vs-warm: warm is what `total` sums (best-of-N, memo hits); the
+    # extra is what each memo-building sample took over its query's best
+    memo_cold: dict[str, list[float]] = {}
+    for name, sec in memo_builds:
+        memo_cold.setdefault(name, []).append(sec)
+    cold_extra = round(sum(sec - timings[name] for name, sec in memo_builds), 3)
     # Telemetry goes to the sidecar file; stdout carries only two compact
     # lines, because the driver keeps a bounded TAIL of stdout and a long
     # final line truncates its own head.  The second-to-last line is a 2-dp
@@ -294,8 +241,8 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf_dir,
                 "n_queries": len(timings),
-                # fresh-session sum = value + this (memoized families' first
-                # builds at their first-sample cost; detail in telemetry)
+                # fresh-session sum = value + this (the memo-building
+                # samples' cost over their query's best; detail in telemetry)
                 "memo_cold_extra_sec": cold_extra,
                 "value_cold": round(total + cold_extra, 3),
             },

@@ -306,19 +306,13 @@ def cmd_force_load(args) -> int:
 
 
 def cmd_tail(args) -> int:
-    from .streaming.stats import StatsService, StatsTicker
     from .streaming.store import SilverStore
     from .streaming.tail import TableChainSource, TailRunner
 
     spark = _spark("tail")
     store = SilverStore(spark, args.silver)
     src = TableChainSource(spark.read.parquet(args.logs), spark.read.parquet(args.blocks))
-    stats = ticker = None
-    if args.stats_interval > 0:
-        # the reference's 60 s stats writer (core/stats.py, crawl.py:72)
-        stats = StatsService()
-        ticker = StatsTicker(stats, interval=args.stats_interval)
-        ticker.start()
+    stats, ticker = _make_ticker(args)
     runner = TailRunner(store, src, blockchain=args.blockchain, trail_blocks=args.trail_blocks,
                         process_interval=args.process_interval, stats=stats)
     try:

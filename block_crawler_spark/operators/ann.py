@@ -475,18 +475,15 @@ def clustered_embeddings(
     jitter_milli: int = 70,
     dim: int = 64,
 ) -> DataFrame:
-    """Deterministic CLUSTERED embedding corpus for recall probes (round 13
-    — VERDICT r12 task 4: the search families' committed constants were
-    tuned on the isotropic testdata corpus, the no-structure worst case,
-    while the r12 clustered fixture changed the semantic family's story
-    0.47 → 1.00).  Every vector is an md5-derived cluster center
-    (``vec_id % n_clusters``, components in [-1, 1]) plus a small
+    """Deterministic CLUSTERED embedding corpus for recall probes: the
+    search families' constants were tuned on the isotropic testdata corpus,
+    the no-structure worst case.  Every vector is an md5-derived cluster
+    center (``vec_id % n_clusters``, components in [-1, 1]) plus a small
     md5-derived jitter (±jitter_milli/1000 per dim), so density modes are
     real (cross-cluster distances ≫ within-cluster) and IVF/PQ/sketch
     structure has something to find.  No RNG anywhere — both the centers
     and the jitter are content-hash functions of the ids, reproducible on
-    any engine (the ``semantic_recall_probe.probe_clustered`` recipe,
-    hoisted here so every probe shares ONE fixture definition).
+    any engine, so every probe shares one fixture definition.
 
     Output schema matches the testdata embeddings table: (vec_id,
     embedding array<float>)."""

@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_path
+from . import memo
 
 BINARY_FEATURE_SCHEMA = StructType(
     [
@@ -1248,19 +1249,14 @@ _MODALITY_FAMILIES = ("exact", "phash", "image", "audio", "video")
 
 
 def _memoized_modality_pairs(spark: SparkSession, sf_dir: str, fam: str, build, knobs: tuple) -> DataFrame:
-    """Session memo for ONE media family's (id_a, id_b) pair set (round 14
-    — the ``_overlap_pair_frames`` pattern applied to the modality matrix:
-    ``media_modality_overlap`` re-ran all five Arrow fingerprint DAGs per
-    invocation, 2.7 s warm at sf0.1).  Key = documents fingerprint + every
-    constant that shapes the family's planted corpus and banding, so a
-    data refresh or knob edit rebuilds (the oracle always recomputes from
-    current rows).  The STANDALONE media pair queries stay live — their
-    bench rows remain engine plans; the cold build cost is surfaced by
-    bench.py's memo_cold record (family ``modality_pairs``)."""
-    from .embed_ops import _emb_fingerprint, _memoized_bounded_frame
-
-    key = ("modpairs", fam, sf_dir, _emb_fingerprint(sf_dir, table="documents")) + knobs
-    return _memoized_bounded_frame(spark, key, build)
+    """One media family's (id_a, id_b) pair set, built once per key through
+    the build-time memo: ``media_modality_overlap`` otherwise re-ran all five
+    Arrow fingerprint DAGs per build.  ``knobs`` are the constants that
+    shape the family's planted corpus and banding.  The standalone media
+    pair queries stay live plans."""
+    return memo.frame(
+        spark, "modpairs", (fam,) + knobs, [table_path(sf_dir, "documents")], build, max_rows=memo.MAX_ROWS
+    )
 
 
 def media_modality_overlap_query(spark: SparkSession, sf_dir: str) -> DataFrame:

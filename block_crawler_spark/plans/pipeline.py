@@ -47,10 +47,10 @@ from .text_ops import (
     QUALITY_SQL,
     STRATIFIED_SAMPLE_SQL,
     _decontaminate_sql,
-    _memoized_minhash_pairs,
     _minhash_sql,
     _quality_budget_cut_sql,
     decontaminate_query,
+    minhash_pair_stage,
     quality_budget_cut_query,
     quality_ppm,
     stratified_sample_query,
@@ -134,13 +134,11 @@ def curated_doc_ids(
         exact_dedup(load_table(spark, sf_dir, "documents"))
         .select(F.col("keep_id").alias("doc_id"))
     )
-    # r14: the near-dup drop list rides the session-memoized pair stage
-    # (text_ops._memoized_minhash_pairs — the same frame the closure
-    # consumers replay), removing the full shingle → signature → band →
-    # Jaccard DAG from every warm pipeline invocation; the cold build is
-    # surfaced by bench.py's memo_cold record (family minhash_closure).
+    # the near-dup drop list is the memoized minhash pair stage (the same
+    # frame the closure consumers replay), so a warm build does not re-run
+    # the shingle → signature → band → Jaccard DAG
     near_drop = (
-        _memoized_minhash_pairs(spark, sf_dir).select(F.col("id_b").alias("doc_id")).distinct()
+        minhash_pair_stage(spark, sf_dir).select(F.col("id_b").alias("doc_id")).distinct()
     )
     clean_src = (
         decontaminate_query(spark, sf_dir)

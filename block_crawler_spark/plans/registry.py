@@ -12,19 +12,11 @@ the bounded-frame materializers (`doc_quality_calibration`,
 `doc_unigram_surprisal`) run Spark jobs
 at DataFrame-CONSTRUCTION time — the deliberate collect/recreate discipline
 that keeps lazily-returned lineage bounded and the CacheManager empty.
-Since round 11 the Lloyd-trained families share a session-scoped CENTROID
-memo (`embed_ops._CENTROID_MEMO`, keyed (sf_dir, k, iters) — the trainer is
-deterministic, so a memo hit replays only the single-pass assignment and
-results are bit-identical): plan-capture and bench passes that invoke the
-whole registry now train each distinct codebook once per session instead of
-once per query.  Round 12 extends the same memo (and eviction policy) to
-the trained-PQ and trained-residual codebooks (`_trained_pq_codebook` /
-`_trained_residual_codebook`, keys "pqcb"/"respqcb") — the last
-per-invocation trainers; encode/ADC replay against bit-identical
-codewords on a hit.  Round 14 adds `dedup_family_overlap` to the eager
-set: its five pair frames go through the bounded-frame memo (keys
-"ovlpairs"), so construction runs the under-valve families' DAGs once
-per (documents fingerprint, knobs) per session.
+Trained models (k-means centroids, PQ and residual codebooks, SQ8 bounds)
+and the pair and closure stages several queries share are built once per
+process by the build-time memo (`plans/memo.py`).  It keys each entry by
+kind, shaping constants and the file state of each input table, and every
+builder is deterministic, so a hit is row-identical to a build.
 """
 
 from __future__ import annotations

@@ -38,7 +38,8 @@ from ..operators.dedup import (
     minhash_signatures,
     simhash64,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_path
+from . import memo
 
 NUM_HASHES = 8
 BAND_SIZE = 2
@@ -225,57 +226,38 @@ def minhash_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _memoized_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized THRESHOLDED MinHash pair stage (round 14, the
-    semantic family's r13 pattern applied to the minhash closure family):
-    ``dedup_cluster_size_hist`` / ``dedup_rate_by_source`` /
-    ``dedup_pair_pagerank`` each replayed the full shingle → signature →
-    band join → exact-Jaccard DAG per invocation (~2.4 s each at sf0.1) to
-    reach a ~256-row pair set.  One pair-stage execution per (documents
-    fingerprint, every pair-shaping knob) per session; the memo key
-    matches the honesty contract of ``_sem_stage_key`` — a data refresh or
-    knob edit rebuilds, and the DuckDB oracle always recomputes from
-    current rows.  ``dedup_minhash_lsh_pairs`` itself stays LIVE (it
-    returns this frame verbatim — the `cells` bench-semantics lesson,
-    VERDICT r13 "What's wrong" #1); the cold build cost is surfaced by
-    bench.py's memo_cold record (family ``minhash_closure``)."""
-    from .embed_ops import _emb_fingerprint, _memoized_bounded_frame
-
-    key = (
-        "mhpairs",
-        sf_dir,
-        _emb_fingerprint(sf_dir, table="documents"),
-        NUM_HASHES,
-        SHINGLE_K,
-        BAND_SIZE,
-        JACCARD_PPM_THRESHOLD,
-    )
-    return _memoized_bounded_frame(spark, key, lambda: minhash_pairs_query(spark, sf_dir))
+_MINHASH_KNOBS = (NUM_HASHES, SHINGLE_K, BAND_SIZE, JACCARD_PPM_THRESHOLD)
 
 
-def _memoized_minhash_comp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized transitive-closure component map over the memoized
-    minhash pairs — (id, comp), bounded by 2·|pairs|; the iterative
-    min-label propagation runs once per (fingerprint, knobs) per session
-    (the ``_memoized_semantic_comp`` shape)."""
-    from ..operators.dedup import dedup_components
-    from .embed_ops import _emb_fingerprint, _memoized_bounded_frame
-
-    key = (
-        "mhcomp",
-        sf_dir,
-        _emb_fingerprint(sf_dir, table="documents"),
-        NUM_HASHES,
-        SHINGLE_K,
-        BAND_SIZE,
-        JACCARD_PPM_THRESHOLD,
-    )
-    return _memoized_bounded_frame(
+def minhash_pair_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The thresholded MinHash pair stage, built once per key through the
+    build-time memo: ``dedup_cluster_size_hist``, ``dedup_rate_by_source``
+    and ``dedup_pair_pagerank`` replay one ~256-row pair set (sf0.1) instead
+    of each re-running the shingle → signature → band join → exact-Jaccard
+    DAG.  ``dedup_minhash_lsh_pairs`` itself returns this frame verbatim and
+    stays a live plan."""
+    return memo.frame(
         spark,
-        key,
-        lambda: dedup_components(
-            _memoized_minhash_pairs(spark, sf_dir).select("id_a", "id_b")
-        ),
+        "mhpairs",
+        _MINHASH_KNOBS,
+        [table_path(sf_dir, "documents")],
+        lambda: minhash_pairs_query(spark, sf_dir),
+        max_rows=memo.MAX_ROWS,
+    )
+
+
+def minhash_closure_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The transitive-closure component map (id, comp) over the minhash pair
+    stage: the iterative min-label propagation runs once per key."""
+    from ..operators.dedup import dedup_components
+
+    return memo.frame(
+        spark,
+        "mhcomp",
+        _MINHASH_KNOBS,
+        [table_path(sf_dir, "documents")],
+        lambda: dedup_components(minhash_pair_stage(spark, sf_dir).select("id_a", "id_b")),
+        max_rows=memo.MAX_ROWS,
     )
 
 
@@ -428,11 +410,11 @@ FROM cand JOIN g x ON x.doc_id = id_a JOIN g y ON y.doc_id = id_b
 
 def dedup_keep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end dedup decision: minhash → LSH → Jaccard ≥ threshold →
-    keep/drop per document (keep-lowest-id rule).  round 14: pairs ride
-    the session memo (:func:`_memoized_minhash_pairs`); the corpus-sized
-    docs join stays live."""
+    keep/drop per document (keep-lowest-id rule).  The pairs come from the
+    build-time memo (:func:`minhash_pair_stage`); the corpus-sized docs
+    join stays live."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _memoized_minhash_pairs(spark, sf_dir)
+    pairs = minhash_pair_stage(spark, sf_dir)
     return dedup_assignments(docs, pairs)
 
 
@@ -455,15 +437,15 @@ def dedup_cc_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation loop of ``operators.dedup.dedup_components``; the oracle
     recomputes the closure with a recursive CTE.
 
-    round 14: the pair stage and the closure ride the session memos
-    (:func:`_memoized_minhash_pairs` / :func:`_memoized_minhash_comp`) —
-    the three closure consumers (this, ``dedup_cluster_size_hist``,
-    ``dedup_rate_by_source``) replay one computed component map per
-    session instead of three full minhash DAGs + three propagation loops;
-    each still performs its own corpus-sized docs join + aggregation, so
-    the bench rows stay real engine plans."""
+    The pair stage and the closure come from the build-time memo
+    (:func:`minhash_pair_stage` / :func:`minhash_closure_stage`): the three
+    closure consumers (this, ``dedup_cluster_size_hist``,
+    ``dedup_rate_by_source``) replay one computed component map instead of
+    three full minhash DAGs and three propagation loops; each still
+    performs its own corpus-sized docs join and aggregation, so the bench
+    rows stay real engine plans."""
     docs = load_table(spark, sf_dir, "documents")
-    return dedup_assignments_cc(docs, None, components=_memoized_minhash_comp(spark, sf_dir))
+    return dedup_assignments_cc(docs, None, components=minhash_closure_stage(spark, sf_dir))
 
 
 def _dedup_cc_sql() -> str:
@@ -2637,12 +2619,12 @@ def pair_pagerank_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone can't distinguish from long chains.  Two unrolled iterations,
     integer-exact; the oracle replays the identical recurrence in SQL.
 
-    round 14: edges come from the session-memoized pair stage
-    (:func:`_memoized_minhash_pairs`) — the two unrolled PageRank
-    iterations (the query's own computation) still execute live."""
+    The edges come from the memoized pair stage
+    (:func:`minhash_pair_stage`); the two unrolled PageRank iterations
+    (the query's own computation) still execute live."""
     from ..operators.dedup import pair_pagerank
 
-    pairs = _memoized_minhash_pairs(spark, sf_dir)
+    pairs = minhash_pair_stage(spark, sf_dir)
     return pair_pagerank(pairs, iters=PR_ITERS).select(
         F.col("node").alias("doc_id"), "deg", F.col("pr").alias("pr_micro")
     )
@@ -3708,11 +3690,11 @@ CHARNGRAM_OVERLAP_PPM = 900_000
 # family).
 _OVERLAP_FAMILIES = ("charngram", "containment", "minhash", "simhash", "winnow")
 
-# The overlap pair frames ride embed_ops._MEMO_MAX_ROWS.  Measured at
-# sf0.1: charngram 255 / containment 256 / minhash 256 / winnow 8 736
-# pairs memoize; simhash (1 079 805 pairs) exceeds the cap and stays a
-# live re-executed plan (the over-cap verdict is cached, so later
-# invocations skip the probe).
+# The overlap pair frames are capped at memo.MAX_ROWS.  Measured at sf0.1:
+# charngram 255 / containment 256 / minhash 256 / winnow 8 736 pairs are
+# memoized; simhash (1 079 805 pairs) is over the cap and stays a live
+# re-executed plan (the over-cap verdict is stored, so later builds skip
+# the probe).
 
 
 def _overlap_pair_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -3723,20 +3705,10 @@ def _overlap_pair_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFram
     contiguous-span duplication surfaces pairs the order-blind set-overlap
     families miss (and vice versa: a doc pair with shuffled token order
     keeps its Jaccard but loses its spans)."""
-    # round 14 (VERDICT r13 task 3, optional): each family's (id_a, id_b)
-    # pair set is session-memoized behind the same 100k-row valve the
-    # semantic stages use — family_overlap was the record's most expensive
-    # query (6.9 s at sf0.1) because every invocation re-ran all five
-    # banded DAGs.  The memo key carries the documents-table fingerprint
-    # plus every constant that shapes each family's pair set, so a data
-    # refresh or knob edit rebuilds (the oracle always recomputes from
-    # current rows).  The STANDALONE registry queries do NOT consume the
-    # memo — their bench rows stay live engine plans (the `cells`
-    # bench-semantics lesson, VERDICT r13 "What's wrong" #1); the cold
-    # build cost here is surfaced by bench.py's memo_cold record.
-    from .embed_ops import _emb_fingerprint, _memoized_bounded_frame
-
-    fp = _emb_fingerprint(sf_dir, table="documents")
+    # Each family's (id_a, id_b) pair set comes from the build-time memo,
+    # keyed by every constant that shapes it: without it every build re-ran
+    # all five banded DAGs.  The standalone registry queries stay live plans.
+    docs = [table_path(sf_dir, "documents")]
     builds = {
         "charngram": (
             lambda: char_ngram_jaccard_query(spark, sf_dir)
@@ -3749,9 +3721,9 @@ def _overlap_pair_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFram
             (CONTAINMENT_THRESHOLD_PPM,),
         ),
         "minhash": (
-            # rides the r14 minhash-pair session memo — one pair-stage
-            # execution shared with the closure/pagerank consumers
-            lambda: _memoized_minhash_pairs(spark, sf_dir).select("id_a", "id_b"),
+            # the memoized minhash pair stage, shared with the closure and
+            # pagerank consumers
+            lambda: minhash_pair_stage(spark, sf_dir).select("id_a", "id_b"),
             (JACCARD_PPM_THRESHOLD,),
         ),
         "simhash": (
@@ -3764,7 +3736,7 @@ def _overlap_pair_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFram
         ),
     }
     return {
-        fam: _memoized_bounded_frame(spark, ("ovlpairs", fam, sf_dir, fp) + knobs, build)
+        fam: memo.frame(spark, "ovlpairs", (fam,) + knobs, docs, build, max_rows=memo.MAX_ROWS)
         for fam, (build, knobs) in builds.items()
     }
 

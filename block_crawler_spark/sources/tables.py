@@ -11,16 +11,18 @@ scan parallelizes across the cluster.  This is the same compaction any
 pushdown still apply to the compacted copy.
 
 Every read is schema-bound: the schema Spark infers for a path is memoised
-per process, keyed by the stat of the file that marks its state (the raw
-file itself, or a compacted copy's ``_SUCCESS``), so building a query over
-unchanged tables starts no schema-inference job.  The files are still
-listed on every load, and a rewritten file has a new stat, so a changed
-table is read under its new schema.
+per process, keyed by the :func:`file_state` of the file that marks its
+state (the raw file itself, or a compacted copy's ``_SUCCESS``), so
+building a query over unchanged tables starts no schema-inference job.  The
+files are still listed on every load, and a rewritten file has a new state,
+so a changed table is read under its new schema.  The build-time memo
+(``plans/memo.py``) keys its entries by the same file state.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,26 +75,44 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    return f"{sf_dir}/{name}.parquet"
+
+
+def file_state(path: str) -> tuple | None:
+    """What changes when ``path`` is rewritten: (inode, mtime in ns, size)
+    of a file; for a directory, that state of every entry by name, since an
+    in-place rewrite of one part file leaves the directory's own stat
+    unchanged.  ``None`` when ``path`` cannot be statted.  Local file
+    systems only: an object store would key on etags."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_mtime_ns, st.st_size)
+        names = sorted(os.listdir(path))
+    except OSError:
+        return None
+    return tuple((name, file_state(os.path.join(path, name))) for name in names)
+
+
 @cache
-def _inferred_schema(spark: SparkSession, path: str, stamp: tuple[int, int, int]) -> StructType:
+def _inferred_schema(spark: SparkSession, path: str, state: tuple) -> StructType:
     """The schema Spark infers for ``path`` (one Spark job), memoised for
-    the file state ``stamp`` (inode, mtime in ns, size)."""
+    its marker's file ``state``."""
     return spark.read.parquet(path).schema
 
 
 def _read(spark: SparkSession, path: str, marker: str) -> DataFrame:
     """``path`` read under the schema inferred while ``marker`` had its
-    current stat."""
-    try:
-        st = os.stat(marker)
-    except OSError:
+    current file state."""
+    state = file_state(marker)
+    if state is None:
         return spark.read.parquet(path)  # Spark's error names the missing path
-    schema = _inferred_schema(spark, path, (st.st_ino, st.st_mtime_ns, st.st_size))
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(_inferred_schema(spark, path, state)).parquet(path)
 
 
 def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
+    path = table_path(sf_dir, name)
     if name == "events":
         # Tolerate TIMESTAMP(NANOS) encodings: the conf makes Spark read a
         # nanos column as bigint instead of refusing the file outright; it is
@@ -105,7 +125,7 @@ def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    src = f"{sf_dir}/{name}.parquet"
+    src = table_path(sf_dir, name)
     try:
         size = os.path.getsize(src)
     except OSError:

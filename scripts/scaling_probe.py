@@ -100,7 +100,7 @@ MEMO_PROBES = {
     # in the list uses the SEED codebook, not the memo)
     "dedup_family_overlap",  # four under-valve pair-frame memos (r14)
     "doc_curation_pipeline",  # FIRST minhash-pair memo consumer in list
-    # order (r14: the near-dup drop list rides _memoized_minhash_pairs) —
+    # order (its near-dup drop list is the memoized minhash_pair_stage) —
     # its first sample per SF pays that build; dedup_pair_pagerank later
     # in the list replays the memo warm
 }

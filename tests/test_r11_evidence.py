@@ -24,16 +24,16 @@ def test_centroid_memo_hit_is_result_identical(spark):
     centroids + single-pass assignment) must produce the same frame for
     every memoized family — the trainer's determinism makes this an exact
     equality, not a tolerance check."""
-    from block_crawler_spark.plans import embed_ops
+    from block_crawler_spark.plans import embed_ops, memo
 
     for fn in (
         embed_ops.semantic_cells_query,
         embed_ops.kmeans_stats_query,
         embed_ops.centroid_outliers_query,
     ):
-        embed_ops._CENTROID_MEMO.clear()
+        memo.clear()
         cold = _frozen(fn(spark, SF).collect())
-        assert embed_ops._CENTROID_MEMO, "cold run must populate the memo"
+        assert memo.entries(), "cold run must populate the memo"
         warm = _frozen(fn(spark, SF).collect())
         assert cold == warm, f"{fn.__name__}: memo hit diverged from training"
 
@@ -47,17 +47,16 @@ def test_semantic_trio_shares_one_training(spark):
     the same dict also memoizes the shared pair stage ("sempairs") and
     closure ("semcomp") — the trio must still converge to exactly one
     entry of EACH kind, never one per consumer."""
-    from block_crawler_spark.plans import embed_ops
+    from block_crawler_spark.plans import embed_ops, memo
 
     def kinds():
         from collections import Counter
 
         return Counter(
-            k[0] if isinstance(k[0], str) and k[0] in ("sempairs", "semcomp") else "centroids"
-            for k in embed_ops._CENTROID_MEMO
+            k[0] if k[0] in ("sempairs", "semcomp") else "centroids" for k in memo.entries()
         )
 
-    embed_ops._CENTROID_MEMO.clear()
+    memo.clear()
     embed_ops.semantic_cells_query(spark, SF).collect()
     assert kinds()["centroids"] == 1
     embed_ops.semantic_keep_query(spark, SF).collect()

@@ -350,7 +350,7 @@ def test_pq_codebook_memo_hit_is_result_identical(spark):
     be EXACTLY equal — the trainer is fixed-point deterministic, so this
     is equality, not tolerance.  Also pins that warm runs add no new memo
     entries (the key really is (family, sf_dir, fingerprint, layout))."""
-    from block_crawler_spark.plans import embed_ops
+    from block_crawler_spark.plans import embed_ops, memo
 
     sf = "/root/testdata/sf0.001"
 
@@ -358,13 +358,13 @@ def test_pq_codebook_memo_hit_is_result_identical(spark):
         return sorted(tuple(r) for r in rows)
 
     for fn in (embed_ops.pq_trained_topk_query, embed_ops.ivfpq_residual_trained_query):
-        embed_ops._CENTROID_MEMO.clear()
+        memo.clear()
         cold = frozen(fn(spark, sf).collect())
-        n_entries = len(embed_ops._CENTROID_MEMO)
+        n_entries = len(memo.entries())
         assert n_entries == 1, f"{fn.__name__}: cold run must memoize its codebook"
         warm = frozen(fn(spark, sf).collect())
         assert cold == warm, f"{fn.__name__}: memo hit diverged from training"
-        assert len(embed_ops._CENTROID_MEMO) == n_entries, "warm run must not re-key"
+        assert len(memo.entries()) == n_entries, "warm run must not re-key"
 
 
 def test_bitsign_packing_edges(spark, tmp_path):

@@ -436,9 +436,8 @@ def test_semantic_stage_memo_hit_is_result_identical(spark):
     for every consumer — pairs (both probe counts), keep verdicts, and the
     balanced sample — and the warm pass actually hits the memo (the
     sempairs/semcomp keys are present and reused)."""
-    from block_crawler_spark.plans import embed_ops
+    from block_crawler_spark.plans import memo
     from block_crawler_spark.plans.embed_ops import (
-        _CENTROID_MEMO,
         balanced_sample_mp_query,
         semantic_cells_mp_query,
         semantic_keep_mp_query,
@@ -448,16 +447,15 @@ def test_semantic_stage_memo_hit_is_result_identical(spark):
     def snap(df):
         return sorted(tuple(r) for r in df.collect())
 
-    # cold: purge every semantic-stage entry, then build
-    for k in [k for k in _CENTROID_MEMO if k[0] in ("sempairs", "semcomp")]:
-        del _CENTROID_MEMO[k]
+    # cold: purge the memo, then build
+    memo.clear()
     cold = {
         "cells_mp2": snap(semantic_cells_mp_query(spark, SF0)),
         "keep1": snap(semantic_keep_query(spark, SF0)),
         "keep2": snap(semantic_keep_mp_query(spark, SF0)),
         "sample2": snap(balanced_sample_mp_query(spark, SF0)),
     }
-    keys = {k[0] for k in _CENTROID_MEMO}
+    keys = {k[0] for k in memo.entries()}
     assert {"sempairs", "semcomp"} <= keys, keys
     # warm: every consumer replays the memoized stages
     warm = {
@@ -473,21 +471,19 @@ def test_semantic_stage_memo_hit_is_result_identical(spark):
     # frame comes back with the same values — and the over-cap VERDICT is
     # cached so later calls skip the take probe (r13 review: the first
     # valve paid the probe's extra stage execution on every call)
-    for k in [k for k in _CENTROID_MEMO if k[0] in ("sempairs", "semcomp")]:
-        del _CENTROID_MEMO[k]
-    orig = embed_ops._MEMO_MAX_ROWS
-    embed_ops._MEMO_MAX_ROWS = 1
+    memo.clear()
+    orig = memo.MAX_ROWS
+    memo.MAX_ROWS = 1
     try:
         live = snap(semantic_cells_mp_query(spark, SF0))
         assert live == cold["cells_mp2"]
-        verdicts = {k: v for k, v in _CENTROID_MEMO.items() if k[0] in ("sempairs", "semcomp")}
-        assert verdicts and all(v == "toobig" for v in verdicts.values()), verdicts
+        verdicts = {k: v for k, v in memo.entries().items() if k[0] in ("sempairs", "semcomp")}
+        assert verdicts and all(v is None for v in verdicts.values()), verdicts
         live2 = snap(semantic_cells_mp_query(spark, SF0))
         assert live2 == cold["cells_mp2"]
     finally:
-        embed_ops._MEMO_MAX_ROWS = orig
-        for k in [k for k in _CENTROID_MEMO if k[0] in ("sempairs", "semcomp")]:
-            del _CENTROID_MEMO[k]
+        memo.MAX_ROWS = orig
+        memo.clear()
 
 
 @pytest.mark.slow

@@ -10,6 +10,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from block_crawler_spark.sources.tables import table_path
+
 SF0 = "/root/testdata/sf0.001"
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -242,17 +244,16 @@ def test_family_overlap_pair_memo_hit_is_result_identical(spark):
     pair sets and must return BIT-IDENTICAL rows; the under-valve
     families hold materialized memo entries while over-valve families
     (simhash at sf0.1) would cache only the 'toobig' verdict."""
-    from block_crawler_spark.plans import embed_ops
+    from block_crawler_spark.plans import memo
     from block_crawler_spark.plans.text_ops import family_overlap_query
 
     first = sorted(map(tuple, family_overlap_query(spark, SF0).collect()))
     # other tests may have populated ovlpairs entries for THEIR sf dirs
     # (full-suite session) — count only this corpus's keys
-    keys = [
-        k for k in embed_ops._CENTROID_MEMO if k and k[0] == "ovlpairs" and k[2] == SF0
-    ]
+    entries = memo.entries()
+    keys = [k for k in entries if k[0] == "ovlpairs" and k[2][0][0] == table_path(SF0, "documents")]
     assert len(keys) == 5, keys  # all five families took the memo path
-    materialized = [k for k in keys if embed_ops._CENTROID_MEMO[k] != "toobig"]
+    materialized = [k for k in keys if entries[k] is not None]
     assert materialized, "at sf0.001 at least the tiny families must memoize"
     second = sorted(map(tuple, family_overlap_query(spark, SF0).collect()))
     assert first == second
@@ -265,7 +266,7 @@ def test_minhash_closure_memo_hit_is_result_identical(spark):
     and a warm memo hit return bit-identical rows for every consumer —
     the closure assignment, the cluster-size histogram, the per-source
     rate, and PageRank — and the warm pass actually hits the memo."""
-    from block_crawler_spark.plans import embed_ops
+    from block_crawler_spark.plans import memo
     from block_crawler_spark.plans.text_ops import (
         dedup_cc_query,
         dedup_cluster_size_hist_query,
@@ -276,15 +277,14 @@ def test_minhash_closure_memo_hit_is_result_identical(spark):
     def snap(df):
         return sorted(tuple(r) for r in df.collect())
 
-    for k in [k for k in embed_ops._CENTROID_MEMO if k[0] in ("mhpairs", "mhcomp")]:
-        del embed_ops._CENTROID_MEMO[k]
+    memo.clear()
     cold = {
         "cc": snap(dedup_cc_query(spark, SF0)),
         "hist": snap(dedup_cluster_size_hist_query(spark, SF0)),
         "rate": snap(dedup_rate_by_source_query(spark, SF0)),
         "pr": snap(pair_pagerank_query(spark, SF0)),
     }
-    keys = {k[0] for k in embed_ops._CENTROID_MEMO}
+    keys = {k[0] for k in memo.entries()}
     assert {"mhpairs", "mhcomp"} <= keys, keys
     warm = {
         "cc": snap(dedup_cc_query(spark, SF0)),
@@ -303,17 +303,15 @@ def test_modality_pair_memo_hit_is_result_identical(spark):
     ``media_modality_overlap`` invocation replays the five memoized pair
     sets and must return BIT-IDENTICAL rows; all five families take the
     memo path and materialize at sf0.001."""
-    from block_crawler_spark.plans import embed_ops
+    from block_crawler_spark.plans import memo
     from block_crawler_spark.plans.media_ops import media_modality_overlap_query
 
-    for k in [k for k in embed_ops._CENTROID_MEMO if k and k[0] == "modpairs"]:
-        del embed_ops._CENTROID_MEMO[k]
+    memo.clear()
     first = sorted(map(tuple, media_modality_overlap_query(spark, SF0).collect()))
-    keys = [
-        k for k in embed_ops._CENTROID_MEMO if k and k[0] == "modpairs" and k[2] == SF0
-    ]
+    entries = memo.entries()
+    keys = [k for k in entries if k[0] == "modpairs" and k[2][0][0] == table_path(SF0, "documents")]
     assert len(keys) == 5, keys
-    assert all(embed_ops._CENTROID_MEMO[k] != "toobig" for k in keys)
+    assert all(entries[k] is not None for k in keys)
     second = sorted(map(tuple, media_modality_overlap_query(spark, SF0).collect()))
     assert first == second
 
