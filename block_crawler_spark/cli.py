@@ -81,7 +81,6 @@ def _spark(app: str):
 
 
 def _bulk_crawl(
-    spark,
     store,
     logs,
     blocks,
@@ -111,7 +110,7 @@ def _bulk_crawl(
     """
     from pyspark.sql import functions as F
 
-    from .plans.crawl import crawl_plan
+    from .streaming.tail import commit_batch
 
     if height is not None:
         logs = logs.filter(F.col("block_number") <= height)
@@ -144,13 +143,7 @@ def _bulk_crawl(
             stats.increment("height_span", hi - (lo or 0) + 1)
 
     if chunk_size is None:
-        silver = crawl_plan(spark, logs, blocks, blockchain=blockchain, data_version=data_version)
-        try:
-            # the retry-safe sink sequence lives in ONE place — see its docstring
-            store.apply_silver(silver, data_version, blockchains=[blockchain])
-        finally:
-            silver.release()
-        store.set_config(blockchain, data_version, top)
+        commit_batch(store, logs, blocks, blockchain, data_version, top)
         if stats is not None and top is not None:
             # span from where the bronze actually starts — high-block
             # bronze (18M+) must not report an ~18M span for a 1k-block load
@@ -173,14 +166,7 @@ def _bulk_crawl(
         hi = min(lo + chunk_size - 1, top)
         chunk_logs = logs.filter(F.col("block_number").between(lo, hi))
         chunk_blocks = blocks.filter(F.col("number").between(lo, hi))
-        silver = crawl_plan(
-            spark, chunk_logs, chunk_blocks, blockchain=blockchain, data_version=data_version
-        )
-        try:
-            store.apply_silver(silver, data_version, blockchains=[blockchain])
-        finally:
-            silver.release()
-        store.set_config(blockchain, data_version, hi)  # commit BEFORE the next chunk
+        commit_batch(store, chunk_logs, chunk_blocks, blockchain, data_version, hi)  # BEFORE the next chunk
         tick(lo, hi)
         done = hi
         lo = hi + 1
@@ -213,7 +199,7 @@ def cmd_crawl(args) -> int:
     try:
         with GracefulStop() as stop:
             top = _bulk_crawl(
-                spark, store, logs, blocks, args.blockchain, dv, height=None,
+                store, logs, blocks, args.blockchain, dv, height=None,
                 chunk_size=args.chunk_size, signals=stop, stats=stats,
             )
     finally:
@@ -251,7 +237,7 @@ def cmd_load(args) -> int:
     try:
         with GracefulStop() as stop:
             top = _bulk_crawl(
-                spark, store, logs, blocks, args.blockchain, dv, height=args.height,
+                store, logs, blocks, args.blockchain, dv, height=args.height,
                 chunk_size=args.chunk_size, signals=stop,
                 restart=args.increment_data_version, stats=stats,
             )

@@ -10,10 +10,15 @@ from SURVEY §3.2.  ``max_by``/``min_by`` on the total event order
 applying the same transfers in any order yields the same state.  That is the
 engine's late-data story (ST4) — no watermark drops, versions win.
 
+A1 (token state) and A5 (owner balances) have one aggregate each, the
+store's (:func:`token_state_from_silver`, :func:`owner_balances_from_silver`):
+the registry's :func:`fold_token_state` and verify reach them through
+projections of decoded rows, so every reader applies the writer's definition.
+
 Input contract: a decoded-transfers DataFrame as produced by
 ``operators.decode.decode_token_transfers`` with columns
 ``blockchain, collection_id, specification, token_id_hex, transaction_type,
-from_, to_, quantity (Decimal38), attribute_version (long),
+from_, to_, quantity_hex, quantity (Decimal38), attribute_version (long),
 attribute_version_hex, block_number, timestamp?``.
 """
 
@@ -26,6 +31,9 @@ from pyspark.sql import functions as F
 
 from ..functions.hexint import ZERO_ADDRESS, hex_to_dec
 from ..schemas import SPEC_ERC721, TX_BURN, TX_MINT, TX_TRANSFER
+
+_TOKEN_KEYS = ("blockchain", "collection_id", "token_id_hex")
+_METADATA = ("specification", "metadata_url", "metadata_url_version_hex", "data_version")
 
 
 def _null_if_any_overflow(sum_expr, qty_col="quantity"):
@@ -68,60 +76,45 @@ def fold_token_state(transfers: DataFrame, uri_updates: DataFrame | None = None)
       mint/transfer event.
     * ``metadata_url`` = highest-version URI event for the token, if any.
 
-    One shuffle on the token key; URI updates join on the same key (shuffle
-    reused under AQE) — no per-collection loops.
+    A projection into the store's fold (:func:`token_state_from_silver`'s
+    group-by): each decoded transfer becomes one silver-shaped row that also
+    carries its token's ``specification``, each URI event one metadata row.
+    URI rows without a ``blockchain`` column apply to their token on every
+    chain the transfers carry it on.
     """
-    is_mint = F.col("transaction_type") == TX_MINT
-    is_burn = F.col("transaction_type") == TX_BURN
-    own_event = F.col("transaction_type").isin(TX_MINT, TX_TRANSFER)
-
-    # signed supply delta; NULL only when a mint/burn quantity overflowed —
-    # a transfer's quantity never affects supply, so it cannot poison the sum
-    t = transfers.withColumn(
-        "_signed",
-        F.when(is_mint, F.col("quantity"))
-        .when(is_burn, -F.col("quantity"))
-        .otherwise(F.lit(0).cast("decimal(38,0)")),
-    )
-
-    folded = _grouped_by_token(t, "blockchain", "collection_id", "token_id_hex").agg(
-        F.first("specification").alias("specification"),
-        _null_if_any_overflow(F.sum("_signed"), "_signed").alias("quantity"),
-        F.min_by(F.when(is_mint, F.col("to_")), F.when(is_mint, F.col("attribute_version"))).alias("original_owner"),
-        F.min(F.when(is_mint, F.col("block_number"))).alias("mint_block"),
-        F.min(F.when(is_mint, F.col("timestamp"))).alias("mint_timestamp")
-        if "timestamp" in t.columns
-        else F.lit(None).cast("long").alias("mint_timestamp"),
-        F.max_by(F.when(own_event, F.col("to_")), F.when(own_event, F.col("attribute_version"))).alias("_last_recipient"),
-        F.max(F.when(own_event, F.col("attribute_version"))).alias("_owner_version"),
-    ).drop("_gh")
-
-    folded = (
-        folded.withColumn(
-            "current_owner",
-            F.when(F.col("specification") == SPEC_ERC721, F.col("_last_recipient")),
-        )
-        .withColumn(
-            "current_owner_version_hex",
-            F.when(
-                F.col("specification") == SPEC_ERC721,
-                F.lpad(F.lower(F.hex(F.col("_owner_version"))), 40, "0"),
-            ),
-        )
-        .drop("_last_recipient", "_owner_version")
-    )
-
+    transfer_cols, uri_cols = _decoded_token_cols("timestamp" in transfers.columns)
+    rows = transfers.select(*transfer_cols)
     if uri_updates is not None:
-        latest_uri = uri_updates.groupBy("collection_id", "token_id_hex").agg(
-            F.max_by("metadata_url", "attribute_version").alias("metadata_url"),
-            F.lpad(F.lower(F.hex(F.max("attribute_version"))), 40, "0").alias("metadata_url_version_hex"),
-        )
-        folded = folded.join(latest_uri, ["collection_id", "token_id_hex"], "left")
-    else:
-        folded = folded.withColumn("metadata_url", F.lit(None).cast("string")).withColumn(
-            "metadata_url_version_hex", F.lit(None).cast("string")
-        )
-    return folded
+        if "blockchain" not in uri_updates.columns:
+            chains = transfers.select(*_TOKEN_KEYS).distinct()
+            uri_updates = uri_updates.join(chains, ["collection_id", "token_id_hex"])
+        rows = rows.unionByName(uri_updates.select(*uri_cols), allowMissingColumns=True)
+    return _fold_token_rows(rows).drop("data_version")
+
+
+@cache
+def _decoded_token_cols(timestamp: bool) -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """:func:`fold_token_state`'s projections: of a decoded transfer, then of
+    a decoded URI event."""
+    none = F.lit(None).cast("string")
+    no_version = F.lit(None).cast("long").alias("data_version")
+    transfer = (
+        *(F.col(c) for c in (*_TOKEN_KEYS, "transaction_type", "to_", "attribute_version_hex")),
+        F.col("block_number").alias("block_id"),
+        F.col("timestamp") if timestamp else F.lit(None).cast("long").alias("timestamp"),
+        F.col("quantity_hex"),
+        F.col("specification"),
+        none.alias("metadata_url"),
+        none.alias("metadata_url_version_hex"),
+        no_version,
+    )
+    uri = (
+        *(F.col(c) for c in _TOKEN_KEYS),
+        F.col("metadata_url"),
+        F.col("attribute_version_hex").alias("metadata_url_version_hex"),
+        no_version,
+    )
+    return transfer, uri
 
 
 def fold_erc721_owners(transfers: DataFrame) -> DataFrame:
@@ -173,7 +166,7 @@ def _delta_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
         .when(is_burn, F.array(minus))
         .otherwise(F.array(plus, minus))
     )
-    keys = (F.col("blockchain"), F.col("collection_id"), F.col("token_id_hex"))
+    keys = tuple(F.col(c) for c in _TOKEN_KEYS)
     exploded = (*keys, F.explode(F.filter(sides, lambda s: s["account"] != zero)).alias("d"))
     return exploded, (*keys, F.col("d.account"), F.col("d.delta"))
 
@@ -209,26 +202,9 @@ def fold_owners(transfers: DataFrame) -> DataFrame:
     return fold_erc721_owners(transfers).unionByName(fold_erc1155_balances(transfers))
 
 
-def fold_owner_deltas(transfers: DataFrame) -> DataFrame:
-    """A5 — incremental ± owner deltas over ALL transfers (both specs).
-
-    The reference's incremental crawl path applies signed adds per transfer
-    event to the owner table (``nft/consumers.py:153-190``): recipient +qty,
-    sender −qty, zero-address sides skipped.  For ERC-721 this converges to
-    the same ownership as the A2 snapshot fold (each transfer moves a +1),
-    so chunked tail ingestion equals one-shot bulk crawl — tested as the
-    engine's core incremental invariant.
-    """
-    deltas = _signed_delta_rows(transfers)
-    any_null = F.max(F.col("delta").isNull().cast("int")) == 1
-    return _grouped_by_token(deltas, "blockchain", "account", "collection_id", "token_id_hex").agg(
-        F.when(any_null, F.lit(None).cast("decimal(38,0)")).otherwise(F.sum("delta")).alias("quantity")
-    ).drop("_gh")
-
-
 def owner_balances_from_silver(transfers_silver: DataFrame) -> DataFrame:
-    """Recompute owner balances from the IDEMPOTENT silver ``token_transfers``
-    table — the retry-safe owners path (ADVICE r1, tail.py:84).
+    """A5 — owner balances recomputed from the IDEMPOTENT silver
+    ``token_transfers`` table: the retry-safe owners path.
 
     Re-adding per-batch ± deltas is not idempotent: a crash between the
     owners merge and the ``last_block_id`` commit re-applies the batch and
@@ -243,25 +219,25 @@ def owner_balances_from_silver(transfers_silver: DataFrame) -> DataFrame:
     converges to the same ownership as the LWW snapshot fold, so one uniform
     recompute serves both specs.  Caveat (documented contract): balances are
     correct relative to the history PRESENT in ``token_transfers`` — seeding
-    a tail mid-chain without backfilling transfers under-counts, exactly as
-    the delta path did.
+    a tail mid-chain without backfilling transfers under-counts.
+
+    Only the token keys, ``transaction_type``, ``from_``, ``to_`` and
+    ``quantity_hex`` are read, so decoded transfers fold here as their
+    committed rows do (verify relies on it).
     """
-    return _balances(_signed_delta_rows(transfers_silver.select(F.col("*"), _silver_quantity())))
+    return _balances(_signed_delta_rows(transfers_silver.select(*_delta_inputs())))
 
 
 @cache
-def _silver_quantity() -> Column:
-    return hex_to_dec(F.col("quantity_hex")).alias("quantity")
-
-
-_TOKEN_KEYS = ("blockchain", "collection_id", "token_id_hex")
-_METADATA = ("specification", "metadata_url", "metadata_url_version_hex", "data_version")
+def _delta_inputs() -> tuple[Column, ...]:
+    quantity = hex_to_dec(F.col("quantity_hex")).alias("quantity")
+    return (*(F.col(c) for c in (*_TOKEN_KEYS, "transaction_type", "from_", "to_")), quantity)
 
 
 def token_state_from_silver(transfers_silver: DataFrame, *metadata: DataFrame) -> DataFrame:
-    """Recompute token state (A1) from the IDEMPOTENT silver
-    ``token_transfers`` table — the retry-safe tokens path, exactly
-    parallel to :func:`owner_balances_from_silver`.
+    """A1 — token state recomputed from the IDEMPOTENT silver
+    ``token_transfers`` table: the retry-safe tokens path, exactly parallel
+    to :func:`owner_balances_from_silver`.
 
     The additive ``quantity`` merge in ``token_state_merge`` double-counts
     when the same block range is applied twice (a crashed-and-retried
@@ -269,45 +245,70 @@ def token_state_from_silver(transfers_silver: DataFrame, *metadata: DataFrame) -
     the deduped transfers table makes the tokens write a pure function of
     committed history.
 
-    Without ``metadata`` only the transfer-derived fields are produced,
-    with the last recipient and its version as ``_last_recipient`` /
-    ``_owner_version_hex``.  Each ``metadata`` frame holds token keys with
-    the fields that are not functions of the transfer stream —
+    Each of the one or more ``metadata`` frames holds token keys with the
+    fields that are not functions of the transfer stream —
     ``specification`` (an ERC-165 probe result, constant per token), the
     ``metadata_url`` pair and ``data_version`` — several rows per token
     allowed (stored ``tokens`` rows qualify).  They are folded in the SAME
-    group-by as the transfers (one shuffle, no join), and the output is
-    one stored ``tokens`` row per token that has a committed transfer:
-    ``specification`` and ``data_version`` are the maxima, the
-    ``metadata_url`` pair follows K3 (:func:`_silver_token_rows`), and
-    ``current_owner`` is the last recipient of an ERC-721 token (NULL for
-    ERC-1155).
-
-    The silver table's 40-char zero-padded ``attribute_version_hex`` is the
-    ordering key directly — lexicographic == numeric by construction
-    (``oracles.attribute_version_hex``), so no hex→decimal round trip.
+    group-by as the transfers (:func:`_fold_token_rows`: one shuffle, no
+    join).
     """
-    transfer_aggs, signed = _silver_token_aggs()
-    if not metadata:
-        rows = transfers_silver.select(F.col("*"), signed)
-        return _grouped_by_token(rows, *_TOKEN_KEYS).agg(*transfer_aggs).drop("_gh")
-    transfer_cols, metadata_cols, metadata_aggs, transferred, out = _silver_token_rows()
+    transfer_cols, metadata_cols = _silver_token_rows()
     rows = transfers_silver.select(*transfer_cols)
     for m in metadata:
         rows = rows.unionByName(m.select(*metadata_cols), allowMissingColumns=True)
-    folded = _grouped_by_token(rows.select(F.col("*"), signed), *_TOKEN_KEYS).agg(*transfer_aggs, *metadata_aggs)
+    return _fold_token_rows(rows)
+
+
+@cache
+def _silver_token_rows() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """:func:`token_state_from_silver`'s transfer and metadata projections."""
+    transfer_cols = tuple(
+        F.col(c)
+        for c in (*_TOKEN_KEYS, "transaction_type", "to_", "attribute_version_hex", "block_id", "timestamp", "quantity_hex")
+    )
+    return transfer_cols, tuple(F.col(c) for c in (*_TOKEN_KEYS, *_METADATA))
+
+
+def _fold_token_rows(rows: DataFrame) -> DataFrame:
+    """The one A1 group-by.  ``rows`` mixes transfer rows (a version hex,
+    ``transaction_type``, ``to_``, ``quantity_hex``, ``block_id``,
+    ``timestamp``) and metadata rows (``specification``, the
+    ``metadata_url`` pair, ``data_version``) of each token; the output is
+    one stored ``tokens`` row per token that has a transfer.
+    ``specification`` and ``data_version`` are the maxima, the
+    ``metadata_url`` pair follows K3 (:func:`_token_fold`), and
+    ``current_owner`` is the last recipient of an ERC-721 token (NULL for
+    ERC-1155).
+
+    The 40-char zero-padded ``attribute_version_hex`` is the ordering key
+    directly — lexicographic == numeric by construction
+    (``oracles.attribute_version_hex``), so no hex→decimal round trip."""
+    signed, aggs, transferred, out = _token_fold()
+    folded = _grouped_by_token(rows.select(F.col("*"), signed), *_TOKEN_KEYS).agg(*aggs)
     return folded.filter(transferred).select(*out)
 
 
 @cache
-def _silver_token_aggs() -> tuple[tuple[Column, ...], Column]:
-    """(transfer-derived aggregates, the signed supply delta they sum)."""
+def _token_fold() -> tuple[Column, tuple[Column, ...], Column, tuple[Column, ...]]:
+    """:func:`_fold_token_rows`' signed supply delta, aggregates,
+    has-a-transfer predicate and output columns.
+
+    K3 rule (``merge.metadata_url_upsert``): only rows that CARRY URI data
+    compete — a NULL ordering key makes ``max_by`` skip the row, so a
+    higher-data_version batch with no URI event can never clobber an
+    existing metadata_url to NULL.  "Carries URI data" means EITHER field:
+    the A4 backfill (``fetch_token_uris``) sets a URL with no version hex,
+    and such a row must still compete (with an empty version) rather than
+    be silently dropped.  Transfer rows carry neither field.
+    """
     is_mint = F.col("transaction_type") == TX_MINT
     is_burn = F.col("transaction_type") == TX_BURN
     own_event = F.col("transaction_type").isin(TX_MINT, TX_TRANSFER)
     qty = hex_to_dec(F.col("quantity_hex"))
     # a row without a transaction_type (a metadata row) falls to the 0 branch
     signed = F.when(is_mint, qty).when(is_burn, -qty).otherwise(F.lit(0).cast("decimal(38,0)")).alias("_signed")
+    carries_uri = F.col("metadata_url").isNotNull() | F.col("metadata_url_version_hex").isNotNull()
     aggs = (
         _null_if_any_overflow(F.sum("_signed"), "_signed").alias("quantity"),
         F.min_by(F.when(is_mint, F.col("to_")), F.when(is_mint, F.col("attribute_version_hex"))).alias(
@@ -319,31 +320,6 @@ def _silver_token_aggs() -> tuple[tuple[Column, ...], Column]:
             "_last_recipient"
         ),
         F.max(F.when(own_event, F.col("attribute_version_hex"))).alias("_owner_version_hex"),
-    )
-    return aggs, signed
-
-
-@cache
-def _silver_token_rows() -> tuple[tuple[Column, ...], tuple[Column, ...], tuple[Column, ...], Column, tuple[Column, ...]]:
-    """The metadata half of :func:`token_state_from_silver`: the transfer
-    and metadata projections it unions, the metadata aggregates, the
-    has-a-transfer predicate and the stored ``tokens`` columns it ends with.
-
-    K3 rule (``merge.metadata_url_upsert``): only rows that CARRY URI data
-    compete — a NULL ordering key makes ``max_by`` skip the row, so a
-    higher-data_version batch with no URI event can never clobber an
-    existing metadata_url to NULL.  "Carries URI data" means EITHER field:
-    the A4 backfill (``fetch_token_uris``) sets a URL with no version hex,
-    and such a row must still compete (with an empty version) rather than
-    be silently dropped.  Transfer rows carry neither field.
-    """
-    transfer_cols = tuple(
-        F.col(c)
-        for c in (*_TOKEN_KEYS, "transaction_type", "to_", "attribute_version_hex", "block_id", "timestamp", "quantity_hex")
-    )
-    metadata_cols = tuple(F.col(c) for c in (*_TOKEN_KEYS, *_METADATA))
-    carries_uri = F.col("metadata_url").isNotNull() | F.col("metadata_url_version_hex").isNotNull()
-    metadata_aggs = (
         F.max("specification").alias("specification"),
         F.max_by(
             F.struct("metadata_url", "metadata_url_version_hex"),
@@ -353,7 +329,7 @@ def _silver_token_rows() -> tuple[tuple[Column, ...], tuple[Column, ...], tuple[
             ),
         ).alias("_meta"),
         F.max("data_version").alias("data_version"),
-        # metadata rows carry no version hex, every committed transfer does
+        # metadata rows carry no version hex, every transfer does
         F.count("attribute_version_hex").alias("_transfers"),
     )
     erc721 = F.col("specification") == SPEC_ERC721
@@ -367,7 +343,7 @@ def _silver_token_rows() -> tuple[tuple[Column, ...], tuple[Column, ...], tuple[
         F.col("data_version"),
         F.col("specification"),
     )
-    return transfer_cols, metadata_cols, metadata_aggs, F.col("_transfers") > 0, out
+    return signed, aggs, F.col("_transfers") > 0, out
 
 
 def transfers_to_silver(transfers: DataFrame, data_version: int, blockchain: str | None = None) -> DataFrame:
@@ -381,7 +357,7 @@ def transfers_to_silver(transfers: DataFrame, data_version: int, blockchain: str
     if blockchain is not None and "blockchain" not in t.columns:
         t = t.withColumn("blockchain", F.lit(blockchain))
     keys, timestamp, no_timestamp, rest = _silver_transfer_cols()
-    return t.dropDuplicates(list(_SILVER_TRANSFER_KEY)).select(
+    return dedup_transfers(t).select(
         *keys,
         timestamp if "timestamp" in t.columns else no_timestamp,
         *rest,
@@ -390,6 +366,12 @@ def transfers_to_silver(transfers: DataFrame, data_version: int, blockchain: str
 
 
 _SILVER_TRANSFER_KEY = ("blockchain", "collection_id", "attribute_version_hex", "token_id_hex", "batch_index")
+
+
+def dedup_transfers(transfers: DataFrame) -> DataFrame:
+    """Decoded transfers with one row per silver transfer key: the rows the
+    store commits, however often bronze repeats a log."""
+    return transfers.dropDuplicates(list(_SILVER_TRANSFER_KEY))
 
 
 @cache

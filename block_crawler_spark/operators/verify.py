@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .decode import decode_token_transfers
-from .folds import fold_owner_deltas, fold_token_state
+from .folds import dedup_transfers, fold_token_state, owner_balances_from_silver
 
 # J2 match key: (block, tx index, log index) + token for 1155 batch items
 # (verify.py:810-817) + batch_index to disambiguate same-token-twice batches.
@@ -65,10 +65,17 @@ def reconcile_transfers(chain_logs: DataFrame, db_transfers: DataFrame) -> DataF
     ).filter(F.col("error").isNotNull())
 
 
+def _committed_transfers(chain_logs: DataFrame) -> DataFrame:
+    """The transfers the store commits for ``chain_logs``: decoded, then
+    deduplicated on the silver transfer key, so a log repeated in bronze
+    counts once here as it does in the store."""
+    return dedup_transfers(decode_token_transfers(chain_logs).withColumn("blockchain", F.lit("_")))
+
+
 def reconcile_tokens(chain_logs: DataFrame, db_tokens: DataFrame) -> DataFrame:
-    """J3 — recompute token state from logs; compare quantity/owners."""
-    transfers = decode_token_transfers(chain_logs).withColumn("blockchain", F.lit("_"))
-    expected = fold_token_state(transfers).select(
+    """J3 — recompute token state from logs with the store's A1 fold;
+    compare quantity/owners."""
+    expected = fold_token_state(_committed_transfers(chain_logs)).select(
         "collection_id",
         "token_id_hex",
         F.col("quantity").alias("exp_quantity"),
@@ -92,18 +99,16 @@ def reconcile_tokens(chain_logs: DataFrame, db_tokens: DataFrame) -> DataFrame:
 
 
 def reconcile_balances(chain_logs: DataFrame, db_owners: DataFrame) -> DataFrame:
-    """J5-style owner check: recomputed ± balances vs stored owner rows.
+    """J5-style owner check: balances recomputed from logs vs stored owner
+    rows.
 
-    Recomputes with the A5 delta fold over ALL transfers (both specs) —
-    exactly what the owner sinks apply — so a freshly-ingested store
-    reconciles cleanly regardless of which path (bulk A2∪A3 snapshot or
-    incremental deltas) wrote it; for consistent chains the two coincide.
+    Recomputes with the store's A5 fold (``folds.owner_balances_from_silver``)
+    over the transfers it commits, both specs, so the check applies the
+    definition the owners writer applies; zero balances have no row on
+    either side.
     """
-    transfers = decode_token_transfers(chain_logs).withColumn("blockchain", F.lit("_"))
-    recomputed = fold_owner_deltas(transfers)
-    expected = (
-        recomputed.filter(F.col("quantity").isNull() | (F.col("quantity") != 0))
-        .select("collection_id", "token_id_hex", "account", F.col("quantity").alias("exp_quantity"))
+    expected = owner_balances_from_silver(_committed_transfers(chain_logs)).select(
+        "collection_id", "token_id_hex", "account", F.col("quantity").alias("exp_quantity")
     )
     stored = db_owners.select("collection_id", "token_id_hex", "account", "quantity")
     joined = expected.join(stored, ["collection_id", "token_id_hex", "account"], "full_outer")

@@ -6,7 +6,7 @@ time and replays each collection's history with its own RPC scan
 (`nft/bin/load.py:202-280`), this plan does **one pass**: decode all transfer
 logs, derive collections from creation receipts, then broadcast-join the
 (small) collections dimension onto the (huge) transfers fact and run the
-A1–A3 folds as global group-bys.  The per-collection sequential folds become
+A1 and A5 folds as global group-bys.  The per-collection sequential folds become
 one shuffle keyed by (blockchain, collection_id, token_id_hex).
 
 Scale notes (100 TB target):
@@ -17,8 +17,10 @@ Scale notes (100 TB target):
   which AQE will plan shuffle-side with both inputs pre-bucketable by
   block_number;
 - collections is dimension-sized (millions, not billions) → broadcast join;
-- every sink write goes through the version-guarded merges in
-  ``operators.merge``, so re-running any block range is idempotent.
+- transfers are appended under their idempotent key, and the store rebuilds
+  tokens and owners of the touched collection buckets from the committed
+  transfers (``SilverStore.apply_silver``), so re-running any block range
+  is idempotent.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hexint import hex_to_dec
 from ..operators.decode import decodable_logs, decode_token_transfers, decode_uri_updates
-from ..operators.folds import fold_owners, fold_token_state, transfers_to_silver
+from ..operators.folds import owner_balances_from_silver, token_state_from_silver, transfers_to_silver
 from ..schemas import SPEC_ERC721, SPEC_ERC1155
 
 
@@ -46,28 +48,25 @@ class SilverTables:
 
     @property
     def tokens(self) -> DataFrame:
-        """The token-state fold (A1, URI events joined on), built on
-        access: the store rebuilds tokens from committed transfers and
-        :attr:`token_metadata`, so only readers of the fold itself pay for
-        planning it."""
-        return fold_token_state(self.transfers, self.uri_updates).withColumn(
-            "data_version", F.lit(self.data_version)
-        )
+        """The store's token-state fold over this batch's transfers and
+        metadata rows: what ``SilverStore.apply_silver`` writes into an
+        empty store's ``tokens``."""
+        return token_state_from_silver(self.token_transfers, self.token_metadata)
 
     @property
     def owners(self) -> DataFrame:
-        """The snapshot owners fold (A2 ∪ A3), built on access: the store
-        rebuilds owners from committed transfers, so only readers of the
-        fold itself pay for planning it."""
-        return fold_owners(self.transfers).withColumn("data_version", F.lit(self.data_version))
+        """The store's balance fold over this batch's transfers: what
+        ``SilverStore.apply_silver`` writes into an empty store's
+        ``owners``."""
+        return owner_balances_from_silver(self.token_transfers).withColumn("data_version", F.lit(self.data_version))
 
     @property
     def token_metadata(self) -> DataFrame:
         """The batch's metadata rows for ``SilverStore.rebuild_tokens``: one
         per transfer, carrying its token's ``specification``, and one per
-        URI event, carrying its URL under the event's version hex.  Unlike
-        :attr:`tokens`, a URI event counts whether or not the batch also
-        transfers its token."""
+        URI event, carrying its URL under the event's version hex.  A URI
+        event counts whether or not the batch also transfers its token: the
+        store folds it with the token's committed transfers."""
         specs, uris = _metadata_cols()
         dv = F.lit(self.data_version).cast("long").alias("data_version")
         return self.transfers.select(*specs, dv).union(self.uri_updates.select(*uris, dv))

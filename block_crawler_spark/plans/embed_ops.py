@@ -1145,8 +1145,10 @@ def sq_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines rank identically bit-for-bit.
 
     Scale shape: the per-dim bounds (:func:`_sq_bounds`) are re-broadcast
-    as literal arrays (no second scan, no join); coding+scoring is a
-    zero-shuffle projection; the top-k is ``orderBy().limit()`` →
+    as literal arrays (no second scan, no join); the query vector stays in
+    the plan as a 1-row broadcast cross join, so a warm build starts no
+    job; coding+scoring is a zero-shuffle projection; the top-k is
+    ``orderBy().limit()`` →
     TakeOrderedAndProject (per-partition heads + driver merge, never a
     global sort); the final rank window runs over ≤k rows (bounded by
     construction)."""
@@ -1154,11 +1156,11 @@ def sq_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = emb.select("vec_id", micro_fixed(F.col("embedding")).alias("v"))
     lo, hi = _sq_bounds(spark, sf_dir)
     n_dim = len(lo)
-    qv = [int(x) for x in vecs.filter(F.col("vec_id") == 0).head()["v"]]
+    query = vecs.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     coded = (
         vecs.withColumn("lo", F.array(*[F.lit(x) for x in lo]))
         .withColumn("hi", F.array(*[F.lit(x) for x in hi]))
-        .withColumn("qv", F.array(*[F.lit(x) for x in qv]))
+        .crossJoin(F.broadcast(query))
     )
     scored = coded.select("vec_id", F.expr(_sq_dist_expr(n_dim)).alias("dist"))
     topk = scored.orderBy(F.asc("dist"), F.asc("vec_id")).limit(SQ_TOPK_K)

@@ -120,27 +120,21 @@ class _RangePlanner:
         ]
 
 
+def _log_rows(options: dict, lo: int, hi: int) -> Iterator[tuple]:
+    """LOG_SCHEMA rows of blocks ``lo..hi``, the topic/address options
+    pushed into the ``eth_getLogs`` request."""
+    from .rpc import _get_logs_adaptive, log_row
+
+    topics = [options["topic0"]] if options.get("topic0") else None
+    return map(log_row, _get_logs_adaptive(_make_transport(options), lo, hi, topics, options.get("address")))
+
+
 class EvmLogsReader(_RangePlanner, DataSourceReader):
     def __init__(self, options: dict):
         _RangePlanner.__init__(self, options, default_chunk=100_000)
 
     def read(self, partition: _BlockRange) -> Iterator[tuple]:
-        from .rpc import _get_logs_adaptive, _hx
-
-        transport = _make_transport(self.options)
-        topics = [self.options["topic0"]] if self.options.get("topic0") else None
-        address = self.options.get("address")
-        for lg in _get_logs_adaptive(transport, partition.start, partition.end, topics, address):
-            yield (
-                _hx(lg.get("blockNumber", lg.get("block_number"))),
-                _hx(lg.get("transactionIndex", lg.get("transaction_index"))),
-                _hx(lg.get("logIndex", lg.get("log_index"))),
-                lg.get("transactionHash", lg.get("transaction_hash")),
-                (lg.get("address") or "").lower() or None,
-                lg.get("topics"),
-                lg.get("data"),
-                bool(lg.get("removed", False)),
-            )
+        return _log_rows(self.options, partition.start, partition.end)
 
 
 class EvmBlocksReader(_RangePlanner, DataSourceReader):
@@ -148,63 +142,21 @@ class EvmBlocksReader(_RangePlanner, DataSourceReader):
         _RangePlanner.__init__(self, options, default_chunk=10_000)
 
     def read(self, partition: _BlockRange) -> Iterator[tuple]:
-        from .rpc import _hx
+        from .rpc import block_rows
 
-        transport = _make_transport(self.options)
-        for num in range(partition.start, partition.end + 1):
-            blk = transport.call("eth_getBlockByNumber", hex(num), False)
-            if blk is None:
-                continue
-            yield (
-                _hx(blk.get("number")),
-                blk.get("hash"),
-                blk.get("parentHash"),
-                (blk.get("miner") or "").lower() or None,
-                _hx(blk.get("timestamp")),
-                _hx(blk.get("gasLimit")),
-                _hx(blk.get("gasUsed")),
-                _hx(blk.get("size")),
-                _hx(blk.get("difficulty")),
-                blk.get("transactions") or [],
-            )
-
-
-def _tx_rows(transport, lo: int, hi: int) -> Iterator[tuple]:
-    """TRANSACTION_SCHEMA tuples for a block range: one
-    ``get_block(id, True)`` per block, bodies exploded (reference
-    ``evm/transformers.py:48-87``).  Shared by the batch and streaming
-    transaction readers so the row mapping has exactly one definition."""
-    from .rpc import _hx
-
-    for num in range(lo, hi + 1):
-        blk = transport.call("eth_getBlockByNumber", hex(num), True)
-        if blk is None:
-            continue
-        for tx in blk.get("transactions") or []:
-            if not isinstance(tx, dict):
-                raise ValueError("node returned hashes for a full_transactions request")
-            yield (
-                _hx(tx.get("blockNumber")) or _hx(blk.get("number")),
-                _hx(tx.get("transactionIndex")),
-                tx.get("hash"),
-                (tx.get("from") or "").lower() or None,
-                (tx.get("to") or "").lower() or None,
-                _hx(tx.get("gas")),
-                _hx(tx.get("gasPrice")),
-                _hx(tx.get("nonce")),
-                tx.get("value"),
-                tx.get("input"),
-            )
+        return block_rows(_make_transport(self.options), range(partition.start, partition.end + 1))
 
 
 class EvmTransactionsReader(_RangePlanner, DataSourceReader):
-    """T3 through the DataSource API (row mapping in :func:`_tx_rows`)."""
+    """T3 through the DataSource API (rows from ``rpc.transaction_rows``)."""
 
     def __init__(self, options: dict):
         _RangePlanner.__init__(self, options, default_chunk=10_000)
 
     def read(self, partition: _BlockRange) -> Iterator[tuple]:
-        yield from _tx_rows(_make_transport(self.options), partition.start, partition.end)
+        from .rpc import transaction_rows
+
+        return transaction_rows(_make_transport(self.options), range(partition.start, partition.end + 1))
 
 
 class EvmLogsDataSource(DataSource):
@@ -241,9 +193,6 @@ class EvmTransactionsDataSource(DataSource):
 
     def schema(self):
         return TRANSACTION_SCHEMA
-
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -299,22 +248,7 @@ class _HeightOffsetStreamReader(SimpleDataSourceStreamReader):
 
 class EvmLogsStreamReader(_HeightOffsetStreamReader):
     def _fetch(self, lo: int, hi: int):
-        from .rpc import _get_logs_adaptive, _hx
-
-        transport = _make_transport(self.options)
-        topics = [self.options["topic0"]] if self.options.get("topic0") else None
-        address = self.options.get("address")
-        for lg in _get_logs_adaptive(transport, lo, hi, topics, address):
-            yield (
-                _hx(lg.get("blockNumber", lg.get("block_number"))),
-                _hx(lg.get("transactionIndex", lg.get("transaction_index"))),
-                _hx(lg.get("logIndex", lg.get("log_index"))),
-                lg.get("transactionHash", lg.get("transaction_hash")),
-                (lg.get("address") or "").lower() or None,
-                lg.get("topics"),
-                lg.get("data"),
-                bool(lg.get("removed", False)),
-            )
+        return _log_rows(self.options, lo, hi)
 
 
 class EvmLogsStreamDataSource(DataSource):
@@ -332,7 +266,7 @@ class EvmLogsStreamDataSource(DataSource):
 
 
 class EvmTransactionsStreamReader(_HeightOffsetStreamReader):
-    """Streaming T3 (row mapping in :func:`_tx_rows`).  The per-batch cap
+    """Streaming T3 (rows from ``rpc.transaction_rows``).  The per-batch cap
     defaults far lower than the logs stream's: a batch materializes FULL
     transaction bodies (calldata included) on the driver, so 10k blocks of
     a busy chain would be the exact unbounded-batch OOM the cap exists to
@@ -342,7 +276,9 @@ class EvmTransactionsStreamReader(_HeightOffsetStreamReader):
     _DEFAULT_MAX_BLOCKS = 500
 
     def _fetch(self, lo: int, hi: int):
-        yield from _tx_rows(_make_transport(self.options), lo, hi)
+        from .rpc import transaction_rows
+
+        return transaction_rows(_make_transport(self.options), range(lo, hi + 1))
 
 
 class EvmTransactionsStreamDataSource(DataSource):

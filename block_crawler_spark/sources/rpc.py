@@ -250,6 +250,75 @@ def _hx(v) -> int | None:
     return None if v is None else int(v, 16) if isinstance(v, str) else int(v)
 
 
+def _lower(v: str | None) -> str | None:
+    return (v or "").lower() or None
+
+
+def block_rows(transport: RpcTransport, block_ids: Iterable[int]) -> Iterator[tuple]:
+    """BLOCK_SCHEMA rows of ``block_ids``, one hashes-only
+    ``eth_getBlockByNumber`` per block; a block the node does not know
+    yields no row."""
+    for bid in block_ids:
+        blk = transport.call("eth_getBlockByNumber", hex(int(bid)), False)
+        if blk is None:
+            continue
+        yield (
+            _hx(blk.get("number")),
+            blk.get("hash"),
+            blk.get("parentHash"),
+            _lower(blk.get("miner")),
+            _hx(blk.get("timestamp")),
+            _hx(blk.get("gasLimit")),
+            _hx(blk.get("gasUsed")),
+            _hx(blk.get("size")),
+            _hx(blk.get("difficulty")),
+            blk.get("transactions") or [],
+        )
+
+
+def transaction_rows(transport: RpcTransport, block_ids: Iterable[int]) -> Iterator[tuple]:
+    """TRANSACTION_SCHEMA rows of ``block_ids``: one ``get_block(id, True)``
+    per block, bodies exploded (reference ``evm/transformers.py:48-87``,
+    ``EvmBlockIdToEvmBlockAndEvmTransactionAndEvmTransactionHashTransformer``;
+    field set from ``evm/types.py:37-55``).  A body of bare hashes raises
+    :class:`RpcError`, as the reference raises ``ConsumerError("Block
+    returned did not have full transactions!")``."""
+    for bid in block_ids:
+        blk = transport.call("eth_getBlockByNumber", hex(int(bid)), True)
+        if blk is None:
+            continue
+        for tx in blk.get("transactions") or []:
+            if not isinstance(tx, dict):
+                raise RpcError(0, "block returned without full transactions")
+            yield (
+                _hx(tx.get("blockNumber")) or _hx(blk.get("number")),
+                _hx(tx.get("transactionIndex")),
+                tx.get("hash"),
+                _lower(tx.get("from")),
+                _lower(tx.get("to")),
+                _hx(tx.get("gas")),
+                _hx(tx.get("gasPrice")),
+                _hx(tx.get("nonce")),
+                tx.get("value"),
+                tx.get("input"),
+            )
+
+
+def log_row(lg: dict) -> tuple:
+    """One ``eth_getLogs`` entry → a LOG_SCHEMA row (fixture entries may
+    carry snake_case keys)."""
+    return (
+        _hx(lg.get("blockNumber", lg.get("block_number"))),
+        _hx(lg.get("transactionIndex", lg.get("transaction_index"))),
+        _hx(lg.get("logIndex", lg.get("log_index"))),
+        lg.get("transactionHash", lg.get("transaction_hash")),
+        _lower(lg.get("address")),
+        lg.get("topics"),
+        lg.get("data"),
+        bool(lg.get("removed", False)),
+    )
+
+
 def fetch_blocks(
     spark: SparkSession,
     start: int,
@@ -260,32 +329,14 @@ def fetch_blocks(
     """S1+S3 — block-id range → fetched blocks, partitioned enrichment.
 
     ``spark.range`` makes the work list (no data motion); each partition
-    fetches its ids through one transport instance.
+    fetches its ids through one transport instance (:func:`block_rows`).
     """
     ids = spark.range(start, end + 1, numPartitions=partitions or spark.sparkContext.defaultParallelism)
+    cols = [f.name for f in BLOCK_SCHEMA.fields]
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for bid in pdf["id"]:
-                blk = transport.call("eth_getBlockByNumber", hex(int(bid)), False)
-                if blk is None:
-                    continue
-                rows.append(
-                    {
-                        "number": _hx(blk.get("number")),
-                        "hash": blk.get("hash"),
-                        "parent_hash": blk.get("parentHash"),
-                        "miner": (blk.get("miner") or "").lower() or None,
-                        "timestamp": _hx(blk.get("timestamp")),
-                        "gas_limit": _hx(blk.get("gasLimit")),
-                        "gas_used": _hx(blk.get("gasUsed")),
-                        "size": _hx(blk.get("size")),
-                        "difficulty": _hx(blk.get("difficulty")),
-                        "transaction_hashes": blk.get("transactions") or [],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
+            yield pd.DataFrame(list(block_rows(transport, pdf["id"])), columns=cols)
 
     return ids.mapInPandas(fetch, BLOCK_SCHEMA)
 
@@ -297,46 +348,20 @@ def fetch_transactions(
     transport: RpcTransport,
     partitions: int | None = None,
 ) -> DataFrame:
-    """T3 — block range → full transaction bodies, one RPC per block.
+    """T3 — block range → full transaction bodies, one RPC per block
+    (:func:`transaction_rows`).
 
-    Mirrors the reference's combined block+transactions fetch
-    (``evm/transformers.py:48-87``,
-    ``EvmBlockIdToEvmBlockAndEvmTransactionAndEvmTransactionHashTransformer``
-    calls ``get_block(block_id, True)`` and fans each ``EvmTransaction`` out;
-    field set from ``evm/types.py:37-55``).  Spark shape: the block-id range
-    is the work list (``spark.range``, no data motion), each partition owns
-    one transport, and the per-block explode happens executor-side inside
-    ``mapInPandas`` — transaction bodies never pass through the driver.
+    Spark shape: the block-id range is the work list (``spark.range``, no
+    data motion), each partition owns one transport, and the per-block
+    explode happens executor-side inside ``mapInPandas`` — transaction
+    bodies never pass through the driver.
     """
     ids = spark.range(start, end + 1, numPartitions=partitions or spark.sparkContext.defaultParallelism)
+    cols = [f.name for f in TRANSACTION_SCHEMA.fields]
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for bid in pdf["id"]:
-                blk = transport.call("eth_getBlockByNumber", hex(int(bid)), True)
-                if blk is None:
-                    continue
-                for tx in blk.get("transactions") or []:
-                    if not isinstance(tx, dict):
-                        # reference raises ConsumerError("Block returned did
-                        # not have full transactions!") — same contract here
-                        raise RpcError(0, "block returned without full transactions")
-                    rows.append(
-                        {
-                            "block_number": _hx(tx.get("blockNumber")) or _hx(blk.get("number")),
-                            "transaction_index": _hx(tx.get("transactionIndex")),
-                            "hash": tx.get("hash"),
-                            "from_": (tx.get("from") or "").lower() or None,
-                            "to_": (tx.get("to") or "").lower() or None,
-                            "gas": _hx(tx.get("gas")),
-                            "gas_price": _hx(tx.get("gasPrice")),
-                            "nonce": _hx(tx.get("nonce")),
-                            "value_hex": tx.get("value"),
-                            "input": tx.get("input"),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in TRANSACTION_SCHEMA.fields])
+            yield pd.DataFrame(list(transaction_rows(transport, pdf["id"])), columns=cols)
 
     return ids.mapInPandas(fetch, TRANSACTION_SCHEMA)
 
@@ -357,9 +382,9 @@ def fetch_receipts(tx_hashes: DataFrame, transport: RpcTransport) -> DataFrame:
                         "transaction_hash": r.get("transactionHash"),
                         "block_number": _hx(r.get("blockNumber")),
                         "transaction_index": _hx(r.get("transactionIndex")),
-                        "from_": (r.get("from") or "").lower() or None,
-                        "to_": (r.get("to") or "").lower() or None,
-                        "contract_address": (r.get("contractAddress") or "").lower() or None,
+                        "from_": _lower(r.get("from")),
+                        "to_": _lower(r.get("to")),
+                        "contract_address": _lower(r.get("contractAddress")),
                         "gas_used": _hx(r.get("gasUsed")),
                         "cumulative_gas_used": _hx(r.get("cumulativeGasUsed")),
                         "status": _hx(r.get("status")),
@@ -431,20 +456,7 @@ def fetch_logs(
             for ci in pdf["id"]:
                 lo = start + int(ci) * chunk_size
                 hi = min(lo + chunk_size - 1, end)
-                rows = []
-                for lg in _get_logs_adaptive(transport, lo, hi, topics, address):
-                    rows.append(
-                        {
-                            "block_number": _hx(lg.get("blockNumber", lg.get("block_number"))),
-                            "transaction_index": _hx(lg.get("transactionIndex", lg.get("transaction_index"))),
-                            "log_index": _hx(lg.get("logIndex", lg.get("log_index"))),
-                            "transaction_hash": lg.get("transactionHash", lg.get("transaction_hash")),
-                            "address": (lg.get("address") or "").lower() or None,
-                            "topics": lg.get("topics"),
-                            "data": lg.get("data"),
-                            "removed": bool(lg.get("removed", False)),
-                        }
-                    )
+                rows = [log_row(lg) for lg in _get_logs_adaptive(transport, lo, hi, topics, address)]
                 yield pd.DataFrame(rows, columns=cols)
 
     return chunks.mapInPandas(fetch, LOG_SCHEMA)

@@ -62,6 +62,21 @@ class TableChainSource:
         return self.blocks_df.filter(F.col("number").between(start_block, end_block))
 
 
+def commit_batch(
+    store: SilverStore, logs: DataFrame, blocks: DataFrame, blockchain: str, data_version: int, top: int | None
+) -> None:
+    """One batch's commit sequence, shared by the crawl/load, tail and
+    stream paths: plan the batch, apply the retry-safe sinks
+    (``SilverStore.apply_silver``), free the batch's caches, and only then
+    move ``blockchain``'s ``last_block_id`` to ``top``."""
+    silver = crawl_plan(store.spark, logs, blocks, blockchain=blockchain, data_version=data_version)
+    try:
+        store.apply_silver(silver, data_version, blockchains=[blockchain])
+    finally:
+        silver.release()
+    store.set_config(blockchain, data_version, top)
+
+
 @dataclass
 class TailRunner:
     store: SilverStore
@@ -82,15 +97,9 @@ class TailRunner:
 
         spark = self.store.spark
         compiled = codegen_compiles(spark) if self.stats is not None else 0
-        logs = self.source.logs(start, target)
-        blocks = self.source.blocks(start, target)
-        silver = crawl_plan(spark, logs, blocks, blockchain=self.blockchain, data_version=dv)
-        try:
-            # the retry-safe sink sequence lives in ONE place — see its docstring
-            self.store.apply_silver(silver, dv, blockchains=[self.blockchain])
-        finally:
-            silver.release()
-        self.store.set_config(self.blockchain, dv, target)
+        commit_batch(
+            self.store, self.source.logs(start, target), self.source.blocks(start, target), self.blockchain, dv, target
+        )
         if self.stats is not None:
             # reference ticker fields (core/stats.py counters): committed
             # parquet row counts are metadata-cheap reads

@@ -25,9 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.crawl import crawl_plan
 from ..schemas import LOG_SCHEMA
 from .store import SilverStore
+from .tail import commit_batch
 
 
 def windowed_event_counts(
@@ -171,16 +171,10 @@ def stream_tail(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        dv, _last = store.get_config(blockchain)
-        silver = crawl_plan(store.spark, batch_df, blocks_df, blockchain=blockchain, data_version=dv)
-        try:
-            # the retry-safe sink sequence lives in ONE place — see its docstring
-            store.apply_silver(silver, dv, blockchains=[blockchain])
-        finally:
-            silver.release()
+        dv, last = store.get_config(blockchain)
         top = batch_df.agg(F.max("block_number")).collect()[0][0]
-        _, last = store.get_config(blockchain)
-        store.set_config(blockchain, dv, max(top, last) if last is not None else top)
+        # a late file never moves the pointer back
+        commit_batch(store, batch_df, blocks_df, blockchain, dv, max(top, last) if last is not None else top)
 
     writer = (
         logs_stream.writeStream.foreachBatch(process)

@@ -81,6 +81,7 @@ ADJUDICATED = {
     ("evt_key_skew_topk", "SinglePartitionWindow"): "rank window over the ≤20-row TakeOrderedAndProject survivors",
     ("evt_funnel_counts", "SinglePartitionWindow"): "lag window over the 3-row per-stage union (bounded by the funnel length)",
     ("emb_sq_topk", "SinglePartitionWindow"): "rank window over the ≤10-row TakeOrderedAndProject survivors",
+    ("emb_sq_topk", _BNLJ): "corpus × the broadcast 1-row query vector (vec_id 0)",
     ("dedup_semantic_cells", _BNLJ): "Lloyd assignment: corpus × broadcast derived-K centroid table, K = min(max(8, N/25), SEM_K_MAX=4096) — ≤4096 rows by construction (r10 cap)",
     ("dedup_semantic_keep", _BNLJ): "inherited from the semantic-cells stage: corpus × broadcast derived-K (≤SEM_K_MAX=4096-row) centroid table",
     ("dedup_semantic_cells_mp2", _BNLJ): "two-pass top-2 Lloyd assignment: corpus × broadcast derived-K (≤SEM_K_MAX=4096-row) centroid table, twice by design (second-nearest re-score)",

@@ -5,7 +5,7 @@ over the same sf dir, then compares row count, sorted column names, and an
 order-insensitive value hash (rows stringified, sorted, md5'd).  Exit code
 != 0 on any mismatch.  Usage:
 
-    PYTHONPATH=/root/repo python scripts/check_oracle.py [--sf DIR] [--only name1,name2]
+    python scripts/check_oracle.py [--sf DIR] [--only name1,name2]
 
 IMPORTANT (round-2 finding, VERDICT.md r1): the driver fetches BOTH engines
 through a pandas-style path — DuckDB ``.df()`` and Spark ``.toPandas()`` —
@@ -23,6 +23,7 @@ from __future__ import annotations
 import argparse
 import hashlib
 import importlib.util
+import os
 import sys
 import time
 from decimal import Decimal
@@ -30,6 +31,10 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 import pandas as pd
+
+# the checkout this script lives in: its entry module and its package
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 
 def _norm_cell(v) -> str:
@@ -75,7 +80,7 @@ def main() -> int:
     ap.add_argument("--only", default=None, help="comma-separated query names")
     args = ap.parse_args()
 
-    spec = importlib.util.spec_from_file_location("entry", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entry", os.path.join(_REPO, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 

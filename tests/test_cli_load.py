@@ -129,7 +129,7 @@ def test_sigint_mid_crawl_commits_progress_and_resumes(spark, bronze, tmp_path, 
 
     store.set_config = counting_set
     with GracefulStop() as stop:
-        done = _bulk_crawl(spark, store, logs, blocks, "testnet", 1, height,
+        done = _bulk_crawl(store, logs, blocks, "testnet", 1, height,
                            chunk_size=chunk, signals=stop)
     assert stop.interrupted, "the SIGINT must be absorbed as a graceful stop"
     first_hi = bottom + chunk - 1  # first chunk [bottom, bottom+chunk-1]
@@ -140,10 +140,10 @@ def test_sigint_mid_crawl_commits_progress_and_resumes(spark, bronze, tmp_path, 
 
     # clean resume: plain handler, runs to completion from the commit point
     store.set_config = orig_set
-    done2 = _bulk_crawl(spark, store, logs, blocks, "testnet", 1, height, chunk_size=chunk)
+    done2 = _bulk_crawl(store, logs, blocks, "testnet", 1, height, chunk_size=chunk)
     assert done2 == height
     ref = SilverStore(spark, str(tmp_path / "ref"))
-    _bulk_crawl(spark, ref, logs, blocks, "testnet", 1, height)
+    _bulk_crawl(ref, logs, blocks, "testnet", 1, height)
     for table in ("token_transfers", "tokens", "owners"):
         assert _table_set(store, table) == _table_set(ref, table), table
 
@@ -266,7 +266,7 @@ def test_chunked_crawl_clamps_to_bronze_min(spark, bronze, tmp_path):
     commits = []
     orig_set = store.set_config
     store.set_config = lambda bc, dv, last: (orig_set(bc, dv, last), commits.append(last))
-    done = _bulk_crawl(spark, store, logs, blocks, "testnet", 1, height, chunk_size=5)
+    done = _bulk_crawl(store, logs, blocks, "testnet", 1, height, chunk_size=5)
     assert done == height
     assert len(commits) <= (height - 100) // 5 + 1, f"empty low chunks ran: {commits}"
     assert commits[0] >= 104, "first chunk must start at the bronze min, not block 0"
@@ -280,7 +280,7 @@ def test_chunked_crawl_empty_bronze_is_clean_noop(spark, tmp_path):
     logs = spark.createDataFrame([], LOG_SCHEMA)
     blocks = spark.createDataFrame([], BLOCKS_DDL)
     store = SilverStore(spark, str(tmp_path / "emptyb"))
-    assert _bulk_crawl(spark, store, logs, blocks, "testnet", 1, None, chunk_size=10) is None
+    assert _bulk_crawl(store, logs, blocks, "testnet", 1, None, chunk_size=10) is None
     assert store.read("token_transfers").count() == 0
 
 

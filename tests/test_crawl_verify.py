@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +19,8 @@ from block_crawler_spark.schemas import (
     RECEIPT_SCHEMA,
 )
 from block_crawler_spark.sources.chainfix import addr, standard_scenario
+from block_crawler_spark.streaming.store import SilverStore
+from block_crawler_spark.streaming.tail import commit_batch
 
 
 @pytest.fixture(scope="module")
@@ -103,6 +107,24 @@ def test_verify_clean_roundtrip(spark, chain, silver):
     )
     # full owners table (both specs) reconciles against the A5 recompute
     assert reconcile_balances(logs, silver.owners).count() == 0
+
+
+def test_verify_is_clean_over_duplicated_bronze(spark, chain, tmp_path):
+    """A bronze in which every log appears twice loads the same transfers as
+    clean bronze, and verify, which recomputes with the store's folds over
+    transfers deduplicated as the store commits them, reports no error."""
+    fb, logs, blocks, *_ = chain
+    top = max(r["block_number"] for r in fb.rows)
+    doubled = logs.unionAll(logs)
+    stored = {}
+    for name, bronze in (("clean", logs), ("doubled", doubled)):
+        store = SilverStore(spark, str(tmp_path / name))
+        commit_batch(store, bronze, blocks, "testnet", 1, top)
+        stored[name] = Counter(map(tuple, store.read("token_transfers").collect()))
+    assert stored["doubled"] == stored["clean"] and stored["clean"]
+    assert reconcile_transfers(doubled, store.read("token_transfers")).count() == 0
+    assert reconcile_tokens(doubled, store.read("tokens")).count() == 0
+    assert reconcile_balances(doubled, store.read("owners")).count() == 0
 
 
 def test_verify_detects_corruption(spark, chain, silver):

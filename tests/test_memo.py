@@ -90,7 +90,7 @@ def test_params_and_kind_are_part_of_the_key(spark, tmp_path):
 
 def test_hit_is_row_identical_to_the_build(spark):
     """A trained model replayed from the memo gives the query the same rows,
-    and a warm build of the IVF-SQ8 query starts no Spark job."""
+    and a warm build of either SQ8 query starts no Spark job."""
     from block_crawler_spark.plans.embed_ops import ivfsq_topk_query, sq_topk_query
 
     for fn in (sq_topk_query, ivfsq_topk_query):
@@ -99,6 +99,7 @@ def test_hit_is_row_identical_to_the_build(spark):
         assert cold and cold == warm, fn.__name__
     assert [k[0] for k in memo.entries()] == ["sqbounds"]
     assert _jobs_in_group(spark, "memo-warm-ivfsq", lambda: ivfsq_topk_query(spark, SF)) == []
+    assert _jobs_in_group(spark, "memo-warm-sq", lambda: sq_topk_query(spark, SF)) == []
 
 
 def test_over_the_row_cap_only_the_verdict_is_stored(spark, tmp_path):

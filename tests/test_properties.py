@@ -16,7 +16,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from block_crawler_spark.operators.decode import decode_erc721_transfers
-from block_crawler_spark.operators.folds import fold_owner_deltas, fold_token_state
+from block_crawler_spark.operators.folds import fold_token_state, owner_balances_from_silver
 from block_crawler_spark.operators.merge import additive_upsert, token_state_merge, versioned_upsert
 from block_crawler_spark.schemas import ERC721_TRANSFER_TOPIC, LOG_SCHEMA
 from block_crawler_spark.sources.chainfix import ZERO, addr, topic_addr, topic_uint
@@ -107,7 +107,7 @@ def test_chunked_additive_merge_equals_bulk(spark, rows, cut):
             return None
         logs = spark.createDataFrame(rws, LOG_SCHEMA)
         t = decode_erc721_transfers(logs).withColumn("blockchain", F.lit("p"))
-        return fold_owner_deltas(t).withColumn("data_version", F.lit(1))
+        return owner_balances_from_silver(t).withColumn("data_version", F.lit(1))
 
     keys = ["blockchain", "account", "collection_id", "token_id_hex"]
     merged = None

@@ -210,3 +210,17 @@ def test_fetch_transactions_explodes_full_bodies(spark):
     # the same fixture still serves hashes-only callers (S3 path unchanged)
     blk = t.call("eth_getBlockByNumber", "0x1", False)
     assert blk["transactions"] == ["0xt0100", "0xt0101"]
+
+
+def test_hashes_only_body_raises_rpc_error_on_both_paths(spark, monkeypatch):
+    """A full-transactions request answered with bare hashes fails with the
+    same RpcError through the mapInPandas fetcher and the DataSource reader."""
+    from block_crawler_spark.sources import datasource
+
+    t = FakeChainTransport(blocks={1: {"number": "0x1", "transactions": ["0xt0100"]}})
+    with pytest.raises(Exception, match="RpcError"):
+        fetch_transactions(spark, 1, 1, t, partitions=1).collect()
+    monkeypatch.setattr(datasource, "_make_transport", lambda options: t)
+    reader = datasource.EvmTransactionsReader({"start": "1", "end": "1"})
+    with pytest.raises(RpcError, match="full transactions"):
+        list(reader.read(reader.partitions()[0]))

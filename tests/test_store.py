@@ -578,8 +578,8 @@ def test_apply_silver_rebuilds_touched_buckets_whole(spark, tmp_path):
     assert {(r["account"], int(r["token_id_hex"], 16)) for r in owners.collect()} == {(_BOB, 7), (_ALICE, 8)}
 
     cols = ["token_id_hex", "quantity", "original_owner", "mint_block", "mint_timestamp"]
-    folded = token_state_from_silver(transfers).withColumnRenamed("_last_recipient", "current_owner")
     tokens = store.read("tokens")
+    folded = token_state_from_silver(transfers, tokens)
     assert sorted(map(tuple, tokens.select(*cols, "current_owner").collect())) == sorted(
         map(tuple, folded.select(*cols, "current_owner").collect())
     )
