@@ -18,9 +18,11 @@
 
 Maps to the reference commands (``nft crawl/load/force/tail/seed/verify``,
 ``reset-db``, ``evm function-digest`` — ``nft/bin/nft.py:118-137``,
-``evm/bin.py:18-35``).  Bronze inputs are parquet directories; the live-RPC
-path constructs a transport and uses ``sources.rpc`` fetch stages instead
-(see streaming.tail.ChainSource).
+``evm/bin.py:18-35``).  ``crawl``, ``load`` and ``tail`` read parquet bronze
+directories only, through ``streaming.tail.TableChainSource``; ``force-load``
+is the one command that builds an RPC transport (``--rpc URL`` or the
+offline ``--fixture``).  A tail that follows a node over JSON-RPC is ROADMAP
+direction 8.
 """
 
 from __future__ import annotations

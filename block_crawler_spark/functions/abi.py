@@ -19,7 +19,7 @@ decode plan into thousands of references to ``data``, paid again in every
 analysis, cache lookup, optimisation and codegen.  So a dynamic value's
 offset and length are never computed inline here: the caller projects each
 head word, offset, length word and length as its own column
-(``operators.decode.bind_dynamic_slots``) and passes the bound columns to
+(``operators.decode._slot_levels``) and passes the bound columns to
 :func:`decode_uint256_array` / :func:`decode_string`.
 """
 
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .hexint import hex_to_dec, hex_to_long
+from .hexint import hex_to_long
 
 _WORD_HEX = 64
 
@@ -38,11 +38,6 @@ def word(data: Column, slot: Column | int) -> Column:
     if isinstance(slot, int):
         return F.substring(data, 3 + _WORD_HEX * slot, _WORD_HEX)
     return F.substring(data, (F.lit(3) + F.lit(_WORD_HEX) * slot).cast("int"), F.lit(_WORD_HEX))
-
-
-def word_uint(data: Column, slot: Column | int) -> Column:
-    """Word interpreted as uint → Decimal(38,0) (NULL on overflow)."""
-    return hex_to_dec(word(data, slot))
 
 
 def head_offset(head: Column) -> Column:

@@ -101,10 +101,6 @@ def long_to_hex(col: Column, width: int = UINT256_HEX_WIDTH, prefix: bool = True
     return F.concat(F.lit("0x"), body) if prefix else body
 
 
-def is_zero_address(col: Column) -> Column:
-    return normalize_hex(col, ADDRESS_HEX_WIDTH) == F.lit(ZERO_ADDRESS)
-
-
 def topic_to_address(col: Column) -> Column:
     """32-byte topic hex ("0x"+64) → address ("0x"+40): the low 20 bytes."""
     return F.concat(F.lit("0x"), F.lower(F.substring(col, 27, 40)))

@@ -44,20 +44,10 @@ def regex_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(TOKEN_PATTERN), F.lit(0)))
 
 
-def punct_ratio(text: Column) -> Column:
-    """Punctuation chars / total chars, decimal(18,6)."""
-    punct = F.length(text) - F.length(F.regexp_replace(text, PUNCT_PATTERN, ""))
-    return (punct.cast("decimal(18,6)") / F.length(text)).cast("decimal(18,6)")
-
-
 def stopword_hits(text: Column, lang: str = "en") -> Column:
     """Number of tokens that are stopwords of `lang`."""
     words = STOPWORDS[lang]
     return F.size(F.filter(tokens(F.lower(text)), lambda t: t.isin(*words)))
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    return (stopword_hits(text, lang).cast("decimal(18,6)") / n_tokens(text)).cast("decimal(18,6)")
 
 
 def lang_scores(text: Column) -> list[tuple[str, Column]]:

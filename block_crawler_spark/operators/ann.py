@@ -31,10 +31,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def _nan_div(num: Column, den: Column) -> Column:
     """``num / den``, NaN where ``den`` is 0 (a zero-norm operand): Spark's
     ANSI division raises on a zero divisor instead."""
@@ -42,8 +38,8 @@ def _nan_div(num: Column, den: Column) -> Column:
 
 
 def cosine_scored(df: DataFrame, keep: list, a: Column, b: Column) -> DataFrame:
-    """``keep`` plus ``score``, the cosine of ``a`` and ``b`` with
-    :func:`cosine`'s bits.  The dot product and the norms' product are
+    """``keep`` plus ``score``, the cosine of ``a`` and ``b``: ``dot(a, b) /
+    (norm(a) * norm(b))``.  The dot product and the norms' product are
     projected first, so the zero test reads them without recomputing them:
     a zero-norm operand scores NaN where ANSI division would raise."""
     den = (norm(a) * norm(b)).alias("_den")
@@ -81,7 +77,7 @@ def _top_k_pairs(pairs: DataFrame, k: int) -> DataFrame:
     norms' product are projected before the score, so the zero test reads
     them without recomputing them: a zero-norm vector scores NaN, which
     ranks first, where ANSI division would raise.  The score's bits equal
-    :func:`cosine`'s."""
+    :func:`cosine_scored`'s."""
     distinct, levels, in_top = _top_k_cols(k)
     pairs = pairs.filter(distinct)
     for level in levels:
@@ -270,7 +266,7 @@ def ivf_assign(
     into one broadcast row, so the assignment is map-side (no shuffle).
     Each vector's norm is projected once; one ``transform`` then scores
     every centroid with the operands and operation order of
-    :func:`cosine`, so the sims are bit-identical to it and no near-tie
+    :func:`cosine_scored`, so the sims are bit-identical to it and no near-tie
     can flip.  A zero norm or a NaN component scores NaN.  The pick sorts
     the key struct (not isnan(sim), -sim, centroid_id) with Spark's
     built-in ordering (``array_min`` for one, ``sort_array`` + ``slice``
@@ -466,39 +462,3 @@ def centroid_assign_top2(vecs: DataFrame, cents: DataFrame, keep_v: bool = False
         j.select("vid", F.explode(tops).alias("_t"), *extra)
         .select("vid", F.col("_t.cid").alias("cid"), F.col("_t.dist").alias("dist"), *extra)
     )
-
-
-def clustered_embeddings(
-    spark,
-    n: int = 2000,
-    n_clusters: int = 32,
-    jitter_milli: int = 70,
-    dim: int = 64,
-) -> DataFrame:
-    """Deterministic CLUSTERED embedding corpus for recall probes: the
-    search families' constants were tuned on the isotropic testdata corpus,
-    the no-structure worst case.  Every vector is an md5-derived cluster
-    center (``vec_id % n_clusters``, components in [-1, 1]) plus a small
-    md5-derived jitter (±jitter_milli/1000 per dim), so density modes are
-    real (cross-cluster distances ≫ within-cluster) and IVF/PQ/sketch
-    structure has something to find.  No RNG anywhere — both the centers
-    and the jitter are content-hash functions of the ids, reproducible on
-    any engine, so every probe shares one fixture definition.
-
-    Output schema matches the testdata embeddings table: (vec_id,
-    embedding array<float>)."""
-    cl = (F.col("id") % n_clusters).cast("string")
-
-    def h(key, span):
-        return (
-            F.conv(F.substring(F.md5(key), 1, 6), 16, 10).cast("long") % (2 * span + 1) - span
-        ) / 1000.0
-
-    comp = [
-        (
-            h(F.concat(F.lit(f"c{j}|"), cl), 1000)
-            + h(F.concat(F.lit(f"v{j}|"), F.col("id").cast("string")), jitter_milli)
-        ).cast("float")
-        for j in range(dim)
-    ]
-    return spark.range(n).select(F.col("id").alias("vec_id"), F.array(*comp).alias("embedding"))

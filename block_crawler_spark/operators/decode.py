@@ -17,8 +17,8 @@ families are carved out of one logs relation (``plans.crawl`` caches it,
 narrowed by :func:`decodable_logs`), and the batch case uses
 ``arrays_zip``+``explode`` rather than a per-row loop.  Dynamic ABI values
 (the batch arrays, the URI string) read offsets and lengths that
-:func:`bind_dynamic_slots` projected once per row — see the bind-once rule
-in ``functions.abi``.
+:func:`_slot_levels` projects once per row — see the bind-once rule in
+``functions.abi``.
 
 Build-once rule: every expression here is fixed, so each is built once per
 process by a ``functools.cache`` builder and kept as a tuple of Columns.  A
@@ -116,7 +116,15 @@ def _project(df: DataFrame, levels: tuple[tuple[Column, ...], ...]) -> DataFrame
 
 @cache
 def _slot_levels(slots: tuple[int, ...]) -> tuple[tuple[Column, ...], ...]:
-    """:func:`bind_dynamic_slots`' four projection levels for ``slots``."""
+    """Four projection levels that bind each dynamic ABI slot ``k`` of
+    ``data`` as ``_off{k}`` (word index of its length word) and ``_len{k}``
+    (its length).
+
+    Each level is its own projection, so every value is computed once per
+    row and later expressions read it by name; ``CollapseProject`` keeps
+    the levels apart because each is read more than once.  The head and
+    length words (``_head{k}``, ``_lenw{k}``) are bound too, because
+    ``hex_to_long`` copies its input into the plan ~two dozen times."""
     data = F.col("data")
     return (
         (F.col("*"), *(word(data, k).alias(f"_head{k}") for k in slots)),
@@ -124,19 +132,6 @@ def _slot_levels(slots: tuple[int, ...]) -> tuple[tuple[Column, ...], ...]:
         (F.col("*"), *(word(data, F.col(f"_off{k}")).alias(f"_lenw{k}") for k in slots)),
         (F.col("*"), *(hex_to_long(F.col(f"_lenw{k}")).alias(f"_len{k}") for k in slots)),
     )
-
-
-def bind_dynamic_slots(df: DataFrame, *slots: int) -> DataFrame:
-    """Project each dynamic ABI slot ``k`` of ``data`` as ``_off{k}`` (word
-    index of its length word) and ``_len{k}`` (its length).
-
-    Each level is its own projection, so every value is computed once per
-    row and later expressions read it by name; ``CollapseProject`` keeps
-    the levels apart because each is read more than once.  The head and
-    length words (``_head{k}``, ``_lenw{k}``) are bound too, because
-    ``hex_to_long`` copies its input into the plan ~two dozen times.
-    """
-    return _project(df, _slot_levels(slots))
 
 
 def decodable_logs(logs: DataFrame) -> DataFrame:
@@ -156,9 +151,9 @@ def _transfer_cols() -> tuple[Column, ...]:
     Ingest contract: ``address`` and the decoded from_/to_ are canonical
     lowercase "0x"+40 hex (topic_to_address lowers; sources lower addresses
     on ingest, reference normalizes at the CLI, ``core/click.py:58-66``), so
-    the mint/burn classification compares them directly instead of routing
-    through ``classify_transfer``'s re-normalization — keeps the generated
-    code comfortably inside whole-stage codegen limits.
+    the mint/burn classification (reference ``TokenTransactionTypeOracle``,
+    T15) compares them directly with no re-normalization — keeps the
+    generated code comfortably inside whole-stage codegen limits.
     """
     zero = F.lit("0x" + "0" * 40)
     coll = F.lower(F.col("address"))

@@ -183,25 +183,6 @@ def jaccard_pairs(
     return j.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "inter", "uni", "jaccard")
 
 
-def minhash_dedup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    band_size: int = 2,
-    threshold: float = 0.5,
-    stage_path: str | None = None,
-) -> DataFrame:
-    """Full near-dup pipeline: shingle → minhash → LSH bucket join → exact
-    Jaccard filter.  Returns (id_a, id_b, inter, uni, jaccard).
-
-    ``stage_path`` forwards to :func:`minhash_signatures` — the parquet
-    stage-table materialization for corpora beyond cluster memory."""
-    sigs = minhash_signatures(docs, text_col, id_col, num_hashes, stage_path=stage_path).cache()
-    cands = minhash_lsh_candidates(sigs, id_col, num_hashes, band_size)
-    return jaccard_pairs(sigs, cands, id_col, threshold)
-
-
 def dedup_assignments(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Near-dup pairs → keep/drop decision per document (greedy form).
 

@@ -38,7 +38,10 @@ _METADATA = ("specification", "metadata_url", "metadata_url_version_hex", "data_
 
 def _null_if_any_overflow(sum_expr, qty_col="quantity"):
     """Engine-wide clamp policy: if any contributing quantity overflowed to
-    NULL, the aggregate is NULL (plain SQL sum would silently skip it)."""
+    NULL, the aggregate is NULL (plain SQL sum would silently skip it).
+    ``sum_expr`` is a ``try_sum``, so a sum that itself overflows
+    Decimal(38,0) is NULL too; under ANSI a plain ``sum`` raises, and the
+    batch would fail on every retry."""
     any_null = F.max(F.col(qty_col).isNull().cast("int")) == 1
     return F.when(any_null, F.lit(None).cast("decimal(38,0)")).otherwise(sum_expr)
 
@@ -191,7 +194,7 @@ def _balances(deltas: DataFrame) -> DataFrame:
 def _balance_cols() -> tuple[Column, Column, tuple[Column, ...]]:
     """(balance aggregate, keep predicate, output columns) of :func:`_balances`."""
     return (
-        _null_if_any_overflow(F.sum("delta"), "delta").alias("quantity"),
+        _null_if_any_overflow(F.try_sum("delta"), "delta").alias("quantity"),
         F.col("quantity").isNull() | (F.col("quantity") != 0),
         tuple(F.col(c) for c in ("blockchain", "account", "collection_id", "token_id_hex", "quantity")),
     )
@@ -310,7 +313,7 @@ def _token_fold() -> tuple[Column, tuple[Column, ...], Column, tuple[Column, ...
     signed = F.when(is_mint, qty).when(is_burn, -qty).otherwise(F.lit(0).cast("decimal(38,0)")).alias("_signed")
     carries_uri = F.col("metadata_url").isNotNull() | F.col("metadata_url_version_hex").isNotNull()
     aggs = (
-        _null_if_any_overflow(F.sum("_signed"), "_signed").alias("quantity"),
+        _null_if_any_overflow(F.try_sum("_signed"), "_signed").alias("quantity"),
         F.min_by(F.when(is_mint, F.col("to_")), F.when(is_mint, F.col("attribute_version_hex"))).alias(
             "original_owner"
         ),

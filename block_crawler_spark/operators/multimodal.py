@@ -1,16 +1,16 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal columns: media as opaque binary + typed metadata.
 
 Large-scale training pipelines treat media as ``BinaryType`` content columns
 with a typed metadata struct, processed by Arrow-batched ``mapInPandas``
-stages — that plumbing (schemas, batch shapes, 1→N frame fanout,
-partitioning) is fully real and tested here.  Only the *codec* decode step
-is environment-gated: with no image/audio libraries in the runtime, "raw"
-payloads are processed with pure numpy, and compressed codecs raise a
-clearly marked ``NotImplementedError`` unless PIL/soundfile happen to be
-installed (import-try, never a hard dependency).
+stages.  Here that is the 1→N video frame fanout (:func:`sample_frames`,
+"rawvideo" payloads; other codecs raise a clearly marked
+``NotImplementedError``) and the perceptual dHash family: the 1-D stage
+:func:`content_dhash` and the per-blob cores :func:`dhash_blob`,
+:func:`image_dhash_blob` and :func:`audio_energy_dhash_blob`, which the
+media queries (``plans.media_ops``) call from their own fused stages.
 
 Scale notes: media rows are large (MBs); the stages below never shuffle the
-content column — features/frames project it away as early as possible, and
+content column — hashes/frames project it away as early as possible, and
 fanout stages emit only the slices they keep.  Partition sizing is by bytes,
 not rows: repartition upstream so a partition's content fits executor
 memory (``spark.sql.files.maxPartitionBytes`` governs the scan side).
@@ -25,22 +25,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
-
-try:  # pragma: no cover - environment-dependent
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except Exception:  # pragma: no cover
-    _HAS_PIL = False
 
 MEDIA_METADATA = StructType(
     [
@@ -63,25 +54,6 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-IMAGE_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("n_bytes", LongType(), True),
-        StructField("byte_histogram", ArrayType(FloatType()), True),  # 16 bins, normalized
-        StructField("mean_intensity", FloatType(), True),
-    ]
-)
-
-AUDIO_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("n_samples", LongType(), True),
-        StructField("rms", FloatType(), True),
-        StructField("peak", FloatType(), True),
-        StructField("chunk_rms", ArrayType(FloatType()), True),
-    ]
-)
-
 FRAME_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -89,116 +61,6 @@ FRAME_SCHEMA = StructType(
         StructField("frame", BinaryType(), True),
     ]
 )
-
-
-def _decode_image(content: bytes, meta) -> np.ndarray:
-    """Binary → HxWxC uint8 array.  'raw' is real (numpy reshape); codec
-    formats need an image library (stubbed)."""
-    codec = meta["codec"]
-    if codec == "raw":
-        w, h, c = int(meta["width"]), int(meta["height"]), int(meta["channels"] or 1)
-        return np.frombuffer(content, dtype=np.uint8)[: w * h * c].reshape(h, w, c)
-    if not _HAS_PIL:  # pragma: no cover
-        raise NotImplementedError(
-            f"decoding codec {codec!r} requires an image library not present in this "
-            "runtime; supply 'raw' payloads or install PIL"
-        )
-    import io
-
-    return np.asarray(Image.open(io.BytesIO(content)))  # pragma: no cover
-
-
-def extract_image_features(media: DataFrame) -> DataFrame:
-    """Per-image features via Arrow-batched mapInPandas (pure numpy).
-
-    Content is consumed inside the stage and never emitted — the output is
-    feature-sized, so downstream shuffles move KBs, not media bytes.
-    """
-    cols = [f.name for f in IMAGE_FEATURE_SCHEMA.fields]
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                buf = np.frombuffer(r["content"] or b"", dtype=np.uint8)
-                hist = np.histogram(buf, bins=16, range=(0, 256))[0].astype(np.float64)
-                total = hist.sum() or 1.0
-                rows.append(
-                    {
-                        "media_id": r["media_id"],
-                        "n_bytes": len(buf),
-                        "byte_histogram": (hist / total).astype(np.float32).tolist(),
-                        "mean_intensity": float(buf.mean()) if len(buf) else None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.filter(F.col("kind") == "image").mapInPandas(feats, IMAGE_FEATURE_SCHEMA)
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize for 'raw' images (pure numpy); codec formats
-    are the stubbed path (`_decode_image`).  Output keeps MEDIA_SCHEMA."""
-    cols = [f.name for f in MEDIA_SCHEMA.fields]
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                meta = r["metadata"]
-                img = _decode_image(r["content"], meta)
-                h, w = img.shape[0], img.shape[1]
-                yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-                xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-                resized = img[yi][:, xi]
-                new_meta = dict(meta.asDict() if hasattr(meta, "asDict") else meta)
-                new_meta.update(width=out_w, height=out_h)
-                rows.append(
-                    {
-                        "media_id": r["media_id"],
-                        "kind": r["kind"],
-                        "content": resized.tobytes(),
-                        "metadata": new_meta,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.filter(F.col("kind") == "image").mapInPandas(resize, MEDIA_SCHEMA)
-
-
-def extract_audio_features(media: DataFrame, chunk: int = 1024) -> DataFrame:
-    """PCM16 audio → RMS/peak + per-chunk RMS profile (pure numpy)."""
-    cols = [f.name for f in AUDIO_FEATURE_SCHEMA.fields]
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                meta = r["metadata"]
-                if meta["codec"] != "pcm16":
-                    raise NotImplementedError(
-                        f"audio codec {meta['codec']!r} requires an audio library not "
-                        "present in this runtime; supply 'pcm16' payloads"
-                    )
-                samples = np.frombuffer(r["content"] or b"", dtype="<i2").astype(np.float64) / 32768.0
-                n = len(samples)
-                n_chunks = (n + chunk - 1) // chunk
-                crms = [
-                    float(np.sqrt(np.mean(samples[i * chunk : (i + 1) * chunk] ** 2)))
-                    for i in range(n_chunks)
-                ]
-                rows.append(
-                    {
-                        "media_id": r["media_id"],
-                        "n_samples": n,
-                        "rms": float(np.sqrt(np.mean(samples**2))) if n else None,
-                        "peak": float(np.abs(samples).max()) if n else None,
-                        "chunk_rms": np.asarray(crms, dtype=np.float32).tolist(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(feats, AUDIO_FEATURE_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
@@ -254,10 +116,10 @@ def _bit_weights(bits: int) -> np.ndarray:
 
 def dhash_blob(blob, grid: int = DHASH_GRID) -> tuple[int, int]:
     """The per-blob core of :func:`content_dhash` — (n_bytes, dhash) for one
-    binary payload.  Factored out (r14) so fused Arrow stages (planted
-    transform + fingerprint in ONE pass, guide §4: hash inside the decode
-    stage instead of round-tripping blobs between two Python stages) share
-    EXACTLY this arithmetic with the standalone operator."""
+    binary payload.  Fused Arrow stages (planted transform + fingerprint in
+    ONE pass: hash inside the decode stage instead of round-tripping blobs
+    between two Python stages) share EXACTLY this arithmetic with
+    :func:`content_dhash`."""
     arr = np.frombuffer(bytes(blob or b""), dtype=np.uint8)
     n = len(arr)
     if n == 0:
@@ -270,9 +132,25 @@ def dhash_blob(blob, grid: int = DHASH_GRID) -> tuple[int, int]:
 
 
 def image_dhash_blob(blob, width: int, grid: int = 8) -> tuple[int, int | None]:
-    """The per-image core of :func:`image_dhash` — (n_bytes, dhash or None
-    when the image lacks a grid×grid region).  Shared arithmetic contract
-    as :func:`dhash_blob`."""
+    """TWO-DIMENSIONAL perceptual dHash of one raw grayscale image of
+    ``width`` pixels per row — (n_bytes, dhash or None when the image lacks
+    a grid×grid region: no structure to compare, and pair queries filter
+    it).
+
+    Recipe: crop to the largest grid-aligned region (``H_used = H − H %
+    grid`` rows, ``W_used = W − W % grid`` cols), block-sum onto the fixed
+    grid×grid grid, and emit one bit per HORIZONTALLY adjacent block pair —
+    bit(y, x) = 1 iff block(y, x+1) exceeds block(y, x), packed row-major
+    MSB-first: (grid−1)·grid = 56 bits, sign-bit-free in an int64.  The
+    crop makes every block exactly ``(H_used/grid) × (W_used/grid)``
+    pixels, so the comparison is plain integer block sums — exact,
+    overflow-free (sums ≤ 255·pixels), and SQL-mirrorable from the hex
+    dump.
+
+    RESOLUTION INVARIANCE: a k× pixel-replication upscale of the
+    grid-aligned region multiplies every block sum by exactly k², so the
+    hash is IDENTICAL, not approximately equal.  A brightness shift (+k
+    per pixel) adds the same term to both sides of every comparison."""
     arr = np.frombuffer(bytes(blob or b""), dtype=np.uint8)
     n, w = len(arr), int(width)
     h_rows = n // w if w > 0 else 0
@@ -290,9 +168,22 @@ def image_dhash_blob(blob, width: int, grid: int = 8) -> tuple[int, int | None]:
 
 
 def audio_energy_dhash_blob(blob, grid: int) -> tuple[int, int]:
-    """The per-clip core of :func:`audio_energy_dhash` — (n_samples, dhash)
-    for one little-endian pcm16 payload (odd trailing byte dropped, the
-    r13 totality rule).  Shared arithmetic contract as :func:`dhash_blob`."""
+    """Perceptual AUDIO fingerprint of one little-endian pcm16 payload —
+    (n_samples, dhash); an odd trailing byte is dropped, so every payload
+    hashes.  The signal's ENERGY ENVELOPE is block-downsampled onto a fixed
+    ``grid`` of equal-frequency sample ranges (chunk energy = Σ sample²,
+    exact int64), one bit per adjacent chunk pair via the cross-multiplied
+    comparison ``e[k+1]·c[k] > e[k]·c[k+1]`` (as in :func:`dhash_blob`).
+
+    GAIN: amplifying by any factor g (no clipping) scales every chunk
+    energy by exactly g², which cancels in the comparison.  POLARITY: the
+    energy of −s equals that of s.  So a louder, quieter or phase-inverted
+    copy hashes identically; the fixed grid compares envelope shape, not
+    clip length.
+
+    Exactness bound: chunk energies ≤ 2³⁰·n/grid, so the cross-multiply
+    stays inside int64 for clips up to ~5.6 M samples (~6 min at 16 kHz
+    mono); window longer clips upstream.  Empty content hashes to 0."""
     raw = bytes(blob or b"")
     s = np.frombuffer(raw[: len(raw) // 2 * 2], dtype="<i2").astype(np.int64)
     n = len(s)
@@ -303,6 +194,7 @@ def audio_energy_dhash_blob(blob, grid: int) -> tuple[int, int]:
     c = np.bincount(blk, minlength=grid).astype(np.int64)
     b = (e[1:] * c[:-1] > e[:-1] * c[1:]).astype(object)
     return n, int((b * _bit_weights(grid - 1)).sum())
+
 
 DHASH_SCHEMA = StructType(
     [
@@ -349,9 +241,9 @@ def content_dhash(
 
     Content is consumed inside the stage and never emitted — output rows
     are 24 bytes, so the band join downstream shuffles signatures, never
-    media bytes (the multimodal scale contract).  For codec media (jpeg /
-    rawvideo) decode first (:func:`_decode_image` / :func:`sample_frames`)
-    and hash the decoded buffer; raw payloads hash as-is.
+    media bytes (the multimodal scale contract).  For video, sample frames
+    first (:func:`sample_frames`) and hash the frames; raw payloads hash
+    as-is.
 
     Exactness bound: the binding constraint is the cross-multiplied
     comparison itself — ``s[j+1]·c[j] ≈ 255·n²/grid²`` must stay inside
@@ -388,139 +280,4 @@ def content_dhash(
 IMG_DHASH_GRID = 8  # 8×8 block means → 7 horizontal diffs × 8 rows = 56 bits
 IMG_DHASH_BITS = (IMG_DHASH_GRID - 1) * IMG_DHASH_GRID
 
-IMG_DHASH_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("n_bytes", LongType(), False),
-        StructField("dhash", LongType(), True),  # NULL: image smaller than the grid
-    ]
-)
-
-
-def image_dhash(
-    media: DataFrame, grid: int = IMG_DHASH_GRID, extra_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """TWO-DIMENSIONAL perceptual dHash for raw grayscale images (round 13
-    — the 2-D sibling of :func:`content_dhash`, which treats content as a
-    1-D stream).  Input rows carry their own ``width`` column (the typed-
-    metadata pattern), so one Arrow stage hashes a mixed-resolution corpus.
-
-    Recipe: crop to the largest grid-aligned region (``H_used = H − H %
-    grid`` rows, ``W_used = W − W % grid`` cols), block-mean downsample
-    onto the fixed grid×grid grid, and emit one bit per HORIZONTALLY
-    adjacent block pair — bit(y, x) = 1 iff block(y, x+1)'s mean exceeds
-    block(y, x)'s, packed row-major MSB-first: (grid−1)·grid = 56 bits,
-    sign-bit-free in an int64.  Because the crop makes every block exactly
-    ``(H_used/grid) × (W_used/grid)`` pixels, the counts CANCEL and the
-    comparison is plain integer block sums — exact, overflow-free (sums ≤
-    255·pixels), and SQL-mirrorable from the hex dump.
-
-    The property the 1-D hash cannot have: RESOLUTION INVARIANCE.  A k×
-    pixel-replication upscale of the grid-aligned region multiplies every
-    block sum by exactly k² (block boundaries scale with H_used/W_used),
-    so the comparisons — and the hash — are IDENTICAL in integer
-    arithmetic, not approximately: a 16×16 thumbnail and its 32×32 copy
-    pair at Hamming 0 (pytest + the oracle-checked
-    ``media_image_dhash_pairs`` planted corpus).  Brightness shifts cancel
-    the same way as in :func:`content_dhash` (equal-size blocks: +k per
-    pixel adds the same term to both sums).
-
-    Images with fewer than ``grid`` usable rows or columns hash to NULL
-    (no 8×8 structure to compare — the no-evidence policy; pair queries
-    filter them).  Input: (media_id, width int, content binary).  Output:
-    (media_id, n_bytes, dhash nullable); ``extra_cols`` names input
-    columns passed through unchanged (the :func:`content_dhash`
-    passthrough pattern — round 14, so the video family's per-FRAME
-    signatures keep their ``frame_index``; content itself is still
-    consumed in-stage, never emitted)."""
-    schema = StructType(IMG_DHASH_SCHEMA.fields + [media.schema[c] for c in extra_cols])
-
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_n, out_h = [], []
-            for blob, w in zip(pdf["content"], pdf["width"]):
-                n, h = image_dhash_blob(blob, w, grid)
-                out_n.append(n)
-                out_h.append(h)
-            out = {"media_id": pdf["media_id"], "n_bytes": out_n, "dhash": out_h}
-            for c in extra_cols:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(hashes, schema)
-
-
 AUDIO_DHASH_GRID = 61  # 61 chunk energies → 60 adjacent-difference bits
-
-
-def audio_energy_dhash(media: DataFrame, grid: int = AUDIO_DHASH_GRID) -> DataFrame:
-    """Perceptual AUDIO fingerprint over pcm16 content (round 13 — the
-    audio member of the dHash triad: 1-D bytes → :func:`content_dhash`,
-    2-D images → :func:`image_dhash`, audio → this): the signal's ENERGY
-    ENVELOPE, block-downsampled onto a fixed ``grid`` of equal-frequency
-    sample ranges (chunk energy = Σ sample², exact int64), one bit per
-    adjacent chunk pair via the cross-multiplied comparison
-    ``s[k+1]·c[k] > s[k]·c[k+1]``.
-
-    The invariance theorems (pytest-pinned, and what make it PERCEPTUAL):
-    * GAIN: amplifying by any factor g (no clipping) scales every chunk
-      energy by exactly g², which cancels in the cross-multiplied
-      comparison — a remastered louder/quieter copy hashes identically;
-    * POLARITY: energy of −s equals energy of s — a phase-inverted copy
-      hashes identically;
-    * the fixed grid is duration-normalized, so envelope shape — not
-      clip length — is what's compared.
-
-    Exactness bound: chunk energies ≤ 2³⁰·n/grid, so the cross-multiply
-    stays inside int64 for clips up to ~5.6 M samples (~6 min at 16 kHz
-    mono); longer clips should be windowed upstream (the frame-sampling
-    stage).  Empty content hashes to 0 (all-zero chunks compare false),
-    matching :func:`content_dhash`'s degenerate rule.
-
-    Input: (media_id, content: binary — little-endian pcm16).  Output:
-    (media_id, n_samples, dhash)."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("n_samples", LongType(), False),
-            StructField("dhash", LongType(), False),
-        ]
-    )
-
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_n, out_h = [], []
-            for blob in pdf["content"]:
-                n, h = audio_energy_dhash_blob(blob, grid)
-                out_n.append(n)
-                out_h.append(h)
-            yield pd.DataFrame({"media_id": pdf["media_id"], "n_samples": out_n, "dhash": out_h})
-
-    return media.mapInPandas(hashes, schema)
-
-
-def synthetic_media(spark, n_images: int = 8, n_audio: int = 4, n_video: int = 2):
-    """Deterministic fake media table (seeded bytes) for tests/demos."""
-    rng = np.random.default_rng(42)
-    rows = []
-    mid = 0
-    for _ in range(n_images):
-        w, h, c = 16, 12, 3
-        rows.append(
-            (mid, "image", rng.integers(0, 256, w * h * c, dtype=np.uint8).tobytes(),
-             (w, h, c, None, None, "raw", None))
-        )
-        mid += 1
-    for _ in range(n_audio):
-        n = 4000
-        pcm = (np.sin(np.linspace(0, 440, n)) * 20000).astype("<i2")
-        rows.append((mid, "audio", pcm.tobytes(), (None, None, None, 16000, 250, "pcm16", None)))
-        mid += 1
-    for _ in range(n_video):
-        w, h, c, nf = 8, 6, 1, 10
-        rows.append(
-            (mid, "video", rng.integers(0, 256, w * h * c * nf, dtype=np.uint8).tobytes(),
-             (w, h, c, None, None, "rawvideo", nf))
-        )
-        mid += 1
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

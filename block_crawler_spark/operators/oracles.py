@@ -1,19 +1,16 @@
-"""Ordering and classification oracles.
+"""Ordering oracle.
 
 Reference: ``nft/evm/oracles.py`` — ``LogVersionOracle`` (T14) assigns every
 log a total event order ``block*1e9 + tx_index*1e4 + log_index`` emitted as a
-40-char zero-padded hex string; ``TokenTransactionTypeOracle`` (T15)
-classifies transfers as mint/burn/transfer.  Both are single column
-expressions here — no UDFs.
+40-char zero-padded hex string.  It is a single column expression here — no
+UDF.  The reference's ``TokenTransactionTypeOracle`` (T15, mint/burn/transfer)
+is inlined in the transfer decode (``operators.decode._transfer_cols``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..functions.hexint import ADDRESS_HEX_WIDTH, ZERO_ADDRESS, normalize_hex
-from ..schemas import TX_BURN, TX_MINT, TX_TRANSFER
 
 VERSION_BLOCK_FACTOR = 1_000_000_000
 VERSION_TX_FACTOR = 10_000
@@ -39,20 +36,3 @@ def attribute_version_hex(block: Column, tx_index: Column, log_index: Column) ->
     itself is a valid sort/range key (cf. ``padded_hex``/``zfill(40)``).
     """
     return F.lpad(F.lower(F.hex(attribute_version(block, tx_index, log_index))), 40, "0")
-
-
-def classify_transfer(from_: Column, to: Column, collection_id: Column) -> Column:
-    """mint/burn/transfer classification (reference ``oracles.py:25-52``).
-
-    Order matters: ``to == 0x0`` → burn first; then ``from ∈ {0x0, the
-    collection contract}`` → mint; else transfer.
-    """
-    zero = F.lit(ZERO_ADDRESS)
-    f = normalize_hex(from_, ADDRESS_HEX_WIDTH)
-    t = normalize_hex(to, ADDRESS_HEX_WIDTH)
-    c = normalize_hex(collection_id, ADDRESS_HEX_WIDTH)
-    return (
-        F.when(t == zero, F.lit(TX_BURN))
-        .when(((f == zero) | (f == c)) & (t != c), F.lit(TX_MINT))
-        .otherwise(F.lit(TX_TRANSFER))
-    )

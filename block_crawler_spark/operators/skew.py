@@ -1,17 +1,11 @@
-"""Skew mitigation: salted joins for pathological hot keys.
+"""Skew mitigation: salted aggregation for pathological hot keys.
 
-AQE's skew-join splitting (enabled in ``session.get_spark``) handles most
-skew at runtime, but an *extreme* hot key — one NFT collection receiving
-half of all transfers, one zero-address account in a balance join — can
-still bottleneck a single task when AQE's split granularity runs out, or
-when the join is hash- rather than sort-merge-based.  Classic fix: salt.
-
-``salted_join`` replicates the *small/right* side ``salt_factor`` times and
-adds a uniform salt to the big side's key, turning one hot partition into
-``salt_factor`` even ones.  The salt is derived from stable row content
-(xxhash64 of all left columns), not ``rand()``, so plans stay deterministic
-and retry-safe — the same property the engine's version-guarded sinks rely
-on.
+AQE's skew-join splitting (enabled in ``session.get_spark``) handles skewed
+joins at runtime.  An *extreme* hot aggregation key — one NFT collection
+receiving half of all transfers — can still bottleneck a single task.
+Classic fix: salt.  The salt is derived from stable row content (xxhash64
+of all columns), not ``rand()``, so plans stay deterministic and
+retry-safe — the same property the engine's version-guarded sinks rely on.
 
 ``salted_aggregate`` is two-phase group-by for skewed aggregation keys:
 partial aggregate on (key, salt), final on key.  (For algebraic aggregates
@@ -30,29 +24,6 @@ from pyspark.sql import functions as F
 
 def _content_salt(df: DataFrame, salt_factor: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_factor)).cast("int")
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: Sequence[str],
-    salt_factor: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated.
-
-    Equivalent to ``big.join(small, on, how)`` for how ∈ {inner, left} but
-    with hot keys spread over ``salt_factor`` partitions.  The small side
-    grows ×salt_factor — keep it dimension-sized.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left joins")
-    salted_big = big.withColumn("_salt", _content_salt(big, salt_factor))
-    replicated = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_factor)]))
-    )
-    out = salted_big.join(replicated, [*on, "_salt"], how)
-    return out.drop("_salt")
 
 
 def salted_aggregate(

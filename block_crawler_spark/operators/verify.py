@@ -237,47 +237,3 @@ def verify_chain_continuity(
     if empty_range is not None:
         out = out.unionByName(empty_range)
     return out
-
-
-def reconcile_tx_receipts(transactions: DataFrame, receipts: DataFrame) -> DataFrame:
-    """Transactions bronze vs receipts bronze: every mined transaction must
-    have exactly one receipt agreeing on position and parties (the
-    reference fans tx hashes to a receipt fetch per hash,
-    ``evm/transformers.py:90-108`` — this is the batch audit of that
-    pairing).  Full-outer on the hash; null sides are the two error
-    classes, matched rows are field-compared.
-    """
-    t = transactions.select(
-        F.col("hash").alias("tx_hash"),
-        F.col("block_number").alias("t_block"),
-        F.col("transaction_index").alias("t_index"),
-        F.col("from_").alias("t_from"),
-        F.col("to_").alias("t_to"),
-    )
-    r = receipts.select(
-        F.col("transaction_hash").alias("tx_hash"),
-        F.col("block_number").alias("r_block"),
-        F.col("transaction_index").alias("r_index"),
-        F.col("from_").alias("r_from"),
-        F.col("to_").alias("r_to"),
-        F.col("contract_address"),
-    )
-    j = t.join(r, "tx_hash", "full_outer")
-    # every field compare is null-SAFE: a NULL block/index on either side is
-    # itself a mismatch signal and must not make the predicate vanish
-    mismatch = (
-        ~F.col("t_block").eqNullSafe(F.col("r_block"))
-        | ~F.col("t_index").eqNullSafe(F.col("r_index"))
-        | ~F.col("t_from").eqNullSafe(F.col("r_from"))
-        | ~F.col("t_to").eqNullSafe(F.col("r_to"))
-        # a creation tx (NULL to_) must carry a contract_address and vice versa
-        | (F.col("t_to").isNull() & F.col("contract_address").isNull())
-        | (F.col("t_to").isNotNull() & F.col("contract_address").isNotNull())
-    )
-    return j.select(
-        "tx_hash",
-        F.when(F.col("r_block").isNull(), F.lit("missing_receipt"))
-        .when(F.col("t_block").isNull(), F.lit("orphan_receipt"))
-        .when(mismatch, F.lit("field_mismatch"))
-        .alias("error"),
-    ).filter(F.col("error").isNotNull())

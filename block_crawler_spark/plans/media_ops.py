@@ -235,39 +235,12 @@ PHASH_NOISE_MOD, PHASH_NOISE_STRIDE, PHASH_NOISE_EVERY = 11, 31, 13
 PHASH_EXACT_MOD = 5
 
 
-def _planted_transform_media(docs: DataFrame) -> DataFrame:
-    """documents → media corpus with planted perceptual twins, as REAL
-    transformed blobs through an Arrow ``mapInPandas`` stage (the
-    re-encode/transform stage of a media pipeline; fanout inside the
-    batch, like ``sample_frames``).  On a real media table you would point
-    :func:`content_dhash` at the content column directly — this stage
-    exists because the harness carries no media tables."""
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    schema = StructType(
-        [StructField("media_id", LongType(), False), StructField("content", BinaryType(), False)]
-    )
-
-    def fan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _check_twin_ids(pdf)
-            ids: list[int] = []
-            blobs: list[bytes] = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                for mid, blob in _phash_doc_blobs(int(did), txt):
-                    ids.append(mid)
-                    blobs.append(blob)
-            yield pd.DataFrame({"media_id": ids, "content": blobs})
-
-    return docs.select("doc_id", "text").mapInPandas(fan, schema)
-
-
 def _phash_doc_blobs(did: int, txt):
     """One document's planted 1-D media rows — (media_id, blob) for the
-    source and each minted twin.  The ONE definition of the twin
-    transforms, shared by :func:`_planted_transform_media` (blob output)
-    and the fused signature stage :func:`_planted_phash_sigs`, so the two
-    can never drift."""
+    source and each minted twin: the ONE definition of the twin
+    transforms, read by the fused signature stage
+    :func:`_planted_phash_sigs` (and by the tests' independent recompute,
+    so the two can never drift)."""
     import numpy as np
 
     raw = (txt or "").encode("utf-8")
@@ -287,14 +260,14 @@ def _phash_doc_blobs(did: int, txt):
 
 def _planted_phash_sigs(docs: DataFrame, with_digest: bool = False) -> DataFrame:
     """Planted 1-D transform corpus AND its content dHash in ONE Arrow
-    stage (r14 — guide §4: the blobs previously crossed the JVM↔Python
-    boundary twice, once out of the transform stage and once into the
-    fingerprint stage; fingerprinting inside the transform stage means
-    content bytes never leave Python at all).  Twin transforms come from
+    stage: fingerprinting inside the transform stage means content bytes
+    never leave Python at all (a transform stage feeding
+    :func:`operators.multimodal.content_dhash` would ship every blob across
+    the JVM↔Python boundary twice).  Twin transforms come from
     :func:`_phash_doc_blobs` and the hash from
     ``operators.multimodal.dhash_blob`` — the exact per-blob core of
-    ``content_dhash`` — so the output rows are identical to the old
-    two-stage chain.  ``with_digest=True`` additionally emits the
+    ``content_dhash`` — so the output rows are identical to that two-stage
+    chain.  ``with_digest=True`` additionally emits the
     byte-exact detector's digest (md5 of the lowercase hex dump — the
     same string ``F.md5(F.lower(F.hex(content)))`` produces) for the
     agreement-matrix consumers.  Output: (media_id, n_bytes, dhash
@@ -349,7 +322,7 @@ def media_phash_near_dup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`operators.dedup.simhash_band_pairs` — 4 × 15-bit band
     equi-join + exact ``bit_count(xor)`` verify).  The corpus is the
     documents-derived blobs plus planted brightness/noise twins
-    (:func:`_planted_transform_media`): brightness twins pair at
+    (:func:`_phash_doc_blobs`): brightness twins pair at
     Hamming 0 BY CONSTRUCTION (a global level shift adds the same term to
     both sides of the cross-multiplied mean comparison) — exact only for
     byte values ≤ 255 − {PHASH_BRIGHT_DELTA}, since the LEAST/np.minimum
@@ -610,9 +583,10 @@ def _image_doc_blobs(did: int, txt, grid: int):
 def _planted_image_sigs(docs: DataFrame) -> DataFrame:
     """Planted raw-image corpus AND its 2-D dHash in ONE Arrow stage (r14 —
     the :func:`_planted_phash_sigs` fusion applied to the image family;
-    per-blob arithmetic is ``operators.multimodal.image_dhash_blob``, the
-    exact core of ``image_dhash``).  Output: (media_id, n_bytes, dhash
-    nullable — NULL for sub-grid images, as the standalone operator)."""
+    per-blob arithmetic is the per-image core
+    ``operators.multimodal.image_dhash_blob``).  Output: (media_id,
+    n_bytes, dhash nullable — NULL for sub-grid images, as
+    ``image_dhash_blob`` gives)."""
     from pyspark.sql.types import StructField, StructType
 
     from ..operators.multimodal import IMG_DHASH_GRID, image_dhash_blob
@@ -644,7 +618,7 @@ def _planted_image_sigs(docs: DataFrame) -> DataFrame:
 
 def media_image_dhash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSS-RESOLUTION perceptual near-dup pairs (round 13): the 2-D
-    ``image_dhash`` (8×8 block means of the grid-aligned region, 56
+    ``image_dhash_blob`` (8×8 block means of the grid-aligned region, 56
     horizontal-difference bits — see ``operators.multimodal``) over the
     planted raw-image corpus, banded with the shared SimHash Hamming
     machinery.  The capability the 1-D ``media_phash_near_dup_pairs``
@@ -802,9 +776,9 @@ def _audio_doc_blobs(did: int, txt):
 def _planted_audio_sigs(docs: DataFrame) -> DataFrame:
     """Planted pcm16 corpus AND its energy-envelope dHash in ONE Arrow
     stage (r14 — the :func:`_planted_phash_sigs` fusion applied to the
-    audio family; per-blob arithmetic is
-    ``operators.multimodal.audio_energy_dhash_blob``, the exact core of
-    ``audio_energy_dhash``).  Output: (media_id, n_samples, dhash)."""
+    audio family; per-blob arithmetic is the per-clip core
+    ``operators.multimodal.audio_energy_dhash_blob``).  Output: (media_id,
+    n_samples, dhash)."""
     from pyspark.sql.types import StructField, StructType
 
     from ..operators.multimodal import AUDIO_DHASH_GRID, audio_energy_dhash_blob
@@ -836,7 +810,7 @@ def _planted_audio_sigs(docs: DataFrame) -> DataFrame:
 
 def media_audio_energy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GAIN- and POLARITY-invariant audio near-dup pairs (round 13): the
-    energy-envelope dHash (``operators.multimodal.audio_energy_dhash`` —
+    energy-envelope dHash (``operators.multimodal.audio_energy_dhash_blob`` —
     61 chunk energies of the pcm16 signal, 60 cross-multiplied
     adjacent-difference bits) over the planted audio corpus, banded with
     the shared SimHash Hamming machinery.  A ×{AUDIO_GAIN} louder twin
@@ -952,39 +926,6 @@ VIDEO_FRAME_MAX_HAMMING = 6  # per aligned frame, same cut as the image family
 VIDEO_MIN_AGREE_PPM = 600_000  # sequence match = ≥60 % of aligned frames agree
 
 
-def _planted_video_media(docs: DataFrame) -> DataFrame:
-    """documents → rawvideo clip corpus with planted BRIGHTNESS and
-    FRAME-REVERSAL twins (real transformed blobs through an Arrow stage,
-    like the other planted families): each doc's UTF-8 bytes are a clip of
-    {VIDEO_FRAME_BYTES}-byte frames (trailing partial frame dropped);
-    every {VIDEO_BRIGHT_MOD}th doc also ships the clip at
-    +{VIDEO_BRIGHT_DELTA} brightness (the re-encode class a perceptual
-    detector must FIND), every {VIDEO_REV_MOD}th doc with ≥2 frames ships
-    its frames in REVERSE order (same content, destroyed temporal
-    alignment — the negative control the detector must NOT pair; a
-    1-frame reversal is the identity, so those are never planted).
-    Output: (media_id, content)."""
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    schema = StructType(
-        [StructField("media_id", LongType(), False), StructField("content", BinaryType(), False)]
-    )
-    fb = VIDEO_FRAME_BYTES
-
-    def fan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _check_twin_ids(pdf)
-            ids: list[int] = []
-            blobs: list[bytes] = []
-            for did, txt in zip(pdf["doc_id"], pdf["text"]):
-                for mid, blob in _video_doc_blobs(int(did), txt):
-                    ids.append(mid)
-                    blobs.append(blob)
-            yield pd.DataFrame({"media_id": ids, "content": blobs})
-
-    return docs.select("doc_id", "text").mapInPandas(fan, schema)
-
-
 def _video_doc_blobs(did: int, txt):
     """One document's planted rawvideo rows — (media_id, clip_bytes) for
     the source and each minted brightness/reversal twin (the ONE twin
@@ -1009,15 +950,13 @@ def _video_doc_blobs(did: int, txt):
 
 def _planted_video_frame_sigs(docs: DataFrame) -> DataFrame:
     """Planted clip corpus, frame sampling, AND per-frame 2-D dHash in ONE
-    Arrow stage (r14 — guide §4 applied to the video family's previous
-    THREE-stage Python chain: planted transform → ``sample_frames`` →
-    ``image_dhash``, with clip/frame bytes crossing the JVM↔Python
-    boundary between every pair).  Frame slicing replays the
-    ``sample_frames`` recipe on the rawvideo layout (every
-    ``FRAME_EVERY_N``-th {VIDEO_FRAME_BYTES}-byte frame) and per-frame
-    hashing is ``operators.multimodal.image_dhash_blob`` — the exact core
-    of ``image_dhash`` — so the rows equal the old chain's.  Output:
-    (media_id, frame_index, dhash nullable)."""
+    Arrow stage, so clip and frame bytes never cross the JVM↔Python
+    boundary between a transform, a ``sample_frames`` and a hash stage.
+    Frame slicing replays the ``sample_frames`` recipe on the rawvideo
+    layout (every ``FRAME_EVERY_N``-th {VIDEO_FRAME_BYTES}-byte frame) and
+    per-frame hashing is the per-image core
+    ``operators.multimodal.image_dhash_blob``.  Output: (media_id,
+    frame_index, dhash nullable)."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     from ..operators.multimodal import IMG_DHASH_GRID, image_dhash_blob
@@ -1057,8 +996,8 @@ def media_video_dhash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     fourth modality; until now video had only exact per-frame md5 in
     ``media_frame_stats``).  The composition the verdict prescribed: the
     REAL ``sample_frames`` stage (every {FRAME_EVERY_N}nd frame, fanout
-    inside the Arrow batch) → per-frame 2-D ``image_dhash`` (the
-    ``extra_cols`` passthrough carries ``frame_index``) → the banded
+    inside the Arrow batch) → per-frame 2-D ``image_dhash_blob`` (the
+    frame's ``frame_index`` carried alongside) → the banded
     Hamming machinery PER ALIGNED FRAME (band equi-join keyed
     (frame_index, band_index, band_value) — a candidate pair must collide
     at the SAME temporal position) → sequence-level agreement: a pair is
@@ -1067,7 +1006,7 @@ def media_video_dhash_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     {VIDEO_FRAME_MAX_HAMMING}.  A brightness-shifted re-encode pairs at
     100 % agreement (per-frame exact invariance — equal-size blocks), a
     frame-REVERSED copy of the same clip does NOT pair (same frames,
-    destroyed alignment) — both planted by :func:`_planted_video_media`
+    destroyed alignment) — both planted by :func:`_video_doc_blobs`
     and pinned in tests/test_r14_evidence.py; the DuckDB oracle replays
     clip derivation, frame sampling, per-frame hashing, and the agreement
     ratio from the hex dump.
@@ -1459,13 +1398,13 @@ def media_stream_phash_admission_sim_query(spark: SparkSession, sf_dir: str) -> 
     ``dedup_stream_admission_sim`` for the exact-fp gate).  The planted
     transform corpus IS the streaming story: the source documents play the
     admitted corpus, and the minted twins — brightness level-shift, sparse
-    noise, verbatim copy (:func:`_planted_transform_media`) — play an
+    noise, verbatim copy (:func:`_phash_doc_blobs`) — play an
     incoming micro-batch of re-encodes, the near-dup class the byte-exact
     fp gate can never catch.  The rule is replayed with the STORE'S OWN
     banding code (``CorpusIngestStore._phash_bands`` — 4 × 15-bit bands,
     all-zero signatures excluded, so degenerate docs neither block nor get
     blocked) over the REAL Arrow-stage fingerprint
-    (:func:`operators.multimodal.content_dhash`): a batch doc sharing a
+    (``operators.multimodal.dhash_blob``, the core of ``content_dhash``): a batch doc sharing a
     band with a LOWER-id batch doc at Hamming ≤ {PHASH_MAX_HAMMING} is
     ``blocked_batch`` (the within-batch keep-lowest-id rule), a survivor
     sharing a band with an admitted doc at Hamming ≤ {PHASH_MAX_HAMMING}

@@ -1,19 +1,22 @@
-"""Structured Streaming operators (ST1/ST7): watermarked windows + foreachBatch tail.
+"""Structured Streaming operators (ST1 and beyond): a stream-stream
+interval join and a foreachBatch tail.
 
-Two genuinely streaming surfaces on top of the batch engine:
-
-* ``windowed_event_counts`` — tumbling event-time windows with a watermark
-  over a streaming events source.  The reference has no window operators
-  (SURVEY ST7) — this is a beyond-parity extension; the aggregation body is
-  the same expression set as the batch ``evt_window_hourly`` query, so batch
-  and streaming results agree (tested with ``availableNow`` over file
-  chunks).
+* ``stream_interval_join`` — a watermarked two-stream interval join.  The
+  reference's streaming loop has no two-stream operators; this is a
+  beyond-parity extension whose state the watermarks bound.
 * ``stream_tail`` — Structured Streaming over a bronze logs directory with
   ``foreachBatch`` applying the batch crawl DAG + version-guarded merges
   per micro-batch.  Spark's checkpoint gives at-least-once delivery; the
   merges' idempotence upgrades it to effectively-once (ST3-ST5), exactly
   the batch TailRunner's contract but driven by the streaming engine and
-  resumable from its checkpoint.
+  resumable from its checkpoint.  No CLI command runs it yet: the CLI's
+  one tail driver is ``streaming.tail.TailRunner`` (ROADMAP direction 8
+  keeps one of the two).
+
+Windowed aggregates, session windows, streaming dedup and stateful
+consumers are Structured Streaming's own declarative operators
+(``window``, ``session_window``, ``dropDuplicatesWithinWatermark``,
+``applyInPandasWithState``); the engine adds no wrapper over them.
 
 Late data: the watermark only bounds streaming *state*; the entity sinks
 never drop late events — a late transfer is applied iff its version wins
@@ -28,48 +31,6 @@ from pyspark.sql import functions as F
 from ..schemas import LOG_SCHEMA
 from .store import SilverStore
 from .tail import commit_batch
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling window per event_type: count, decimal value sum, user count.
-
-    Works on both batch and streaming DataFrames (the streaming one must
-    carry an event-time ``ts`` column); with a stream, the watermark bounds
-    state for late rows.
-    """
-    src = events
-    if src.isStreaming:
-        src = src.withWatermark("ts", watermark)
-    return src.groupBy(F.window("ts", window).alias("win"), F.col("event_type")).agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("decimal(38,2)").alias("total_value"),
-        F.approx_count_distinct("user_id").alias("approx_users"),
-    )
-
-
-def session_event_stats(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Native session windows per user: Spark's ``session_window`` merges
-    events whose gaps are under ``gap`` into one growing window — the
-    built-in form of the batch ``evt_sessionize`` plan (which computes the
-    same sessions relationally for the DuckDB oracle).  Streaming input
-    gets watermark-bounded state: a session closes (and its state frees)
-    once the watermark passes its end.
-    """
-    src = events
-    if src.isStreaming:
-        src = src.withWatermark("ts", watermark)
-    return src.groupBy(F.session_window("ts", gap).alias("session"), F.col("user_id")).agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("decimal(38,2)").alias("total_value"),
-    )
 
 
 def stream_interval_join(
@@ -128,12 +89,6 @@ def stream_interval_join(
     )
 
 
-def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    """File-based streaming source over events parquet chunks (µs ts)."""
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    return spark.readStream.schema(schema).parquet(source_dir)
-
-
 def stream_tail(
     spark: SparkSession,
     logs_source: "str | DataFrame",
@@ -184,21 +139,3 @@ def stream_tail(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_dedup(
-    events: DataFrame,
-    keys: list[str],
-    event_time_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming deduplication with bounded state.
-
-    ``dropDuplicatesWithinWatermark`` keeps each key's state only until the
-    watermark passes — the streaming form of the engine's idempotent-append
-    sink (K6): duplicate deliveries inside the watermark horizon are dropped
-    exactly once, state never grows unboundedly.  For the chain-tail path
-    the natural key is ``attribute_version_hex`` (+ batch_index); for event
-    streams, the event id.
-    """
-    return events.withWatermark(event_time_col, watermark).dropDuplicatesWithinWatermark(keys)

@@ -1,32 +1,46 @@
-"""Empirical scaling curve: representative queries at sf0.001/0.01/0.1.
+"""Empirical scaling curve: registry queries timed at one or more scale factors.
 
 The 100 TB argument in docs/SCALE.md is structural (shuffle inventory,
-partition math); this probe adds the measurement: per-query wall-clock at
-three scale factors spanning 100× input growth.  A query whose time grows
-~linearly (or better, sub-linearly while input outpaces overheads) has no
-hidden super-linear stage at these sizes; anything quadratic would already
-bend visibly across 100×.
+partition math); this probe adds the measurement.  Two query sets:
 
-Each timing is best-of-2 against the noop sink, after a warm-up query per
-SF so scan caches/JIT are comparable.  Usage:
+* ``--queries families`` (default): one representative per operator
+  family at sf0.001/0.01/0.1, spanning 100× input growth.  A query whose
+  time grows ~linearly (or better, sub-linearly while input outpaces
+  overheads) has no hidden super-linear stage at these sizes; anything
+  quadratic would already bend visibly across 100×.
+* ``--queries top10``: the ten most expensive registry queries, for the
+  core-count × scale-factor rows (run once per ``SPARK_GRAFT_CPUS``).
 
-    PYTHONPATH=/root/repo python scripts/scaling_probe.py
+Per SF the probe scans every table once (noop sink), then runs each query
+``--repeat`` times against the noop sink.  ``probes`` holds the best
+sample, ``cold`` the first: a query riding the build-time memo
+(``plans/memo.py``, keyed by the input tables) pays its build in the first
+sample of each SF.  Usage, from any directory:
+
+    python scripts/scaling_probe.py [--queries families|top10] [--sf DIR ...] [--repeat N]
+
+Prints one JSON line {queries, cpus, sfs, probes, cold, load1}.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+# the Python workers import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (_REPO, os.environ.get("PYTHONPATH")) if p)
 
 from block_crawler_spark.session import get_spark  # noqa: E402
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
 # one representative per operator family, heaviest first
-PROBES = [
+FAMILIES = [
     "nft_token_state_from_lineitem",  # decode + A1 fold (flagship)
     "tpch_q8_market_share",  # multi-join relational
     "dedup_minhash_lsh_pairs",  # shingle explosion + band join
@@ -85,53 +99,60 @@ PROBES = [
     "media_video_dhash_pairs",
 ]
 
-# Probes whose first execution per SF pays a session-memo build (the memo
-# keys include sf_dir, so each SF's first sample is genuinely cold): for
-# these the probe reports BOTH curves — cold (first sample) and warm
-# (best-of-rest) — per VERDICT r13 task 6 (the warm flatness was the r13
-# headline scale claim; the cold path deserves the same three-SF row).
-MEMO_PROBES = {
-    "dedup_semantic_keep",  # Lloyd train + p1 pair stage + closure build
-    "emb_balanced_sample_mp2",  # FIRST mp2 probe in list order, so its
-    # first sample pays the mp2 pair+closure build (centroids already
-    # memoized by the p1 probes — exactly what a fresh session replaying
-    # this order pays; dedup_semantic_keep_mp2 later is fully warm)
-    "emb_pq_rerank_topk",  # trained-PQ codebook build (emb_pq_topk earlier
-    # in the list uses the SEED codebook, not the memo)
-    "dedup_family_overlap",  # four under-valve pair-frame memos (r14)
-    "doc_curation_pipeline",  # FIRST minhash-pair memo consumer in list
-    # order (its near-dup drop list is the memoized minhash_pair_stage) —
-    # its first sample per SF pays that build; dedup_pair_pagerank later
-    # in the list replays the memo warm
-}
+# by the r15 start-of-round telemetry
+TOP10 = [
+    "emb_ivfpq_residual_topk",
+    "emb_ivfpq_topk",
+    "emb_pq_rerank_topk",
+    "emb_ivfpq_rerank_topk",
+    "dedup_family_overlap",
+    "pipeline_contamination",
+    "doc_curation_pipeline",
+    "media_modality_overlap",
+    "nft_token_state_from_lineitem",
+    "dedup_stream_semantic_admission_sim",
+]
+
+QUERY_SETS = {"families": FAMILIES, "top10": TOP10}
 
 
 def main() -> int:
     from block_crawler_spark.plans.registry import all_queries
+    from block_crawler_spark.sources.tables import load_all
+
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--queries", choices=sorted(QUERY_SETS), default="families")
+    ap.add_argument("--sf", action="append", help="scale-factor directory; repeat for several (default: %s)" % SFS)
+    ap.add_argument("--repeat", type=int, default=2)
+    args = ap.parse_args()
+    sfs = args.sf or SFS
 
     spark = get_spark("scaling-probe")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
-    out: dict = {"probes": {}, "sfs": SFS}
-    for sf in SFS:
-        # warm-up: touch every table + JIT the common codegen paths
-        registry["tpch_q6_revenue_forecast"][0](spark, sf).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        for name in PROBES:
+    out: dict = {
+        "queries": args.queries,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "sfs": sfs,
+        "probes": {},
+        "cold": {},
+    }
+    for sf in sfs:
+        key = sf.rstrip("/").rsplit("/", 1)[-1]
+        # warm-up: scan every table + JIT the common codegen paths
+        for df in load_all(spark, sf).values():
+            df.write.format("noop").mode("overwrite").save()
+        for name in QUERY_SETS[args.queries]:
             fn, _ = registry[name]
+            spark.sparkContext.setJobDescription(f"scaling-probe {name}")
             samples = []
-            for _ in range(2):
+            for _ in range(args.repeat):
                 t0 = time.monotonic()
                 fn(spark, sf).write.format("noop").mode("overwrite").save()
-                dt = time.monotonic() - t0
-                samples.append(dt)
-            key = sf.rsplit("/", 1)[-1]
+                samples.append(time.monotonic() - t0)
             out["probes"].setdefault(name, {})[key] = round(min(samples), 3)
-            if name in MEMO_PROBES:
-                # first sample per SF is the memo-cold execution (keys
-                # include sf_dir); min-of-rest is the warm steady state
-                out.setdefault("cold", {}).setdefault(name, {})[key] = round(samples[0], 3)
+            out["cold"].setdefault(name, {})[key] = round(samples[0], 3)
+    out["load1"] = round(os.getloadavg()[0], 1)
     print(json.dumps(out))
     return 0
 

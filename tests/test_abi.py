@@ -4,14 +4,16 @@ from decimal import Decimal
 
 from pyspark.sql import functions as F
 
-from block_crawler_spark.functions.abi import decode_string, decode_uint256_array, word, word_uint
-from block_crawler_spark.operators.decode import bind_dynamic_slots
+from block_crawler_spark.functions.abi import decode_string, decode_uint256_array, word
+from block_crawler_spark.functions.hexint import hex_to_dec, normalize_hex
+from block_crawler_spark.operators.decode import _project, _slot_levels
 from block_crawler_spark.sources.chainfix import enc_string, enc_uint, enc_uint_array_pair
 
 
 def _bound(spark, data, *slots):
-    """One row holding ``data`` with the dynamic slots' offsets and lengths bound."""
-    return bind_dynamic_slots(spark.createDataFrame([(data,)], "data string"), *slots)
+    """One row holding ``data`` with the dynamic slots' offsets and lengths
+    bound by the decoder's own projection levels."""
+    return _project(spark.createDataFrame([(data,)], "data string"), _slot_levels(slots))
 
 
 def test_static_words(spark):
@@ -20,8 +22,9 @@ def test_static_words(spark):
         spark.range(1)
         .select(
             word(F.lit(data), 0).alias("w0"),
-            word_uint(F.lit(data), 0).alias("u0"),
-            word_uint(F.lit(data), 1).alias("u1"),
+            # a TransferSingle's quantity: hex_to_dec(normalize_hex(word))
+            hex_to_dec(normalize_hex(word(F.lit(data), 0))).alias("u0"),
+            hex_to_dec(normalize_hex(word(F.lit(data), 1))).alias("u1"),
         )
         .collect()[0]
     )

@@ -237,41 +237,6 @@ def test_verify_chain_continuity_range_bounded_composes(spark):
     assert composed2 == unbounded2, (composed2, unbounded2)
 
 
-def test_reconcile_tx_receipts(spark):
-    """Matched pair clean; missing receipt, orphan receipt, index mismatch,
-    and creation-pairing violations are each flagged."""
-    from block_crawler_spark.operators.verify import reconcile_tx_receipts
-
-    tx_schema = "block_number long, transaction_index int, hash string, from_ string, to_ string"
-    rc_schema = ("transaction_hash string, block_number long, transaction_index int, "
-                 "from_ string, to_ string, contract_address string")
-    txs = spark.createDataFrame(
-        [
-            (1, 0, "0xok", "0xf", "0xt"),        # clean pair
-            (1, 1, "0xnorc", "0xf", "0xt"),      # no receipt
-            (2, 0, "0xidx", "0xf", "0xt"),       # index disagrees
-            (2, 1, "0xcreate", "0xf", None),     # creation: needs contract_address
-        ],
-        tx_schema,
-    )
-    rcs = spark.createDataFrame(
-        [
-            ("0xok", 1, 0, "0xf", "0xt", None),
-            ("0xidx", 2, 5, "0xf", "0xt", None),
-            ("0xcreate", 2, 1, "0xf", None, None),  # creation missing address
-            ("0xorphan", 9, 0, "0xf", "0xt", None),  # receipt with no tx
-        ],
-        rc_schema,
-    )
-    errs = {r["tx_hash"]: r["error"] for r in reconcile_tx_receipts(txs, rcs).collect()}
-    assert errs == {
-        "0xnorc": "missing_receipt",
-        "0xidx": "field_mismatch",
-        "0xcreate": "field_mismatch",
-        "0xorphan": "orphan_receipt",
-    }
-
-
 def test_verify_chain_continuity_wholly_empty_range_is_flagged(spark):
     """A range whose EVERY block is missing must not pass the audit: with
     min_block set and zero rows surviving the filter, a synthetic

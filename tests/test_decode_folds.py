@@ -253,3 +253,27 @@ def test_decode_plans_bind_abi_offsets_once(spark, fixture_rows):
         plan = decode(logs)._jdf.queryExecution().optimizedPlan().toString()
         refs = len(re.findall(r"\bdata#\d+", plan))
         assert 0 < refs <= cap, f"{decode.__name__}: {refs} references to data"
+
+
+def test_overflowing_uint256_sum_folds_to_null(spark):
+    """Seven mints of 2^124 - 1 (31 hex digits, each inside Decimal(38,0))
+    to one account sum past Decimal(38,0).  Both store folds give the
+    documented clamp-to-NULL quantity: under ANSI a plain ``sum`` raises,
+    and a tail batch that hits it fails on every retry."""
+    from block_crawler_spark.operators.folds import owner_balances_from_silver, token_state_from_silver
+    from block_crawler_spark.plans.crawl import crawl_plan
+    from block_crawler_spark.sources.chainfix import FixtureBuilder, addr
+
+    fb = FixtureBuilder()
+    for _ in range(7):
+        fb.erc1155_single(addr(0xBB02), addr(0xEE), ZERO, addr(1), 1, int("f" * 31, 16))
+    logs = spark.createDataFrame(fb.rows, LOG_SCHEMA)
+    blocks = spark.createDataFrame([(b["number"], b["timestamp"]) for b in fb.blocks()], "number long, timestamp long")
+    silver = crawl_plan(spark, logs, blocks, blockchain="testnet", data_version=1)
+    try:
+        owners = owner_balances_from_silver(silver.token_transfers).collect()
+        tokens = token_state_from_silver(silver.token_transfers, silver.token_metadata).collect()
+    finally:
+        silver.release()
+    assert [(r["account"], r["quantity"]) for r in owners] == [(addr(1), None)]
+    assert [r["quantity"] for r in tokens] == [None]

@@ -62,7 +62,11 @@ def test_minhash_stage_path_materializes_and_matches_cache(spark, tmp_path):
     the stage files must actually exist on disk."""
     import os
 
-    from block_crawler_spark.operators.dedup import minhash_dedup_pairs
+    from block_crawler_spark.operators.dedup import jaccard_pairs, minhash_lsh_candidates, minhash_signatures
+
+    def minhash_dedup_pairs(docs, threshold, stage_path=None):
+        sigs = minhash_signatures(docs, stage_path=stage_path)
+        return jaccard_pairs(sigs, minhash_lsh_candidates(sigs), threshold=threshold)
 
     docs = spark.createDataFrame(
         [

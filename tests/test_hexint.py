@@ -69,6 +69,6 @@ def test_normalize_overwidth_keeps_low_order(spark):
     topic = "0x" + "0" * 24 + "ab" * 20  # padded 32-byte topic holding an address
     got = _eval(spark, hexint.normalize_hex(F.lit(topic), hexint.ADDRESS_HEX_WIDTH))
     assert got == "0x" + "ab" * 20
-    assert _eval(spark, hexint.is_zero_address(F.lit(topic))) is False
+    # the decoder's zero-address test: a normalized address == ZERO_ADDRESS
     zero_topic = "0x" + "0" * 64
-    assert _eval(spark, hexint.is_zero_address(F.lit(zero_topic))) is True
+    assert _eval(spark, hexint.normalize_hex(F.lit(zero_topic), hexint.ADDRESS_HEX_WIDTH)) == hexint.ZERO_ADDRESS

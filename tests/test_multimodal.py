@@ -1,73 +1,38 @@
-"""Multimodal column plumbing: schemas, batch shapes, fanout, determinism."""
+"""Multimodal column plumbing: the frame fanout stage and its codec stub."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from block_crawler_spark.operators.multimodal import (
-    extract_audio_features,
-    extract_image_features,
-    resize_images,
-    sample_frames,
-    synthetic_media,
-)
+from block_crawler_spark.operators.multimodal import MEDIA_SCHEMA, sample_frames
 
 
-@pytest.fixture(scope="module")
-def media(spark):
-    return synthetic_media(spark).cache()
-
-
-def test_image_features(spark, media):
-    feats = extract_image_features(media).collect()
-    assert len(feats) == 8
-    for r in feats:
-        assert r["n_bytes"] == 16 * 12 * 3
-        assert len(r["byte_histogram"]) == 16
-        assert abs(sum(r["byte_histogram"]) - 1.0) < 1e-5
-        assert 0 <= r["mean_intensity"] <= 255
-    # deterministic: same input → same features
-    feats2 = extract_image_features(media).collect()
-    assert [r["mean_intensity"] for r in feats] == [r["mean_intensity"] for r in feats2]
-
-
-def test_resize_raw_images(spark, media):
-    out = resize_images(media, 8, 6).collect()
-    assert len(out) == 8
-    for r in out:
-        assert r["metadata"]["width"] == 8 and r["metadata"]["height"] == 6
-        assert len(r["content"]) == 8 * 6 * 3
-    # resample of a constant image stays constant
-    img = np.frombuffer(out[0]["content"], dtype=np.uint8)
-    assert img.min() >= 0
-
-
-def test_audio_features(spark, media):
-    feats = extract_audio_features(media).collect()
-    assert len(feats) == 4
-    for r in feats:
-        assert r["n_samples"] == 4000
-        assert 0 < r["rms"] < 1
-        assert 0 < r["peak"] <= 1
-        assert len(r["chunk_rms"]) == (4000 + 1023) // 1024
-
-
-def test_frame_sampling_fanout(spark, media):
+def test_frame_sampling_fanout(spark):
+    rng = np.random.default_rng(42)
+    w, h, c, nf = 8, 6, 1, 10
+    videos = [
+        (mid, "video", rng.integers(0, 256, w * h * c * nf, dtype=np.uint8).tobytes(),
+         (w, h, c, None, None, "rawvideo", nf))
+        for mid in (0, 1)
+    ]
+    # a non-video row is filtered out before the fanout
+    audio = (2, "audio", b"\x00\x01" * 100, (None, None, None, 16000, 6, "pcm16", None))
+    media = spark.createDataFrame([*videos, audio], MEDIA_SCHEMA)
     frames = sample_frames(media, every_n=2).collect()
     # 2 videos × 10 frames sampled every 2nd → 5 each
     assert len(frames) == 10
     by_media = {}
     for r in frames:
         by_media.setdefault(r["media_id"], []).append(r["frame_index"])
-        assert len(r["frame"]) == 8 * 6 * 1
+        fi = r["frame_index"]
+        assert r["frame"] == videos[r["media_id"]][2][fi * w * h : (fi + 1) * w * h]
+    assert sorted(by_media) == [0, 1]
     for idxs in by_media.values():
         assert sorted(idxs) == [0, 2, 4, 6, 8]
 
 
 def test_unsupported_codec_is_clearly_stubbed(spark):
-    from block_crawler_spark.operators.multimodal import MEDIA_SCHEMA
-
     df = spark.createDataFrame(
         [(1, "video", b"xxxx", (2, 2, 1, None, None, "h264", 1))], MEDIA_SCHEMA
     )

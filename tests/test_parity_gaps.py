@@ -1,5 +1,5 @@
 """Tests for the last SURVEY §2 parity pieces: A4/T12 tokenURI backfill,
-T13 force-load, J1 collection reconciliation, S9 block-time cache, IVF."""
+T13 force-load, J1 collection reconciliation, IVF."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from block_crawler_spark.operators.ann import ivf_assign, ivf_topk, knn_join_brute
+from block_crawler_spark.operators.ann import ivf_assign, ivf_topk
 from block_crawler_spark.operators.verify import reconcile_collections
 from block_crawler_spark.plans.crawl import force_load_collection
 from block_crawler_spark.schemas import (
@@ -17,12 +17,6 @@ from block_crawler_spark.schemas import (
     INTERFACE_ID_ERC721,
     SELECTOR_NAME,
     SELECTOR_TOKEN_URI,
-)
-from block_crawler_spark.sources.blocktimes import (
-    block_times_from_blocks,
-    load_block_times,
-    save_block_times,
-    with_block_times,
 )
 from block_crawler_spark.sources.chainfix import addr, enc_string, enc_uint
 from block_crawler_spark.sources.rpc import (
@@ -143,17 +137,6 @@ def test_reconcile_collections(spark):
     assert errs[addr(4)] == "missing_in_db"
 
 
-def test_block_times_cache(spark, tmp_path):
-    blocks = spark.createDataFrame([(5, 100), (6, 113)], "number long, timestamp long")
-    times = block_times_from_blocks(blocks)
-    path = str(tmp_path / "bt")
-    save_block_times(times, path)
-    loaded = load_block_times(spark, path)
-    fact = spark.createDataFrame([(5,), (6,), (7,)], "block_number long")
-    joined = {r["block_number"]: r["timestamp"] for r in with_block_times(fact, loaded).collect()}
-    assert joined == {5: 100, 6: 113, 7: None}
-
-
 def test_ivf_recall_vs_brute(spark):
     from block_crawler_spark.sources.tables import load_table
 
@@ -211,7 +194,7 @@ def test_ivf_assign_breaks_equal_cosines_to_the_lowest_centroid_id(spark):
     ORDER BY sim DESC, centroid_id)`` over the same cosines."""
     from pyspark.sql import Window
 
-    from block_crawler_spark.operators.ann import cosine
+    from block_crawler_spark.operators.ann import cosine_scored
 
     vec = "vec_id long, embedding array<double>"
     # to [0, 1, 1], centroids 2, 5 and 7 score 1/sqrt(2) bit for bit; to
@@ -222,7 +205,8 @@ def test_ivf_assign_breaks_equal_cosines_to_the_lowest_centroid_id(spark):
     )
     vectors = spark.createDataFrame([(20, [0.0, 1.0, 1.0]), (21, [1.0, 0.0, 0.0])], vec)
     c = centroids.select(F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_vec"))
-    sims = vectors.crossJoin(c).select("vec_id", "centroid_id", cosine(F.col("embedding"), F.col("c_vec")).alias("sim"))
+    sims = cosine_scored(vectors.crossJoin(c), ["vec_id", "centroid_id"], F.col("embedding"), F.col("c_vec"))
+    sims = sims.withColumnRenamed("score", "sim")
     w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
     ranked = sims.withColumn("rn", F.row_number().over(w))
     tied = ranked.filter(F.col("vec_id") == 20).filter(F.col("centroid_id").isin(2, 5, 7))
@@ -261,9 +245,9 @@ def test_ivf_query_rebuild_makes_few_py4j_round_trips(spark, tmp_path):
     builders and the table load binds a memoised schema, so rebuilding the
     ``emb_ivf_topk`` query makes ~0.2k py4j round trips (~1.1k when every
     build rebuilt its expressions and inferred the schema)."""
+    from datagen import clustered_embeddings
     from test_tail import _round_trips
 
-    from block_crawler_spark.operators.ann import clustered_embeddings
     from block_crawler_spark.plans.embed_ops import ivf_topk_query
 
     sf_dir = str(tmp_path)

@@ -196,7 +196,6 @@ def test_stream_dedup_native_twin_vs_corpus_gate(spark, tmp_path):
 
     from block_crawler_spark.functions.text import fingerprint
     from block_crawler_spark.streaming.corpus import CorpusIngestStore
-    from block_crawler_spark.streaming.windows import stream_dedup
 
     src, out, ckpt = (str(tmp_path / d) for d in ("chunks", "out", "ckpt"))
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -210,11 +209,9 @@ def test_stream_dedup_native_twin_vs_corpus_gate(spark, tmp_path):
     def run_native():
         stream = spark.readStream.schema(schema).parquet(src)
         q = (
-            stream_dedup(
-                stream.withColumn("fp", fingerprint(F.col("text"))),
-                keys=["fp"],
-                watermark="2 hours",
-            )
+            stream.withColumn("fp", fingerprint(F.col("text")))
+            .withWatermark("ts", "2 hours")
+            .dropDuplicatesWithinWatermark(["fp"])
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -268,7 +265,7 @@ def test_stream_dedup_native_twin_vs_corpus_gate(spark, tmp_path):
     assert len(store_fps()) == 4, "the durable index still blocks the re-sent duplicate"
 
 
-def test_image_dhash_resolution_and_brightness_invariance(spark):
+def test_image_dhash_resolution_and_brightness_invariance():
     """The 2-D image dHash's theorems, on a REAL synthetic picture (2-D
     gradient + texture): a k× pixel-replication upscale of the
     grid-aligned region hashes IDENTICALLY (block sums scale by exactly
@@ -278,7 +275,7 @@ def test_image_dhash_resolution_and_brightness_invariance(spark):
     hashes NULL (the no-evidence policy)."""
     import numpy as np
 
-    from block_crawler_spark.operators.multimodal import image_dhash
+    from block_crawler_spark.operators.multimodal import image_dhash_blob
 
     y, x = np.mgrid[0:48, 0:32]
     img = ((y * 3 + x * 2 + (y * x) % 7) % 200 + 20).astype(np.uint8)  # 48×32
@@ -292,11 +289,7 @@ def test_image_dhash_resolution_and_brightness_invariance(spark):
         5: (32, rng.integers(0, 256, (48, 32)).astype(np.uint8)),  # unrelated
         6: (4, img[:4, :4]),  # sub-grid → NULL
     }
-    df = spark.createDataFrame(
-        [(k, w, a.tobytes()) for k, (w, a) in rows.items()],
-        "media_id long, width int, content binary",
-    )
-    got = {r["media_id"]: r["dhash"] for r in image_dhash(df).collect()}
+    got = {k: image_dhash_blob(a.tobytes(), w)[1] for k, (w, a) in rows.items()}
     assert got[1] == got[0], "2x upscale: identical hash (exact theorem)"
     assert got[2] == got[0], "3x upscale: identical hash"
     assert got[3] == got[0], "brightness shift: identical hash"
@@ -307,7 +300,7 @@ def test_image_dhash_resolution_and_brightness_invariance(spark):
     assert unrel_ham > 12, unrel_ham
 
 
-def test_audio_energy_dhash_gain_and_polarity_invariance(spark):
+def test_audio_energy_dhash_gain_and_polarity_invariance():
     """The audio energy-envelope dHash's theorems on a real pcm16 fixture
     (amplitude-ramped sine — an ASYMMETRIC envelope): a ×2 louder copy
     (no clipping) hashes identically (g² cancels cross-multiplied), a
@@ -316,7 +309,7 @@ def test_audio_energy_dhash_gain_and_polarity_invariance(spark):
     envelope is what's hashed, and this one is direction-asymmetric)."""
     import numpy as np
 
-    from block_crawler_spark.operators.multimodal import audio_energy_dhash
+    from block_crawler_spark.operators.multimodal import AUDIO_DHASH_GRID, audio_energy_dhash_blob
 
     n = 8000
     t = np.arange(n)
@@ -331,11 +324,7 @@ def test_audio_energy_dhash_gain_and_polarity_invariance(spark):
         4: s[::-1].copy(),  # time-reversed
         5: rng.integers(-15000, 15000, n),  # unrelated
     }
-    df = spark.createDataFrame(
-        [(k, v.astype("<i2").tobytes()) for k, v in rows.items()],
-        "media_id long, content binary",
-    )
-    got = {r["media_id"]: r["dhash"] for r in audio_energy_dhash(df).collect()}
+    got = {k: audio_energy_dhash_blob(v.astype("<i2").tobytes(), AUDIO_DHASH_GRID)[1] for k, v in rows.items()}
     assert got[1] == got[0], "gain x2: identical hash (exact theorem)"
     assert got[2] == got[0], "polarity inversion: identical hash"
     assert bin(got[0] ^ got[3]).count("1") <= 6
@@ -389,7 +378,7 @@ def test_media_family_overlap_subsumption(spark):
 
 
 def test_clustered_fixture_determinism_and_ivf_saturation(spark):
-    """The shared clustered-corpus fixture (operators.ann.clustered_embeddings,
+    """The shared clustered-corpus fixture (tests/datagen.clustered_embeddings,
     VERDICT r12 task 4) is a pure content-hash function of the ids —
     pinned against an independent hashlib recompute — and IVF saturates on
     it (cells align with density modes: near-total recall at nprobe=2,
@@ -397,7 +386,9 @@ def test_clustered_fixture_determinism_and_ivf_saturation(spark):
     movement of the r13 clustered grid in docs/PLAN_AUDIT.md."""
     import hashlib
 
-    from block_crawler_spark.operators.ann import clustered_embeddings, ivf_topk, knn_join_brute
+    from datagen import clustered_embeddings
+
+    from block_crawler_spark.operators.ann import ivf_topk, knn_join_brute
 
     emb = clustered_embeddings(spark, n=400, n_clusters=8, jitter_milli=70).cache()
 

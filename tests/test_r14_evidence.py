@@ -397,7 +397,7 @@ def test_modality_overlap_matches_independent_recompute(spark):
 
     from block_crawler_spark.plans.media_ops import (
         PHASH_TWIN_OFFSET,
-        _planted_transform_media,
+        _phash_doc_blobs,
         media_audio_energy_query,
         media_image_dhash_query,
         media_modality_overlap_query,
@@ -414,15 +414,13 @@ def test_modality_overlap_matches_independent_recompute(spark):
                 out.add((min(a, b), max(a, b)))
         return out
 
-    media = _planted_transform_media(load_table(spark, SF0, "documents"))
-    dig = {r["media_id"]: r["digest"] for r in media.selectExpr(
-        "media_id", "md5(lower(hex(content))) AS digest").collect()}
-    by_digest = {}
-    for mid, d in dig.items():
-        by_digest.setdefault(d, []).append(mid)
+    by_blob = {}
+    for r in load_table(spark, SF0, "documents").select("doc_id", "text").collect():
+        for mid, blob in _phash_doc_blobs(r["doc_id"], r["text"]):
+            by_blob.setdefault(blob, []).append(mid)
     exact = [
         {"id_a": x, "id_b": y}
-        for ids in by_digest.values()
+        for ids in by_blob.values()
         for x, y in combinations(sorted(ids), 2)
     ]
     fams = {

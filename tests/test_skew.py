@@ -1,12 +1,10 @@
-"""Salted join/aggregate == unsalted results, on a pathologically skewed key."""
+"""Salted aggregate == unsalted results, on a pathologically skewed key."""
 
 from __future__ import annotations
 
-from decimal import Decimal
-
 from pyspark.sql import functions as F
 
-from block_crawler_spark.operators.skew import salted_aggregate, salted_join
+from block_crawler_spark.operators.skew import salted_aggregate
 
 
 def _skewed(spark):
@@ -15,20 +13,6 @@ def _skewed(spark):
         F.when(F.col("id") % 20 != 0, F.lit("HOT")).otherwise(F.concat(F.lit("k"), F.col("id") % 7)).alias("k"),
         F.col("id").alias("v"),
     )
-
-
-def test_salted_join_matches_plain(spark):
-    big = _skewed(spark)
-    small = spark.createDataFrame(
-        [("HOT", 1), ("k1", 2), ("k3", 3), ("missing", 9)], ["k", "dim"]
-    )
-    plain = big.join(small, "k", "inner").groupBy("k", "dim").count()
-    salted = salted_join(big, small, ["k"], salt_factor=5).groupBy("k", "dim").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-    plain_l = big.join(small, "k", "left").groupBy("k").count()
-    salted_l = salted_join(big, small, ["k"], salt_factor=5, how="left").groupBy("k").count()
-    assert sorted(map(tuple, plain_l.collect())) == sorted(map(tuple, salted_l.collect()))
 
 
 def test_salted_aggregate_matches_plain(spark):

@@ -1,8 +1,12 @@
-"""Real Structured Streaming tests: watermark windows + foreachBatch tail."""
+"""Real Structured Streaming tests: watermark windows + foreachBatch tail.
+
+Windows, session windows, streaming dedup and stateful consumers are
+Structured Streaming's own operators; the tests here and in
+test_watermark/test_stateful call them directly over the events table,
+under the engine's session, next to the engine's ``stream_tail`` and
+``stream_interval_join``."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,14 +16,23 @@ from block_crawler_spark.schemas import LOG_SCHEMA
 from block_crawler_spark.sources.chainfix import standard_scenario
 from block_crawler_spark.sources.tables import load_table
 from block_crawler_spark.streaming.store import SilverStore
-from block_crawler_spark.streaming.tail import TableChainSource
-from block_crawler_spark.streaming.windows import (
-    read_events_stream,
-    stream_tail,
-    windowed_event_counts,
-)
+from block_crawler_spark.streaming.windows import stream_tail
 
 SF = "/root/testdata/sf0.001"
+EVENTS = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+
+
+def windowed_event_counts(events, window="1 hour", watermark="2 hours"):
+    """Tumbling window per event_type: count, decimal value sum, user
+    count — the batch ``evt_window_hourly`` query's aggregation; on a
+    stream the watermark bounds state for late rows."""
+    if events.isStreaming:
+        events = events.withWatermark("ts", watermark)
+    return events.groupBy(F.window("ts", window).alias("win"), F.col("event_type")).agg(
+        F.count("*").alias("n"),
+        F.sum(F.col("value").cast("decimal(18,2)")).cast("decimal(38,2)").alias("total_value"),
+        F.approx_count_distinct("user_id").alias("approx_users"),
+    )
 
 
 def test_streaming_windows_match_batch(spark, tmp_path):
@@ -29,7 +42,7 @@ def test_streaming_windows_match_batch(spark, tmp_path):
     # write as several chunk files to force multiple input splits
     events.repartition(4).write.parquet(src)
 
-    stream = read_events_stream(spark, src)
+    stream = spark.readStream.schema(EVENTS).parquet(src)
     assert stream.isStreaming
     q = (
         windowed_event_counts(stream)
@@ -162,17 +175,26 @@ def test_stream_tail_over_custom_datasource(spark, tmp_path):
 
 
 def test_session_windows_match_batch(spark, tmp_path):
-    """Native session_window stream (availableNow) == the same fn on batch.
+    """Native session_window stream (availableNow) == the same aggregation
+    on batch: events whose gaps are under 30 minutes merge into one session
+    per user, the built-in form of the batch ``evt_sessionize`` plan.
 
     Complete output mode so merged sessions re-emit; watermark bounds state
     on a live stream."""
-    from block_crawler_spark.streaming.windows import session_event_stats
+
+    def session_event_stats(events):
+        if events.isStreaming:
+            events = events.withWatermark("ts", "2 hours")
+        return events.groupBy(F.session_window("ts", "30 minutes").alias("session"), F.col("user_id")).agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("decimal(38,2)").alias("total_value"),
+        )
 
     events = load_table(spark, SF, "events")
     src = str(tmp_path / "sess_chunks")
     events.repartition(4).write.parquet(src)
 
-    stream = read_events_stream(spark, src)
+    stream = spark.readStream.schema(EVENTS).parquet(src)
     q = (
         session_event_stats(stream)
         .writeStream.format("memory")
@@ -197,7 +219,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     chunks) == the same fn on batch frames: every purchase joined to the
     same user's clicks in the preceding six hours.  Append mode — rows emit as
     the watermark permits; the final set must be exactly the batch join."""
-    from block_crawler_spark.streaming.windows import read_events_stream, stream_interval_join
+    from block_crawler_spark.streaming.windows import stream_interval_join
 
     events = load_table(spark, SF, "events")
     src = str(tmp_path / "ssj_chunks")
@@ -209,10 +231,10 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
             df.filter(F.col("event_type") == "click"),
         )
 
-    sl, sr = split(read_events_stream(spark, src))
+    sl, sr = split(spark.readStream.schema(EVENTS).parquet(src))
     # two INDEPENDENT streaming sources over the same dir — a real
     # two-stream join, not a self-reference
-    sr = read_events_stream(spark, src).filter(F.col("event_type") == "click")
+    sr = spark.readStream.schema(EVENTS).parquet(src).filter(F.col("event_type") == "click")
     q = (
         stream_interval_join(sl, sr, interval="6 hours")
         .writeStream.format("memory")
@@ -257,7 +279,7 @@ def test_stream_interval_join_drops_late_rows(spark, tmp_path):
     persists in the checkpoint, exactly like a production restart)."""
     import datetime as dt
 
-    from block_crawler_spark.streaming.windows import read_events_stream, stream_interval_join
+    from block_crawler_spark.streaming.windows import stream_interval_join
 
     src = str(tmp_path / "late_chunks")
     ckpt = str(tmp_path / "ckpt")
@@ -272,12 +294,12 @@ def test_stream_interval_join_drops_late_rows(spark, tmp_path):
         # watermark-eviction regression instead of the watermark dropping it
         spark.createDataFrame(
             [(i, ts, uid, et, 1.0, "{}") for i, (ts, uid, et) in enumerate(rows, start={"p1": 100, "p2": 200}[name])],
-            "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+            EVENTS,
         ).write.mode("append").parquet(src)
 
     def run_once():
-        sl = read_events_stream(spark, src).filter(F.col("event_type") == "purchase")
-        sr = read_events_stream(spark, src).filter(F.col("event_type") == "click")
+        sl = spark.readStream.schema(EVENTS).parquet(src).filter(F.col("event_type") == "purchase")
+        sr = spark.readStream.schema(EVENTS).parquet(src).filter(F.col("event_type") == "click")
         q = (
             stream_interval_join(sl, sr)
             .writeStream.format("parquet")
@@ -341,7 +363,7 @@ def test_stream_interval_join_outer_emits_unmatched_after_watermark(spark, tmp_p
     emits normally in phase 1."""
     import datetime as dt
 
-    from block_crawler_spark.streaming.windows import read_events_stream, stream_interval_join
+    from block_crawler_spark.streaming.windows import stream_interval_join
 
     src = str(tmp_path / "outer_chunks")
     ckpt = str(tmp_path / "ckpt")
@@ -351,12 +373,12 @@ def test_stream_interval_join_outer_emits_unmatched_after_watermark(spark, tmp_p
     def write_chunk(rows, base_id):
         spark.createDataFrame(
             [(base_id + i, ts, uid, et, 1.0, "{}") for i, (ts, uid, et) in enumerate(rows)],
-            "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+            EVENTS,
         ).write.mode("append").parquet(src)
 
     def run_once():
-        sl = read_events_stream(spark, src).filter(F.col("event_type") == "purchase")
-        sr = read_events_stream(spark, src).filter(F.col("event_type") == "click")
+        sl = spark.readStream.schema(EVENTS).parquet(src).filter(F.col("event_type") == "purchase")
+        sr = spark.readStream.schema(EVENTS).parquet(src).filter(F.col("event_type") == "click")
         q = (
             stream_interval_join(sl, sr, how="left_outer")
             .writeStream.format("parquet")

@@ -9,14 +9,11 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from block_crawler_spark.streaming.windows import read_events_stream, windowed_event_counts
+from test_streaming import EVENTS, windowed_event_counts
 
 
 def _mk(spark, rows):
-    return spark.createDataFrame(
-        [(i, t, u, e, v, "{}") for i, (t, u, e, v) in enumerate(rows)],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
+    return spark.createDataFrame([(i, t, u, e, v, "{}") for i, (t, u, e, v) in enumerate(rows)], EVENTS)
 
 
 def test_late_data_dropped_in_append_mode(spark, tmp_path):
@@ -27,7 +24,7 @@ def test_late_data_dropped_in_append_mode(spark, tmp_path):
 
     def run():
         q = (
-            windowed_event_counts(read_events_stream(spark, src), window="1 hour", watermark="2 hours")
+            windowed_event_counts(spark.readStream.schema(EVENTS).parquet(src), window="1 hour", watermark="2 hours")
             .select(F.col("win.start").alias("wstart"), "event_type", "n", "total_value")
             .writeStream.format("parquet")
             .option("path", out)
@@ -64,8 +61,9 @@ def test_late_data_dropped_in_append_mode(spark, tmp_path):
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):
-    from block_crawler_spark.streaming.windows import stream_dedup
-
+    """``dropDuplicatesWithinWatermark`` keeps each key's state only until
+    the watermark passes — the streaming form of the engine's idempotent
+    append sink (K6): a redelivered micro-batch is dropped exactly once."""
     src = str(tmp_path / "dsrc")
     base = dt.datetime(2024, 1, 1, 0, 0, 0)
     rows = [
@@ -75,10 +73,11 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     # duplicate every row (same event_ids) — a redelivered micro-batch
     df.unionByName(df).write.mode("append").parquet(src)
 
-    from block_crawler_spark.streaming.windows import read_events_stream
-
     q = (
-        stream_dedup(read_events_stream(spark, src), ["event_id"], watermark="1 hour")
+        spark.readStream.schema(EVENTS)
+        .parquet(src)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["event_id"])
         .writeStream.format("memory")
         .queryName("dedup_out")
         .outputMode("append")
